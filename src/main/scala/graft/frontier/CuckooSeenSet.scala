@@ -1,7 +1,6 @@
 package graft.frontier
 
-import org.apache.spark.broadcast.Broadcast
-import org.apache.spark.sql.{DataFrame, Encoders, Row}
+import org.apache.spark.sql.{DataFrame, Encoders}
 import org.apache.spark.sql.functions._
 import scala.collection.mutable
 
@@ -92,78 +91,26 @@ object CuckooSeenSet {
       .toDF("bucket", "cuckoo")
   }
 
-  private final class CuckooProbe(bc: Broadcast[Map[Long, Array[Byte]]], numBuckets: Int)
-      extends Serializable {
-    @transient private lazy val filters: Map[Long, CuckooFilter] =
-      bc.value.map { case (b, bytes) => b -> CuckooFilter.deserialize(bytes) }
-    def maybeSeen(key: Long): Boolean = {
-      val b = math.floorMod(key, numBuckets)
-      filters.get(b.toLong).exists(_.mightContain(key))
-    }
+  private val cuckooTest: SeenSet.Decode = bytes => {
+    val cf = CuckooFilter.deserialize(bytes)
+    k => cf.mightContain(k)
   }
 
+  /** The filter's own verdict (`maybe_seen`, before any exact confirm)
+    * through the broadcast probe.
+    */
+  private[graft] def probeBroadcast(candidates: DataFrame, keyCol: String,
+                                    buckets: DataFrame, numBuckets: Int): DataFrame =
+    SeenSet.broadcastProbe(buckets.collect(), numBuckets, cuckooTest)(candidates, keyCol)
+
   /** Probe + exact confirm ≡ `candidates LEFT ANTI JOIN seen ON key`
-    * (same contract and size-aware path selection as
-    * [[SeenSet.probeAndConfirm]]).
+    * (same contract, size-aware path selection and confirm as
+    * [[SeenSet.probeAndConfirm]]; a cuckoo filter stores 2 bytes per
+    * slot of capacity vs 8-byte keys, so seenBytes ≤ 4 × filterBytes).
     */
   def probeAndConfirm(candidates: DataFrame, seenKeys: DataFrame, keyCol: String,
                       buckets: DataFrame, numBuckets: Int,
-                      maxBroadcastBytes: Long = 256L << 20): DataFrame = {
-    // persist across the size probe + collect/cogroup pair, exactly like
-    // [[SeenSet.probeAndConfirm]] — without it the whole filter build
-    // (and any deleteKeys chain feeding it) runs twice
-    val cached = buckets.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val totalBytes = cached
-      .agg(coalesce(sum(length(col("cuckoo"))), lit(0L))).head.getLong(0)
-    val broadcastPath = totalBytes <= maxBroadcastBytes
-    val probed =
-      if (broadcastPath) {
-        val p = probeBroadcast(candidates, keyCol, cached, numBuckets)
-        cached.unpersist(false) // collect already ran; nothing lazy reads it
-        p
-      } else probeDistributed(candidates, keyCol, cached, numBuckets)
-    val definitelyNew = probed.where(!col("maybe_seen")).drop("maybe_seen")
-    val needConfirm = probed.where(col("maybe_seen")).drop("maybe_seen")
-    // size-aware confirm strategy, as in [[SeenSet.probeAndConfirm]]: a
-    // cuckoo filter stores 2 bytes per slot of capacity vs 8-byte keys,
-    // so seenBytes ≤ 4 × filterBytes — broadcast the build side under
-    // the budget, keep the shuffled anti-join past it (identical rows)
-    val confirmSeen = seenKeys.select(col(keyCol)).distinct()
-    val confirmedNew = needConfirm.join(
-      if (totalBytes * 4 <= maxBroadcastBytes) broadcast(confirmSeen) else confirmSeen,
-      Seq(keyCol), "left_anti")
-    definitelyNew.unionByName(confirmedNew)
-  }
-
-  private[graft] def probeBroadcast(candidates: DataFrame, keyCol: String,
-                                       buckets: DataFrame, numBuckets: Int): DataFrame = {
-    val spark = candidates.sparkSession
-    val bucketMap = buckets.collect()
-      .map(r => r.getLong(0) -> r.getAs[Array[Byte]](1)).toMap
-    val probe = new CuckooProbe(spark.sparkContext.broadcast(bucketMap), numBuckets)
-    val maybeSeenUdf = udf((key: Long) => probe.maybeSeen(key))
-    candidates.withColumn("maybe_seen", maybeSeenUdf(col(keyCol)))
-  }
-
-  /** Distributed probe — same cogroup shape as [[SeenSet.probeDistributed]]. */
-  private[graft] def probeDistributed(candidates: DataFrame, keyCol: String,
-                                         buckets: DataFrame, numBuckets: Int): DataFrame = {
-    val schema = candidates.schema
-    val keyIdx = schema.fieldIndex(keyCol)
-    val outSchema = schema.add("maybe_seen", org.apache.spark.sql.types.BooleanType,
-      nullable = false)
-    val candG = candidates.groupByKey((r: Row) =>
-      math.floorMod(r.getLong(keyIdx), numBuckets).toLong)(Encoders.scalaLong)
-    val bucketG = buckets.select(col("bucket").cast("long"), col("cuckoo"))
-      .as[(Long, Array[Byte])](Encoders.tuple(Encoders.scalaLong, Encoders.BINARY))
-      .groupByKey(_._1)(Encoders.scalaLong)
-    candG.cogroup(bucketG) { (_, cands, blobs) =>
-      val cf = if (blobs.hasNext) Some(CuckooFilter.deserialize(blobs.next()._2)) else None
-      cf match {
-        case None => cands.map(r => Row.fromSeq(r.toSeq :+ false))
-        case Some(filter) =>
-          cands.map(r => Row.fromSeq(r.toSeq :+ filter.mightContain(r.getLong(keyIdx))))
-      }
-    }(Encoders.row(outSchema)).toDF()
-  }
+                      maxBroadcastBytes: Long = 256L << 20): DataFrame =
+    SeenSet.antiFilter(buckets, seenKeys, keyCol, numBuckets, maxBroadcastBytes,
+      buildBytesHint = -1L, seenBytesPerFilterByte = 4, cuckooTest)(candidates)
 }

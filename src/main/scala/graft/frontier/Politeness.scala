@@ -89,15 +89,6 @@ object Politeness {
     val n = robots.count()
     require(n <= maxHosts,
       s"robots table has $n hosts > $maxHosts: use the per-round broadcast join")
-    robotsBroadcastUnchecked(robots)
-  }
-
-  /** The collect+broadcast itself, size check already done by the
-    * caller ([[robotsBroadcast]] counts; [[robotsStage]] reuses ITS
-    * guard count instead of running a second one).
-    */
-  private def robotsBroadcastUnchecked(robots: DataFrame)
-      : org.apache.spark.broadcast.Broadcast[Map[String, (Long, Array[String])]] = {
     val spark = robots.sparkSession
     val m = robots
       .select(col("host"), col("crawl_delay_ms").cast("long"),
@@ -111,22 +102,6 @@ object Politeness {
       .toMap
     spark.sparkContext.broadcast(m)
   }
-
-  /** Size-aware robots stage, safe to call blind: collects the table
-    * into a crawl-lifetime map broadcast ([[robotsBroadcast]], the
-    * zero-per-round-cost form) while it fits under `maxHosts`, and
-    * FALLS BACK to the per-round broadcast join ([[applyRobots]]) past
-    * it instead of throwing — [[robotsBroadcast]]'s hard `require` made
-    * the cached round path unsafe to call without a prior size check.
-    * Output equality of the two forms is spec-tested (EngineSpec) and
-    * oracle-gated (q26 runs both paths).
-    */
-  def robotsStage(robots: DataFrame,
-                  maxHosts: Long = 20000000L): DataFrame => DataFrame =
-    if (robots.count() <= maxHosts) {
-      val bc = robotsBroadcastUnchecked(robots)
-      applyRobotsMap(_, bc)
-    } else applyRobots(_, robots)
 
   /** [[applyRobots]] semantics over a pre-built [[robotsBroadcast]] —
     * one scalar UDF (map lookup + prefix test), zero joins, zero

@@ -174,8 +174,7 @@ object Robots {
     else applyRawRobotsDistributed(frontier, robotsBodies, userAgent, defaultDelayMs)
   }
 
-  /** [[applyRawRobots]] as a crawl-lifetime stage (the
-    * [[Politeness.robotsStage]] pattern): runs the byte-count job ONCE
+  /** [[applyRawRobots]] as a crawl-lifetime stage: runs the byte-count job ONCE
     * at construction and binds the chosen path, so a K-round crawl loop
     * pays one size probe for the whole crawl instead of one count job
     * per round over a table whose size never changes mid-crawl.

@@ -3,23 +3,39 @@ package graft.frontier
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** The priority frontier round: canonicalize → dedupe (bloom probe +
-  * anti-join confirm) → politeness-gated schedule → fetch-batch emit, with
-  * per-partition lineage + metrics and parquet-checkpointed resume
-  * (north rule; Iceberg snapshots stand in as partitioned parquet round
-  * directories in-sandbox — same append-only contract).
+/** The priority frontier round: canonicalize → seen filter →
+  * politeness-gated schedule → fetch-batch emit, with per-partition
+  * lineage + metrics and parquet-checkpointed resume (north rule; Iceberg
+  * snapshots stand in as partitioned parquet round directories
+  * in-sandbox — same append-only contract).
+  *
+  * A round is one pipeline ([[Scheduler.runRound]]):
+  *   1. derive `host`; one broadcast flag join splits the rows of hosts
+  *      over the spread threshold (hot) from the rest (cold);
+  *   2. each leg seen-filters right after its first exchange — the hot
+  *      leg's url_key dedupe exchange, the cold leg's hash(host)
+  *      exchange (none when the frontier is stored host-clustered). The
+  *      filter is identity (empty seen set), the co-located
+  *      (host, url_key) anti-join (both tables host-clustered), or a
+  *      bloom probe + exact confirm;
+  *   3. hot leg: robots → salted two-phase cap → schedule; cold leg: one
+  *      sort + one per-host scan does dedupe, schedule and cap;
+  *   4. one fetch-batch emit closes the round.
+  *
+  * Seen-filtering before the cold leg's dedupe is exact: every duplicate
+  * of a canonical URL shares its (host, url_key), so a duplicate group is
+  * seen whole or not at all.
   *
   * Shuffle plan at 10^10 URLs:
   *   - canonicalization is narrow (zero shuffle);
-  *   - dedupe shuffles on url_key once (bloom prefilter shrinks the probe
-  *     side first);
-  *   - the politeness window hash-partitions on host, so each output
-  *     partition owns whole hosts — scheduling is partition-local and hot
-  *     hosts can't straddle partitions (no separate range exchange; a
-  *     range write layout is applied at the sink when needed);
-  *   - host-level aggregates use two-phase salted aggregation
-  *     ([[saltedHostCounts]]) so a hot host can't skew a single reducer;
-  *   - robots is broadcast (host-cardinality).
+  *   - the cold leg's one full-frontier exchange is hash(host), and the
+  *     seen filter, robots, dedupe and the politeness schedule all reuse
+  *     it: each output partition owns whole hosts, so scheduling is
+  *     partition-local (a range write layout is applied at the sink);
+  *   - hot hosts never sort on one reducer: their leg dedupes on url_key
+  *     and caps with two-phase salted top-k ([[Politeness.capPerHost]]);
+  *   - robots and the bloom table are broadcast (host- and
+  *     filter-cardinality).
   */
 /** Columns of [[Scheduler.fusedScheduleCap]]'s single-sort pipeline: the
   * bare frontier after canonicalization + robots (crawl_delay_ms is the
@@ -48,7 +64,7 @@ object Scheduler {
     * as checkpointRound and the bench table writer do). A non-null host
     * paired with a null url would make the host-partitioned dedupe keep
     * one null row PER HOST where the batch dedupe keeps one globally —
-    * the branch-equivalence contract assumes the writer invariant.
+    * the hot/cold leg equivalence assumes the writer invariant.
     */
   def canonicalize(frontier: DataFrame): DataFrame = {
     val withHost =
@@ -105,12 +121,13 @@ object Scheduler {
     *
     * `maxPerHostPerRound`: -1 (default) = skew-safe auto cap of
     * perHostBudget × [[DefaultMaxBatchesPerHost]] URLs per host per
-    * round; 0 = explicit opt-OUT (uncapped — one degenerate host can
-    * serialize the politeness window's reducer); >0 = exact cap.
+    * round; 0 = explicit opt-OUT (uncapped, and no host takes the spread
+    * leg unless `hotSpreadRows` or `knownHotHosts` names it — one
+    * degenerate host can serialize a cold-leg reducer); >0 = exact cap.
     *
     * `hotSpreadRows`: raw-row threshold above which a host leaves the
-    * cold pipeline for the salted spread leg (dedupeWithinBatch →
-    * robots → two-phase [[Politeness.capPerHost]] → schedule, a few
+    * cold pipeline for the salted spread leg (dedupeWithinBatch → seen
+    * filter → robots → two-phase [[Politeness.capPerHost]] → schedule, a few
     * exchanges over just those hosts' rows). -1 (default) =
     * [[hotSpreadAuto]]. The CAP itself no longer depends on this split:
     * every cold-leg host is capped inside [[fusedScheduleCap]]'s scan
@@ -125,15 +142,16 @@ object Scheduler {
     * probe measured 401 such hosts carrying 20% of the frontier) stay
     * in the exchange-free leg instead of paying the spread leg's
     * url_key exchange + salted top-k + re-exchange, which cost 42% of
-    * the 40M round's wall (FullGapProbe: 28.4 s vs 16.4 s at c4).
+    * the 40M round's wall (28.4 s vs 16.4 s at c4, measured with the
+    * since-removed FullGapProbe).
     *
     * `frontierHostClustered`: set true when `rawFrontier` scans a table
     * whose STORAGE LAYOUT already clusters rows by host — a Spark
     * bucketed table `CLUSTERED BY (host)`, or an Iceberg table with a
     * `bucket(N, host)` partition transform. The cold leg then skips its
     * explicit repartition: the bucketed scan reports
-    * hashpartitioning(host), which satisfies the dedupe aggregate, the
-    * robots filter and the politeness window — the round runs with ZERO
+    * hashpartitioning(host), which satisfies the seen filter, robots and
+    * the fused schedule scan — the cold leg runs with ZERO
     * full-frontier exchanges (storage paid the shuffle once, every round
     * reuses it; at cluster scale this is the per-round network bill).
     * The flag is a performance contract only: if the input is NOT
@@ -169,32 +187,15 @@ object Scheduler {
       perHostBudget, numBloomBuckets, maxPerHostPerRound, frontierHostClustered,
       knownHotHosts, seenHostClustered, hotSpreadRows)
 
-  /** [[runRound]] over an arbitrary robots stage — pair with
-    * [[Politeness.robotsStage]] for the size-aware auto form (map
-    * broadcast under the guard, per-round join past it) that is safe to
-    * call without knowing the robots-table cardinality.
-    */
-  def runRoundStaged(rawFrontier: DataFrame, seenKeys: DataFrame,
-                     robotsStage: DataFrame => DataFrame,
-                     perHostBudget: Int = 100, numBloomBuckets: Int = 64,
-                     maxPerHostPerRound: Int = -1,
-                     frontierHostClustered: Boolean = false,
-                     knownHotHosts: Option[Array[String]] = None,
-                     seenHostClustered: Boolean = false,
-                     hotSpreadRows: Long = -1): DataFrame =
-    runRoundImpl(rawFrontier, seenKeys, robotsStage,
-      perHostBudget, numBloomBuckets, maxPerHostPerRound, frontierHostClustered,
-      knownHotHosts, seenHostClustered, hotSpreadRows)
-
-  /** Dedupe with the SAME winner as [[dedupeWithinBatch]] (first row per
-    * canonical_url in (canonical_url, priority_band, url) order = the
-    * min-(band, url) row) but expressed as a window over hash(host)
-    * partitioning — so the politeness window downstream REUSES the
-    * exchange instead of adding a second full-frontier shuffle. Only
-    * safe where per-host row counts are bounded (the hot-host split
-    * guarantees ≤ cap rows per cold host); url_key hash collisions
-    * across distinct canonical urls are kept (2^-64), where the agg
-    * form would collapse them — both deterministic.
+  /** Dedupe with the SAME winner as [[dedupeWithinBatch]] — the first
+    * row per canonical_url in (canonical_url, priority_band, url, …rest)
+    * order, i.e. the minimum over every column — but expressed as a
+    * window over hash(host) partitioning, so the politeness window
+    * downstream REUSES the exchange instead of adding a second
+    * full-frontier shuffle. Only safe where per-host row counts are
+    * bounded (the hot-host split keeps degenerate hosts out); url_key
+    * hash collisions across distinct canonical urls are kept (2^-64),
+    * where the agg form would collapse them — both deterministic.
     */
   private[graft] def dedupeWithinHost(canonical: DataFrame): DataFrame = {
     // lag-based adjacent-dup filter: one window pass, no rank recompute.
@@ -210,43 +211,14 @@ object Scheduler {
     // sentinel cannot collide with a real canonical_url: canonical_url
     // is null iff url is null iff host is null, so a window partition
     // either holds only null canonicals or none.
+    val first = Seq("canonical_url", "priority_band", "url")
+    val order = first ++ canonical.columns.filterNot(first.contains)
     val w = org.apache.spark.sql.expressions.Window.partitionBy("host")
-      .orderBy(col("canonical_url").asc, col("priority_band").asc, col("url").asc)
+      .orderBy(order.map(c => col(c).asc): _*)
     val surr = coalesce(col("canonical_url"), lit("\u0000"))
     canonical
       .withColumn("__dup", lag(surr, 1).over(w) === surr)
       .where(col("__dup").isNull || !col("__dup")).drop("__dup")
-  }
-
-  /** The hash-aggregate twin of [[dedupeWithinHost]] for the bare
-    * (url, priority_band, host, canonical_url) cold-leg schema: same
-    * winner — min (priority_band, url) per (host, canonical_url) — but
-    * SORT-FREE. The winner's (band, url) is packed as
-    * `lpad(band, 5, '0') || url`, whose lexicographic min equals the
-    * struct min for the engine's non-negative band domain, and `min` over
-    * a string buffer hash-aggregates (no per-partition sort; the partial
-    * agg also collapses duplicates before the politeness window's sort —
-    * the exchange's ONE remaining sort). Same-window A/B at 8M rows
-    * (tools: VariantProbe): 3.52 s vs 4.26 s at 8 cores, 14.01 vs
-    * 15.97 s at 2 — and the agg form's 2→8 stage efficiency is ~0.99.
-    * Preconditions (both hold on every engine-built frontier): bands are
-    * non-negative and < 100000; no extra columns ride along (the window
-    * form keeps whole rows and remains the general path).
-    */
-  private[graft] def dedupeWithinHostAgg(canonical: DataFrame): DataFrame = {
-    val packed = concat(lpad(col("priority_band").cast("string"), 5, "0"),
-      coalesce(col("url"), lit("")))
-    canonical
-      .groupBy(col("host"), col("canonical_url"))
-      .agg(min(packed).as("__p"))
-      .select(
-        // null url ⇒ null canonical_url ⇒ the all-null group: restore the
-        // null url the window form would keep (packed held only the band)
-        when(col("canonical_url").isNull && length(col("__p")) === 5,
-          lit(null).cast("string"))
-          .otherwise(substring(col("__p"), 6, Int.MaxValue)).as("url"),
-        substring(col("__p"), 1, 5).cast("int").as("priority_band"),
-        col("host"), col("canonical_url"))
   }
 
   /** Raw-rows-per-host threshold above which a host takes the salted
@@ -270,7 +242,7 @@ object Scheduler {
     * politeness window's (host, priority_band, canonical_url) sort —
     * because no single column order serves both (dedupe groups by
     * canonical, the schedule is band-major). Measured at 40M rows / 4
-    * cores (FullGapProbe, count() pruning defeated): 46.5 s vs 17.7 s
+    * cores (since-removed FullGapProbe, count() pruning defeated): 46.5 s vs 17.7 s
     * for the same pipeline without the window — the second sort IS the
     * round's dominant cost, exactly the case the round-4 review said
     * should trigger this fusion. One sort in the schedule's own order
@@ -355,8 +327,7 @@ object Scheduler {
       .toDF()
   }
 
-  /** Shared cold-leg schedule for the probe-free and fused-seen
-    * branches — ONE definition so the two cannot drift. Bare
+  /** Cold-leg schedule over seen-filtered, host-contiguous rows. Bare
     * (url, priority_band, host, canonical_url) schema → the fused
     * single-sort pipeline; extra frontier columns → whole-row window
     * dedupe + window schedule with the cap as a post-schedule filter
@@ -374,232 +345,73 @@ object Scheduler {
       .withColumn("url_key", Canonical.urlKey(col("canonical_url")))
       .withColumn("host_hash", Canonical.hostHash(col("host")))
 
+  /** Round cap: -1 = perHostBudget × [[DefaultMaxBatchesPerHost]],
+    * 0 = uncapped, >0 = exact.
+    */
+  private def roundCap(perHostBudget: Int, maxPerHostPerRound: Int): Int =
+    if (maxPerHostPerRound < 0) perHostBudget * DefaultMaxBatchesPerHost
+    else if (maxPerHostPerRound == 0) Int.MaxValue
+    else maxPerHostPerRound
+
   private def runRoundImpl(rawFrontier: DataFrame, seenKeys: DataFrame,
                            robotsStage: DataFrame => DataFrame,
                            perHostBudget: Int, numBloomBuckets: Int,
-                           maxPerHostPerRound: Int,
-                           frontierHostClustered: Boolean = false,
-                           knownHotHosts: Option[Array[String]] = None,
-                           seenHostClustered: Boolean = false,
-                           hotSpreadRows: Long = -1): DataFrame = {
-    val canon = canonicalize(rawFrontier)
-    // hot-host round cap ON BY DEFAULT, as a two-pass hot split: pass 1
-    // counts per host over the RAW frontier (narrow host extract +
-    // salted partial agg — k rows cross the wire) and broadcasts the
-    // over-cap host set; only THOSE hosts' rows pay the salted two-phase
-    // top-k. Pre-filter counts can only OVERcount (dedupe/robots only
-    // remove rows), and capping a below-cap host is a no-op, so the
-    // result is identical to capping everything — but the steady-state
-    // cost is one cheap count pass instead of an extra full-frontier
-    // (host, salt) exchange + sort (measured: the always-cap form ran
-    // the 16M-URL bench round 2.4× slower). Hot-set size is bounded by
-    // rows/cap (10^10 URLs / 10^4 cap → ≤10^6 hosts — broadcastable).
-    val cap =
-      if (maxPerHostPerRound < 0) perHostBudget * DefaultMaxBatchesPerHost
-      else maxPerHostPerRound
+                           maxPerHostPerRound: Int, frontierHostClustered: Boolean,
+                           knownHotHosts: Option[Array[String]],
+                           seenHostClustered: Boolean, hotSpreadRows: Long): DataFrame = {
+    val cap = roundCap(perHostBudget, maxPerHostPerRound)
     val spread = if (hotSpreadRows >= 0) hotSpreadRows else hotSpreadAuto(cap)
+    val fresh = seenFilter(seenKeys, numBloomBuckets,
+      coLocated = frontierHostClustered && seenHostClustered)
+    val withHost =
+      if (rawFrontier.columns.contains("host")) rawFrontier
+      else rawFrontier.withColumn("host", Canonical.hostOf(col("url")))
+    // hot-host selection counts RAW rows: dedupe, the seen filter and
+    // robots only remove rows, and capping a below-cap host is a no-op,
+    // so an overcount never changes the output
+    val (hot, cold) = hotFlagSplit(withHost, hotRowSet(rawFrontier, spread, knownHotHosts))
+    val hotSched = hot.map { h =>
+      val deduped = dedupeWithinBatch(canonicalize(h))
+      Politeness.schedule(Politeness.capPerHost(robotsStage(fresh(deduped)), cap))
+    }
+    // the cold leg's shuffle carries only the input columns: canonical_url
+    // and url_key derive from url after the exchange, in the stage that
+    // filters and sorts
+    val coldCanon =
+      (if (frontierHostClustered) cold else cold.repartition(col("host")))
+        .withColumn("canonical_url", Canonical.canonicalUrl(col("url")))
+    val coldFresh =
+      fresh(coldCanon.withColumn("url_key", Canonical.urlKey(col("canonical_url"))))
+        .drop("url_key")
+    val coldSched = coldLegSchedule(coldFresh, robotsStage, cap)
+    Politeness.fetchBatches(hotSched.fold(coldSched)(_.unionByName(coldSched)), perHostBudget)
+      .sortWithinPartitions("priority_band", "scheduled_ms", "host_hash", "canonical_url")
+  }
 
-    def finish(scheduled: DataFrame): DataFrame =
-      Politeness.fetchBatches(scheduled, perHostBudget)
-        .sortWithinPartitions("priority_band", "scheduled_ms", "host_hash", "canonical_url")
-
-    // ONE seen-cardinality job instead of up to three emptiness probes —
-    // `DataFrame.isEmpty` runs a job each call, and this method used to
-    // evaluate it once per branch test. A count() costs the same single
-    // job (parquet count-star folds to row-group stats) and its value
-    // additionally sizes the probe branch's bloom capacity below.
+  /** The round's seen filter — rows whose url_key is not in `seenKeys`,
+    * columns unchanged — picked once per round: identity for an empty
+    * seen set; the (host, url_key) anti-join when both tables are stored
+    * host-clustered, which is co-located (hash(host) on both sides is a
+    * subset of the join keys, so neither side exchanges); otherwise a
+    * bloom filter built once for both legs ([[SeenSet.sizedBloomFilter]]).
+    */
+  private def seenFilter(seenKeys: DataFrame, numBloomBuckets: Int,
+                         coLocated: Boolean): DataFrame => DataFrame = {
     val nSeen = seenKeys.count()
-    val seenEmpty = nSeen == 0L
-
-    if (seenEmpty && cap > 0) {
-      // PROBE-FREE round (round 1 of a crawl — and the headline bench):
-      // fully fused cold path, ONE full-frontier exchange. Hosts never
-      // straddle the hot/cold split, so each leg schedules its hosts
-      // completely and the legs union AFTER their windows:
-      //  - cold leg: Exchange(host) → window-dedupe → robots filter →
-      //    politeness window — dedupe, robots and schedule all share the
-      //    one hash(host) exchange (robots is a narrow filter; the
-      //    dedupe window's reducers are BOUNDED because every cold host
-      //    has raw count ≤ cap by the hot-split definition);
-      //  - hot leg: the url_key-agg dedupe (spreads a degenerate host
-      //    across reducers) + salted two-phase cap, as before — a few
-      //    small exchanges over the tiny hot subset.
-      // Seen-rounds keep the two-exchange composition below: the exact-
-      // confirm's internal union breaks partitioning anyway, and the
-      // url_key-agg dedupe's map-side partial collapse is worth more
-      // there. (A fully-fused seen path exists on paper — confirm via a
-      // broadcast of seen∩bloom-positive keys instead of an anti-join —
-      // and is the documented next step if profiling demands it.)
-      // Cold-leg shuffle carries ONLY (url, priority_band, host, …input
-      // cols): canonical_url, url_key and host_hash are all derivable
-      // from url/host, so they are computed POST-exchange (executor-side,
-      // same stage as the window sort) instead of being materialized into
-      // the full-frontier shuffle. At ~45 B of canonical string + 16 B of
-      // hashes per row that is ~45% of the round's full-frontier shuffle
-      // bytes — network cost at cluster scale, memory-bandwidth pressure
-      // in local mode (the measured reason the 8-thread side degraded
-      // harder under slow ambient windows, BENCH.md). The explicit
-      // repartition(host) IS the one exchange: hashpartitioning(host)
-      // satisfies every downstream window's required distribution, so
-      // dedupe, robots and the politeness window all reuse it.
-      // The hot-host set is COLLECTED (bounded by rows/cap — the same
-      // rows the broadcast shipped anyway), which buys two plan
-      // simplifications: (a) when EMPTY — the common steady-state, no
-      // host is over cap — the flag join, hot leg and union vanish
-      // entirely (one less job, fewer plan nodes, the round is the bare
-      // cold pipeline); (b) when non-empty, the broadcast builds from a
-      // local relation instead of running the count-aggregate as a
-      // separate broadcast-subquery job.
-      val hotRows = hotRowSet(rawFrontier, spread, knownHotHosts)
-      val withHost =
-        if (rawFrontier.columns.contains("host")) rawFrontier
-        else rawFrontier.withColumn("host", Canonical.hostOf(col("url")))
-      val (hot, cold) = hotFlagSplit(withHost, hotRows)
-      // hot leg (tiny, over-cap hosts only): derive keys up front — the
-      // url_key agg-dedupe needs them pre-exchange anyway
-      val hotSched = hot.map { h =>
-        val hotKeyed = h
-          .withColumn("canonical_url", Canonical.canonicalUrl(col("url")))
-          .withColumn("url_key", Canonical.urlKey(col("canonical_url")))
-          .withColumn("host_hash", Canonical.hostHash(col("host")))
-        Politeness.schedule(
-          Politeness.capPerHost(robotsStage(dedupeWithinBatch(hotKeyed)), cap))
-      }
-      // host-clustered storage (bucketed parquet / Iceberg bucket(N,
-      // host)): the scan already reports hashpartitioning(host) — the
-      // broadcast hot-flag join and filters preserve it, so skipping
-      // the explicit repartition leaves the round EXCHANGE-FREE on the
-      // cold leg (dedupe agg, robots and the politeness window are all
-      // satisfied by the storage layout)
-      val coldExchanged =
-        (if (frontierHostClustered) cold else cold.repartition(col("host")))
-          .withColumn("canonical_url", Canonical.canonicalUrl(col("url")))
-      // bare (url, band, host) schema → the sort-free hash-agg dedupe
-      // (same winner; measured 17% faster and near-perfectly scaling);
-      // extra input columns → the window form, which keeps whole rows
-      // bare schema → the FUSED single-sort pipeline (robots first — it
-      // commutes with dedupe since all duplicates of a canonical share
-      // its robots fate — then one sort + one per-host scan does
-      // dedupe + host_seq + cap; see fusedScheduleCap and
-      // coldLegSchedule).
-      val coldSched = coldLegSchedule(coldExchanged, robotsStage, cap)
-      finish(hotSched.fold(coldSched)(_.unionByName(coldSched)))
-    } else if (frontierHostClustered && seenHostClustered && cap > 0 &&
-               !seenEmpty) {
-      // FUSED SEEN round — the steady-state crawl path at 10^10 URLs.
-      // With BOTH tables stored CLUSTERED BY host (Iceberg
-      // bucket(N, host); Spark bucketed parquet here) the whole round is
-      // exchange-free on the cold leg: the anti-join on
-      // (host, url_key) is co-located (hashpartitioning(host) on both
-      // sides is a subset of the join keys with matching bucket counts —
-      // the classic bucketed-bucketed join), its SMJ sorts are
-      // WITHIN-partition, its output keeps the left side's partitioning,
-      // and the downstream dedupe agg / robots filter / politeness
-      // window are all satisfied by it. Nothing full-frontier crosses
-      // the wire; the 10^10-key seen set never shuffles either.
-      //
-      // Seen-filtering BEFORE dedupe commutes with it: every duplicate
-      // of a canonical_url shares (host, url_key), so either the whole
-      // group is seen (all dropped in both orders) or none is. Joining
-      // on (host, url_key) rather than url_key alone is strictly
-      // stricter under 64-bit collisions (a cross-host collision no
-      // longer false-positives) and identical otherwise. Hot-host
-      // selection still uses RAW frontier counts (or write-time
-      // metrics): seen-filtering only removes rows, and capping a
-      // below-cap host is a no-op — the overcount argument again.
+    if (nSeen == 0L) identity
+    else if (coLocated) {
       require(seenKeys.columns.contains("host"),
         "seenHostClustered requires a (host, url_key) seen table — " +
           "write it with saveSeenClustered / checkpointRound")
-      val hotRows = hotRowSet(rawFrontier, spread, knownHotHosts)
-      val withHost =
-        if (rawFrontier.columns.contains("host")) rawFrontier
-        else rawFrontier.withColumn("host", Canonical.hostOf(col("url")))
-      val keyed = withHost
-        .withColumn("canonical_url", Canonical.canonicalUrl(col("url")))
-        .withColumn("url_key", Canonical.urlKey(col("canonical_url")))
       // null-SAFE host equality: url_key is total (xxhash64 maps null
-      // canonicals to a constant, never null), so the all-null group's
-      // membership must be decided like the probe path decides it — by
-      // key equality. A plain host join would null-compare and keep a
-      // seen null-host group forever.
+      // canonicals to a constant), so the all-null group's membership is
+      // decided by key equality, as the bloom path decides it
       val seenSide = seenKeys
         .select(col("host").as("__seen_host"), col("url_key").as("__seen_key"))
-      val fresh = keyed
-        .join(seenSide,
-          col("host") <=> col("__seen_host") && col("url_key") === col("__seen_key"),
-          "left_anti")
-        .drop("url_key")
-      val (hot, cold) = hotFlagSplit(fresh, hotRows)
-      val hotSched = hot.map { h =>
-        val hotKeyed = h
-          .withColumn("url_key", Canonical.urlKey(col("canonical_url")))
-          .withColumn("host_hash", Canonical.hostHash(col("host")))
-        Politeness.schedule(
-          Politeness.capPerHost(robotsStage(dedupeWithinBatch(hotKeyed)), cap))
-      }
-      // the bare frontier's cold schema after the drop is exactly the
-      // agg-dedupe domain (url, priority_band, host, canonical_url) —
-      // sort-free hash agg, clustering satisfied by the scan; a frontier
-      // carrying EXTRA columns takes the whole-row window dedupe instead
-      // (same winner), like the probe-free branch — the agg form would
-      // silently drop the extras (and break the union with the hot leg,
-      // which keeps whole rows)
-      // same fused-vs-window split as the probe-free branch (the
-      // co-located anti-join's output keeps the scan's host clustering;
-      // if a bucket-count mismatch made it exchange on (host, url_key)
-      // instead, fusedScheduleCap's distribution check self-heals)
-      val coldSched = coldLegSchedule(cold, robotsStage, cap)
-      finish(hotSched.fold(coldSched)(_.unionByName(coldSched)))
-    } else {
-      val deduped = dedupeWithinBatch(canon)
-      val fresh =
-        if (seenEmpty) deduped
-        else {
-          // SCALE-ADAPTIVE bloom capacity (guide §2): derive the
-          // per-bucket size from the seen table's actual cardinality
-          // (one cheap count over a table the caller has usually
-          // cached/checkpointed) instead of the fixed 1M-slot default.
-          // The default built 64 × 1.2 MB bitsets (~77 MB folded,
-          // serialized, collected AND broadcast per round) for seen
-          // sets thousands of times smaller — and that inflated byte
-          // count is also what probeAndConfirm's capacity-derived
-          // confirm bound sees, pushing the exact-confirm anti-join
-          // off the broadcast path it provably fits. Oversizing by
-          // 25% keeps the fpp at-or-below the design point; an
-          // undersized bucket would only raise fpp, never break
-          // correctness (every positive is exactly confirmed). At
-          // 10^10 keys the derived capacity reproduces the big
-          // bitsets and the distributed probe path — unchanged.
-          val perBucket = math.max(1024L,
-            nSeen * 5L / (4L * numBloomBuckets) + 1L)
-          val buckets = SeenSet.buildBuckets(seenKeys, "url_key", numBloomBuckets,
-            expectedPerBucket = perBucket)
-          // capacity makes the build bytes a KNOWN quantity, so the
-          // probe can skip its size-probe aggregate job (and the
-          // persist bridging it to the collect) entirely
-          SeenSet.probeAndConfirm(deduped, seenKeys, "url_key", buckets, numBloomBuckets,
-            buildBytesHint = SeenSet.estimatedBloomBytes(perBucket, numBloomBuckets))
-        }
-      val robotted = robotsStage(fresh)
-      val polite =
-        if (cap > 0) {
-          // same collected hot set as the probe-free branch: empty (the
-          // steady state) ⇒ the flag join + spread leg vanish from the
-          // plan. Only hosts over the SPREAD threshold pre-shrink via
-          // the salted two-phase top-k (so the schedule window never
-          // sorts a degenerate host on one reducer); merely-warm hosts
-          // are capped by the post-schedule filter below.
-          val hotRows = hotRowSet(rawFrontier, spread, knownHotHosts)
-          hotFlagSplit(robotted, hotRows) match {
-            case (Some(hot), cold) =>
-              Politeness.capPerHost(hot, cap).unionByName(cold)
-            case (None, cold) => cold
-          }
-        } else robotted
-      val scheduled = Politeness.schedule(polite)
-      finish(if (cap > 0) scheduled.where(col("host_seq") <= cap)
-             else scheduled)
-    }
+      _.join(seenSide,
+        col("host") <=> col("__seen_host") && col("url_key") === col("__seen_key"),
+        "left_anti")
+    } else SeenSet.sizedBloomFilter(seenKeys, nSeen, "url_key", numBloomBuckets)
   }
 
   /** Spread-leg host names for `runRound*`'s `knownHotHosts` — the
@@ -616,9 +428,7 @@ object Scheduler {
   def hotHosts(rawFrontier: DataFrame, perHostBudget: Int = 100,
                maxPerHostPerRound: Int = -1,
                hotSpreadRows: Long = -1): Array[String] = {
-    val cap =
-      if (maxPerHostPerRound < 0) perHostBudget * DefaultMaxBatchesPerHost
-      else maxPerHostPerRound
+    val cap = roundCap(perHostBudget, maxPerHostPerRound)
     // threshold matches the round's spread-leg routing, NOT the cap:
     // since the cold leg's post-schedule filter caps every host, the
     // only hosts worth naming are the ones that must avoid the cold
@@ -640,8 +450,7 @@ object Scheduler {
 
   /** Split `df` into (over-cap-host rows, everything else) via one
     * broadcast flag join; empty hot set ⇒ (None, df) and the join
-    * vanishes from the plan. Shared by all three runRound branches so
-    * the split mechanics cannot drift between them.
+    * vanishes from the plan.
     */
   private def hotFlagSplit(df: DataFrame,
                            hotRows: Array[org.apache.spark.sql.Row]): (Option[DataFrame], DataFrame) =
@@ -706,8 +515,8 @@ object Scheduler {
     // TWO writes consume `batches` (the round snapshot and the seen-key
     // delta) — without a persist the entire round pipeline executes
     // twice per checkpoint (guide §5: reused and expensive to
-    // recompute). The cache lives exactly as long as this call: both
-    // writes are synchronous, so it unpersists before returning.
+    // recompute). The cache lives exactly as long as this call: it
+    // unpersists once both writes have finished, failed or not.
     val cached = batches.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
       // The two writes are independent consumers of the cached batch, so
@@ -741,8 +550,10 @@ object Scheduler {
         cached.select("host", "url_key").distinct()
           .write.mode("overwrite").parquet(s"$outDir/seen/round=$round")
       }
-      Await.result(snapshotW, Duration.Inf)
-      Await.result(seenW, Duration.Inf)
+      // wait for BOTH writes before surfacing a failure: neither may
+      // outlive the call or run on after the cache is dropped
+      val outcomes = Seq(snapshotW, seenW).map(f => Await.ready(f, Duration.Inf).value.get)
+      outcomes.foreach(_.get)
     } finally { cached.unpersist(false); () }
   }
 
@@ -754,7 +565,10 @@ object Scheduler {
     */
   def saveSeenClustered(seen: DataFrame, path: String, buckets: Int = 64): Unit = {
     val spark = seen.sparkSession
-    spark.sql("DROP TABLE IF EXISTS graft_seen_write")
+    // the write registers the table under its per-path catalog name, so
+    // saves to different paths never share a table identity
+    val tbl = seenTableName(path)
+    spark.sql(s"DROP TABLE IF EXISTS $tbl")
     // ONE exchange, not two: `.distinct().repartition(host)` shuffled
     // every row twice (once on (host, url_key), once on host). The
     // repartition-then-dedupe order needs only the host exchange —
@@ -766,7 +580,7 @@ object Scheduler {
       .repartition(buckets, col("host"))
       .dropDuplicates("host", "url_key")
       .write.mode("overwrite").bucketBy(buckets, "host")
-      .option("path", path).saveAsTable("graft_seen_write")
+      .option("path", path).saveAsTable(tbl)
   }
 
   /** Append a round's newly-seen `(host, url_key)` keys to an existing

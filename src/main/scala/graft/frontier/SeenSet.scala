@@ -21,7 +21,7 @@ import scala.collection.mutable
   * every row — O(n·bitset) memcpy).
   *
   * Probe = broadcast the (small) bucket table once; executors lazily
-  * deserialize each bucket's filter ONCE per JVM and test candidates in a
+  * decode each bucket's filter once per probing task and test candidates in a
   * codegen-wrapped UDF. At 10^10, buckets whose bitsets exceed the
   * broadcast budget shard further by key range (same table layout, more
   * buckets) — the layout is the Iceberg `seen_buckets` table of SURVEY §4.
@@ -83,113 +83,150 @@ object SeenSet {
       .toDF("bucket", "bloom")
   }
 
-  /** Executor-side probe over the broadcast bucket table; filters are
-    * deserialized once per JVM (transient lazy), not per row.
+  /** One bucket's serialized filter → its membership test. Decoded once
+    * per probing task (broadcast probe) or per bucket group (cogroup).
     */
-  private final class BloomProbe(bc: Broadcast[Map[Long, Array[Byte]]], numBuckets: Int)
-      extends Serializable {
-    @transient private lazy val blooms: Map[Long, BloomFilter] =
-      bc.value.map { case (b, bytes) => b -> deser(bytes) }
-    def maybeSeen(key: Long): Boolean = {
-      val b = math.floorMod(key, numBuckets)
-      blooms.get(b.toLong).exists(_.mightContainLong(key))
-    }
+  private[frontier] type Decode = Array[Byte] => Long => Boolean
+
+  private[frontier] val bloomTest: Decode = bytes => {
+    val bf = deser(bytes)
+    k => bf.mightContainLong(k)
   }
 
-  /** Probe: keep candidate rows whose key might NOT be in the bloom, plus
-    * bloom-positives confirmed new by the exact anti-join. Equivalent to
-    * `candidates LEFT ANTI JOIN seen ON key` — the bloom only shrinks the
-    * anti-join's probe side.
+  /** Probe + exact confirm ≡ `candidates LEFT ANTI JOIN seen ON key`:
+    * bloom negatives skip the exact join's work, every positive is
+    * confirmed exactly, so no fpp can change the rows.
     *
     * Path selection by bucket-table size: small tables broadcast (probe
     * stays narrow — no candidate shuffle); past `maxBroadcastBytes` the
     * table stays DISTRIBUTED and candidates cogroup with their bucket
     * ([[probeDistributed]]) — at 10^10 keys the correctly-sized bitsets
     * are ≥ 1.2 GB, which must never funnel through driver memory or a
-    * whole-table broadcast.
+    * whole-table broadcast. A caller that sized the table
+    * ([[estimatedBloomBytes]]) passes `buildBytesHint` and skips the
+    * size-probe job.
     */
   def probeAndConfirm(candidates: DataFrame, seenKeys: DataFrame, keyCol: String,
                       buckets: DataFrame, numBuckets: Int,
                       maxBroadcastBytes: Long = 256L << 20,
-                      buildBytesHint: Long = -1L): DataFrame = {
-    // A caller that SIZED the bucket table (see Scheduler.runRoundImpl /
-    // [[estimatedBloomBytes]]) already knows an upper bound on its
-    // serialized bytes; with the hint the table is consumed exactly once
-    // (collect or cogroup), so the size-probe aggregate job AND the
-    // persist bridging it to the collect both disappear. Without a hint
-    // the bucket table is consumed twice at construction time — once by
-    // the size probe, once by the broadcast collect (or the distributed
-    // cogroup) — and each consumption would otherwise re-run the whole
-    // build (key shuffle + bloom fold). Persist across the two (guide
-    // §5: reused AND expensive to recompute); the broadcast path
-    // unpersists as soon as its collect has happened. The decision is
-    // performance-only either way: both probe paths feed the same exact
-    // confirm, so an off-estimate can never change rows.
-    val (totalBytes, probed) =
-      if (buildBytesHint >= 0L) {
-        val bp =
-          if (buildBytesHint <= maxBroadcastBytes)
-            probeBroadcast(candidates, keyCol, buckets, numBuckets)
-          else
-            // the cogroup keeps the build LAZY in the result plan, so a
-            // result consumed by several actions would re-run it —
-            // persist like the probe-size path does
-            probeDistributed(candidates, keyCol,
-              buckets.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK),
-              numBuckets)
-        (buildBytesHint, bp)
-      } else {
-        val cached = buckets.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        val bytes = cached
-          .agg(coalesce(sum(length(col("bloom"))), lit(0L))).head.getLong(0)
-        val bp =
-          if (bytes <= maxBroadcastBytes) {
-            val p = probeBroadcast(candidates, keyCol, cached, numBuckets)
-            cached.unpersist(false) // collect already ran; nothing lazy reads it
-            p
-          } else probeDistributed(candidates, keyCol, cached, numBuckets)
-        (bytes, bp)
-      }
-    val definitelyNew = probed.where(!col("maybe_seen")).drop("maybe_seen")
-    val needConfirm = probed.where(col("maybe_seen")).drop("maybe_seen")
-    // SIZE-AWARE confirm join strategy (guide §3.1): the bloom bytes are
-    // a capacity-derived UPPER bound on the seen-key bytes — a filter
-    // stores ~9.6 bits per slot of capacity and the keys are 8 bytes, so
-    // seenBytes ≤ ~6.7 × bloomBytes regardless of fill. When that bound
-    // fits the broadcast budget, hint the anti-join's build side so the
-    // (already bloom-shrunk) probe side never shuffles; past it the
-    // planner keeps the shuffled anti-join — the only exact option at
-    // 10^10 keys. Pure strategy, identical rows either way.
-    val confirmSeen = seenKeys.select(col(keyCol)).distinct()
-    val confirmedNew = needConfirm.join(
-      if (totalBytes * 7 <= maxBroadcastBytes) broadcast(confirmSeen) else confirmSeen,
-      Seq(keyCol), "left_anti")
-    definitelyNew.unionByName(confirmedNew)
+                      buildBytesHint: Long = -1L): DataFrame =
+    antiFilter(buckets, seenKeys, keyCol, numBuckets, maxBroadcastBytes,
+      buildBytesHint, seenBytesPerFilterByte = 7, bloomTest)(candidates)
+
+  /** The bloom [[antiFilter]] over `seenKeys`, sized from its known
+    * cardinality `nSeen`: per-bucket capacity = nSeen/numBuckets plus
+    * 25%, so the fpp stays at or below the design point and the table's
+    * bytes are known without a size-probe job. An undersized bucket
+    * would only raise fpp, never change rows.
+    */
+  def sizedBloomFilter(seenKeys: DataFrame, nSeen: Long, keyCol: String,
+                       numBuckets: Int): DataFrame => DataFrame = {
+    val perBucket = math.max(1024L, nSeen * 5L / (4L * numBuckets) + 1L)
+    antiFilter(buildBuckets(seenKeys, keyCol, numBuckets, expectedPerBucket = perBucket),
+      seenKeys, keyCol, numBuckets, 256L << 20,
+      estimatedBloomBytes(perBucket, numBuckets), seenBytesPerFilterByte = 7, bloomTest)
   }
 
-  /** Broadcast probe (small bucket tables): candidates stay un-shuffled;
-    * each executor deserializes the filters once per JVM.
+  /** The filter both seen-set kinds share, built ONCE and applied to any
+    * number of candidate frames: `candidates LEFT ANTI JOIN seen ON key`.
+    *
+    * Probe: under `maxBroadcastBytes` the `(bucket, blob)` table is
+    * collected once and broadcast, and `maybe_seen` is a narrow UDF;
+    * past it candidates cogroup with their bucket. The table is never
+    * left cached: with `buildBytesHint` it is consumed lazily by the
+    * probe itself; without it, a persist bridges the size probe and the
+    * collect and is dropped before returning.
+    *
+    * Confirm: the seen keys' bytes are bounded by
+    * `seenBytesPerFilterByte` × the filter bytes (8-byte keys against
+    * ~9.6 bits per bloom slot, 2 bytes per cuckoo slot). When that bound
+    * fits the broadcast budget, the confirm is ONE broadcast left-anti
+    * join conditioned on `maybe_seen`, which keeps the candidates'
+    * partitioning. Past it, bloom positives alone take the shuffled
+    * anti-join and union back with the negatives.
     */
-  private[frontier] def probeBroadcast(candidates: DataFrame, keyCol: String,
-                                       buckets: DataFrame, numBuckets: Int): DataFrame = {
-    val spark = candidates.sparkSession
-    val bucketMap = buckets.collect()
-      .map(r => r.getLong(0) -> r.getAs[Array[Byte]](1)).toMap
-    val probe = new BloomProbe(spark.sparkContext.broadcast(bucketMap), numBuckets)
+  private[frontier] def antiFilter(buckets: DataFrame, seenKeys: DataFrame, keyCol: String,
+                                   numBuckets: Int, maxBroadcastBytes: Long,
+                                   buildBytesHint: Long, seenBytesPerFilterByte: Int,
+                                   test: Decode): DataFrame => DataFrame = {
+    val (bytes, probe) = prober(buckets, numBuckets, maxBroadcastBytes, buildBytesHint, test)
+    val seenSide = seenKeys.select(col(keyCol).as("__seen_key")).distinct()
+    val key = col(keyCol) === col("__seen_key")
+    if (bytes * seenBytesPerFilterByte <= maxBroadcastBytes) { candidates =>
+      probe(candidates, keyCol)
+        .join(broadcast(seenSide), col("maybe_seen") && key, "left_anti")
+        .drop("maybe_seen")
+    } else { candidates =>
+      val probed = probe(candidates, keyCol)
+      probed.where(!col("maybe_seen")).drop("maybe_seen").unionByName(
+        probed.where(col("maybe_seen")).drop("maybe_seen").join(seenSide, key, "left_anti"))
+    }
+  }
+
+  /** Build-side half of [[antiFilter]]: the table's serialized bytes and
+    * a function adding `maybe_seen` to candidates.
+    */
+  private def prober(buckets: DataFrame, numBuckets: Int, maxBroadcastBytes: Long,
+                     buildBytesHint: Long, test: Decode)
+      : (Long, (DataFrame, String) => DataFrame) = {
+    val (bytes, collected) =
+      if (buildBytesHint >= 0L)
+        (buildBytesHint,
+          if (buildBytesHint <= maxBroadcastBytes) Some(buckets.collect()) else None)
+      else {
+        val cached = buckets.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        try {
+          val b = cached.agg(coalesce(sum(length(col(cached.columns(1)))), lit(0L)))
+            .head.getLong(0)
+          (b, if (b <= maxBroadcastBytes) Some(cached.collect()) else None)
+        } finally { cached.unpersist(false); () }
+      }
+    (bytes, collected match {
+      case Some(rows) => broadcastProbe(rows, numBuckets, test)
+      case None => probeDistributed(_, _, buckets, numBuckets, test)
+    })
+  }
+
+  /** Broadcast probe over a collected `(bucket, blob)` table: candidates
+    * stay un-shuffled and gain a narrow `maybe_seen` UDF column.
+    */
+  private[frontier] def broadcastProbe(rows: Array[org.apache.spark.sql.Row], numBuckets: Int,
+                                       test: Decode): (DataFrame, String) => DataFrame = {
+    val spark = org.apache.spark.sql.SparkSession.active
+    val bc = spark.sparkContext.broadcast(
+      rows.map(r => r.getLong(0) -> r.getAs[Array[Byte]](1)).toMap)
+    val probe = new BroadcastProbe(bc, numBuckets, test)
     val maybeSeenUdf = udf((key: Long) => probe.maybeSeen(key))
-    candidates.withColumn("maybe_seen", maybeSeenUdf(col(keyCol)))
+    (candidates, keyCol) => candidates.withColumn("maybe_seen", maybeSeenUdf(col(keyCol)))
+  }
+
+  /** Executor-side probe over the broadcast bucket table; each probing
+    * task decodes the filters once (transient lazy), not per row.
+    */
+  private final class BroadcastProbe(bc: Broadcast[Map[Long, Array[Byte]]], numBuckets: Int,
+                                     test: Decode) extends Serializable {
+    @transient private lazy val tests: Array[Long => Boolean] = {
+      val a = new Array[Long => Boolean](numBuckets)
+      bc.value.foreach { case (b, bytes) => a(b.toInt) = test(bytes) }
+      a
+    }
+    def maybeSeen(key: Long): Boolean = {
+      val t = tests(math.floorMod(key, numBuckets.toLong).toInt)
+      t != null && t(key)
+    }
   }
 
   /** Distributed probe (bucket tables too big to broadcast): candidates
     * cogroup with the bucket table on bucket id — one hash shuffle of the
-    * candidates, zero bytes through the driver. Each group deserializes
-    * its bucket's filter exactly once and streams its candidates through
-    * it; a missing bucket means nothing was ever inserted there
+    * candidates, zero bytes through the driver. Each group decodes its
+    * bucket's filter exactly once and streams its candidates through it;
+    * a missing bucket means nothing was ever inserted there
     * (maybe_seen = false). This is the Iceberg `seen_buckets`-table layout
     * of SURVEY §4 probed bucket-local.
     */
-  private[frontier] def probeDistributed(candidates: DataFrame, keyCol: String,
-                                         buckets: DataFrame, numBuckets: Int): DataFrame = {
+  private def probeDistributed(candidates: DataFrame, keyCol: String,
+                               buckets: DataFrame, numBuckets: Int,
+                               test: Decode): DataFrame = {
     import org.apache.spark.sql.{Encoders, Row}
     val schema = candidates.schema
     val keyIdx = schema.fieldIndex(keyCol)
@@ -197,15 +234,14 @@ object SeenSet {
       nullable = false)
     val candG = candidates.groupByKey((r: Row) =>
       math.floorMod(r.getLong(keyIdx), numBuckets).toLong)(Encoders.scalaLong)
-    val bucketG = buckets.select(col("bucket").cast("long"), col("bloom"))
+    val bucketG = buckets.select(col(buckets.columns(0)).cast("long"), col(buckets.columns(1)))
       .as[(Long, Array[Byte])](Encoders.tuple(Encoders.scalaLong, Encoders.BINARY))
       .groupByKey(_._1)(Encoders.scalaLong)
-    candG.cogroup(bucketG) { (_, cands, blooms) =>
-      val bf = if (blooms.hasNext) Some(deser(blooms.next()._2)) else None
-      bf match {
-        case None => cands.map(r => Row.fromSeq(r.toSeq :+ false))
-        case Some(filter) =>
-          cands.map(r => Row.fromSeq(r.toSeq :+ filter.mightContainLong(r.getLong(keyIdx))))
+    candG.cogroup(bucketG) { (_, cands, blobs) =>
+      if (!blobs.hasNext) cands.map(r => Row.fromSeq(r.toSeq :+ false))
+      else {
+        val t = test(blobs.next()._2)
+        cands.map(r => Row.fromSeq(r.toSeq :+ t(r.getLong(keyIdx))))
       }
     }(Encoders.row(outSchema)).toDF()
   }

@@ -104,4 +104,39 @@ class CheckpointSpec extends AnyFunSuite {
     assert(Scheduler.loadSeenClustered(spark, s"$base/b", buckets = 2)
       .select("url_key").as[Long].collect().sorted.toSeq == Seq(91L, 92L))
   }
+
+  test("a failing snapshot write returns only after the seen write, with no cache left") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-ckpt-fail").toString
+    // `rounds` is a plain file, so the snapshot write cannot create its
+    // directory; the seen write is unaffected
+    java.nio.file.Files.write(java.nio.file.Paths.get(dir, "rounds"), Array[Byte](1))
+    val robots = Synth.robots(spark, 20).toDF()
+    val batches = Scheduler.runRound(frontier(5, 600), Scheduler.loadSeen(spark, dir), robots)
+    intercept[Exception](Scheduler.checkpointRound(batches, dir, 1))
+    assert(new java.io.File(s"$dir/seen/round=1/_SUCCESS").exists(),
+      "checkpointRound returned before its seen write finished")
+    assert(batches.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
+    assert(spark.read.parquet(s"$dir/seen/round=1").count() ==
+      batches.select("host", "url_key").distinct().count())
+  }
+
+  test("concurrent saveSeenClustered calls on different paths keep their own rows") {
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.duration.Duration
+    implicit val ec: scala.concurrent.ExecutionContext =
+      scala.concurrent.ExecutionContext.global
+    val base = java.nio.file.Files.createTempDirectory("graft-seen-conc").toString
+    val sets = (0 until 4).map { i =>
+      s"$base/s$i" -> (0 until 50).map(k => (s"h${k % 5}.test", i * 1000L + k))
+    }
+    val writes = sets.map { case (path, rows) =>
+      Future(Scheduler.saveSeenClustered(rows.toDF("host", "url_key"), path, buckets = 2))
+    }
+    writes.foreach(Await.result(_, Duration.Inf))
+    sets.foreach { case (path, rows) =>
+      val got = Scheduler.loadSeenClustered(spark, path, buckets = 2)
+        .select("url_key").as[Long].collect().sorted.toSeq
+      assert(got == rows.map(_._2).sorted, path)
+    }
+  }
 }

@@ -39,6 +39,22 @@ class SeenSetSpec extends AnyFunSuite {
       assert(got.sameElements(expected), s"fpp=$fpp")
     }
   }
+
+  test("probeAndConfirm leaves no cached bucket table on any path") {
+    val candidates = (0L until 600L).map(k => (k, s"url-$k")).toDF("url_key", "url")
+    val seen = (0L until 600L by 4).toDF("url_key")
+    val expected = SeenSet.dedupeExact(candidates, seen, "url_key")
+      .select("url_key").as[Long].collect().sorted
+    for (maxBytes <- Seq(0L, 256L << 20); hint <- Seq(-1L, 1L << 20)) {
+      val buckets = SeenSet.buildBuckets(seen, "url_key", 8, 1000)
+      val got = SeenSet.probeAndConfirm(candidates, seen, "url_key", buckets, 8,
+          maxBroadcastBytes = maxBytes, buildBytesHint = hint)
+        .select("url_key").as[Long].collect().sorted
+      assert(got.sameElements(expected), s"maxBytes=$maxBytes hint=$hint")
+      assert(buckets.storageLevel == org.apache.spark.storage.StorageLevel.NONE,
+        s"bucket table left cached: maxBytes=$maxBytes hint=$hint")
+    }
+  }
 }
 
 class PolitenessSpec extends AnyFunSuite {
@@ -109,30 +125,6 @@ class PolitenessSpec extends AnyFunSuite {
           Scheduler.dedupeWithinBatch(Scheduler.canonicalize(raw)), robots), 500)), 100)
       .select(cols.map(col): _*)
     assert(got.exceptAll(want).isEmpty && want.exceptAll(got).isEmpty)
-  }
-
-  test("dedupeWithinHostAgg == dedupeWithinHost on the bare cold-leg schema") {
-    // band ties (min url wins), band differences (min band wins), a
-    // boundary band (99999), several hosts, and null-url rows — the
-    // all-null canonical group must collapse to ONE null row with the
-    // min band in BOTH forms
-    val rows = Seq(
-      ("https://a.test/x?v=1", 3, "a.test", "https://a.test/x"),
-      ("https://a.test/x?v=0", 3, "a.test", "https://a.test/x"), // tie: min url
-      ("https://a.test/x", 7, "a.test", "https://a.test/x"),     // loses on band
-      ("https://a.test/y", 99999, "a.test", "https://a.test/y"), // band boundary
-      ("https://b.test/x", 0, "b.test", "https://b.test/x"),     // same canonical, other host
-      (null, 9, null, null),
-      (null, 5, null, null), // null group winner: band 5
-      ("https://b.test/z", 1, "b.test", "https://b.test/z")
-    ).toDF("url", "priority_band", "host", "canonical_url")
-    val cols = Seq("url", "priority_band", "host", "canonical_url").map(col)
-    val win = Scheduler.dedupeWithinHost(rows).select(cols: _*)
-    val agg = Scheduler.dedupeWithinHostAgg(rows).select(cols: _*)
-    assert(win.exceptAll(agg).isEmpty && agg.exceptAll(win).isEmpty)
-    assert(agg.count() == 5)
-    val nullRow = agg.where(col("url").isNull).collect()
-    assert(nullRow.length == 1 && nullRow.head.getInt(1) == 5)
   }
 
   test("clustered round on a bucketed frontier == repartitioned round, fewer exchanges") {
@@ -430,22 +422,152 @@ class PolitenessSpec extends AnyFunSuite {
     assert(e.getMessage.contains("per-round broadcast join"))
   }
 
-  test("robotsStage auto-fallback: identical round output on either side of the guard") {
-    // 50 hosts vs maxHosts 49/50: one side takes the map-broadcast form,
-    // the other falls back to the per-round join — same rows either way,
-    // and neither throws (the point of the auto form)
-    val raw = Synth.frontierSeed(spark, 2500, nHosts = 50).toDF()
+  test("dedupeWithinHost keeps dedupeWithinBatch's winner: ties, bands, nulls, extra columns") {
+    // band ties (min url wins), band differences (min band wins), equal
+    // (url, band) rows told apart only by an extra column (min depth
+    // wins, whatever the input order), several hosts, and null-url rows:
+    // the all-null canonical group collapses to ONE row with the min band
+    val rows = Seq(
+      ("https://a.test/x?v=1", 3, "a.test", "https://a.test/x", 0),
+      ("https://a.test/x?v=0", 3, "a.test", "https://a.test/x", 0), // tie: min url
+      ("https://a.test/x", 7, "a.test", "https://a.test/x", 0),     // loses on band
+      ("https://a.test/y", 2, "a.test", "https://a.test/y", 3),
+      ("https://a.test/y", 2, "a.test", "https://a.test/y", 1),     // min depth
+      ("https://b.test/x", 0, "b.test", "https://b.test/x", 0),     // same path, other host
+      (null, 9, null, null, 0),
+      (null, 5, null, null, 0), // null group winner: band 5
+      ("https://b.test/z", 1, "b.test", "https://b.test/z", 0)
+    ).toDF("url", "priority_band", "host", "canonical_url", "depth").coalesce(1)
+    val cols = Seq("url", "priority_band", "host", "canonical_url", "depth").map(col)
+    val win = Scheduler.dedupeWithinHost(rows).select(cols: _*)
+    val batch = Scheduler.dedupeWithinBatch(
+      rows.withColumn("url_key", Canonical.urlKey($"canonical_url"))).select(cols: _*)
+    assert(win.exceptAll(batch).isEmpty && batch.exceptAll(win).isEmpty)
+    assert(win.count() == 5)
+    val nullRow = win.where(col("url").isNull).collect()
+    assert(nullRow.length == 1 && nullRow.head.getInt(1) == 5)
+  }
+
+  test("same URL at two depths: every path keeps dedupeWithinBatch's winner") {
+    // the larger depth is stored FIRST in the bucket file: a window
+    // dedupe ordered only by (canonical_url, band, url) keeps the row it
+    // meets first, the batch dedupe keeps the minimum over all columns
+    val x = "https://dup.example.test/x"
+    val raw = (Seq((x, 1, 3), (x, 1, 1)) ++
+        (1 to 40).map(i => (s"https://h${i % 5}.example.test/p$i", i % 3, i % 4)))
+      .toDF("url", "priority_band", "depth")
+      .withColumn("host", Canonical.hostOf($"url"))
+      .select("url", "priority_band", "host", "depth")
+    val seenPlain = Scheduler.canonicalize(raw.drop("host", "depth"))
+      .where($"url".endsWith("p7") || $"url".endsWith("p8"))
+      .select($"host", $"url_key").distinct()
+    val dir = java.nio.file.Files.createTempDirectory("graft-dup-depth").toString
+    spark.sql("DROP TABLE IF EXISTS graft_test_dup_depth")
+    raw.coalesce(1).write.mode("overwrite").bucketBy(4, "host")
+      .option("path", s"$dir/frontier").saveAsTable("graft_test_dup_depth")
+    Scheduler.saveSeenClustered(seenPlain, s"$dir/seen", buckets = 4)
+    val robots = Seq.empty[(String, Long, Seq[String])]
+      .toDF("host", "crawl_delay_ms", "disallow_prefixes")
+    def depthOf(df: org.apache.spark.sql.DataFrame): Seq[Int] =
+      df.where($"url" === x).select("depth").as[Int].collect().toSeq
+    val want = depthOf(Scheduler.dedupeWithinBatch(Scheduler.canonicalize(raw)))
+    assert(want == Seq(1))
+    val fused = Scheduler.runRound(spark.table("graft_test_dup_depth"),
+      Scheduler.loadSeenClustered(spark, s"$dir/seen", buckets = 4), robots,
+      frontierHostClustered = true, seenHostClustered = true)
+    val probe = Scheduler.runRound(raw, seenPlain.select("url_key"), robots)
+    assert(depthOf(fused) == want, "fused path")
+    assert(depthOf(probe) == want, "probe path")
+  }
+
+  /** Shuffle exchanges over frontier rows: the frontier is the plan's
+    * only file scan (the seen sets below are local relations).
+    */
+  private def frontierExchanges(plan: org.apache.spark.sql.execution.SparkPlan) =
+    plan.collect {
+      case e: org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+          if e.exists(_.isInstanceOf[org.apache.spark.sql.execution.FileSourceScanExec]) => e
+    }
+
+  private def partitionedOn(e: org.apache.spark.sql.execution.exchange.ShuffleExchangeExec) =
+    e.outputPartitioning match {
+      case h: org.apache.spark.sql.catalyst.plans.physical.HashPartitioning =>
+        h.expressions.flatMap(_.references.map(_.name))
+      case _ => Nil
+    }
+
+  private def withoutAqe[T](body: => T): T = {
+    val aqeBefore = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try body finally spark.conf.set("spark.sql.adaptive.enabled", aqeBefore)
+  }
+
+  /** A parquet frontier (plus an optional hot host) and a url_key-only
+    * seen set holding a third of its keys, as a local relation.
+    */
+  private def parquetFrontierAndSeen(name: String, hotRows: Int) = {
+    val dir = java.nio.file.Files.createTempDirectory(name).toString
+    Synth.frontierSeed(spark, 2000, nHosts = 30).toDF()
       .select($"url", $"priority_band")
-    val robots = Synth.robots(spark, 50).toDF()
-    val seen = Scheduler.loadSeen(spark, "/tmp/none")
-    val cols = Seq("canonical_url", "host_seq", "scheduled_ms", "batch_id")
-    val viaMap = Scheduler.runRoundStaged(raw, seen,
-        Politeness.robotsStage(robots, maxHosts = 50L))
-      .select(cols.map(col): _*)
-    val viaJoin = Scheduler.runRoundStaged(raw, seen,
-        Politeness.robotsStage(robots, maxHosts = 49L))
-      .select(cols.map(col): _*)
-    assert(viaMap.exceptAll(viaJoin).isEmpty && viaJoin.exceptAll(viaMap).isEmpty)
+      .unionByName((1 to hotRows).toDF("i").select(
+        concat(lit("https://hot.example.test/u/"), $"i").as("url"),
+        lit(0).as("priority_band")))
+      .write.mode("overwrite").parquet(s"$dir/frontier")
+    val raw = spark.read.parquet(s"$dir/frontier")
+    val seen = Scheduler.canonicalize(raw).where(xxhash64($"url") % 3 === 0)
+      .select("url_key").as[Long].collect().toSeq.toDF("url_key")
+    (raw, seen)
+  }
+
+  test("seen round on an unclustered frontier: one frontier exchange, on host") {
+    val (raw, seen) = parquetFrontierAndSeen("graft-seen-plan", hotRows = 0)
+    val robots = Synth.robots(spark, 30).toDF()
+    withoutAqe {
+      val ex = frontierExchanges(
+        Scheduler.runRound(raw, seen, robots).queryExecution.executedPlan)
+      assert(ex.map(partitionedOn) == Seq(Seq("host")),
+        s"frontier exchanges: ${ex.map(partitionedOn)}")
+    }
+  }
+
+  test("probe path with a hot host: one frontier scan per leg, one cold-leg exchange") {
+    val (raw, seen) = parquetFrontierAndSeen("graft-hot-plan", hotRows = 600)
+    val robots = Synth.robots(spark, 30).toDF()
+    withoutAqe {
+      val plan = Scheduler.runRound(raw, seen, robots, maxPerHostPerRound = 200,
+        knownHotHosts = Some(Array("hot.example.test"))).queryExecution.executedPlan
+      val scans = plan.collect {
+        case s: org.apache.spark.sql.execution.FileSourceScanExec => s
+      }
+      assert(scans.size == 2, s"frontier scans: ${scans.size}")
+      val legs = plan.collect { case u: org.apache.spark.sql.execution.UnionExec => u }
+        .head.children
+      val (hotLeg, coldLeg) = legs.partition(l =>
+        frontierExchanges(l).exists(e => partitionedOn(e) == Seq("url_key")))
+      assert(hotLeg.size == 1 && coldLeg.size == 1,
+        s"legs: ${legs.map(l => frontierExchanges(l).map(partitionedOn))}")
+      val coldEx = frontierExchanges(coldLeg.head)
+      assert(coldEx.map(partitionedOn) == Seq(Seq("host")),
+        s"cold-leg exchanges: ${coldEx.map(partitionedOn)}")
+    }
+  }
+
+  test("maxPerHostPerRound = 0 on a seen round keeps every unseen row") {
+    // unique URLs, half on one host far over the default cap
+    val raw = (0 until 3000).map { i =>
+      val host = if (i % 2 == 0) "hot" else s"h${i % 7}"
+      (f"https://$host.example.test/p/$i%04d", i % 4)
+    }.toDF("url", "priority_band")
+    val seen = Scheduler.canonicalize(raw).where(xxhash64($"url") % 3 === 0)
+      .select("url_key")
+    val nSeen = seen.count()
+    assert(nSeen > 0)
+    val robots = Seq.empty[(String, Long, Seq[String])]
+      .toDF("host", "crawl_delay_ms", "disallow_prefixes")
+    val out = Scheduler.runRound(raw, seen, robots, perHostBudget = 5,
+      maxPerHostPerRound = 0)
+    assert(out.count() == 3000L - nSeen)
+    assert(out.where($"host" === "hot.example.test").count() > 500L)
   }
 
   test("full round: dedupe removes injected ~10% duplicates; batches respect budget") {
