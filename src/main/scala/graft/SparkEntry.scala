@@ -546,49 +546,20 @@ object SparkEntry {
       agreeFold(joined, mapped)
     }),
 
-    // Full round under a hot-host cap, driven by the METRICS-FED hot set
-    // (Scheduler.hotHosts == the write-time lineage metrics a production
-    // frontier writer persists via partitionMetrics) vs the per-round
-    // COUNTED hot set — plus a superset entry (a host not in the
-    // frontier) to gate the "stale metrics are a superset and capping a
-    // cold host is a no-op" contract under the driver oracle. Emitted as
-    // counted UNION ALL (fed \ counted) UNION ALL (counted \ fed), so
-    // any divergence between the two paths breaks the row/hash compare.
-    // cap=40 makes every derived host (~405 raw rows each) hot, so the
-    // whole hot leg (dedupe -> robots -> salted two-phase cap ->
-    // schedule) runs for both hot-set sources.
-    "q68_hot_metrics_round" -> ((s, dir) => {
-      // the frontier is scanned by both rounds AND the metrics count —
-      // persist the one 150k-row derivation instead of re-deriving per
-      // consumer (guide §5)
-      val frontier = derivedFrontier(s, dir).persist()
-      val robots = derivedRobots(s, dir).persist() // both rounds' broadcast builds
-      def sel(df: DataFrame) = df.select(col("canonical_url"), col("host"),
-        col("host_seq"), col("scheduled_ms").cast("long").as("scheduled_ms"))
-      // agreeFold scans each side exactly once, so the rounds need no
-      // persist of their own
-      // hotSpreadRows pinned to the cap so this gate keeps exercising
-      // the SALTED spread leg for both hot-set sources (the auto
-      // threshold would route these ~405-row hosts through the cold
-      // leg's post-schedule cap filter instead — that equivalence has
-      // its own EngineSpec case and is implied by q26/q51 staying green)
-      val counted = sel(Scheduler.runRound(frontier,
-        Scheduler.loadSeen(s, "/tmp/none"), robots, maxPerHostPerRound = 40,
-        hotSpreadRows = 40))
-      val metrics = Scheduler.hotHosts(frontier, maxPerHostPerRound = 40,
-        hotSpreadRows = 40)
-      val fed = sel(Scheduler.runRound(frontier,
-        Scheduler.loadSeen(s, "/tmp/none"), robots, maxPerHostPerRound = 40,
-        hotSpreadRows = 40,
-        knownHotHosts = Some(metrics ++ Array("notinfrontier.example.test"))))
-      agreeFold(counted, fed)
-    }),
+    // Full round under a cap of 40 URLs per host: every derived host
+    // (~405 raw rows each) is over the cap, so the round keeps exactly
+    // the first 40 URLs per host in politeness order and numbers them.
+    "q68_hot_metrics_round" -> ((s, dir) =>
+      Scheduler.runRound(derivedFrontier(s, dir), Scheduler.loadSeen(s, "/tmp/none"),
+          derivedRobots(s, dir), maxPerHostPerRound = 40)
+        .select(col("canonical_url"), col("host"), col("host_seq"),
+          col("scheduled_ms").cast("long").as("scheduled_ms"))),
 
     // FUSED SEEN round (the steady-state crawl path): frontier AND seen
     // set both stored host-clustered (Spark bucketed parquet = the
     // Iceberg bucket(N, host) stand-in), round = zero-exchange
-    // co-located anti-join on (host, url_key) -> hot split -> dedupe ->
-    // robots -> schedule, under a cap that makes every host hot. The
+    // co-located anti-join on (host, url_key) -> robots -> dedupe +
+    // schedule + cap, under a cap that every host exceeds. The
     // seen set is the canonicals of the even-orderkey half (the q66
     // parity trick - DuckDB has no xxhash64, so membership is defined
     // by canonical equality, which the oracle CAN recompute). Emitted
@@ -2091,8 +2062,8 @@ object SparkEntry {
       s"""$scheduledCte
          |SELECT canonical_url, host, host_seq, scheduled_ms FROM sched""".stripMargin,
 
-    // capped round: capping EVERY host at 40 in SQL equals the engine's
-    // hot/cold split (capping a below-cap host is a no-op), and the cap
+    // capped round: the engine caps every host at 40 (capping a
+    // below-cap host is a no-op), and the cap
     // keeps the politeness order's top-40 (band, canonical_url) — the
     // exact contract of Politeness.capPerHost
     "q68_hot_metrics_round" ->
@@ -2118,8 +2089,8 @@ object SparkEntry {
 
     // fused seen round: anti-join the deduped frontier against the
     // even-orderkey half's canonicals, then cap every host at 40
-    // (== the engine's hot/cold split; capping a below-cap host is a
-    // no-op) and schedule
+    // (as the engine does; capping a below-cap host is a no-op) and
+    // schedule
     "q69_fused_seen_round" ->
       s"""$dedupedCte,
          |seen AS (

@@ -10,30 +10,28 @@ import org.apache.spark.sql.functions._
   * in-sandbox — same append-only contract).
   *
   * A round is one pipeline ([[Scheduler.runRound]]):
-  *   1. derive `host`; one broadcast flag join splits the rows of hosts
-  *      over the spread threshold (hot) from the rest (cold);
-  *   2. each leg seen-filters right after its first exchange — the hot
-  *      leg's url_key dedupe exchange, the cold leg's hash(host)
-  *      exchange (none when the frontier is stored host-clustered). The
-  *      filter is identity (empty seen set), the co-located
+  *   1. derive `host`; one hash(host) exchange (none when the frontier is
+  *      stored host-clustered);
+  *   2. derive canonical_url and url_key after the exchange and
+  *      seen-filter: identity (empty seen set), the co-located
   *      (host, url_key) anti-join (both tables host-clustered), or a
   *      bloom probe + exact confirm;
-  *   3. hot leg: robots → salted two-phase cap → schedule; cold leg: one
-  *      sort + one per-host scan does dedupe, schedule and cap;
+  *   3. robots, then one sort + one per-host scan does dedupe, schedule
+  *      and cap;
   *   4. one fetch-batch emit closes the round.
   *
-  * Seen-filtering before the cold leg's dedupe is exact: every duplicate
-  * of a canonical URL shares its (host, url_key), so a duplicate group is
-  * seen whole or not at all.
+  * Seen-filtering before dedupe is exact: every duplicate of a canonical
+  * URL shares its (host, url_key), so a duplicate group is seen whole or
+  * not at all.
   *
   * Shuffle plan at 10^10 URLs:
   *   - canonicalization is narrow (zero shuffle);
-  *   - the cold leg's one full-frontier exchange is hash(host), and the
-  *     seen filter, robots, dedupe and the politeness schedule all reuse
-  *     it: each output partition owns whole hosts, so scheduling is
+  *   - the round's one full-frontier exchange is hash(host), and the seen
+  *     filter, robots, dedupe and the politeness schedule all reuse it:
+  *     each output partition owns whole hosts, so scheduling is
   *     partition-local (a range write layout is applied at the sink);
-  *   - hot hosts never sort on one reducer: their leg dedupes on url_key
-  *     and caps with two-phase salted top-k ([[Politeness.capPerHost]]);
+  *   - a degenerate host sorts on one reducer; the sort spills and the
+  *     per-host scan keeps O(cap) state (measured cost: [[runRound]]);
   *   - robots and the bloom table are broadcast (host- and
   *     filter-cardinality).
   */
@@ -64,17 +62,18 @@ object Scheduler {
     * as checkpointRound and the bench table writer do). A non-null host
     * paired with a null url would make the host-partitioned dedupe keep
     * one null row PER HOST where the batch dedupe keeps one globally —
-    * the hot/cold leg equivalence assumes the writer invariant.
+    * the host/batch dedupe equivalence assumes the writer invariant.
     */
-  def canonicalize(frontier: DataFrame): DataFrame = {
-    val withHost =
-      if (frontier.columns.contains("host")) frontier
-      else frontier.withColumn("host", Canonical.hostOf(col("url")))
-    withHost
+  def canonicalize(frontier: DataFrame): DataFrame =
+    withHost(frontier)
       .withColumn("canonical_url", Canonical.canonicalUrl(col("url")))
       .withColumn("url_key", Canonical.urlKey(col("canonical_url")))
       .withColumn("host_hash", Canonical.hostHash(col("host")))
-  }
+
+  /** `frontier` with its stored `host` column, or one derived from url. */
+  private def withHost(frontier: DataFrame): DataFrame =
+    if (frontier.columns.contains("host")) frontier
+    else frontier.withColumn("host", Canonical.hostOf(col("url")))
 
   /** In-batch dedupe: first sighting wins. Deterministic winner = the
     * lexicographic minimum of (priority_band, url, …rest) per canonical
@@ -121,37 +120,33 @@ object Scheduler {
     *
     * `maxPerHostPerRound`: -1 (default) = skew-safe auto cap of
     * perHostBudget × [[DefaultMaxBatchesPerHost]] URLs per host per
-    * round; 0 = explicit opt-OUT (uncapped, and no host takes the spread
-    * leg unless `hotSpreadRows` or `knownHotHosts` names it — one
-    * degenerate host can serialize a cold-leg reducer); >0 = exact cap.
+    * round; 0 = explicit opt-OUT (uncapped: a degenerate host then
+    * schedules in full on one reducer); >0 = exact cap. Every host is
+    * capped inside [[fusedScheduleCap]]'s scan (or, on the extra-columns
+    * path, by a post-schedule `host_seq <= cap` filter) — both keep
+    * exactly the first `cap` rows per host in the politeness order
+    * (priority_band, canonical_url), row-identical to
+    * [[Politeness.capPerHost]]-then-schedule.
     *
-    * `hotSpreadRows`: raw-row threshold above which a host leaves the
-    * cold pipeline for the salted spread leg (dedupeWithinBatch → seen
-    * filter → robots → two-phase [[Politeness.capPerHost]] → schedule, a few
-    * exchanges over just those hosts' rows). -1 (default) =
-    * [[hotSpreadAuto]]. The CAP itself no longer depends on this split:
-    * every cold-leg host is capped inside [[fusedScheduleCap]]'s scan
-    * (or, on the extra-columns path, by a post-schedule
-    * `host_seq <= cap` filter) — both row-identical to
-    * capPerHost-then-schedule because each keeps exactly the first
-    * `cap` rows per host in the politeness order (priority_band,
-    * canonical_url) and crawl_delay_ms is constant per host — so
-    * `knownHotHosts` (and this threshold) are PURE performance hints:
-    * any hot set, including an undercounting one, yields the same
-    * output. Warm hosts (over cap, under the spread threshold — the 40M
-    * probe measured 401 such hosts carrying 20% of the frontier) stay
-    * in the exchange-free leg instead of paying the spread leg's
-    * url_key exchange + salted top-k + re-exchange, which cost 42% of
-    * the 40M round's wall (28.4 s vs 16.4 s at c4, measured with the
-    * since-removed FullGapProbe).
+    * `knownHotHosts` and `hotSpreadRows` are accepted and ignored;
+    * callers still pass them by name. They routed hosts into a salted
+    * spread leg that only guarded against one host's sort straggling on
+    * one reducer. Without it, a host that is a large share of an
+    * unclustered frontier sorts in one task. Measured on a 4M-row
+    * unclustered stream plus one host (local[4], AQE off, 8 shuffle
+    * partitions, median of 6; BENCH.md): the round's wall fell
+    * (1.2M-row host 17.2 s → 10.8 s, 4M-row host 23.9 s → 12.4 s), but
+    * the schedule stage's slowest task grew with the host — for the
+    * 4M-row host, half the frontier, 3.4 s → 10.2 s, 3.2× the stage's
+    * median task. That straggler is the cost of the single leg.
     *
     * `frontierHostClustered`: set true when `rawFrontier` scans a table
     * whose STORAGE LAYOUT already clusters rows by host — a Spark
     * bucketed table `CLUSTERED BY (host)`, or an Iceberg table with a
-    * `bucket(N, host)` partition transform. The cold leg then skips its
+    * `bucket(N, host)` partition transform. The round then skips its
     * explicit repartition: the bucketed scan reports
     * hashpartitioning(host), which satisfies the seen filter, robots and
-    * the fused schedule scan — the cold leg runs with ZERO
+    * the fused schedule scan — the round runs with ZERO
     * full-frontier exchanges (storage paid the shuffle once, every round
     * reuses it; at cluster scale this is the per-round network bill).
     * The flag is a performance contract only: if the input is NOT
@@ -167,7 +162,7 @@ object Scheduler {
                hotSpreadRows: Long = -1): DataFrame =
     runRoundImpl(rawFrontier, seenKeys, Politeness.applyRobots(_, robots),
       perHostBudget, numBloomBuckets, maxPerHostPerRound, frontierHostClustered,
-      knownHotHosts, seenHostClustered, hotSpreadRows)
+      seenHostClustered)
 
   /** [[runRound]] over a crawl-lifetime robots cache
     * ([[Politeness.robotsBroadcast]]): identical output, but the robots
@@ -185,17 +180,18 @@ object Scheduler {
                      hotSpreadRows: Long = -1): DataFrame =
     runRoundImpl(rawFrontier, seenKeys, Politeness.applyRobotsMap(_, robotsBc),
       perHostBudget, numBloomBuckets, maxPerHostPerRound, frontierHostClustered,
-      knownHotHosts, seenHostClustered, hotSpreadRows)
+      seenHostClustered)
 
   /** Dedupe with the SAME winner as [[dedupeWithinBatch]] — the first
     * row per canonical_url in (canonical_url, priority_band, url, …rest)
     * order, i.e. the minimum over every column — but expressed as a
     * window over hash(host) partitioning, so the politeness window
     * downstream REUSES the exchange instead of adding a second
-    * full-frontier shuffle. Only safe where per-host row counts are
-    * bounded (the hot-host split keeps degenerate hosts out); url_key
-    * hash collisions across distinct canonical urls are kept (2^-64),
-    * where the agg form would collapse them — both deterministic.
+    * full-frontier shuffle. A degenerate host is one large window sort
+    * on one reducer, which spills; the post-schedule cap then trims it
+    * ([[runRound]] has the measured cost). url_key hash collisions
+    * across distinct canonical urls are kept (2^-64), where the agg form
+    * would collapse them — both deterministic.
     */
   private[graft] def dedupeWithinHost(canonical: DataFrame): DataFrame = {
     // lag-based adjacent-dup filter: one window pass, no rank recompute.
@@ -220,19 +216,6 @@ object Scheduler {
       .withColumn("__dup", lag(surr, 1).over(w) === surr)
       .where(col("__dup").isNull || !col("__dup")).drop("__dup")
   }
-
-  /** Raw-rows-per-host threshold above which a host takes the salted
-    * spread leg when the caller gives no explicit `hotSpreadRows`:
-    * 64 × cap, floored at 1M rows. The spread leg exists for STRAGGLER
-    * mitigation only (a 10^8-row host would otherwise sort on one
-    * cold-leg reducer); correctness of the cap never depends on it (the
-    * cold leg's post-schedule `host_seq <= cap` filter caps every
-    * host). A 1M-row host inside a cold partition is a ~150 MB
-    * spillable sort — tolerable; the floor keeps small explicit caps
-    * (q72 uses 40) from routing merely-warm hosts through the spread
-    * leg's three extra exchanges.
-    */
-  def hotSpreadAuto(cap: Int): Long = math.max(64L * cap, 1L << 20)
 
   /** Dedupe + politeness schedule + per-host cap in ONE sort and ONE
     * per-host scan, for the bare robotted frontier.
@@ -327,26 +310,28 @@ object Scheduler {
       .toDF()
   }
 
-  /** Cold-leg schedule over seen-filtered, host-contiguous rows. Bare
-    * (url, priority_band, host, canonical_url) schema → the fused
+  /** Dedupe + schedule + cap over seen-filtered, host-contiguous rows.
+    * Bare (url, priority_band, host, canonical_url) schema → the fused
     * single-sort pipeline; extra frontier columns → whole-row window
     * dedupe + window schedule with the cap as a post-schedule filter
     * (row-identical to capPerHost-then-schedule; see the runRound doc).
     */
-  private def coldLegSchedule(coldCanon: DataFrame,
-                              robotsStage: DataFrame => DataFrame,
-                              cap: Int): DataFrame =
-    (if (coldCanon.columns.toSet ==
+  private def scheduleAndCap(fresh: DataFrame,
+                             robotsStage: DataFrame => DataFrame,
+                             cap: Int): DataFrame =
+    (if (fresh.columns.toSet ==
          Set("url", "priority_band", "host", "canonical_url"))
-      fusedScheduleCap(robotsStage(coldCanon), cap)
+      fusedScheduleCap(robotsStage(fresh), cap)
     else
-      Politeness.schedule(robotsStage(dedupeWithinHost(coldCanon)))
+      Politeness.schedule(robotsStage(dedupeWithinHost(fresh)))
         .where(col("host_seq") <= cap))
       .withColumn("url_key", Canonical.urlKey(col("canonical_url")))
       .withColumn("host_hash", Canonical.hostHash(col("host")))
 
   /** Round cap: -1 = perHostBudget × [[DefaultMaxBatchesPerHost]],
-    * 0 = uncapped, >0 = exact.
+    * 0 = uncapped, >0 = exact. The cap is the round's only guard against
+    * a degenerate host: it bounds the host's scheduled rows and the fused
+    * scan's per-host state, while the sort before the scan spills.
     */
   private def roundCap(perHostBudget: Int, maxPerHostPerRound: Int): Int =
     if (maxPerHostPerRound < 0) perHostBudget * DefaultMaxBatchesPerHost
@@ -357,132 +342,67 @@ object Scheduler {
                            robotsStage: DataFrame => DataFrame,
                            perHostBudget: Int, numBloomBuckets: Int,
                            maxPerHostPerRound: Int, frontierHostClustered: Boolean,
-                           knownHotHosts: Option[Array[String]],
-                           seenHostClustered: Boolean, hotSpreadRows: Long): DataFrame = {
-    val cap = roundCap(perHostBudget, maxPerHostPerRound)
-    val spread = if (hotSpreadRows >= 0) hotSpreadRows else hotSpreadAuto(cap)
-    val fresh = seenFilter(seenKeys, numBloomBuckets,
-      coLocated = frontierHostClustered && seenHostClustered)
-    val withHost =
-      if (rawFrontier.columns.contains("host")) rawFrontier
-      else rawFrontier.withColumn("host", Canonical.hostOf(col("url")))
-    // hot-host selection counts RAW rows: dedupe, the seen filter and
-    // robots only remove rows, and capping a below-cap host is a no-op,
-    // so an overcount never changes the output
-    val (hot, cold) = hotFlagSplit(withHost, hotRowSet(rawFrontier, spread, knownHotHosts))
-    val hotSched = hot.map { h =>
-      val deduped = dedupeWithinBatch(canonicalize(h))
-      Politeness.schedule(Politeness.capPerHost(robotsStage(fresh(deduped)), cap))
-    }
-    // the cold leg's shuffle carries only the input columns: canonical_url
-    // and url_key derive from url after the exchange, in the stage that
+                           seenHostClustered: Boolean): DataFrame = {
+    val hosted = withHost(rawFrontier)
+    // the shuffle carries only the input columns: canonical_url and
+    // url_key derive from url after the exchange, in the stage that
     // filters and sorts
-    val coldCanon =
-      (if (frontierHostClustered) cold else cold.repartition(col("host")))
+    val keyed =
+      (if (frontierHostClustered) hosted else hosted.repartition(col("host")))
         .withColumn("canonical_url", Canonical.canonicalUrl(col("url")))
-    val coldFresh =
-      fresh(coldCanon.withColumn("url_key", Canonical.urlKey(col("canonical_url"))))
-        .drop("url_key")
-    val coldSched = coldLegSchedule(coldFresh, robotsStage, cap)
-    Politeness.fetchBatches(hotSched.fold(coldSched)(_.unionByName(coldSched)), perHostBudget)
+        .withColumn("url_key", Canonical.urlKey(col("canonical_url")))
+    val fresh = seenFilter(keyed, seenKeys, numBloomBuckets,
+      coLocated = frontierHostClustered && seenHostClustered).drop("url_key")
+    val cap = roundCap(perHostBudget, maxPerHostPerRound)
+    Politeness.fetchBatches(scheduleAndCap(fresh, robotsStage, cap), perHostBudget)
       .sortWithinPartitions("priority_band", "scheduled_ms", "host_hash", "canonical_url")
   }
 
-  /** The round's seen filter — rows whose url_key is not in `seenKeys`,
-    * columns unchanged — picked once per round: identity for an empty
-    * seen set; the (host, url_key) anti-join when both tables are stored
-    * host-clustered, which is co-located (hash(host) on both sides is a
-    * subset of the join keys, so neither side exchanges); otherwise a
-    * bloom filter built once for both legs ([[SeenSet.sizedBloomFilter]]).
+  /** The round's seen filter — rows of `keyed` whose url_key is not in
+    * `seenKeys`, columns unchanged: the (host, url_key) anti-join when
+    * both tables are stored host-clustered, which is co-located
+    * (hash(host) on both sides is a subset of the join keys, so neither
+    * side exchanges, and an empty seen table keeps every row); otherwise
+    * identity for an empty seen set, else a bloom filter sized from the
+    * seen count ([[SeenSet.sizedBloomFilter]]). Only the bloom path's
+    * sizing runs a job (the count) while the round is built.
     */
-  private def seenFilter(seenKeys: DataFrame, numBloomBuckets: Int,
-                         coLocated: Boolean): DataFrame => DataFrame = {
-    val nSeen = seenKeys.count()
-    if (nSeen == 0L) identity
-    else if (coLocated) {
-      require(seenKeys.columns.contains("host"),
-        "seenHostClustered requires a (host, url_key) seen table — " +
-          "write it with saveSeenClustered / checkpointRound")
+  private def seenFilter(keyed: DataFrame, seenKeys: DataFrame, numBloomBuckets: Int,
+                         coLocated: Boolean): DataFrame =
+    if (coLocated && seenKeys.columns.contains("host")) {
       // null-SAFE host equality: url_key is total (xxhash64 maps null
       // canonicals to a constant), so the all-null group's membership is
       // decided by key equality, as the bloom path decides it
       val seenSide = seenKeys
         .select(col("host").as("__seen_host"), col("url_key").as("__seen_key"))
-      _.join(seenSide,
+      keyed.join(seenSide,
         col("host") <=> col("__seen_host") && col("url_key") === col("__seen_key"),
         "left_anti")
-    } else SeenSet.sizedBloomFilter(seenKeys, nSeen, "url_key", numBloomBuckets)
-  }
+    } else {
+      val nSeen = seenKeys.count()
+      if (nSeen == 0L) keyed
+      else {
+        require(!coLocated,
+          "seenHostClustered requires a (host, url_key) seen table — " +
+            "write it with saveSeenClustered / checkpointRound")
+        SeenSet.sizedBloomFilter(seenKeys, nSeen, "url_key", numBloomBuckets)(keyed)
+      }
+    }
 
-  /** Spread-leg host names for `runRound*`'s `knownHotHosts` — the
-    * crawl-state form of the hot-host count. A production crawl loop
-    * gets these for FREE from write-time lineage metrics (the frontier
-    * writer knows per-host counts as it writes — [[partitionMetrics]] is
-    * exactly that row set), so rounds skip the per-round count job the
-    * same way they skip the per-round robots broadcast build. Passing a
-    * SUPERSET of the currently-hot hosts is always correct: frontier
-    * consumption only shrinks counts between writes, and capping a
-    * below-cap host is a no-op (spec-tested in EngineSpec) — so metrics
-    * captured at write time stay valid until the next write.
+  /** Hosts with more than `hotSpreadRows` raw rows — by default
+    * max(64 × cap, 1M) — from one salted count ([[saltedHostCounts]]).
+    * This is the write-time lineage metric a frontier writer can persist
+    * next to [[partitionMetrics]]; rounds no longer read it (`runRound*`
+    * ignores `knownHotHosts`).
     */
   def hotHosts(rawFrontier: DataFrame, perHostBudget: Int = 100,
                maxPerHostPerRound: Int = -1,
                hotSpreadRows: Long = -1): Array[String] = {
-    val cap = roundCap(perHostBudget, maxPerHostPerRound)
-    // threshold matches the round's spread-leg routing, NOT the cap:
-    // since the cold leg's post-schedule filter caps every host, the
-    // only hosts worth naming are the ones that must avoid the cold
-    // window's single-reducer sort. An over-CAP metrics set (what a
-    // pre-spread writer persisted) remains a valid superset.
-    val spread = if (hotSpreadRows >= 0) hotSpreadRows else hotSpreadAuto(cap)
-    hotHostSet(rawFrontier, spread).collect().map(_.getString(0))
-  }
-
-  /** Collected over-cap host rows: caller-supplied names (DEDUPLICATED —
-    * a knownHotHosts array built from overlapping metric snapshots must
-    * not multiply rows through the hot-flag left join) or the counted
-    * set.
-    */
-  private def hotRowSet(rawFrontier: DataFrame, threshold: Long,
-                        known: Option[Array[String]]): Array[org.apache.spark.sql.Row] =
-    known.map(_.distinct.map(h => org.apache.spark.sql.Row(h, true)))
-      .getOrElse(hotHostSet(rawFrontier, threshold).collect())
-
-  /** Split `df` into (over-cap-host rows, everything else) via one
-    * broadcast flag join; empty hot set ⇒ (None, df) and the join
-    * vanishes from the plan.
-    */
-  private def hotFlagSplit(df: DataFrame,
-                           hotRows: Array[org.apache.spark.sql.Row]): (Option[DataFrame], DataFrame) =
-    if (hotRows.isEmpty) (None, df)
-    else {
-      val hotHosts = df.sparkSession.createDataFrame(
-        java.util.Arrays.asList(hotRows: _*),
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("host",
-            org.apache.spark.sql.types.StringType),
-          org.apache.spark.sql.types.StructField("__hot",
-            org.apache.spark.sql.types.BooleanType))))
-      val flagged = df.join(broadcast(hotHosts), Seq("host"), "left")
-      (Some(flagged.where(col("__hot")).drop("__hot")),
-        flagged.where(col("__hot").isNull).drop("__hot"))
-    }
-
-  private def hotHostSet(rawFrontier: DataFrame, threshold: Long): DataFrame = {
-    // with a stored host column this pass reads ONE pruned column from
-    // the frontier table (columnar scan, no url parse); salting keys on
-    // host alone is fine for the count
-    val hosted =
-      if (rawFrontier.columns.contains("host"))
-        rawFrontier.select(col("host"),
-          pmod(monotonically_increasing_id(), lit(16L)).as("salt"))
-      else rawFrontier.select(Canonical.hostOf(col("url")).as("host"),
-        pmod(xxhash64(col("url")), lit(16L)).as("salt"))
-    hosted
-      .groupBy("host", "salt").agg(count(lit(1)).as("c"))
-      .groupBy("host").agg(sum("c").as("n"))
-      .where(col("n") > threshold)
-      .select(col("host"), lit(true).as("__hot"))
+    val threshold =
+      if (hotSpreadRows >= 0) hotSpreadRows
+      else math.max(64L * roundCap(perHostBudget, maxPerHostPerRound), 1L << 20)
+    saltedHostCounts(withHost(rawFrontier)).where(col("n_urls") > threshold)
+      .collect().map(_.getString(0))
   }
 
   /** Per-partition lineage + fetch metrics (north rule observability):

@@ -147,7 +147,7 @@ class PolitenessSpec extends AnyFunSuite {
     val b = plain.select(cols.map(col): _*)
     assert(a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty)
     // the bucketed scan's hashpartitioning(host) must eliminate the
-    // cold leg's full-frontier exchange (hot-leg exchanges remain);
+    // round's full-frontier exchange;
     // AQE off for the inspection — AdaptiveSparkPlanExec hides the
     // exchanges until execution
     val aqeBefore = spark.conf.get("spark.sql.adaptive.enabled")
@@ -162,43 +162,18 @@ class PolitenessSpec extends AnyFunSuite {
     } finally spark.conf.set("spark.sql.adaptive.enabled", aqeBefore)
   }
 
-  test("knownHotHosts (write-time lineage metrics) == per-round hot count; supersets are no-ops") {
-    // skewed input: one over-cap host + many cold hosts
+  test("hotHosts names the host over the spread threshold") {
+    // skewed input: one 800-row host + many small hosts; the threshold is
+    // pinned (the default floors at 1M raw rows)
     val raw = Synth.frontierSeed(spark, 2000, nHosts = 20).toDF()
       .select($"url", $"priority_band")
       .unionByName((1 to 800).toDF("i").select(
         concat(lit("https://hot.example.test/u/"), $"i").as("url"),
         lit(0).as("priority_band")))
-      .withColumn("host", Canonical.hostOf($"url"))
-    val robots = Synth.robots(spark, 20).toDF()
-    val seen = Scheduler.loadSeen(spark, "/tmp/none")
-    val cols = Seq("canonical_url", "host_seq", "scheduled_ms", "batch_id")
-    val cap = 500
-    // hotSpreadRows pinned to the cap: this test exercises the SALTED
-    // spread leg driven by metrics vs counts (with the auto threshold a
-    // 900-row host would just take the cold leg's post-schedule cap
-    // filter — covered by the warm-host test below)
-    val metrics = Scheduler.hotHosts(raw, maxPerHostPerRound = cap,
-      hotSpreadRows = cap)
-    assert(metrics.contains("hot.example.test"))
-    val counted = Scheduler.runRound(raw, seen, robots, maxPerHostPerRound = cap,
-        hotSpreadRows = cap)
-      .select(cols.map(col): _*)
-    val fromMetrics = Scheduler.runRound(raw, seen, robots,
-        maxPerHostPerRound = cap, knownHotHosts = Some(metrics),
-        hotSpreadRows = cap)
-      .select(cols.map(col): _*)
-    assert(counted.exceptAll(fromMetrics).isEmpty &&
-      fromMetrics.exceptAll(counted).isEmpty)
-    // a write-time SUPERSET (metrics captured before some cold host's
-    // URLs were consumed) must not change the output: capping a
-    // below-cap host is a no-op
-    val superset = Scheduler.runRound(raw, seen, robots,
-        maxPerHostPerRound = cap, hotSpreadRows = cap,
-        knownHotHosts = Some(metrics ++ Array("h00003.example.test")))
-      .select(cols.map(col): _*)
-    assert(counted.exceptAll(superset).isEmpty &&
-      superset.exceptAll(counted).isEmpty)
+    // a stored host column and a derived one name the same host
+    for (frontier <- Seq(raw, raw.withColumn("host", Canonical.hostOf($"url"))))
+      assert(Scheduler.hotHosts(frontier, maxPerHostPerRound = 500,
+        hotSpreadRows = 500).contains("hot.example.test"))
   }
 
   test("frontierHostClustered stays a performance contract when it LIES") {
@@ -257,14 +232,8 @@ class PolitenessSpec extends AnyFunSuite {
     assert(a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty)
   }
 
-  test("warm host (over cap, under spread threshold): cold-leg filter == spread leg") {
-    // one warm host (800 rows, cap 300) + cold hosts + null-url rows:
-    // the auto spread threshold keeps the warm host in the exchange-free
-    // cold leg, capped by the post-schedule host_seq filter; forcing
-    // hotSpreadRows = cap routes it through the salted spread leg. Both
-    // forms must emit identical rows — including batch_id, which derives
-    // from host_seq (the filter must preserve the capPerHost-then-
-    // schedule numbering exactly).
+  test("warm host over the cap: exactly cap rows, batch_id from host_seq") {
+    // one warm host (800 rows, cap 300) + small hosts + a null-url row
     val raw = Synth.frontierSeed(spark, 1500, nHosts = 25).toDF()
       .select($"url", $"priority_band")
       .unionByName((1 to 800).toDF("i").select(
@@ -273,19 +242,13 @@ class PolitenessSpec extends AnyFunSuite {
       .unionByName(Seq((null.asInstanceOf[String], 1)).toDF("url", "priority_band"))
     val robots = Synth.robots(spark, 25).toDF()
     val seen = Scheduler.loadSeen(spark, "/tmp/none")
-    val cols = Seq("canonical_url", "host_seq", "scheduled_ms", "batch_id")
     val cap = 300
-    val filtered = Scheduler.runRound(raw, seen, robots, maxPerHostPerRound = cap)
-      .select(cols.map(col): _*)
-    val spreadLeg = Scheduler.runRound(raw, seen, robots, maxPerHostPerRound = cap,
-        hotSpreadRows = cap)
-      .select(cols.map(col): _*)
-    assert(filtered.exceptAll(spreadLeg).isEmpty &&
-      spreadLeg.exceptAll(filtered).isEmpty)
-    // the warm host actually got capped
-    val warmRows = Scheduler.runRound(raw, seen, robots, maxPerHostPerRound = cap)
-      .where($"host" === "warm.example.test").count()
-    assert(warmRows == cap)
+    val warm = Scheduler.runRound(raw, seen, robots, maxPerHostPerRound = cap)
+      .where($"host" === "warm.example.test")
+      .select("host_seq", "batch_id").as[(Long, Long)].collect().sorted.toSeq
+    assert(warm.map(_._1) == (1L to cap.toLong))
+    // batch_id = (host_seq - 1) / perHostBudget (default budget 100)
+    assert(warm.forall { case (seq, batch) => batch == (seq - 1) / 100 })
   }
 
   test("fused seen round (both tables host-clustered) == probe path, zero exchanges") {
@@ -320,7 +283,7 @@ class PolitenessSpec extends AnyFunSuite {
         maxPerHostPerRound = 500)
       .select(cols.map(col): _*)
     assert(fused.exceptAll(probe).isEmpty && probe.exceptAll(fused).isEmpty)
-    // cold-leg plan: with a high cap (no hot host) and AQE off, the
+    // plan: with a high cap and AQE off, the
     // fused round over two host-clustered tables must plan ZERO shuffle
     // exchanges — the anti-join, dedupe agg and politeness window are
     // all satisfied by the storage layout
@@ -530,26 +493,58 @@ class PolitenessSpec extends AnyFunSuite {
     }
   }
 
-  test("probe path with a hot host: one frontier scan per leg, one cold-leg exchange") {
+  test("probe path with a hot host: one frontier scan, one frontier exchange on host, no Union") {
     val (raw, seen) = parquetFrontierAndSeen("graft-hot-plan", hotRows = 600)
     val robots = Synth.robots(spark, 30).toDF()
     withoutAqe {
-      val plan = Scheduler.runRound(raw, seen, robots, maxPerHostPerRound = 200,
-        knownHotHosts = Some(Array("hot.example.test"))).queryExecution.executedPlan
-      val scans = plan.collect {
-        case s: org.apache.spark.sql.execution.FileSourceScanExec => s
+      // naming the hot host changes nothing: knownHotHosts is ignored
+      for (known <- Seq(None, Some(Array("hot.example.test")))) {
+        val plan = Scheduler.runRound(raw, seen, robots, maxPerHostPerRound = 200,
+          knownHotHosts = known).queryExecution.executedPlan
+        val scans = plan.collect {
+          case s: org.apache.spark.sql.execution.FileSourceScanExec => s
+        }
+        assert(scans.size == 1, s"frontier scans: ${scans.size}")
+        assert(plan.collect { case u: org.apache.spark.sql.execution.UnionExec => u }.isEmpty,
+          "the round plans a Union")
+        val ex = frontierExchanges(plan)
+        assert(ex.map(partitionedOn) == Seq(Seq("host")),
+          s"frontier exchanges: ${ex.map(partitionedOn)}")
       }
-      assert(scans.size == 2, s"frontier scans: ${scans.size}")
-      val legs = plan.collect { case u: org.apache.spark.sql.execution.UnionExec => u }
-        .head.children
-      val (hotLeg, coldLeg) = legs.partition(l =>
-        frontierExchanges(l).exists(e => partitionedOn(e) == Seq("url_key")))
-      assert(hotLeg.size == 1 && coldLeg.size == 1,
-        s"legs: ${legs.map(l => frontierExchanges(l).map(partitionedOn))}")
-      val coldEx = frontierExchanges(coldLeg.head)
-      assert(coldEx.map(partitionedOn) == Seq(Seq("host")),
-        s"cold-leg exchanges: ${coldEx.map(partitionedOn)}")
     }
+  }
+
+  test("fused round over clustered tables runs no job while it is built") {
+    // bucketed frontier + a non-empty clustered seen table: the
+    // co-located anti-join needs no seen count and the round no host
+    // count, so building the DataFrame must not start a Spark job
+    val raw = Synth.frontierSeed(spark, 1500, nHosts = 20).toDF()
+      .select($"url", $"priority_band")
+      .withColumn("host", Canonical.hostOf($"url"))
+    val dir = java.nio.file.Files.createTempDirectory("graft-no-jobs").toString
+    spark.sql("DROP TABLE IF EXISTS graft_test_no_jobs")
+    raw.repartition(4, $"host").write.mode("overwrite").bucketBy(4, "host")
+      .option("path", s"$dir/frontier").saveAsTable("graft_test_no_jobs")
+    Scheduler.saveSeenClustered(Scheduler.canonicalize(raw.drop("host"))
+      .where(xxhash64($"url") % 2 === 0), s"$dir/seen", buckets = 4)
+    val table = spark.table("graft_test_no_jobs")
+    val seenTable = Scheduler.loadSeenClustered(spark, s"$dir/seen", buckets = 4)
+    val bc = Politeness.robotsBroadcast(Synth.robots(spark, 20).toDF())
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    org.apache.spark.graft.ListenerBus.drain(sc)
+    sc.addSparkListener(listener)
+    try {
+      val round = Scheduler.runRoundCached(table, seenTable, bc,
+        frontierHostClustered = true, seenHostClustered = true)
+      org.apache.spark.graft.ListenerBus.drain(sc)
+      assert(jobs.get == 0, s"${jobs.get} jobs ran while the round was built")
+      assert(round.count() > 0)
+    } finally sc.removeSparkListener(listener)
   }
 
   test("maxPerHostPerRound = 0 on a seen round keeps every unseen row") {
