@@ -1,7 +1,8 @@
 package graft.frontier
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.LongType
 
 /** The priority frontier round: canonicalize → seen filter →
   * politeness-gated schedule → fetch-batch emit, with per-partition
@@ -16,8 +17,9 @@ import org.apache.spark.sql.functions._
   *      seen-filter: identity (empty seen set), the co-located
   *      (host, url_key) anti-join (both tables host-clustered), or a
   *      bloom probe + exact confirm;
-  *   3. robots, then one sort + one per-host scan does dedupe, schedule
-  *      and cap;
+  *   3. robots, then one per-host scan over rows sorted in politeness
+  *      order does dedupe, schedule and cap ([[Scheduler.fusedScheduleCap]],
+  *      the same scan for every frontier schema);
   *   4. one fetch-batch emit closes the round.
   *
   * Seen-filtering before dedupe is exact: every duplicate of a canonical
@@ -35,21 +37,6 @@ import org.apache.spark.sql.functions._
   *   - robots and the bloom table are broadcast (host- and
   *     filter-cardinality).
   */
-/** Columns of [[Scheduler.fusedScheduleCap]]'s single-sort pipeline: the
-  * bare frontier after canonicalization + robots (crawl_delay_ms is the
-  * robots stage's per-host delay). Top-level (not object-nested private)
-  * because the Dataset encoder's generated deserializer must reach the
-  * class — a private nested case class fails Janino compilation at
-  * runtime ("Private member cannot be accessed").
-  */
-private[frontier] case class FusedIn(url: String, priority_band: Option[Int],
-                                     host: String, canonical_url: String,
-                                     crawl_delay_ms: Long)
-private[frontier] case class FusedOut(url: String, priority_band: Option[Int],
-                                      host: String, canonical_url: String,
-                                      crawl_delay_ms: Long,
-                                      host_seq: Long, scheduled_ms: Long)
-
 object Scheduler {
 
   /** Canonicalize + key a raw frontier(url, priority_band, ...) — narrow.
@@ -122,9 +109,8 @@ object Scheduler {
     * perHostBudget × [[DefaultMaxBatchesPerHost]] URLs per host per
     * round; 0 = explicit opt-OUT (uncapped: a degenerate host then
     * schedules in full on one reducer); >0 = exact cap. Every host is
-    * capped inside [[fusedScheduleCap]]'s scan (or, on the extra-columns
-    * path, by a post-schedule `host_seq <= cap` filter) — both keep
-    * exactly the first `cap` rows per host in the politeness order
+    * capped inside [[fusedScheduleCap]]'s scan, which keeps exactly the
+    * first `cap` rows per host in the politeness order
     * (priority_band, canonical_url), row-identical to
     * [[Politeness.capPerHost]]-then-schedule.
     *
@@ -182,43 +168,8 @@ object Scheduler {
       perHostBudget, numBloomBuckets, maxPerHostPerRound, frontierHostClustered,
       seenHostClustered)
 
-  /** Dedupe with the SAME winner as [[dedupeWithinBatch]] — the first
-    * row per canonical_url in (canonical_url, priority_band, url, …rest)
-    * order, i.e. the minimum over every column — but expressed as a
-    * window over hash(host) partitioning, so the politeness window
-    * downstream REUSES the exchange instead of adding a second
-    * full-frontier shuffle. A degenerate host is one large window sort
-    * on one reducer, which spills; the post-schedule cap then trims it
-    * ([[runRound]] has the measured cost). url_key hash collisions
-    * across distinct canonical urls are kept (2^-64), where the agg form
-    * would collapse them — both deterministic.
-    */
-  private[graft] def dedupeWithinHost(canonical: DataFrame): DataFrame = {
-    // lag-based adjacent-dup filter: one window pass, no rank recompute.
-    // (A row_number()==1 over (host, canonical_url) formulation was
-    // built and interleave-A/B'd at 8M rows: Spark inserts a
-    // WindowGroupLimit pre-pass over the sorted 8M rows that costs ~4%
-    // wall at 2 cores for a ~10%-duplicate input — the lag form keeps
-    // the single pass.)
-    // The lag compares a null-COALESCED surrogate so the all-null
-    // canonical group (null url rows) collapses to ONE row like
-    // dedupeWithinBatch does — plain lag(canonical) === canonical is
-    // null for null inputs and silently kept every null row. The
-    // sentinel cannot collide with a real canonical_url: canonical_url
-    // is null iff url is null iff host is null, so a window partition
-    // either holds only null canonicals or none.
-    val first = Seq("canonical_url", "priority_band", "url")
-    val order = first ++ canonical.columns.filterNot(first.contains)
-    val w = org.apache.spark.sql.expressions.Window.partitionBy("host")
-      .orderBy(order.map(c => col(c).asc): _*)
-    val surr = coalesce(col("canonical_url"), lit("\u0000"))
-    canonical
-      .withColumn("__dup", lag(surr, 1).over(w) === surr)
-      .where(col("__dup").isNull || !col("__dup")).drop("__dup")
-  }
-
   /** Dedupe + politeness schedule + per-host cap in ONE sort and ONE
-    * per-host scan, for the bare robotted frontier.
+    * per-host scan, for a robotted frontier of any schema.
     *
     * The declarative form pays TWO full sorts of the frontier — the
     * dedupe SortAggregate's (host, canonical_url) sort and the
@@ -231,100 +182,60 @@ object Scheduler {
     * should trigger this fusion. One sort in the schedule's own order
     * plus a per-host hash-set scan does all three jobs:
     *
-    *  - dedupe: within a host sorted by (band, canonical_url, url), the
-    *    FIRST occurrence of a canonical_url is its min-(band, url) row —
-    *    the same winner every dedupe form picks; later occurrences are
-    *    skipped via the set. Robots runs BEFORE this pass (it commutes:
-    *    all duplicates of a canonical share (host, canonical_url), so
-    *    the whole group passes or fails together and the surviving
-    *    winner is unchanged);
+    *  - dedupe: within a host sorted by (band, canonical_url, url, …rest),
+    *    the FIRST occurrence of a canonical_url is its minimum over
+    *    (band, url, …rest) — the same winner as [[dedupeWithinBatch]]'s
+    *    minimum over every column; later occurrences are skipped via the
+    *    set. Robots runs BEFORE this pass (it commutes: all duplicates of
+    *    a canonical share (host, canonical_url), so the whole group passes
+    *    or fails together and the surviving winner is unchanged);
     *  - host_seq: a running counter over kept rows reproduces
     *    row_number() over (host ORDER BY band, canonical_url) — kept
     *    rows arrive in exactly that order;
-    *  - cap: counter >= cap skips the host's tail, which also BOUNDS the
-    *    set at `cap` entries per host regardless of host size (inserts
-    *    stop once the cap is hit) — per-task state is O(cap), not
-    *    O(host rows).
+    *    scheduled_ms = (host_seq − 1) × crawl_delay_ms, which is constant
+    *    per host;
+    *  - cap: the scan stops a host after `cap` kept rows, which also
+    *    BOUNDS the set at `cap` entries per host regardless of host size —
+    *    per-task state is O(cap), not O(host rows).
     *
-    * Correctness needs each host's rows contiguous in one partition:
-    * callers pass a host-clustered scan, an explicit repartition(host),
-    * or a host-keyed join's output (every robots form preserves one of
-    * these). Null url/canonical/host rows are one group under a
-    * sentinel, like every other dedupe form. Ordering ties beyond
-    * (band, canonical_url, url) are impossible within a host: equal
-    * there means equal rows in this bare schema.
+    * `flatMapSortedGroups` plans as `MapGroupsExec` (`MapGroups` in
+    * explain output), which DECLARES its child distribution (clustered on
+    * host) and ordering (host, then the sort above):
+    * `EnsureRequirements` adds the exchange and the sort
+    * only when the child does not already provide them, so a bucketed
+    * scan or a host-keyed join output runs with no exchange, and a
+    * frontier that is wrongly flagged host-clustered still gets one.
+    * Grouping on the existing `host` attribute appends no key column.
+    * Null url/canonical/host rows are one group under a sentinel, like
+    * every other dedupe form. Output columns are the input's, in input
+    * order and types, plus host_seq and scheduled_ms.
     */
   private[graft] def fusedScheduleCap(robotted: DataFrame, cap: Int): DataFrame = {
-    val spark = robotted.sparkSession
-    import spark.implicits._
-    // priority_band decodes as Option[Int]: a nullable band column must
-    // not crash the encoder — the window form this pass replaces ordered
-    // null bands first, and the sort below does the same.
-    val bare = robotted
-      .select(col("url"),
-        // cast like crawl_delay_ms below: a LONG band column (e.g. a
-        // spark.range/pmod-derived frontier) must not fail `.as[FusedIn]`
-        // when the pre-fusion agg/window paths accepted it
-        col("priority_band").cast("int").as("priority_band"),
-        col("host"), col("canonical_url"),
-        col("crawl_delay_ms").cast("long").as("crawl_delay_ms"))
-    // SELF-HEALING distribution check: the declarative forms this pass
-    // replaces DECLARED their hash(host) requirements, so a lying
-    // frontierHostClustered flag, a disabled bucketing conf, or a
-    // bucket-count-mismatched seen join (whose SMJ exchanges on
-    // (host, url_key) — hosts straddle partitions) only cost an extra
-    // exchange. A mapPartitions declares nothing, so it enforces host
-    // contiguity itself: inspect the PLANNED physical partitioning and
-    // insert one explicit repartition unless it already clusters on
-    // host. False negatives (an unrecognized-but-contiguous layout)
-    // only cost that same exchange — never correctness. Planning the
-    // subtree here costs milliseconds; no job runs.
-    val contiguous = try {
-      import org.apache.spark.sql.catalyst.plans.physical.ClusteredDistribution
-      val hostAttr = bare.queryExecution.analyzed.output.find(_.name == "host").get
-      bare.queryExecution.executedPlan.outputPartitioning
-        .satisfies(ClusteredDistribution(Seq(hostAttr)))
-    } catch { case _: Exception => false }
-    (if (contiguous) bare else bare.repartition(col("host")))
-      .sortWithinPartitions(col("host").asc, col("priority_band").asc,
-        col("canonical_url").asc, col("url").asc)
-      .as[FusedIn]
-      .mapPartitions { it =>
-        var started = false
-        var curHost: String = null
-        var seq = 0L
+    val schema = robotted.schema
+    val first = Seq("priority_band", "canonical_url", "url")
+    val order = first ++ robotted.columns.filterNot(c => c == "host" || first.contains(c))
+    val canonAt = schema.fieldIndex("canonical_url")
+    val delayAt = schema.fieldIndex("crawl_delay_ms")
+    val out = schema.add("host_seq", LongType, nullable = false)
+      .add("scheduled_ms", LongType, nullable = false)
+    robotted.groupBy(col("host")).as[String, Row](Encoders.STRING, Encoders.row(schema))
+      .flatMapSortedGroups(order.map(col(_).asc): _*) { (_, rows) =>
         val seenCanon = new java.util.HashSet[String]()
-        it.flatMap { r =>
-          if (!started || !java.util.Objects.equals(r.host, curHost)) {
-            started = true; curHost = r.host; seq = 0L; seenCanon.clear()
+        def canon(r: Row) = if (r.isNullAt(canonAt)) "\u0000" else r.getString(canonAt)
+        rows.filter(r => seenCanon.add(canon(r)))
+          .take(cap).zipWithIndex.map { case (r, i) =>
+            Row.fromSeq(r.toSeq :+ (i + 1L) :+ i * r.getLong(delayAt))
           }
-          val canonKey = if (r.canonical_url == null) "\u0000" else r.canonical_url
-          if (seq >= cap || !seenCanon.add(canonKey)) Iterator.empty
-          else {
-            seq += 1
-            Iterator.single(FusedOut(r.url, r.priority_band, r.host,
-              r.canonical_url, r.crawl_delay_ms, seq, (seq - 1) * r.crawl_delay_ms))
-          }
-        }
-      }
-      .toDF()
+      }(Encoders.row(out))
   }
 
-  /** Dedupe + schedule + cap over seen-filtered, host-contiguous rows.
-    * Bare (url, priority_band, host, canonical_url) schema → the fused
-    * single-sort pipeline; extra frontier columns → whole-row window
-    * dedupe + window schedule with the cap as a post-schedule filter
-    * (row-identical to capPerHost-then-schedule; see the runRound doc).
+  /** Dedupe + schedule + cap over seen-filtered rows ([[fusedScheduleCap]]),
+    * then the round's url_key and host_hash.
     */
   private def scheduleAndCap(fresh: DataFrame,
                              robotsStage: DataFrame => DataFrame,
                              cap: Int): DataFrame =
-    (if (fresh.columns.toSet ==
-         Set("url", "priority_band", "host", "canonical_url"))
-      fusedScheduleCap(robotsStage(fresh), cap)
-    else
-      Politeness.schedule(robotsStage(dedupeWithinHost(fresh)))
-        .where(col("host_seq") <= cap))
+    fusedScheduleCap(robotsStage(fresh), cap)
       .withColumn("url_key", Canonical.urlKey(col("canonical_url")))
       .withColumn("host_hash", Canonical.hostHash(col("host")))
 

@@ -178,12 +178,11 @@ class PolitenessSpec extends AnyFunSuite {
 
   test("frontierHostClustered stays a performance contract when it LIES") {
     // the flag's doc promises: if the input is NOT actually clustered,
-    // the output is unchanged (Catalyst used to self-heal via the
-    // declared window/agg distributions; the fused pass now self-heals
-    // via its own planned-partitioning check + repartition). A
-    // round-robin-partitioned frontier with the flag set must equal the
-    // honest run — pre-check, hosts straddle partitions and the fused
-    // scan would emit duplicate host_seq values and uncollapsed dups.
+    // the output is unchanged (the fused scan declares its clustering on
+    // host, so Catalyst adds the exchange the skipped repartition left
+    // out). A round-robin-partitioned frontier with the flag set must
+    // equal the honest run — with hosts straddling partitions, a scan
+    // would emit duplicate host_seq values and uncollapsed dups.
     val raw = Synth.frontierSeed(spark, 2500, nHosts = 30).toDF()
       .select($"url", $"priority_band")
       .withColumn("host", Canonical.hostOf($"url"))
@@ -217,19 +216,25 @@ class PolitenessSpec extends AnyFunSuite {
 
   test("fused pass accepts a LONG priority_band column (pre-fusion parity)") {
     // a spark.range/pmod-derived frontier carries a BIGINT band; the
-    // pre-fusion agg/window dedupe paths accepted it, so the fused
-    // .as[FusedIn] (Option[Int] field) must cast rather than fail
-    // analysis with an up-cast error
+    // pre-fusion agg/window dedupe paths accepted it, so the fused scan
+    // must too — and keep it BIGINT (no narrowing cast that could
+    // overflow), on the bare and on an extra-column frontier alike
+    import org.apache.spark.sql.types.{IntegerType, LongType}
     val raw = Synth.frontierSeed(spark, 600, nHosts = 8).toDF()
       .select($"url", $"priority_band")
     val robots = Synth.robots(spark, 8).toDF()
     val seen = Scheduler.loadSeen(spark, "/tmp/none")
     val cols = Seq("canonical_url", "host_seq", "scheduled_ms", "batch_id")
-    val a = Scheduler.runRound(raw.withColumn("priority_band",
+    for (frontier <- Seq(raw, raw.withColumn("depth", (xxhash64($"url") % 5).cast("int")))) {
+      val long = Scheduler.runRound(frontier.withColumn("priority_band",
         $"priority_band".cast("long")), seen, robots)
-      .select(cols.map(col): _*)
-    val b = Scheduler.runRound(raw, seen, robots).select(cols.map(col): _*)
-    assert(a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty)
+      val int = Scheduler.runRound(frontier, seen, robots)
+      assert(long.schema("priority_band").dataType == LongType)
+      assert(int.schema("priority_band").dataType == IntegerType)
+      val a = long.select(cols.map(col): _*)
+      val b = int.select(cols.map(col): _*)
+      assert(a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty)
+    }
   }
 
   test("warm host over the cap: exactly cap rows, batch_id from host_seq") {
@@ -385,7 +390,7 @@ class PolitenessSpec extends AnyFunSuite {
     assert(e.getMessage.contains("per-round broadcast join"))
   }
 
-  test("dedupeWithinHost keeps dedupeWithinBatch's winner: ties, bands, nulls, extra columns") {
+  test("fusedScheduleCap keeps dedupeWithinBatch's winner: ties, bands, nulls, extra columns") {
     // band ties (min url wins), band differences (min band wins), equal
     // (url, band) rows told apart only by an extra column (min depth
     // wins, whatever the input order), several hosts, and null-url rows:
@@ -402,7 +407,8 @@ class PolitenessSpec extends AnyFunSuite {
       ("https://b.test/z", 1, "b.test", "https://b.test/z", 0)
     ).toDF("url", "priority_band", "host", "canonical_url", "depth").coalesce(1)
     val cols = Seq("url", "priority_band", "host", "canonical_url", "depth").map(col)
-    val win = Scheduler.dedupeWithinHost(rows).select(cols: _*)
+    val win = Scheduler.fusedScheduleCap(rows.withColumn("crawl_delay_ms", lit(1000L)),
+      Int.MaxValue).select(cols: _*)
     val batch = Scheduler.dedupeWithinBatch(
       rows.withColumn("url_key", Canonical.urlKey($"canonical_url"))).select(cols: _*)
     assert(win.exceptAll(batch).isEmpty && batch.exceptAll(win).isEmpty)
@@ -490,6 +496,21 @@ class PolitenessSpec extends AnyFunSuite {
         Scheduler.runRound(raw, seen, robots).queryExecution.executedPlan)
       assert(ex.map(partitionedOn) == Seq(Seq("host")),
         s"frontier exchanges: ${ex.map(partitionedOn)}")
+    }
+  }
+
+  test("an extra-columns round plans as many sorts as a bare round, with and without seen") {
+    val (raw, seen) = parquetFrontierAndSeen("graft-sort-plan", hotRows = 0)
+    val extra = raw.withColumn("depth", (xxhash64($"url") % 5).cast("int"))
+    val robots = Synth.robots(spark, 30).toDF()
+    val empty = Scheduler.loadSeen(spark, "/tmp/none")
+    def sorts(frontier: org.apache.spark.sql.DataFrame, seenKeys: org.apache.spark.sql.DataFrame) =
+      Scheduler.runRound(frontier, seenKeys, robots).queryExecution.executedPlan
+        .collect { case s: org.apache.spark.sql.execution.SortExec => s }.size
+    withoutAqe {
+      for (seenKeys <- Seq(empty, seen))
+        assert(sorts(extra, seenKeys) == sorts(raw, seenKeys),
+          s"extra-columns sorts ${sorts(extra, seenKeys)}, bare ${sorts(raw, seenKeys)}")
     }
   }
 
