@@ -1409,7 +1409,7 @@ object SparkEntry {
         else r
       }
       val expectedPos = recs.zipWithIndex.map { case (r, i) => i.toLong -> r.position }.toMap
-      graft.sources.WarcSource.write(s.createDataset(written).coalesce(1), dir, gzip = true)
+      graft.sources.WarcSource.write(s.createDataset(written).coalesce(1), dir, "gzip")
       val posB = s.sparkContext.broadcast(expectedPos)
       val offsetOk = udf { (idx: Long, pos: Long) => posB.value.get(idx).contains(pos) }
       val digestOk = udf { (declared: String, bytes: Array[Byte]) =>

@@ -17,16 +17,6 @@ object Politeness {
 
   val DefaultDelayMs = 1000L
 
-  /** Single-pass disallow check: extract the URL path (everything from
-    * the first '/' after the authority up to '?' or '#') and test the
-    * prefix list. One scalar UDF replaces a per-row `regexp_extract` plus
-    * an `exists()` higher-order function — HOF lambdas are
-    * CodegenFallback (interpreted per row) and were measured as the
-    * frontier round's worst-scaling stage (robots stage 2.6× from 2→8
-    * cores before, vs ~4× for the narrow stages). Same truth table as
-    * `exists(prefixes, p -> path.startsWith(p))` with regex path capture
-    * `^[a-z][a-z0-9+.-]*://[^/?#]*([^?#]*)`.
-    */
   /** Path component of a canonical URL (empty for null/host-only/
     * unparseable) — the ONE implementation both robots filters share:
     * their spec-tested output equality rides on this scan being
@@ -47,6 +37,16 @@ object Politeness {
     }
   }
 
+  /** Single-pass disallow check: extract the URL path (everything from
+    * the first '/' after the authority up to '?' or '#') and test the
+    * prefix list. One scalar UDF replaces a per-row `regexp_extract` plus
+    * an `exists()` higher-order function — HOF lambdas are
+    * CodegenFallback (interpreted per row) and were measured as the
+    * frontier round's worst-scaling stage (robots stage 2.6× from 2→8
+    * cores before, vs ~4× for the narrow stages). Same truth table as
+    * `exists(prefixes, p -> path.startsWith(p))` with regex path capture
+    * `^[a-z][a-z0-9+.-]*://[^/?#]*([^?#]*)`.
+    */
   private val disallowedUdf = udf { (url: String, prefixes: Seq[String]) =>
     if (url == null || prefixes == null || prefixes.isEmpty) false
     else {

@@ -1,6 +1,5 @@
 package graft.ops
 
-import graft.core.FieldOps._
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -12,9 +11,9 @@ import org.apache.spark.sql.functions._
   * absent) and a target URI → HTTP decoder; `resource`/`conversion` with
   * a URI → identity. Everything else is skipped.
   *
-  * The routing predicate is pure Catalyst (`when` chain → `decoder_kind`
-  * enum column, pushed to the scan); only the HTTP body decode itself is
-  * a UDF (whole payload in one cell — SURVEY.md §2.9).
+  * The routing rule is one scalar UDF over the header array
+  * (`decoder_kind` plus the headers `extract` consumes); the HTTP body
+  * decode is a second UDF (whole payload in one cell — SURVEY.md §2.9).
   */
 object ExtractOp {
 
@@ -23,19 +22,7 @@ object ExtractOp {
     * msgtype=response — absent or different msgtype is NOT an HTTP
     * response (extract.rs:78-85: unwrap_or_default() == "response").
     */
-  def decoderKind(fields: Column): Column = {
-    val recType = lower(fieldGet(fields, "WARC-Type"))
-    val uri = fieldGet(fields, "WARC-Target-URI")
-    val mt = mediaType(fieldGet(fields, "Content-Type"))
-    val segmented = fieldContains(fields, "WARC-Segment-Number")
-    val isHttpResponse = mt.getField("ok") &&
-      mt.getField("type") === "application" && mt.getField("subtype") === "http" &&
-      coalesce(graft.core.FieldOps.mediaTypeParam(mt, "msgtype") === "response", lit(false))
-    when(segmented, "none")
-      .when(recType === "response" && uri.isNotNull && isHttpResponse, "http")
-      .when((recType === "resource" || recType === "conversion") && uri.isNotNull, "identity")
-      .otherwise("none")
-  }
+  def decoderKind(fields: Column): Column = routeUdf(fields).getField("_1")
 
   private val parseHttpUdf = udf { (payload: Array[Byte]) =>
     if (payload == null) null
@@ -74,22 +61,25 @@ object ExtractOp {
     }
   }
 
-  /** The routing decision + every header `extract` consumes, in ONE
-    * array traversal per row. The Column formulation (decoderKind +
-    * three fieldGet/fieldContains lookups) planned as ~15 interpreted
-    * higher-order-function subtrees per row after filter pushdown —
-    * CollapseProject/PushDownPredicates re-inline the `fields`
-    * construction into EVERY lookup, and HOF lambdas are CodegenFallback
-    * — measured as the dominant cost of the crawl→table bridge (q59:
-    * ~1.4 ms/row of a 43 KB inlined filter condition). Same rule-engine-
-    * as-one-UDF treatment as [[VerifyOp.checkFields]]; semantics are
-    * identical (first case-insensitive match; media-type grammar and
-    * case-sensitive msgtype compare mirror [[FieldOps.mediaType]]) and
-    * remain oracle-gated end to end (q33, q59, q64).
-    */
   private val MediaTypeRe = ("^([!#$%&'*+.^_`|~0-9A-Za-z-]+)/([!#$%&'*+.^_`|~0-9A-Za-z-]+)" +
     "((\\s*;\\s*[!#$%&'*+.^_`|~0-9A-Za-z-]+=[!#$%&'*+.^_`|~0-9A-Za-z-]+)*)$").r
 
+  /** The routing decision + every header `extract` consumes, in ONE
+    * array traversal per row: (decoder_kind, WARC-Target-URI,
+    * is-conversion, has WARC-Truncated). The one routing rule —
+    * [[decoderKind]] is its first field. A Column formulation (a `when`
+    * chain over fieldGet/fieldContains lookups) planned as ~15
+    * interpreted higher-order-function subtrees per row after filter
+    * pushdown — CollapseProject/PushDownPredicates re-inline the `fields`
+    * construction into EVERY lookup, and HOF lambdas are CodegenFallback
+    * — measured as the dominant cost of the crawl→table bridge (q59:
+    * ~1.4 ms/row of a 43 KB inlined filter condition). Same rule-engine-
+    * as-one-UDF treatment as [[VerifyOp.checkFields]]: first
+    * case-insensitive header match; the media-type grammar and the
+    * case-sensitive msgtype compare mirror
+    * [[graft.core.FieldOps.mediaType]]; oracle-gated end to end (q33,
+    * q59, q64).
+    */
   private val routeUdf = udf { (fields: Seq[org.apache.spark.sql.Row]) =>
     def get(n: String): Option[String] =
       fields.find(r => r.getString(0).equalsIgnoreCase(n)).map(_.getString(1))
@@ -100,8 +90,8 @@ object ExtractOp {
     val isHttpResponse = get("Content-Type").exists {
       case MediaTypeRe(t, s, params, _) =>
         t.equalsIgnoreCase("application") && s.equalsIgnoreCase("http") && {
-          // first occurrence wins, case-sensitive compare — exactly the
-          // str_to_map + try_element_at semantics of the Column form
+          // first occurrence wins, case-sensitive compare — the
+          // str_to_map + try_element_at semantics of FieldOps.mediaTypeParam
           val msgtype = params.split(";").iterator.map(_.trim).filter(_.nonEmpty)
             .map { kv => val i = kv.indexOf('='); (kv.substring(0, i), kv.substring(i + 1)) }
             .collectFirst { case ("msgtype", v) => v }

@@ -18,9 +18,11 @@ import java.util.zip.{Deflater, Inflater}
   * (tests/test_decode.rs:77-78).
   *
   * Compression (compress.rs:62-76): record-at-time concatenated gzip
-  * members — each record is one gzip member, so members can be decoded
-  * independently; [[decodeAuto]] detects WARC/ vs gzip magic bytes the
-  * same way detect_header does (decode.rs:811-821).
+  * members and zstd frames — each record is its own member or frame, so
+  * each decodes independently. [[detectFormat]] tells WARC/ from gzip and
+  * zstd magic the same way detect_header does (decode.rs:811-821), and
+  * [[decodeMember]] is the one member/frame step every read path takes
+  * (the reference's start_next_segment, compress.rs:174-196).
   */
 object WarcBytes {
 
@@ -36,8 +38,12 @@ object WarcBytes {
       new String(bytes, 0, 5, StandardCharsets.US_ASCII) == "WARC/") "warc"
     else if (bytes.length >= 2 && bytes(0) == GzipMagic(0) && bytes(1) == GzipMagic(1)) "gzip"
     else if (bytes.length >= 4 && bytes.take(4).sameElements(ZstdMagic)) "zstd"
-    else if (bytes.length >= 4 && (readLe32(bytes, 0) & 0xfffffff0) == 0x184d2a50) "zstd"
+    else if (isSkippableFrame(bytes, 0)) "zstd"
     else "unknown"
+
+  /** True when a zstd skippable frame (magic 0x184D2A50..5F) starts at `i`. */
+  private[sources] def isSkippableFrame(b: Array[Byte], i: Int): Boolean =
+    i + 4 <= b.length && (readLe32(b, i) & 0xfffffff0) == 0x184d2a50
 
   private val HeaderTerminator = "\r\n\r\n".getBytes(StandardCharsets.US_ASCII)
 
@@ -46,12 +52,19 @@ object WarcBytes {
     */
   val MaxHeaderLen = 32768
 
+  /** Where decoded member bytes go: a [[RecordParser]], or a plain byte
+    * buffer for [[gunzipConcatenated]].
+    */
+  trait ByteSink {
+    def append(chunk: Array[Byte], off: Int, n: Int): Unit
+  }
+
   /** Incremental record framer: append decompressed chunks, pull complete
     * records. Memory is bounded by one record + one appended chunk — the
     * Spark-side analog of the reference's bounded-buffer push decoder
     * (decode.rs:383-801). `position` = offset in the uncompressed stream.
     */
-  final class RecordParser(file: String) {
+  final class RecordParser(file: String) extends ByteSink {
     private var buf = new Array[Byte](64 * 1024)
     private var len = 0
     private var base = 0L // uncompressed offset of buf(0)
@@ -141,18 +154,18 @@ object WarcBytes {
   }
 
   /** Streaming decoder for one WARC file (plain / record-at-time gzip /
-    * zstd, auto-detected like detect_header, decode.rs:811-821). Gzip is
-    * inflated ONE member at a time and zstd is streamed in 64 KiB chunks,
-    * so peak memory is one record + one chunk — never the decompressed
+    * zstd, auto-detected like detect_header, decode.rs:811-821). Gzip
+    * members and zstd frames are decoded ONE at a time by [[decodeMember]],
+    * so peak memory is one record + one member — never the decompressed
     * file (the reference's own bounded-memory contract, io.rs:4).
     *
     * `recordAtTimeOk` (valid once exhausted) is the RecordAtTimeCompression
     * verify flag (decode.rs:700-711, surfaced app/verify.rs:79-82): for
-    * concatenation-capable formats (gzip here), every member must contain
-    * exactly one record ending on a member boundary. Plain files are
-    * trivially ok; the zstd path streams across frames and is not checked.
-    */
-  /** `presetDict`: a zstd dictionary obtained OUT of band (e.g. the
+    * the concatenation-capable formats (gzip and zstd), every member or
+    * frame must contain exactly one record ending on its boundary. Plain
+    * files are trivially ok.
+    *
+    * `presetDict`: a zstd dictionary obtained OUT of band (e.g. the
     * archive's head frame parsed by a caller decoding from a mid-file
     * offset, where the leading dictionary frame is not in `bytes`). A
     * dictionary frame found in-band takes precedence.
@@ -180,16 +193,14 @@ object WarcBytes {
       else formatOverride.getOrElse(detectFormat(bytes))
     private val parser = new RecordParser(file)
     private var ratFault = false
-    private var pos = 0 // compressed cursor (gzip member loop / plain feed)
+    private var pos = 0 // compressed cursor (member loop / plain feed)
     private var pending: Option[WarcRecord] = None
     private var finished = false
-    private var zstdInit = false
-    private var zstdDict: Option[Array[Byte]] = None
+    private var dict: Option[Array[Byte]] = None
+    private var scratch: DecodeScratch = null // built once dict is known
     private var zlibInf: Inflater = null // lazy, "deflate" wrapper only
     private var brotliFed = false // "brotli" wrapper: whole-buffer fed?
     private val chunk = new Array[Byte](65536)
-    private lazy val gzScratch = new InflateScratch // reused across members
-    private var zsScratch: ZstdScratch = null // built once dict is known
 
     def recordAtTimeOk: Boolean = !ratFault
 
@@ -219,52 +230,22 @@ object WarcBytes {
           parser.append(bytes, pos, n)
           pos += n
         }
-      case "gzip" =>
+      case "gzip" | "zstd" =>
+        if (scratch == null) {
+          // a leading zstd dictionary frame sits before the first member
+          val (d, start) = if (format == "zstd") zstdDictFrame(bytes) else (None, 0)
+          dict = d.orElse(presetDict)
+          pos = start
+          scratch = new DecodeScratch(dict)
+        }
         if (pos >= bytes.length) { parser.finish(); finished = true }
         else {
           val before = parser.recordsParsed
-          pos = inflateMember(bytes, pos, parser, gzScratch)
-          // record-at-time contract: one record per member, boundary-aligned
-          if (!(parser.atRecordBoundary && parser.recordsParsed == before + 1))
-            ratFault = true
-        }
-      case "zstd" =>
-        // frame-at-a-time (not one continuous stream): each frame's
-        // slice decompresses independently so the record-at-time
-        // contract can be checked per frame exactly like gzip members
-        if (!zstdInit) {
-          val (d, start) = zstdDictFrame(bytes)
-          zstdDict = d.orElse(presetDict)
-          pos = start
-          zstdInit = true
-        }
-        if (pos >= bytes.length) { parser.finish(); finished = true }
-        else if ({
-          require(pos + 4 <= bytes.length, s"truncated zstd frame magic at offset $pos")
-          (readLe32(bytes, pos) & 0xfffffff0) == 0x184d2a50
-        }) {
-          // a skippable frame after the leading dict frame: skip it.
-          // Size is an UNSIGNED le32 — a signed read of a corrupted
-          // high-bit size moved pos BACKWARDS (infinite decode loop);
-          // also require strict forward progress inside the buffer
-          require(pos + 8 <= bytes.length, s"truncated skippable frame at offset $pos")
-          val skipLen = readLe32(bytes, pos + 4) & 0xffffffffL
-          val next = pos.toLong + 8L + skipLen
-          require(next > pos && next <= bytes.length,
-            s"truncated/invalid skippable frame at offset $pos (size $skipLen)")
-          pos = next.toInt
-        } else {
-          val fsize = com.github.luben.zstd.Zstd.findFrameCompressedSize(
-            bytes, pos, bytes.length - pos)
-          require(fsize > 0 && pos + fsize <= bytes.length,
-            s"truncated/invalid zstd frame at offset $pos")
-          val before = parser.recordsParsed
-          if (zsScratch == null) zsScratch = new ZstdScratch(zstdDict)
-          decompressZstdFrame(bytes, pos, fsize.toInt, zstdDict, parser, chunk,
-            zsScratch)
-          pos += fsize.toInt
-          // record-at-time contract: one record per frame, boundary-aligned
-          if (!(parser.atRecordBoundary && parser.recordsParsed == before + 1))
+          pos = decodeMember(bytes, pos, format, parser, dict, scratch)
+          // record-at-time contract: one record per member, boundary-
+          // aligned; a step over trailing skippable frames at EOF adds none
+          val added = parser.recordsParsed - before
+          if (!parser.atRecordBoundary || added > 1 || (added == 0 && pos < bytes.length))
             ratFault = true
         }
       case "deflate" =>
@@ -301,44 +282,84 @@ object WarcBytes {
     }
   }
 
-  /** Inflate exactly one gzip member starting at `pos`, streaming 64 KiB
-    * chunks into `parser`; returns the offset just past the member's
+  /** Reusable decode scratch for one file or byte range: one native
+    * Inflater, one 64 KiB output buffer, and one zstd decompression
+    * context with the dictionary digested ONCE. A record-at-time archive
+    * holds one member per record — a fresh Inflater (a native zlib stream
+    * init/free) and buffer per member cost more than the inflation itself
+    * at ~2 KiB members (150k members/archive at bench sf), and the static
+    * `Zstd.decompress*` helpers create and free a native ZSTD_DCtx (and
+    * re-digest the dictionary) per call, which dominates ~500 B frames.
+    * A file's dictionary never changes mid-file, so the ctx is bound to it
+    * up front. The Inflater and the ctx are built on first use only.
+    */
+  private[sources] final class DecodeScratch(dict: Option[Array[Byte]]) {
+    lazy val inf = new Inflater(true)
+    val buf = new Array[Byte](65536)
+    lazy val zstd = {
+      val c = new com.github.luben.zstd.ZstdDecompressCtx()
+      dict.foreach(c.loadDict)
+      c
+    }
+  }
+
+  /** Decode ONE record-at-time member at `buf(rel)` into `sink` and return
+    * the offset just past it — the one member/frame step of every read
+    * path (the reference's start_next_segment, compress.rs:174-196).
+    * `format` "gzip" inflates one gzip member; "zstd" skips any skippable
+    * frames, sizes the next frame and decompresses it, returning
+    * `buf.length` when only skippable frames remain. A member the buffer
+    * ends inside throws EOFException, so a byte-range caller can re-read a
+    * larger window.
+    */
+  private[sources] def decodeMember(buf: Array[Byte], rel: Int, format: String,
+                                    sink: ByteSink, dict: Option[Array[Byte]],
+                                    scratch: DecodeScratch): Int =
+    if (format == "gzip") inflateMember(buf, rel, sink, scratch)
+    else {
+      var pos = rel
+      // skippable frames carry no records. Their size is an UNSIGNED le32
+      // (a signed read of a corrupt high-bit size moved pos BACKWARDS, an
+      // infinite decode loop), so every skip moves strictly forward
+      while (isSkippableFrame(buf, pos)) {
+        if (pos + 8 > buf.length) throw new EOFException(s"truncated skippable frame at offset $pos")
+        val next = pos + 8L + (readLe32(buf, pos + 4) & 0xffffffffL)
+        if (next > buf.length) throw new EOFException(
+          s"skippable frame at offset $pos runs past the buffer (size ${next - pos - 8})")
+        pos = next.toInt
+      }
+      if (pos >= buf.length) buf.length
+      else {
+        val fsize =
+          try com.github.luben.zstd.Zstd.findFrameCompressedSize(buf, pos, buf.length - pos)
+          catch { case _: RuntimeException => -1L }
+        if (fsize <= 0 || pos + fsize > buf.length)
+          throw new EOFException(s"truncated/invalid zstd frame at offset $pos")
+        decompressZstdFrame(buf, pos, fsize.toInt, dict, sink, scratch)
+        pos + fsize.toInt
+      }
+    }
+
+  /** Inflate exactly one gzip member starting at `pos0`, streaming 64 KiB
+    * chunks into `sink`; returns the offset just past the member's
     * trailer (the reference's start_next_segment bookkeeping,
     * compress.rs:174-196, decode.rs:733-753).
     */
-  /** Reusable per-task decode scratch: one native Inflater + one output
-    * buffer for a whole member LOOP. A record-at-time archive holds one
-    * gzip member per record — allocating a fresh Inflater (a native
-    * zlib stream init/free) and a 64 KiB buffer PER MEMBER cost more
-    * than the inflation itself at ~2 KiB members (150k members/archive
-    * at bench sf). `Inflater.reset()` restores a clean stream between
-    * members.
-    */
-  private[sources] final class InflateScratch {
-    val inf = new Inflater(true)
-    val buf = new Array[Byte](65536)
-  }
-
-  private[sources] def inflateMember(bytes: Array[Byte], pos0: Int,
-                                     parser: RecordParser,
-                                     scratch: InflateScratch = null): Int = {
+  private[sources] def inflateMember(bytes: Array[Byte], pos0: Int, sink: ByteSink,
+                                     scratch: DecodeScratch): Int = {
     require(pos0 + 2 <= bytes.length &&
       bytes(pos0) == GzipMagic(0) && bytes(pos0 + 1) == GzipMagic(1),
       s"bad gzip magic at offset $pos0")
     var pos = skipGzipHeader(bytes, pos0 + 2)
-    val local = scratch == null
-    val s = if (local) new InflateScratch else scratch
-    val inf = s.inf
+    val inf = scratch.inf
     inf.reset() // clean stream state even after a prior member threw
-    try {
-      inf.setInput(bytes, pos, bytes.length - pos)
-      while (!inf.finished()) {
-        val n = inf.inflate(s.buf)
-        if (n > 0) parser.append(s.buf, 0, n)
-        else if (inf.needsInput()) throw new EOFException(s"truncated deflate data at $pos")
-      }
-      pos += inf.getBytesRead.toInt
-    } finally { if (local) inf.end() }
+    inf.setInput(bytes, pos, bytes.length - pos)
+    while (!inf.finished()) {
+      val n = inf.inflate(scratch.buf)
+      if (n > 0) sink.append(scratch.buf, 0, n)
+      else if (inf.needsInput()) throw new EOFException(s"truncated deflate data at $pos")
+    }
+    pos += inf.getBytesRead.toInt
     require(pos + 8 <= bytes.length, s"truncated gzip trailer at offset $pos")
     pos + 8 // CRC32 + ISIZE
   }
@@ -355,6 +376,13 @@ object WarcBytes {
     p.finish()
     Iterator.continually(p.next()).takeWhile(_.isDefined).flatten.toVector
   }
+
+  /** Decode a whole archive in any format [[WarcFileDecoder]] detects
+    * (plain, record-at-time gzip or zstd, dictionary frame honored) into
+    * records with uncompressed-stream positions.
+    */
+  def decode(bytes: Array[Byte], file: String): Seq[WarcRecord] =
+    new WarcFileDecoder(bytes, file).toVector
 
   /** Encode records back to WARC bytes (encode.rs:41-132): header +
     * exactly Content-Length block bytes + CRLF CRLF. The Content-Length
@@ -408,123 +436,80 @@ object WarcBytes {
     */
   def encodeGzip(records: Seq[WarcRecord]): Array[Byte] = {
     val out = new ByteArrayOutputStream()
-    records.foreach { r =>
-      val plain = encodeRecords(Seq(r))
-      // end the native Deflater per member (close() would close the
-      // shared sink; finish() alone strands a zlib context per record)
-      val gz = new java.util.zip.GZIPOutputStream(out) {
-        `def`.setLevel(Deflater.BEST_SPEED)
-        def end(): Unit = `def`.end()
-      }
-      gz.write(plain)
-      gz.finish()
-      gz.end()
-    }
+    records.foreach(r => writeGzipMember(out, encodeRecords(Seq(r))))
     out.toByteArray
   }
 
-  /** Decode concatenated gzip members into the logical record stream.
-    * Positions are offsets in the UNCOMPRESSED stream (what the logical
-    * record order keys on). Streams member-at-a-time via
-    * [[WarcFileDecoder]] — the whole decompressed file is never
-    * materialized.
+  /** Write `plain` to `out` as ONE gzip member. finish() flushes the
+    * member but only close() would end the native Deflater — and close()
+    * would also close the shared sink — so end it explicitly: 150k
+    * members per task must not strand 150k native zlib contexts on the
+    * Cleaner.
     */
-  def decodeGzip(bytes: Array[Byte], file: String): Seq[WarcRecord] =
-    new WarcFileDecoder(bytes, file).toVector
+  private[sources] def writeGzipMember(out: java.io.OutputStream, plain: Array[Byte]): Unit = {
+    val gz = new GzipMemberStream(out)
+    gz.write(plain)
+    gz.finish()
+    gz.end()
+  }
 
-  /** Inflate ALL concatenated gzip members. Manual `Inflater` over the
-    * byte array (GZIPInputStream can desync at member boundaries because
-    * its internal buffering overshoots) — `getBytesRead` gives the exact
-    * member end, mirroring the reference's deferred-input bookkeeping
-    * (decode.rs:733-753, compress.rs start_next_segment).
+  private final class GzipMemberStream(out: java.io.OutputStream)
+      extends java.util.zip.GZIPOutputStream(out) {
+    `def`.setLevel(Deflater.BEST_SPEED)
+    def end(): Unit = `def`.end()
+  }
+
+  /** Inflate ALL concatenated gzip members, one [[inflateMember]] step
+    * each over one reused Inflater (GZIPInputStream can desync at member
+    * boundaries because its internal buffering overshoots).
     */
   def gunzipConcatenated(bytes: Array[Byte]): Array[Byte] = {
     val out = new ByteArrayOutputStream( // clamp: * 3 overflows Int past ~715 MiB input
-      math.min(bytes.length.toLong * 3, (Int.MaxValue - 8).toLong).toInt)
-    var pos = 0
-    while (pos < bytes.length) {
-      require(pos + 2 <= bytes.length &&
-        bytes(pos) == GzipMagic(0) && bytes(pos + 1) == GzipMagic(1),
-        s"bad gzip magic at offset $pos")
-      pos = skipGzipHeader(bytes, pos + 2)
-      val inf = new Inflater(true)
-      inf.setInput(bytes, pos, bytes.length - pos)
-      val buf = new Array[Byte](65536)
-      while (!inf.finished()) {
-        val n = inf.inflate(buf)
-        if (n > 0) out.write(buf, 0, n)
-        else if (inf.needsInput()) throw new EOFException(s"truncated deflate data at $pos")
-      }
-      pos += inf.getBytesRead.toInt
-      inf.end()
-      require(pos + 8 <= bytes.length, s"truncated gzip trailer at offset $pos")
-      pos += 8 // CRC32 + ISIZE
+      math.min(bytes.length.toLong * 3, (Int.MaxValue - 8).toLong).toInt) with ByteSink {
+      def append(chunk: Array[Byte], off: Int, n: Int): Unit = write(chunk, off, n)
     }
+    val scratch = new DecodeScratch(None)
+    try {
+      var pos = 0
+      while (pos < bytes.length) pos = inflateMember(bytes, pos, out, scratch)
+    } finally scratch.inf.end()
     out.toByteArray
   }
 
-  /** Decompress ONE zstd frame `bytes[pos, pos+fsize)` into `parser`.
+  /** Decompress ONE zstd frame `bytes[pos, pos+fsize)` into `sink`.
     *
-    * Fast path (no dictionary AND the frame header pledges its content
-    * size — which our record-at-time encoder always does, since
-    * one-shot `ZstdCompressCtx.compress` pledges): a single static JNI
-    * decompress call, no stream objects. A fresh `ZstdInputStream` per
-    * frame costs a native stream-context init plus several JNI
-    * crossings per RECORD, which at one-frame-per-record archives is
-    * the dominant decode cost: the 150k-record q67 bench archive split
-    * 17 s via streams vs ~3 s for the SAME records as gzip members
-    * (whose `inflateMember` reuses one Inflater). Dictionary frames get
-    * the same one-shot treatment via `decompressUsingDict`. Unknown-size
-    * and oversized (>1 GiB pledged — don't trust a corrupt header with
-    * an allocation) frames keep the streaming path.
+    * Fast path (the frame header pledges its content size — which our
+    * record-at-time encoder always does, since one-shot
+    * `ZstdCompressCtx.compress` pledges): a single JNI decompress call on
+    * the scratch context. A fresh `ZstdInputStream` per frame costs a
+    * native stream-context init plus several JNI crossings per RECORD,
+    * which at one-frame-per-record archives is the dominant decode cost:
+    * the 150k-record q67 bench archive split 17 s via streams vs ~3 s for
+    * the SAME records as gzip members. The scratch ctx decodes with the
+    * same dictionary semantics as a per-call one (a dict-free frame never
+    * back-references dict content, so a loaded dict is inert for it).
+    * Unknown-size and oversized (>1 GiB pledged — don't trust a corrupt
+    * header with an allocation) frames keep the streaming path.
     */
-  /** Reusable per-task zstd decode scratch: ONE native decompression
-    * context, with the dictionary digested ONCE at construction. The
-    * static `Zstd.decompress*` helpers create and free a native
-    * ZSTD_DCtx per call — and the usingDict variant re-digests the
-    * dictionary per call — which dominates ~500 B record-at-time
-    * frames at 10^5 frames/archive, the zstd twin of [[InflateScratch]].
-    * A task's dictionary never changes mid-file (decode loops pass one
-    * `dict` for the whole range), so the ctx is bound to it up front.
-    */
-  private[sources] final class ZstdScratch(dict: Option[Array[Byte]]) {
-    val ctx = new com.github.luben.zstd.ZstdDecompressCtx()
-    dict.foreach(ctx.loadDict)
-  }
-
   private[sources] def decompressZstdFrame(bytes: Array[Byte], pos: Int,
-      fsize: Int, dict: Option[Array[Byte]], parser: RecordParser,
-      chunk: Array[Byte] = null, scratch: ZstdScratch = null): Unit = {
-    import com.github.luben.zstd.Zstd
+      fsize: Int, dict: Option[Array[Byte]], sink: ByteSink,
+      scratch: DecodeScratch): Unit = {
     val contentSize =
-      try Zstd.getFrameContentSize(bytes, pos, fsize)
+      try com.github.luben.zstd.Zstd.getFrameContentSize(bytes, pos, fsize)
       catch { case _: RuntimeException => -1L }
     if (contentSize >= 0 && contentSize <= (1L << 30)) {
       val dst = new Array[Byte](contentSize.toInt)
-      // scratch path decodes with the same dictionary semantics as the
-      // statics (a dict-free frame never back-references dict content,
-      // so a loaded dict is inert for it) — bit-identical output
-      val n =
-        if (scratch != null)
-          scratch.ctx.decompressByteArray(dst, 0, dst.length, bytes, pos, fsize).toLong
-        else dict match {
-          case Some(d) => Zstd.decompressUsingDict(dst, 0, bytes, pos, fsize, d)
-          case None => Zstd.decompressByteArray(dst, 0, dst.length, bytes, pos, fsize)
-        }
-      if (n > 0) parser.append(dst, 0, n.toInt)
+      val n = scratch.zstd.decompressByteArray(dst, 0, dst.length, bytes, pos, fsize)
+      if (n > 0) sink.append(dst, 0, n)
     } else {
       val in = new com.github.luben.zstd.ZstdInputStreamNoFinalizer(
         new java.io.ByteArrayInputStream(bytes, pos, fsize))
       try {
         dict.foreach(in.setDict)
-        // the fallback allocates its own buffer only when actually
-        // taken — callers on the fast path must not pay a 64 KiB
-        // allocation per frame
-        val ch = if (chunk != null) chunk else new Array[Byte](65536)
-        var n = in.read(ch)
+        var n = in.read(scratch.buf)
         while (n >= 0) {
-          if (n > 0) parser.append(ch, 0, n)
-          n = in.read(ch)
+          if (n > 0) sink.append(scratch.buf, 0, n)
+          n = in.read(scratch.buf)
         }
       } finally in.close()
     }
@@ -572,13 +557,6 @@ object WarcBytes {
     } finally ctx.close()
     out.toByteArray
   }
-
-  /** Decode concatenated zstd frames (dictionary skippable frame honored,
-    * compressed dictionaries auto-detected by magic, zstd.rs:38-52).
-    * Streams in 64 KiB chunks via [[WarcFileDecoder]].
-    */
-  def decodeZstd(bytes: Array[Byte], file: String): Seq[WarcRecord] =
-    new WarcFileDecoder(bytes, file).toVector
 
   /** Parse the optional leading dictionary skippable frame (zstd.rs:13-58):
     * returns (dictionary, offset of the first content frame). A dictionary

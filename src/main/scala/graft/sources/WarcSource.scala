@@ -12,17 +12,16 @@ import java.util.zip.Deflater
   * Read path: `spark.read.format("binaryFile")` over a DIRECTORY with
   * `pathGlobFilter` (a glob-in-path triggers Spark's spurious
   * FileStreamSink probe WARN) — one row per file, decoded INCREMENTALLY by
-  * [[WarcBytes.WarcFileDecoder]]: gzip inflates one member at a time, so
-  * peak executor memory is compressed-file + one record, never the
+  * [[WarcBytes.WarcFileDecoder]]: one gzip member or zstd frame at a time,
+  * so peak executor memory is compressed-file + one record, never the
   * decompressed stream. Parallelism is per-file, exactly like a crawl
-  * archive layout (many ~1 GB WARCs); a single giant file would need the
-  * DataSourceV2 record-boundary splitter sketched in SURVEY §2.1, which
-  * the record-at-time gzip members make possible.
+  * archive layout (many ~1 GB WARCs); a single giant record-at-time file
+  * is read in byte-range tasks by [[WarcSplit.readSplit]] instead.
   *
   * Write path: records stream record-at-a-time through the Hadoop
   * FileSystem API (works on hdfs:// and s3a:// URIs, not just the local
-  * FS) — one `.warc[.gz]` file per partition, one gzip member per record
-  * (record-at-time compression, encode.rs:108-113).
+  * FS) — one `.warc[.gz|.zst]` file per partition, one gzip member or
+  * zstd frame per record (record-at-time compression, encode.rs:108-113).
   */
 object WarcSource {
 
@@ -86,27 +85,12 @@ object WarcSource {
     val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val len = fs.getFileStatus(path).getLen
     if (position < 0 || position >= len) return None
-    def readAt(off: Long, n: Int): Array[Byte] = {
-      val a = new Array[Byte](n)
-      val in = fs.open(path)
-      try { in.seek(off); in.readFully(a) } finally in.close()
-      a
-    }
+    val readAt = WarcSplit.rangeReader(fs, path)
     // a mid-file offset into a DICTIONARIED zstd archive can't decode
-    // without the head frame's dictionary — parse it lazily (one 8-byte
-    // head read + the frame, only when the sought buffer is zstd and
-    // doesn't start at 0, where the decoder parses the head itself)
-    lazy val headDict: Option[Array[Byte]] =
-      if (len < 8) None
-      else {
-        val h = readAt(0L, 8)
-        if ((WarcBytes.readLe32(h, 0) & 0xfffffff0) == 0x184d2a50) {
-          val frameLen = WarcBytes.readLe32(h, 4) & 0xffffffffL
-          if (8 + frameLen <= len && frameLen <= maxBytes)
-            WarcBytes.zstdDictFrame(readAt(0L, (8 + frameLen).toInt))._1
-          else None
-        } else None
-      }
+    // without the head frame's dictionary — parse it lazily, only when the
+    // sought buffer is zstd and doesn't start at 0, where the decoder
+    // parses the head itself
+    lazy val headDict = WarcSplit.headFrame(readAt, len, file, maxBytes)._1
     // progressive window: most records are far smaller than maxBytes, so
     // read 256 KiB and grow 4× on decoder underrun instead of eagerly
     // fetching the whole cap (a 64 MB ranged GET per point lookup)
@@ -117,10 +101,9 @@ object WarcSource {
       val toRead = math.min(len - position, window).toInt
       val buf = readAt(position, toRead)
       val atCap = toRead.toLong >= math.min(len - position, maxBytes.toLong)
+      val preset =
+        if (position > 0 && WarcBytes.detectFormat(buf) == "zstd") headDict else None
       try {
-        val preset =
-          if (position > 0 && WarcBytes.detectFormat(buf) == "zstd") headDict
-          else None
         val dec = new WarcBytes.WarcFileDecoder(buf, file, preset)
         record = if (dec.hasNext) Some(dec.next()) else None
         done = true
@@ -153,14 +136,7 @@ object WarcSource {
       .as[(String, Array[Byte])]
   }
 
-  /** Write records as one WARC file per partition under `dir`
-    * (part-<partition>.warc[.gz]). Records are written in within-partition
-    * order and STREAMED (one record encoded + flushed at a time — the
-    * partition is never buffered); use
-    * `repartitionByRange(...).sortWithinPartitions(...)` upstream for a
-    * deterministic layout.
-    */
-  /** Write ALL records as ONE `.warc[.gz]` file at `path`: members are
+  /** Write ALL records as ONE archive file at `path`: members are
     * encoded in PARALLEL (one [[write]] task per partition), then the
     * part streams are concatenated in partition order. Valid because
     * record-at-time compression makes the file a plain concatenation of
@@ -168,17 +144,13 @@ object WarcSource {
     * one archive file" costs one sequential byte copy, not a
     * single-task encode of the whole dataset (measured 8× faster on a
     * ~300 MB file at 32 cores).
-    */
-  def writeSingleFile(records: Dataset[WarcRecord], path: String,
-                      gzip: Boolean = false): Unit =
-    writeSingleFile(records, path, if (gzip) "gzip" else "none")
-
-  /** Codec-parameterized [[writeSingleFile]]: "none" | "gzip" | "zstd"
-    * (record-at-time parallel encode + concat), or the whole-file
-    * wrappers "deflate" | "brotli" (no concatenation support,
-    * compress.rs:68-76: records encode to PLAIN parts in parallel, then
-    * the driver streams the concatenated stream through ONE
-    * zlib/brotli-stored compressor — bounded memory, single pass).
+    *
+    * `codec`: "none" | "gzip" | "zstd" (record-at-time parallel encode +
+    * concat), or the whole-file wrappers "deflate" | "brotli" (no
+    * concatenation support, compress.rs:68-76: records encode to PLAIN
+    * parts in parallel, then the calling process streams the
+    * concatenated parts through ONE zlib/brotli-stored compressor —
+    * bounded memory, single pass).
     */
   def writeSingleFile(records: Dataset[WarcRecord], path: String,
                       codec: String): Unit = {
@@ -238,13 +210,16 @@ object WarcSource {
     ()
   }
 
-  def write(records: Dataset[WarcRecord], dir: String, gzip: Boolean = false): Unit =
-    write(records, dir, if (gzip) "gzip" else "none")
-
-  /** Codec-parameterized sink: "none" | "gzip" | "zstd" — zstd writes one
-    * frame per record (record-at-time, reference compress.rs:174-196 +
-    * encode.rs:108-113), so the output is splittable by [[WarcSplit]]
-    * exactly like the gzip form.
+  /** Write records as one WARC file per partition under `dir`
+    * (part-<partition>.warc[.gz|.zst]). Records are written in
+    * within-partition order and STREAMED (one record encoded + flushed at
+    * a time — the partition is never buffered); use
+    * `repartitionByRange(...).sortWithinPartitions(...)` upstream for a
+    * deterministic layout.
+    *
+    * `codec`: "none" | "gzip" | "zstd" — gzip writes one member and zstd
+    * one frame per record (record-at-time, reference compress.rs:174-196
+    * + encode.rs:108-113), so the output is splittable by [[WarcSplit]].
     */
   def write(records: Dataset[WarcRecord], dir: String, codec: String): Unit = {
     val ext = codec match {
@@ -272,19 +247,7 @@ object WarcSource {
           it.foreach { r =>
             val plain = WarcBytes.encodeRecords(Seq(r))
             codec match {
-              case "gzip" =>
-                // one gzip member per record: record-at-time compression.
-                // finish() flushes the member but only close() would end
-                // the native Deflater — and close() would also close the
-                // shared sink — so end it explicitly: 150k members/task
-                // must not strand 150k native zlib contexts on the Cleaner
-                val gz = new java.util.zip.GZIPOutputStream(out) {
-                  `def`.setLevel(Deflater.BEST_SPEED)
-                  def end(): Unit = `def`.end()
-                }
-                gz.write(plain)
-                gz.finish()
-                gz.end()
+              case "gzip" => WarcBytes.writeGzipMember(out, plain)
               case "zstd" => out.write(zctx.get.compress(plain))
               case _ => out.write(plain)
             }

@@ -6,13 +6,14 @@ import org.apache.spark.sql.{Dataset, SparkSession}
 import java.io.EOFException
 import java.util.zip.Inflater
 
-/** Record-boundary splitter for ONE large record-at-time `.warc.gz` file
-  * (SURVEY §2.1 near-miss closed): N byte-range tasks per file instead of
-  * one task per file. The enabler is the record-at-time contract — each
-  * record is its own gzip member (reference compress.rs:62-76), so member
-  * starts ARE record boundaries (the reference's record_boundary_position
-  * bookkeeping, decode.rs:51-56) and any task can start decoding at the
-  * first member magic at-or-after its range start with zero coordination.
+/** Record-boundary splitter for ONE large record-at-time `.warc.gz` or
+  * `.warc.zst` file (SURVEY §2.1 near-miss closed): N byte-range tasks per
+  * file instead of one task per file. The enabler is the record-at-time
+  * contract — each record is its own gzip member or zstd frame (reference
+  * compress.rs:62-76), so member starts ARE record boundaries (the
+  * reference's record_boundary_position bookkeeping, decode.rs:51-56) and
+  * any task can start decoding at the first member magic at-or-after its
+  * range start with zero coordination.
   *
   * Split protocol (the classic Hadoop input-split convention): a member
   * whose START offset lies in [start, end) belongs to that task, even when
@@ -179,57 +180,9 @@ object WarcSplit {
     new Iterator[WarcRecord] {
       private var abs = first
       private val pending = scala.collection.mutable.Queue.empty[WarcRecord]
-      // one Inflater + output buffer for the whole range (reset between
-      // members): per-member native init/free dominated ~2 KiB members
-      private lazy val gzScratch = new WarcBytes.InflateScratch
-      // one zstd context per range (dictionary digested once) — the
-      // static per-frame ctx create/free + dict re-digest was the same
-      // pathology for ~500 B frames
-      private lazy val zsScratch = new WarcBytes.ZstdScratch(dict)
-
-      /** Decode one member (gzip) / one frame after any skippable
-        * frames (zstd) at buffer offset `rel`; appends plaintext into
-        * `parser`, returns the offset just past it. Truncation by the
-        * buffer edge throws EOFException so the caller grows the window.
-        */
-      private def decodeOneMember(rel0: Int, parser: WarcBytes.RecordParser): Int =
-        if (format == "zstd") {
-          var rel = rel0
-          // mid-stream skippable frames carry no records: skip them (the
-          // LEADING dictionary frame was parsed by readSplit and sits
-          // before contentStart, so no task ever decodes through it)
-          while (rel + 8 <= buf.length &&
-                 (WarcBytes.readLe32(buf, rel) & 0xfffffff0) == 0x184d2a50) {
-            val skipLen = WarcBytes.readLe32(buf, rel + 4) & 0xffffffffL
-            val next = rel.toLong + 8L + skipLen
-            if (next > buf.length) throw new EOFException(
-              s"$file: skippable frame at ${bufStart + rel} runs past buffer")
-            rel = next.toInt
-          }
-          if (rel >= buf.length) {
-            if (bufStart + rel >= fileLen) rel // trailing skippables at EOF
-            else throw new EOFException(
-              s"$file: frame head at ${bufStart + rel} truncated")
-          } else {
-            val fsize =
-              try com.github.luben.zstd.Zstd.findFrameCompressedSize(
-                buf, rel, buf.length - rel)
-              catch { case _: RuntimeException =>
-                throw new EOFException(
-                  s"$file: zstd frame at ${bufStart + rel} undecodable in buffer")
-              }
-            if (fsize <= 0 || rel + fsize > buf.length)
-              throw new EOFException(
-                s"$file: zstd frame at ${bufStart + rel} runs past buffer")
-            // one-shot static decompress when the frame pledges its size
-            // (our encoder always does) — a per-frame ZstdInputStream's
-            // native init dominated the split decode (see
-            // WarcBytes.decompressZstdFrame)
-            WarcBytes.decompressZstdFrame(buf, rel, fsize.toInt, dict, parser,
-              chunk = null, scratch = zsScratch)
-            rel + fsize.toInt
-          }
-        } else WarcBytes.inflateMember(buf, rel0, parser, gzScratch)
+      // one Inflater / zstd context (dictionary digested once) for the
+      // whole range: per-member native init/free dominated small members
+      private val scratch = new WarcBytes.DecodeScratch(dict)
 
       private def decodeMemberAt(offset: Long): Unit = {
         var window = (bufStart + buf.length - offset).toInt
@@ -238,7 +191,9 @@ object WarcSplit {
           val rel = (offset - bufStart).toInt
           val parser = new WarcBytes.RecordParser(file)
           try {
-            val relNext = decodeOneMember(rel, parser)
+            // the LEADING dictionary frame sits before contentStart, so
+            // no task decodes through it; later skippables are skipped
+            val relNext = WarcBytes.decodeMember(buf, rel, format, parser, dict, scratch)
             parser.finish() // record-at-time: member ends ON a boundary
             var r = parser.next()
             require(r.nonEmpty || bufStart + relNext >= fileLen,
@@ -275,19 +230,44 @@ object WarcSplit {
     }
   }
 
-  /** Read ONE record-at-time `.warc.gz` file with `ceil(len/splitBytes)`
-    * parallel range tasks. Each task scans for its first member boundary
-    * and decodes members starting inside its range — per-RANGE
-    * parallelism where [[WarcSource.read]] only has per-FILE parallelism,
-    * so a single multi-GB archive saturates a cluster instead of one
-    * core. `position` = compressed member offset (see object doc).
-    */
   /** One planned byte-range task: everything a mid-file executor needs
     * to decode independently (format, head dictionary, content start).
     */
   private case class Split(file: String, fileLen: Long, start: Long,
                            end: Long, format: String,
                            dict: Option[Array[Byte]], contentStart: Long)
+
+  /** File bytes [off, off+n) of `path`, one positioned read per call —
+    * the ranged read of every split task, the split planner and
+    * [[WarcSource.get]].
+    */
+  private[sources] def rangeReader(fs: org.apache.hadoop.fs.FileSystem,
+                                   path: org.apache.hadoop.fs.Path): (Long, Int) => Array[Byte] =
+    (off, n) => {
+      val a = new Array[Byte](n)
+      val in = fs.open(path)
+      try { in.seek(off); in.readFully(a) } finally in.close()
+      a
+    }
+
+  /** The archive's leading skippable frame, if any: (dictionary, offset of
+    * the first content frame). A non-dictionary skippable frame yields
+    * (None, its end); no skippable frame yields (None, 0). A frame whose
+    * unsigned size runs past the file or exceeds `maxBytes` is an error.
+    */
+  private[sources] def headFrame(readAt: (Long, Int) => Array[Byte], fileLen: Long,
+                                 file: String, maxBytes: Int): (Option[Array[Byte]], Long) = {
+    val head = readAt(0L, math.min(8L, fileLen).toInt)
+    if (head.length < 8 || !WarcBytes.isSkippableFrame(head, 0)) (None, 0L)
+    else {
+      val frameLen = WarcBytes.readLe32(head, 4) & 0xffffffffL
+      require(8 + frameLen <= fileLen, s"$file: truncated leading skippable frame")
+      require(frameLen <= maxBytes,
+        s"$file: leading skippable frame of $frameLen bytes exceeds maxRecordBytes=$maxBytes")
+      val (d, start) = WarcBytes.zstdDictFrame(readAt(0L, (8 + frameLen).toInt))
+      (d, if (start > 0) start.toLong else 8L + frameLen)
+    }
+  }
 
   /** Driver-side split planning for ONE archive: one 8-byte head read
     * classifies it (record-at-time gzip and zstd are both splittable —
@@ -306,14 +286,8 @@ object WarcSplit {
     // zero records) — zero splits, not a format error that would kill a
     // whole readSplitDir fleet over one empty member
     if (fileLen == 0) return Seq.empty
-    def readAt(off: Long, n: Int): Array[Byte] = {
-      val a = new Array[Byte](n)
-      val in = fs.open(path)
-      try { in.seek(off); in.readFully(a) } finally in.close()
-      a
-    }
-    val head = readAt(0L, math.min(8L, fileLen).toInt)
-    val format = WarcBytes.detectFormat(head) match {
+    val readAt = rangeReader(fs, path)
+    val format = WarcBytes.detectFormat(readAt(0L, math.min(8L, fileLen).toInt)) match {
       case "gzip" => "gzip"
       case "zstd" => "zstd"
       case other => throw new IllegalArgumentException(
@@ -321,20 +295,7 @@ object WarcSplit {
           "(use WarcSource.read)")
     }
     val (dict, contentStart) =
-      if (format == "zstd" && head.length >= 8 &&
-          (WarcBytes.readLe32(head, 0) & 0xfffffff0) == 0x184d2a50) {
-        // unsigned size; a non-dictionary leading skippable yields
-        // (None, its end) — content simply starts after it
-        val frameLen = WarcBytes.readLe32(head, 4) & 0xffffffffL
-        require(8 + frameLen <= fileLen,
-          s"$file: truncated leading skippable frame")
-        require(frameLen <= maxRecordBytes,
-          s"$file: leading skippable frame of $frameLen bytes exceeds " +
-            s"maxRecordBytes=$maxRecordBytes")
-        val frame = readAt(0L, (8 + frameLen).toInt)
-        val (d, start) = WarcBytes.zstdDictFrame(frame)
-        (d, if (start > 0) start.toLong else 8L + frameLen)
-      } else (None, 0L)
+      if (format == "zstd") headFrame(readAt, fileLen, file, maxRecordBytes) else (None, 0L)
     val nSplits = math.max(1L, (fileLen + splitBytes - 1) / splitBytes).toInt
     (0 until nSplits).map { i =>
       Split(file, fileLen, i * splitBytes,
@@ -362,26 +323,33 @@ object WarcSplit {
         // the cluster's fs.* settings from the classpath
         val p = new org.apache.hadoop.fs.Path(s.file)
         val efs = p.getFileSystem(new org.apache.hadoop.conf.Configuration())
-        def readRange(off: Long, n: Int): Array[Byte] = {
-          val a = new Array[Byte](n)
-          val in = efs.open(p)
-          try { in.seek(off); in.readFully(a) } finally in.close()
-          a
-        }
-        decodeRange(readRange, s.fileLen, s.start, s.end, s.file,
+        decodeRange(rangeReader(efs, p), s.fileLen, s.start, s.end, s.file,
           maxRecordBytes, s.format, dictBc.value.get(s.file), s.contentStart)
       }
     spark.createDataset(rdd)
   }
 
-  def readSplit(spark: SparkSession, file: String, splitBytes: Long = 128L << 20,
-                maxRecordBytes: Int = 64 << 20): Dataset[WarcRecord] = {
+  /** Each task buffers its whole range (+ validation tail) in one array:
+    * fail with the sizing story, not a negative-array-size surprise.
+    */
+  private def checkSplitBytes(splitBytes: Long): Unit = {
     require(splitBytes > 0, "splitBytes must be positive")
-    // each task buffers its whole range (+ validation tail) in one array:
-    // fail with the sizing story, not a negative-array-size surprise
     require(splitBytes <= Int.MaxValue.toLong - ZstdValidationTail - 8,
       s"splitBytes=$splitBytes exceeds the per-task buffer limit " +
         "(one JVM array per range); use more, smaller splits")
+  }
+
+  /** Read ONE record-at-time `.warc.gz` or `.warc.zst` file with
+    * `ceil(len/splitBytes)` parallel range tasks. Each task scans for its
+    * first member boundary and decodes members starting inside its
+    * range — per-RANGE parallelism where [[WarcSource.read]] only has
+    * per-FILE parallelism, so a single multi-GB archive saturates a
+    * cluster instead of one core. `position` = compressed member offset
+    * (see object doc).
+    */
+  def readSplit(spark: SparkSession, file: String, splitBytes: Long = 128L << 20,
+                maxRecordBytes: Int = 64 << 20): Dataset[WarcRecord] = {
+    checkSplitBytes(splitBytes)
     val path = new org.apache.hadoop.fs.Path(file)
     val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val fileLen = fs.getFileStatus(path).getLen
@@ -401,12 +369,7 @@ object WarcSplit {
   def readSplitDir(spark: SparkSession, dir: String, glob: String = "*.warc*",
                    splitBytes: Long = 128L << 20,
                    maxRecordBytes: Int = 64 << 20): Dataset[WarcRecord] = {
-    require(splitBytes > 0, "splitBytes must be positive")
-    // each task buffers its whole range (+ validation tail) in one array:
-    // fail with the sizing story, not a negative-array-size surprise
-    require(splitBytes <= Int.MaxValue.toLong - ZstdValidationTail - 8,
-      s"splitBytes=$splitBytes exceeds the per-task buffer limit " +
-        "(one JVM array per range); use more, smaller splits")
+    checkSplitBytes(splitBytes)
     val base = new org.apache.hadoop.fs.Path(dir)
     val fs = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val files = fs.globStatus(new org.apache.hadoop.fs.Path(base, glob))

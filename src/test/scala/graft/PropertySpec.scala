@@ -47,7 +47,7 @@ class PropertySpec extends AnyFunSuite {
         pos += HeaderSerde.recordLength(r.version, r.fields, r.bytes.length.toLong)
         out
       }
-      val decoded = WarcBytes.decodeGzip(WarcBytes.encodeGzip(fixed), "p")
+      val decoded = WarcBytes.decode(WarcBytes.encodeGzip(fixed), "p")
       assert(decoded.map(_.position) == fixed.map(_.position))
       decoded.zip(fixed).foreach { case (d, r) => assert(d.bytes.sameElements(r.bytes)) }
     }
@@ -208,9 +208,7 @@ class PropertySpec extends AnyFunSuite {
           math.min((k + 1L) * splitBytes, fileLen), "s",
           format = format, dict = dict, contentStart = contentStart).toSeq
       }
-      val whole =
-        if (mode == 0) WarcBytes.decodeGzip(bytes, "s")
-        else WarcBytes.decodeZstd(bytes, "s")
+      val whole = WarcBytes.decode(bytes, "s")
       def key(r: graft.core.WarcRecord) =
         (r.fields.find(_.name == "WARC-Record-ID").get.value,
           r.bytes.toSeq.hashCode)

@@ -31,13 +31,20 @@ class WarcCodecSpec extends AnyFunSuite {
     val records = Synth.warcRecords(round = 2, n = 50)
     val gz = WarcBytes.encodeGzip(records)
     assert(WarcBytes.detectFormat(gz) == "gzip")
-    val decoded = WarcBytes.decodeGzip(gz, "synth.warc.gz")
+    val decoded = WarcBytes.decode(gz, "synth.warc.gz")
     assert(decoded.size == 50)
     decoded.zip(records).foreach { case (d, r) =>
       assert(d.position == r.position)
       assert(d.fields == r.fields)
       assert(d.bytes.sameElements(r.bytes))
     }
+    // the whole-stream helper inflates the same members byte for byte
+    assert(WarcBytes.gunzipConcatenated(gz).sameElements(WarcBytes.encodeRecords(records)))
+    // the last member's 8-byte trailer cut short is an error, not a
+    // silently shorter stream
+    val et = intercept[IllegalArgumentException](
+      WarcBytes.gunzipConcatenated(gz.dropRight(3)))
+    assert(et.getMessage.contains("truncated gzip trailer"), et.getMessage)
   }
 
   test("zstd members round-trip: plain, dict, and compressed dict " +
@@ -51,13 +58,15 @@ class WarcCodecSpec extends AnyFunSuite {
       WarcBytes.encodeZstd(records, dict = Some(dict), compressDict = true))
     variants.zipWithIndex.foreach { case (z, i) =>
       assert(WarcBytes.detectFormat(z) == "zstd", s"variant $i")
-      val decoded = WarcBytes.decodeZstd(z, "synth.warc.zst")
+      val decoded = WarcBytes.decode(z, "synth.warc.zst")
       assert(decoded.size == 40, s"variant $i")
       decoded.zip(records).foreach { case (d, r) =>
         assert(d.position == r.position)
         assert(d.fields == r.fields)
         assert(d.bytes.sameElements(r.bytes))
       }
+      assert(WarcBytes.unzstdConcatenated(z).sameElements(WarcBytes.encodeRecords(records)),
+        s"variant $i")
     }
   }
 
@@ -104,7 +113,7 @@ class WarcCodecSpec extends AnyFunSuite {
     val dir = java.nio.file.Files.createTempDirectory("graft-warc").toString
     val records = Synth.warcRecords(round = 3, n = 60)
     val ds = spark.createDataset(records).coalesce(1)
-    WarcSource.write(ds, dir, gzip = true)
+    WarcSource.write(ds, dir, "gzip")
     val back = WarcSource.read(spark, dir, "*.warc.gz")
       .collect().sortBy(_.position)
     assert(back.length == 60)
