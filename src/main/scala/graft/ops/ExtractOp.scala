@@ -157,7 +157,7 @@ object ExtractOp {
       .sortWithinPartitions(col("position"))
       .as[(Long, Seq[String], Array[Byte], Boolean, Long)]
     rows.mapPartitions { it =>
-      val conf = new org.apache.hadoop.conf.Configuration()
+      val conf = graft.sources.WarcSplit.executorConf
       val base = new org.apache.hadoop.fs.Path(dir)
       val scheme = base.toUri.getScheme
       // Local trees skip two per-file pathologies of the stock

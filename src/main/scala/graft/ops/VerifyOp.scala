@@ -3,6 +3,7 @@ package graft.ops
 import graft.core.Field
 import graft.core.FieldOps._
 import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import java.util.regex.Pattern
@@ -14,8 +15,9 @@ final case class ProblemKD(kind: String, detail: String)
   * as ONE single-pass scalar function over the header multimap (see the
   * note on [[VerifyOp.checkFields]] for why not per-check Columns);
   * cross-record checks are the two joins the reference hides in redb
-  * cursor batches: reference-integrity LEFT ANTI (J1, verify.rs:230-264)
-  * and segment reassembly aggregation (J2, verify.rs:266-319).
+  * cursor batches: reference integrity as one window over target ids
+  * (J1, verify.rs:230-264) and segment reassembly aggregation (J2,
+  * verify.rs:266-319). Neither caches anything.
   *
   * Problem kinds mirror verify.rs:77-110 (snake_cased).
   */
@@ -190,7 +192,7 @@ object VerifyOp {
       .select(col("position"), col("record_id"),
         col("p.kind").as("kind"), col("p.detail").as("detail"))
 
-  /** J1 — reference-integrity anti-join (verify.rs:230-264): every
+  /** J1 — reference integrity (verify.rs:230-264): every
     * (record → target id) reference whose target is not a known record id
     * is a `referenced_record_missing` problem. `refFields` lists the
     * reference-carrying headers (Concurrent-To / Refers-To / Warcinfo-ID).
@@ -203,6 +205,12 @@ object VerifyOp {
     // union-of-three-scans form evaluated four interpreted HOF lookups,
     // each re-inlining the caller's fields construction — 4 full scans
     // of the record set for one anti-join probe side.
+    //
+    // Each row emits its references as (via, target) pairs and its own
+    // id as one more pair with a null `via`, so one scan of `records`
+    // feeds one window over target_id: a reference is missing when its
+    // target has no id row. A null target has no id row either, so it
+    // is reported, as a left-anti join on target_id reports it.
     val rfList = refFields
     val idRefsUdf = udf { (fields: Seq[Row]) =>
       val rid = fields.find(_.getString(0).equalsIgnoreCase("WARC-Record-ID"))
@@ -212,20 +220,17 @@ object VerifyOp {
           (rf, r.getString(1))
         }
       }
-      (rid, refs)
+      (rid, if (rid == null) refs else (null: String, rid) +: refs)
     }
-    // both the id universe and the probe side read `base` — persist the
-    // narrow (position, id, refs) projection so the record scan + UDF
-    // runs once (guide §5)
-    val base = records.select(col("position"), idRefsUdf(col("fields")).as("ir"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val ids = base.select(col("ir._1").as("target_id"))
-      .where(col("target_id").isNotNull)
-    val refs = base.select(col("position"), col("ir._1").as("record_id"),
-        explode(col("ir._2")).as("r"))
+    // nondeterministic pins ONE evaluation per row (see [[problems]])
+    val pairs = records
+      .select(col("position"), idRefsUdf.asNondeterministic()(col("fields")).as("ir"))
+      .select(col("position"), col("ir._1").as("record_id"), explode(col("ir._2")).as("r"))
       .select(col("position"), col("record_id"),
         col("r._2").as("target_id"), col("r._1").as("via"))
-    refs.join(ids.distinct(), Seq("target_id"), "left_anti")
+    pairs
+      .withColumn("has_id", max(col("via").isNull).over(Window.partitionBy("target_id")))
+      .where(col("via").isNotNull && !col("has_id"))
       .select(col("position"), col("record_id"),
         lit("referenced_record_missing").as("kind"),
         concat(col("via"), lit(" -> "), col("target_id")).as("detail"))
@@ -246,22 +251,22 @@ object VerifyOp {
       getU64Strict(f, "Content-Length").as("len"),
       getU64Strict(f, "WARC-Segment-Total-Length").as("total_len"))
       .where(col("origin_id").isNotNull && col("n").isNotNull)
-    // chain-cardinality table consumed by BOTH problem branches below —
-    // persist so the per-record scan + grouping runs once, not twice
-    // (guide §5; rows = one per chain, far smaller than the input)
-    val agg = segs.groupBy("origin_id").agg(
+    // one row per chain, then both optional problems from that row
+    def problem(kind: String, detail: Column) =
+      struct(lit(kind).as("kind"), detail.as("detail"))
+    segs.groupBy("origin_id").agg(
       count(lit(1)).as("n_segs"),
       max("n").as("max_n"),
       sum("len").as("sum_len"),
       max("total_len").as("total_len"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val gap = agg.where(col("max_n") =!= col("n_segs"))
-      .select(col("origin_id"), lit("missing_segment").as("kind"),
-        concat(lit("have "), col("n_segs"), lit(" of "), col("max_n")).as("detail"))
-    val badLen = agg.where(col("total_len").isNotNull && col("sum_len") =!= col("total_len"))
-      .select(col("origin_id"), lit("mismatched_segment_length").as("kind"),
-        concat(col("sum_len"), lit(" != "), col("total_len")).as("detail"))
-    gap.unionByName(badLen)
+      .select(col("origin_id"), explode(array(
+        when(col("max_n") =!= col("n_segs"), problem("missing_segment",
+          concat(lit("have "), col("n_segs"), lit(" of "), col("max_n")))),
+        when(col("total_len").isNotNull && col("sum_len") =!= col("total_len"),
+          problem("mismatched_segment_length",
+            concat(col("sum_len"), lit(" != "), col("total_len")))))).as("p"))
+      .where(col("p").isNotNull)
+      .select(col("origin_id"), col("p.kind").as("kind"), col("p.detail").as("detail"))
   }
 
   /** PayloadDigest check (reference verify.rs:747-785 + block_data

@@ -63,16 +63,27 @@ object WarcBytes {
     * records. Memory is bounded by one record + one appended chunk — the
     * Spark-side analog of the reference's bounded-buffer push decoder
     * (decode.rs:383-801). `position` = offset in the uncompressed stream.
+    *
+    * Unconsumed bytes are `buf[pos, len)`: framing a record only moves the
+    * read cursor, and the partial record left behind is moved to the
+    * front once per [[append]] — so one large append (a whole plain file,
+    * a brotli stream) frames in time linear in its size.
     */
   final class RecordParser(file: String) extends ByteSink {
     private var buf = new Array[Byte](64 * 1024)
+    private var pos = 0
     private var len = 0
-    private var base = 0L // uncompressed offset of buf(0)
+    private var base = 0L // uncompressed offset of buf(pos)
     private val ready = scala.collection.mutable.Queue.empty[WarcRecord]
     /** Total records framed so far (valid mid-stream). */
     var recordsParsed: Long = 0L
 
     def append(chunk: Array[Byte], off: Int, n: Int): Unit = {
+      if (pos > 0) {
+        System.arraycopy(buf, pos, buf, 0, len - pos)
+        len -= pos
+        pos = 0
+      }
       if (len + n > buf.length) {
         val grown = new Array[Byte](math.max(buf.length * 2, len + n))
         System.arraycopy(buf, 0, grown, 0, len)
@@ -86,17 +97,27 @@ object WarcBytes {
     def next(): Option[WarcRecord] =
       if (ready.nonEmpty) Some(ready.dequeue()) else None
 
+    /** Start a new stream at offset 0, keeping the buffer: the split
+      * read frames every member of its range with one parser.
+      */
+    def reset(): Unit = {
+      pos = 0
+      len = 0
+      base = 0L
+      ready.clear()
+    }
+
     /** True when no partial record is buffered and nothing is queued —
       * i.e. the stream sits exactly on a record boundary.
       */
-    def atRecordBoundary: Boolean = len == 0
+    def atRecordBoundary: Boolean = pos == len
 
     /** End of stream: any leftover bytes are a framing error. */
     def finish(): Unit =
-      require(len == 0, s"truncated block at offset $base")
+      require(pos == len, s"truncated block at offset $base")
 
-    private def indexOfTerminator(limit: Int): Int = {
-      var i = 0
+    private def indexOfTerminator(from: Int, limit: Int): Int = {
+      var i = from
       while (i + 4 <= limit) {
         if (buf(i) == '\r' && buf(i + 1) == '\n' && buf(i + 2) == '\r' && buf(i + 3) == '\n')
           return i
@@ -109,15 +130,16 @@ object WarcBytes {
       var progress = true
       while (progress) {
         progress = false
-        val headerEnd = indexOfTerminator(len)
-        if (headerEnd < 0) {
-          require(len <= MaxHeaderLen + 4, s"missing header terminator at offset $base")
+        val avail = len - pos
+        val at = indexOfTerminator(pos, len)
+        if (at < 0) {
+          require(avail <= MaxHeaderLen + 4, s"missing header terminator at offset $base")
         } else {
+          val headerEnd = at - pos // header length before CRLF CRLF
           // the cap applies even when a terminator IS eventually found —
           // the reference treats any header block past 32 KiB as malformed
           require(headerEnd <= MaxHeaderLen, s"header exceeds $MaxHeaderLen bytes at offset $base")
-          val headerBytes = java.util.Arrays.copyOfRange(buf, 0, headerEnd + 4)
-          val (version, fields) = HeaderSerde.parse(headerBytes)
+          val (version, fields) = HeaderSerde.parse(buf, pos, headerEnd + 4)
             .getOrElse(throw new IllegalArgumentException(s"bad header at offset $base"))
           val lenStr = fields.find(_.name.equalsIgnoreCase("Content-Length")).map(_.value)
             .getOrElse(throw new IllegalArgumentException(s"no Content-Length at offset $base"))
@@ -131,25 +153,26 @@ object WarcBytes {
             s"Content-Length $blockLenL exceeds supported block size at offset $base")
           val blockLen = blockLenL.toInt
           val blockStart = headerEnd + 4
-          if (blockStart + blockLen + 4 <= len) {
-            val block = java.util.Arrays.copyOfRange(buf, blockStart, blockStart + blockLen)
+          if (blockStart + blockLen + 4 <= avail) {
+            val blockAt = pos + blockStart
+            val block = java.util.Arrays.copyOfRange(buf, blockAt, blockAt + blockLen)
             var t = 0
             while (t < 4) {
-              require(buf(blockStart + blockLen + t) == HeaderTerminator(t),
+              require(buf(blockAt + blockLen + t) == HeaderTerminator(t),
                 s"missing record terminator at offset ${base + blockStart + blockLen}")
               t += 1
             }
             ready += WarcRecord(base, file, version, fields, block)
             recordsParsed += 1
             val consumed = blockStart + blockLen + 4
-            System.arraycopy(buf, consumed, buf, 0, len - consumed)
-            len -= consumed
+            pos += consumed
             base += consumed
             progress = true
           }
           // else: need more input for the block
         }
       }
+      if (pos == len) { pos = 0; len = 0 }
     }
   }
 

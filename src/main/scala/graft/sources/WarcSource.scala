@@ -231,10 +231,8 @@ object WarcSource {
     records.rdd.mapPartitionsWithIndex { (pid, it) =>
       if (!it.hasNext) Iterator.empty
       else {
-        // executor-side Configuration: picks up the cluster's fs.* settings
-        // from the classpath (local defaults in-sandbox)
         val path = new org.apache.hadoop.fs.Path(dir, f"part-$pid%05d$ext")
-        val fs = path.getFileSystem(new org.apache.hadoop.conf.Configuration())
+        val fs = path.getFileSystem(WarcSplit.executorConf)
         val out = fs.create(path, true)
         // one compress context per PARTITION, one frame per record
         val zctx =

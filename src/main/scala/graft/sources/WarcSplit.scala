@@ -183,13 +183,15 @@ object WarcSplit {
       // one Inflater / zstd context (dictionary digested once) for the
       // whole range: per-member native init/free dominated small members
       private val scratch = new WarcBytes.DecodeScratch(dict)
+      // one framer for the range too, reset per member (and per retry)
+      private val parser = new WarcBytes.RecordParser(file)
 
       private def decodeMemberAt(offset: Long): Unit = {
         var window = (bufStart + buf.length - offset).toInt
         var done = false
         while (!done) {
           val rel = (offset - bufStart).toInt
-          val parser = new WarcBytes.RecordParser(file)
+          parser.reset()
           try {
             // the LEADING dictionary frame sits before contentStart, so
             // no task decodes through it; later skippables are skipped
@@ -303,6 +305,15 @@ object WarcSplit {
     }
   }
 
+  /** The executor side's Hadoop conf: the cluster's fs.* settings from
+    * the classpath (local defaults when none are configured), built once
+    * per JVM. Building one parses the default XML resources, which a
+    * per-task `new Configuration()` paid again on every split. Tasks
+    * only read it, so every executor-side reader and writer shares it.
+    */
+  private[graft] lazy val executorConf: org.apache.hadoop.conf.Configuration =
+    new org.apache.hadoop.conf.Configuration()
+
   private def runSplits(spark: SparkSession, splits: Seq[Split],
                         maxRecordBytes: Int): Dataset[WarcRecord] = {
     import spark.implicits._
@@ -319,10 +330,8 @@ object WarcSplit {
     val rdd = spark.sparkContext
       .parallelize(bare, math.max(1, bare.size))
       .flatMap { s =>
-        // executor-side Configuration, like WarcSource.write: picks up
-        // the cluster's fs.* settings from the classpath
         val p = new org.apache.hadoop.fs.Path(s.file)
-        val efs = p.getFileSystem(new org.apache.hadoop.conf.Configuration())
+        val efs = p.getFileSystem(executorConf)
         decodeRange(rangeReader(efs, p), s.fileLen, s.start, s.end, s.file,
           maxRecordBytes, s.format, dictBc.value.get(s.file), s.contentStart)
       }

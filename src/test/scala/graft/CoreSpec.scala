@@ -187,4 +187,39 @@ class HeaderSerdeSpec extends AnyFunSuite {
     val folded = "WARC/1.1\r\nA: one\r\n\ttwo\r\n\r\n".getBytes("UTF-8")
     assert(HeaderSerde.parse(folded).get._2 == Seq(Field("A", "one two")))
   }
+
+  private def parseText(text: String) = HeaderSerde.parse(text.getBytes("UTF-8"))
+
+  test("a non-ASCII UTF-8 value round-trips") {
+    val fields = Seq(Field("WARC-Target-URI", "http://example.com/ünïcödé/日本"))
+    assert(HeaderSerde.parse(HeaderSerde.serialize("WARC/1.1", fields))
+      .contains(("WARC/1.1", fields)))
+  }
+
+  test("malformed UTF-8 is rejected, a literal U+FFFD is accepted") {
+    val head = "WARC/1.1\r\nA: ".getBytes("UTF-8")
+    val tail = "\r\n\r\n".getBytes("UTF-8")
+    Seq(Array(0xff.toByte), Array(0xc3.toByte), Array(0xe6.toByte, 0x97.toByte))
+      .foreach(bad => assert(HeaderSerde.parse(head ++ bad ++ tail).isEmpty))
+    assert(parseText("WARC/1.1\r\nA: x\uFFFDy\r\n\r\n").get._2 ==
+      Seq(Field("A", "x\uFFFDy")))
+  }
+
+  test("LF-only and multi-whitespace folds each become one space") {
+    assert(parseText("WARC/1.1\r\nA: one\n two\r\n\r\n").get._2 ==
+      Seq(Field("A", "one two")))
+    assert(parseText("WARC/1.1\r\nA: one\r\n \t \ttwo\r\nB: b\r\n\r\n").get._2 ==
+      Seq(Field("A", "one two"), Field("B", "b")))
+  }
+
+  test("a bare LF not followed by SP/HT stays in the value") {
+    assert(parseText("WARC/1.1\r\nA: one\ntwo\r\n\r\n").get._2 ==
+      Seq(Field("A", "one\ntwo")))
+  }
+
+  test("a field line without ':' and a non-WARC first line are rejected") {
+    assert(parseText("WARC/1.1\r\nA: a\r\nno colon\r\n\r\n").isEmpty)
+    assert(parseText("HTTP/1.1\r\nA: a\r\n\r\n").isEmpty)
+    assert(parseText("WARC/1.1").isEmpty)
+  }
 }

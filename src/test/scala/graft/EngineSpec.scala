@@ -679,6 +679,25 @@ class VerifyOpSpec extends AnyFunSuite {
     assert(p.contains(("<o:len>", "mismatched_segment_length")))
     assert(!p.exists(_._1 == "<o:good>"))
   }
+
+  test("missing references and segment problems leave nothing cached") {
+    def rec(pos: Long, id: String, extra: (String, String)*) =
+      (pos, "f", "WARC/1.1", (Seq("WARC-Record-ID" -> id, "WARC-Type" -> "response",
+        "Content-Length" -> "1") ++ extra).map { case (n, v) => Field(n, v) })
+    val df = Seq(
+      rec(1, "<urn:a>"),
+      rec(2, "<urn:b>", "WARC-Concurrent-To" -> "<urn:a>", "WARC-Refers-To" -> "<urn:gone>"),
+      rec(3, "<urn:c>", "WARC-Segment-Number" -> "2", "WARC-Segment-Origin-ID" -> "<o:x>")
+    ).toDF("position", "file", "version", "fields")
+    spark.catalog.clearCache()
+    val missing = VerifyOp.missingReferences(df).collect()
+      .map(r => (r.getLong(0), r.getString(1), r.getString(3))).toSet
+    val segments = VerifyOp.segmentProblems(df).collect()
+      .map(r => (r.getString(0), r.getString(1))).toSet
+    assert(missing == Set((2L, "<urn:b>", "WARC-Refers-To -> <urn:gone>")))
+    assert(segments == Set(("<o:x>", "missing_segment")))
+    assert(spark.sharedState.cacheManager.isEmpty)
+  }
 }
 
 class SynthAndMultimodalSpec extends AnyFunSuite {
