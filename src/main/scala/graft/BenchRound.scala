@@ -77,24 +77,6 @@ object BenchRound {
         "(url STRING, priority_band INT, host STRING) USING parquet " +
         s"CLUSTERED BY (host) INTO $parts BUCKETS LOCATION '$p'")
     }
-    // hot-host set from "write-time lineage metrics": computed ONCE per
-    // crawl (= per child JVM) over the frontier table, like the robots
-    // broadcast — rounds then skip the per-round count job
-    // (Scheduler.hotHosts doc: a write-time superset stays correct until
-    // the next frontier write, and here the table never changes). In the
-    // real loop these hosts come from partitionMetrics persisted by the
-    // frontier writer.
-    // lazy: materialized inside the FIRST timed round (which min-of-rounds
-    // discards anyway) instead of delaying READY — at c1 this scan costs
-    // ~10 s that used to sit on the readiness critical path
-    lazy val knownHot: Option[Array[String]] =
-      (bucketedPath, frontierPath) match {
-        case (Some(_), _) =>
-          Some(Scheduler.hotHosts(spark.table("graft_bench_frontier")))
-        case (None, Some(p)) =>
-          Some(Scheduler.hotHosts(spark.read.parquet(p)))
-        case _ => None
-      }
     def round(rows: Int): Long = {
       val frontier = (bucketedPath, frontierPath) match {
         case (Some(_), _) if rows == n => spark.table("graft_bench_frontier")
@@ -110,8 +92,7 @@ object BenchRound {
       }
       val seen = Scheduler.loadSeen(spark, "/tmp/graft-bench-none")
       Scheduler.runRoundCached(frontier, seen, robotsBc,
-        frontierHostClustered = bucketedPath.isDefined && rows == n,
-        knownHotHosts = if (rows == n) knownHot else None).count()
+        frontierHostClustered = bucketedPath.isDefined && rows == n).count()
     }
 
     // Small synth warm-up (250k rows) in EVERY mode: enough rows to JIT

@@ -201,6 +201,26 @@ object SparkEntry {
     finalF.getAbsolutePath
   }
 
+  /** One resource record of the WARC gate fixtures, a pure function of
+    * its id `k`: a block of `baseLen + (k mod 7) × lenStep` Rng bytes
+    * seeded by `k` and `salt`, the record id `<urn:$urn:$k>`, and the
+    * sha1 block digest.
+    */
+  private def fixtureRecord(k: Long, baseLen: Int, lenStep: Int, salt: Long,
+                            urn: String, fname: String): graft.core.WarcRecord = {
+    val len = baseLen + (k % 7L).toInt * lenStep
+    val bytes = new Array[Byte](len)
+    val rng = new Synth.Rng(k * 0x9e3779b9L + salt)
+    var j = 0
+    while (j < len) { bytes(j) = rng.nextLong().toByte; j += 1 }
+    graft.core.WarcRecord(0L, fname, "WARC/1.1", Seq(
+      Field("WARC-Record-ID", s"<urn:$urn:$k>"),
+      Field("WARC-Type", "resource"),
+      Field("WARC-Block-Digest", Digests.formatDigest("sha1",
+        Digests.compute("sha1", bytes).get)),
+      Field("Content-Length", len.toString)), bytes)
+  }
+
   def splitGateFixture(s: SparkSession, dir: String, codec: String): String = {
     import s.implicits._
     val gz = codec == "gzip"
@@ -210,19 +230,8 @@ object SparkEntry {
       val (baseLen, lenStep, seedSalt, urn) =
         if (gz) (1600, 137, 7L, "split") else (600, 53, 11L, "zsplit")
       val recs = t(s, dir, "orders").select(col("o_orderkey"))
-        .repartition(s.sparkContext.defaultParallelism).as[Long].map { k =>
-          val len = baseLen + (k % 7L).toInt * lenStep
-          val bytes = new Array[Byte](len)
-          val rng = new Synth.Rng(k * 0x9e3779b9L + seedSalt)
-          var j = 0
-          while (j < len) { bytes(j) = rng.nextLong().toByte; j += 1 }
-          graft.core.WarcRecord(0L, fname, "WARC/1.1", Seq(
-            Field("WARC-Record-ID", s"<urn:$urn:$k>"),
-            Field("WARC-Type", "resource"),
-            Field("WARC-Block-Digest", Digests.formatDigest("sha1",
-              Digests.compute("sha1", bytes).get)),
-            Field("Content-Length", len.toString)), bytes)
-        }
+        .repartition(s.sparkContext.defaultParallelism).as[Long]
+        .map(k => fixtureRecord(k, baseLen, lenStep, seedSalt, urn, fname))
       graft.sources.WarcSource.writeSingleFile(recs, s"$bdir/$fname", codec)
     }
     s"$tmp/$fname"
@@ -240,29 +249,16 @@ object SparkEntry {
     import s.implicits._
     buildOnceDir("/tmp/graft-warc-fleet-gate", fixtureKey(s, dir, 1), fixtureSweepPrefix(dir)) { bdir =>
       val tmp = bdir.getAbsolutePath
-      def mkRec(k: Long, baseLen: Int, lenStep: Int, fname: String): graft.core.WarcRecord = {
-        val len = baseLen + (k % 7L).toInt * lenStep
-        val bytes = new Array[Byte](len)
-        val rng = new Synth.Rng(k * 0x9e3779b9L + 13L)
-        var j = 0
-        while (j < len) { bytes(j) = rng.nextLong().toByte; j += 1 }
-        graft.core.WarcRecord(0L, fname, "WARC/1.1", Seq(
-          Field("WARC-Record-ID", s"<urn:fleet:$k>"),
-          Field("WARC-Type", "resource"),
-          Field("WARC-Block-Digest", Digests.formatDigest("sha1",
-            Digests.compute("sha1", bytes).get)),
-          Field("Content-Length", len.toString)), bytes)
-      }
       val recsA = t(s, dir, "orders").select(col("o_orderkey"))
         .where(pmod(col("o_orderkey"), lit(5)) === 0)
         .repartition(s.sparkContext.defaultParallelism).as[Long]
-        .map(k => mkRec(k, 700, 31, "a.warc.gz"))
+        .map(k => fixtureRecord(k, 700, 31, 13L, "fleet", "a.warc.gz"))
       graft.sources.WarcSource.writeSingleFile(recsA, s"$tmp/a.warc.gz", "gzip")
       val idsB = t(s, dir, "orders").select(col("o_orderkey"))
         .where(pmod(col("o_orderkey"), lit(50)) === 1)
         .as[Long].collect().sorted
       val dict = ("graft fleet dictionary material " * 64).getBytes("UTF-8")
-      val recsB = idsB.toSeq.map(k => mkRec(k, 500, 29, "b.warc.zst"))
+      val recsB = idsB.toSeq.map(k => fixtureRecord(k, 500, 29, 13L, "fleet", "b.warc.zst"))
       java.nio.file.Files.write(
         java.nio.file.Paths.get(s"$tmp/b.warc.zst"),
         graft.sources.WarcBytes.encodeZstd(recsB, dict = Some(dict),
@@ -282,19 +278,7 @@ object SparkEntry {
       def recs(urn: String, baseLen: Int, step: Int, fname: String) =
         t(s, dir, "orders").select(col("o_orderkey"))
           .where(pmod(col("o_orderkey"), lit(29)) === 0)
-          .repartition(8).as[Long].map { k =>
-            val len = baseLen + (k % 7L).toInt * step
-            val bytes = new Array[Byte](len)
-            val rng = new Synth.Rng(k * 0x9e3779b9L + 17L)
-            var j = 0
-            while (j < len) { bytes(j) = rng.nextLong().toByte; j += 1 }
-            graft.core.WarcRecord(0L, fname, "WARC/1.1", Seq(
-              Field("WARC-Record-ID", s"<urn:$urn:$k>"),
-              Field("WARC-Type", "resource"),
-              Field("WARC-Block-Digest", Digests.formatDigest("sha1",
-                Digests.compute("sha1", bytes).get)),
-              Field("Content-Length", len.toString)), bytes)
-          }
+          .repartition(8).as[Long].map(k => fixtureRecord(k, baseLen, step, 17L, urn, fname))
       graft.sources.WarcSource.writeSingleFile(
         recs("zz", 900, 41, "w.warc.zz"), s"$bdir/w.warc.zz", "deflate")
       graft.sources.WarcSource.writeSingleFile(
@@ -1257,8 +1241,8 @@ object SparkEntry {
     }),
 
     // BLAKE3 and XXH3 through the FULL verify path (parse → compute →
-    // compare): declared digests are from-spec BLAKE3 ([[graft.core
-    // .Blake3]], vector-pinned in Blake3Spec) or, on the %13 rows,
+    // compare): declared digests are BLAKE3 (commons-codec,
+    // vector-pinned in Blake3Spec) or, on the %13 rows,
     // from-spec XXH3-64 ([[graft.core.Xxh3]], vector-pinned in
     // Xxh3Spec); injections drive every branch — %9 corrupted payload
     // (mismatch), %11 unparsable text (UnknownDigest). The oracle

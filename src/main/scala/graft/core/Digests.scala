@@ -3,6 +3,7 @@ package graft.core
 import java.nio.charset.StandardCharsets
 import java.security.MessageDigest
 import java.util.zip.{CRC32, CRC32C}
+import org.apache.commons.codec.digest.Blake3
 
 /** Digest engine (reference src/digest.rs): text parse/format with the
   * reference's base32/hex auto-detect, label compatibility aliases, and
@@ -10,13 +11,15 @@ import java.util.zip.{CRC32, CRC32C}
   * digest.rs:130-147).
   *
   * Computation covers the JVM-native algorithms (crc32, crc32c, md5,
-  * sha1, sha256, sha512, sha3-256, sha3-512) plus pure-Scala RFC 7693
-  * BLAKE2b-512/BLAKE2s-256 ([[Blake2]]), from-spec BLAKE3 ([[Blake3]]),
-  * and from-spec XXH3-64 ([[Xxh3]], validated against eleven published
-  * sanity vectors covering every length-class code path — see
-  * Xxh3Spec) — all 12 of the reference's algorithms. xxhash64 remains
-  * the engine's seen-key hash (Spark built-in, codegen'd; the north
-  * rule keys the URL-seen set on xxHash64).
+  * sha1, sha256, sha512, sha3-256, sha3-512), BLAKE3 from commons-codec
+  * (on Spark's classpath; the reference likewise takes every digest
+  * from a library crate, digest.rs:191-250), plus pure-Scala RFC 7693
+  * BLAKE2b-512/BLAKE2s-256 ([[Blake2]]) and from-spec XXH3-64 ([[Xxh3]],
+  * validated against eleven published sanity vectors covering every
+  * length-class code path — see Xxh3Spec), which no unshaded library on
+  * the classpath provides — all 12 of the reference's algorithms.
+  * xxhash64 remains the engine's seen-key hash (Spark built-in,
+  * codegen'd; the north rule keys the URL-seen set on xxHash64).
   */
 object Digests {
 

@@ -81,13 +81,6 @@ object FieldOps {
   private def substring_rel(v: Column): Column =
     v.substr(lit(2), length(v) - 2)
 
-  /** Basic URI validity: scheme ':' rest (java.net.URI-level check is done
-    * in the UDF variant; this column version covers the verify checks'
-    * parse-must-succeed gate for synthetic inputs).
-    */
-  def urlParses(v: Column): Column =
-    v.rlike("^[A-Za-z][A-Za-z0-9+.-]*:\\S*$")
-
   private val Ip4Pat = java.util.regex.Pattern.compile(
     "^((25[0-5]|2[0-4][0-9]|1?[0-9]?[0-9])\\.){3}(25[0-5]|2[0-4][0-9]|1?[0-9]?[0-9])$")
 
@@ -200,10 +193,4 @@ object FieldOps {
   /** Field-name validity: HTTP tchar set (src/parse/fields.rs:36-50). */
   def validFieldName(v: Column): Column =
     v.rlike("^[!#$%&'*+.^_`|~0-9A-Za-z-]+$")
-
-  /** Field-value validity: visible chars + space/tab + obs-text
-    * (src/parse/fields.rs:52-79).
-    */
-  def validFieldValue(v: Column): Column =
-    !v.rlike("[\\x00-\\x08\\x0A-\\x1F\\x7F]")
 }

@@ -22,120 +22,9 @@ import org.apache.spark.sql.functions._
   */
 object Canonical {
 
-  // Single-pass scalar implementation: the pure-Column formulation ran ~10
-  // regex passes per row (each rescanning the URL) and dominated the
-  // frontier round's narrow stage; this one pass is ~6× cheaper per row
-  // and bit-identical on the oracle-checked contract (q24–q27,
-  // CanonicalSpec). Kept as plain functions so batch and streaming share
-  // the exact same bytes-in/bytes-out behavior.
-
-  /** Scala-side canonicalization (the engine contract above).
-    *
-    * Fast path: one allocation-free scan proves the URL is ALREADY
-    * canonical and returns the input string itself. Most real crawl
-    * URLs (and all synthetic bench URLs) are already canonical, and the
-    * slow path allocates ~8 intermediate substrings per row — at 8
-    * threads over 10^7 rows that allocation rate was a measured
-    * memory-bandwidth/GC pressure source in the frontier round (BENCH.md:
-    * slow-ambient windows inflated the 8-thread side ~19%). The scan is
-    * CONSERVATIVE: any case it cannot cheaply prove canonical (non-ASCII
-    * scheme/host, IPv6-ish colons, userinfo, unsorted query) falls
-    * through to the slow path, so the output contract is bit-identical
-    * (property-tested in CanonicalSpec: fastpath ⇒ slow(url) == url).
-    */
-  def canonicalize(url: String): String = {
-    if (url == null) return null
-    if (isCanonical(url)) return url
-    canonicalizeSlow(url)
-  }
-
-  /** True only if [[canonicalizeSlow]] would return `url` unchanged
-    * (false negatives allowed, false positives not).
-    */
-  private[graft] def isCanonical(url: String): Boolean = {
-    val len = url.length
-    var i = 0
-    // no fragment anywhere
-    while (i < len) { if (url.charAt(i) == '#') return false; i += 1 }
-    // scheme: chars before the FIRST ':' must be [a-z0-9+.-] (ASCII
-    // lowercase ⇒ toLowerCase is identity); no ':' at all ⇒ passthrough
-    val schemeEnd = url.indexOf(':')
-    if (schemeEnd < 0) return true
-    i = 0
-    while (i < schemeEnd) {
-      val c = url.charAt(i)
-      val ok = (c >= 'a' && c <= 'z') || (c >= '0' && c <= '9') ||
-        c == '+' || c == '.' || c == '-'
-      if (!ok) return false
-      i += 1
-    }
-    // scheme-only rewrite when not followed by "://": lowercase scheme
-    // already verified ⇒ unchanged
-    if (!url.regionMatches(schemeEnd, "://", 0, 3)) return true
-    val authStart = schemeEnd + 3
-    var authEnd = authStart
-    var lastColon = -1
-    while (authEnd < len && url.charAt(authEnd) != '/' && url.charAt(authEnd) != '?') {
-      val c = url.charAt(authEnd)
-      if (c == '@') return false // userinfo would be stripped
-      if (c == ':') lastColon = authEnd
-      if ((c >= 'A' && c <= 'Z') || c >= 128) return false // host lowercasing
-      authEnd += 1
-    }
-    // empty path would become "/"
-    if (authEnd >= len || url.charAt(authEnd) != '/') return false
-    val hostEnd = if (lastColon >= 0) lastColon else authEnd
-    // trailing host dot would be stripped
-    if (hostEnd > authStart && url.charAt(hostEnd - 1) == '.') return false
-    if (lastColon >= 0) {
-      // port: non-empty digits (bare ':' is dropped; non-digits merge the
-      // colon into the host — slow path decides), and not the default
-      if (lastColon + 1 >= authEnd) return false
-      i = lastColon + 1
-      while (i < authEnd) {
-        val c = url.charAt(i)
-        if (c < '0' || c > '9') return false
-        i += 1
-      }
-      val portLen = authEnd - lastColon - 1
-      if (portLen == 2 && url.regionMatches(lastColon + 1, "80", 0, 2) &&
-          schemeEnd == 4 && url.regionMatches(0, "http", 0, 4)) return false
-      if (portLen == 3 && url.regionMatches(lastColon + 1, "443", 0, 3) &&
-          schemeEnd == 5 && url.regionMatches(0, "https", 0, 5)) return false
-    }
-    // query: '&'-separated params must already be in sorted order
-    // (String.compareTo, matching the slow path's Array[String].sorted)
-    val qIdx = url.indexOf('?', authEnd)
-    if (qIdx < 0) return true
-    // a bare trailing '?' (empty query) is dropped by the slow path
-    if (qIdx == len - 1) return false
-    var prevStart = qIdx + 1
-    var prevEnd = prevStart
-    while (prevEnd < len && url.charAt(prevEnd) != '&') prevEnd += 1
-    while (prevEnd < len) { // prevEnd sits on '&'
-      val curStart = prevEnd + 1
-      var curEnd = curStart
-      while (curEnd < len && url.charAt(curEnd) != '&') curEnd += 1
-      // compare [prevStart,prevEnd) <= [curStart,curEnd) in code-unit order
-      val la = prevEnd - prevStart
-      val lb = curEnd - curStart
-      var k = 0
-      val m = math.min(la, lb)
-      var cmp = 0
-      while (k < m && cmp == 0) {
-        cmp = url.charAt(prevStart + k) - url.charAt(curStart + k)
-        k += 1
-      }
-      if (cmp == 0) cmp = la - lb
-      if (cmp > 0) return false
-      prevStart = curStart
-      prevEnd = curEnd
-    }
-    true
-  }
-
   /** The slow (allocating) canonicalizer — the contract's reference
-    * implementation; the fast path above must agree with it exactly.
+    * implementation; the byte fast path in [[canonicalizeUtf8]] must
+    * agree with it exactly (property-tested in PropertySpec).
     */
   private[graft] def canonicalizeSlow(url: String): String = {
     val hashIdx = url.indexOf('#')
@@ -216,15 +105,21 @@ object Canonical {
 
   private val hostUdf = udf((u: String) => hostOfString(u))
 
-  /** Zero-copy canonicalizer over Spark's native string representation
-    * (the [[graft.functions.CanonicalUrlExpr]] codegen target): returns
-    * the INPUT `UTF8String` object unchanged when the byte scan proves
-    * it already canonical — no UTF8→String→UTF8 round trip, no
-    * allocation — else materializes through the String slow path. Any
-    * non-ASCII byte routes to the slow path, so the byte-wise ordering
-    * checks can never diverge from the String contract (UTF-8 byte
-    * order ≠ UTF-16 code-unit order beyond ASCII; for pure-ASCII input
-    * they coincide and [[isCanonical]]'s logic ports byte-for-byte).
+  /** The one fast path: a zero-copy canonicalizer over Spark's native
+    * string representation (the [[graft.functions.CanonicalUrlExpr]]
+    * codegen target). One allocation-free byte scan proves the URL is
+    * ALREADY canonical and returns the INPUT `UTF8String` object itself
+    * — no UTF8→String→UTF8 round trip, no allocation. Most real crawl
+    * URLs (and all synthetic bench URLs) are already canonical, and the
+    * slow path allocates ~8 intermediate substrings per row — at 8
+    * threads over 10^7 rows that allocation rate was a measured
+    * memory-bandwidth/GC pressure source in the frontier round
+    * (BENCH.md). The scan is CONSERVATIVE: any case it cannot cheaply
+    * prove canonical (non-ASCII bytes, IPv6-ish colons, userinfo,
+    * unsorted query) materializes through [[canonicalizeSlow]], so the
+    * output is bit-identical to the reference. Any non-ASCII byte routes
+    * to the slow path because UTF-8 byte order ≠ UTF-16 code-unit order
+    * beyond ASCII, and the slow path sorts query params as Strings.
     */
   def canonicalizeUtf8(u: org.apache.spark.unsafe.types.UTF8String)
       : org.apache.spark.unsafe.types.UTF8String = {
@@ -234,7 +129,8 @@ object Canonical {
       canonicalizeSlow(u.toString))
   }
 
-  /** Byte-level [[isCanonical]] for pure-ASCII input; any high byte →
+  /** True only if [[canonicalizeSlow]] would return `u` unchanged
+    * (false negatives allowed, false positives not); any high byte →
     * false (conservative, slow path decides).
     */
   private[graft] def isCanonicalAscii(

@@ -114,17 +114,20 @@ object Scheduler {
     * (priority_band, canonical_url), row-identical to
     * [[Politeness.capPerHost]]-then-schedule.
     *
-    * `knownHotHosts` and `hotSpreadRows` are accepted and ignored;
-    * callers still pass them by name. They routed hosts into a salted
-    * spread leg that only guarded against one host's sort straggling on
-    * one reducer. Without it, a host that is a large share of an
-    * unclustered frontier sorts in one task. Measured on a 4M-row
-    * unclustered stream plus one host (local[4], AQE off, 8 shuffle
-    * partitions, median of 6; BENCH.md): the round's wall fell
+    * The round has one leg. A salted spread leg used to route hot
+    * hosts away from one reducer; without it, a host that is a large
+    * share of an unclustered frontier sorts in one task. Measured on a
+    * 4M-row unclustered stream plus one host (local[4], AQE off, 8
+    * shuffle partitions, median of 6; BENCH.md): the round's wall fell
     * (1.2M-row host 17.2 s → 10.8 s, 4M-row host 23.9 s → 12.4 s), but
     * the schedule stage's slowest task grew with the host — for the
     * 4M-row host, half the frontier, 3.4 s → 10.2 s, 3.2× the stage's
     * median task. That straggler is the cost of the single leg.
+    * [[runRoundCached]] still accepts its old `hotSpreadRows` and ignores
+    * it, because the steady-state benchmark (`perfbench`) passes it by
+    * name; `Politeness.schedule` and `capPerHost` stay for the same
+    * benchmark until its per-layer trace times this round instead of
+    * re-implementing it.
     *
     * `frontierHostClustered`: set true when `rawFrontier` scans a table
     * whose STORAGE LAYOUT already clusters rows by host — a Spark
@@ -143,9 +146,7 @@ object Scheduler {
                perHostBudget: Int = 100, numBloomBuckets: Int = 64,
                maxPerHostPerRound: Int = -1,
                frontierHostClustered: Boolean = false,
-               knownHotHosts: Option[Array[String]] = None,
-               seenHostClustered: Boolean = false,
-               hotSpreadRows: Long = -1): DataFrame =
+               seenHostClustered: Boolean = false): DataFrame =
     runRoundImpl(rawFrontier, seenKeys, Politeness.applyRobots(_, robots),
       perHostBudget, numBloomBuckets, maxPerHostPerRound, frontierHostClustered,
       seenHostClustered)
@@ -161,7 +162,6 @@ object Scheduler {
                      perHostBudget: Int = 100, numBloomBuckets: Int = 64,
                      maxPerHostPerRound: Int = -1,
                      frontierHostClustered: Boolean = false,
-                     knownHotHosts: Option[Array[String]] = None,
                      seenHostClustered: Boolean = false,
                      hotSpreadRows: Long = -1): DataFrame =
     runRoundImpl(rawFrontier, seenKeys, Politeness.applyRobotsMap(_, robotsBc),
@@ -299,22 +299,6 @@ object Scheduler {
         SeenSet.sizedBloomFilter(seenKeys, nSeen, "url_key", numBloomBuckets)(keyed)
       }
     }
-
-  /** Hosts with more than `hotSpreadRows` raw rows — by default
-    * max(64 × cap, 1M) — from one salted count ([[saltedHostCounts]]).
-    * This is the write-time lineage metric a frontier writer can persist
-    * next to [[partitionMetrics]]; rounds no longer read it (`runRound*`
-    * ignores `knownHotHosts`).
-    */
-  def hotHosts(rawFrontier: DataFrame, perHostBudget: Int = 100,
-               maxPerHostPerRound: Int = -1,
-               hotSpreadRows: Long = -1): Array[String] = {
-    val threshold =
-      if (hotSpreadRows >= 0) hotSpreadRows
-      else math.max(64L * roundCap(perHostBudget, maxPerHostPerRound), 1L << 20)
-    saltedHostCounts(withHost(rawFrontier)).where(col("n_urls") > threshold)
-      .collect().map(_.getString(0))
-  }
 
   /** Per-partition lineage + fetch metrics (north rule observability):
     * one row per (partition, host) with URL counts and schedule span.

@@ -157,39 +157,28 @@ object ExtractOp {
       .sortWithinPartitions(col("position"))
       .as[(Long, Seq[String], Array[Byte], Boolean, Long)]
     rows.mapPartitions { it =>
-      val conf = graft.sources.WarcSplit.executorConf
       val base = new org.apache.hadoop.fs.Path(dir)
       val scheme = base.toUri.getScheme
-      // Local trees skip two per-file pathologies of the stock
-      // LocalFileSystem (thread-dumped on a 150k-file write, which took
-      // minutes):
+      // Local trees write through java.io, skipping the per-file
+      // pathologies of the stock LocalFileSystem (thread-dumped on a
+      // 150k-file write, which took minutes):
       //  - every create() FORKS A chmod SHELL (RawLocalFileSystem
       //    .setPermission falls back to Shell.execCommand when the
-      //    libhadoop native lib is absent, as in this container);
+      //    libhadoop native lib is absent);
       //  - the checksummed wrapper writes a .crc sidecar per file,
       //    doubling creates (payload integrity is the digest columns'
-      //    job, not the sink's).
+      //    job, not the sink's);
+      //  - RawLocalFileSystem.create() stats the parent and re-runs
+      //    mkdirs on EVERY create and wraps the stream in
+      //    FSDataOutputStream bookkeeping — measured ~3x the cost of the
+      //    three raw syscalls (open, write, close) the write needs.
       // Non-local schemes keep the stock FileSystem — the sink stays
       // HDFS/S3-swappable.
       val isRawLocal = scheme == null || scheme == "file"
-      // local trees additionally bypass the FileSystem WRAPPER per file:
-      // RawLocalFileSystem.create() stats the parent and re-runs mkdirs
-      // on EVERY create and wraps the stream in FSDataOutputStream
-      // bookkeeping — measured ~3x the cost of the three raw syscalls
-      // (open, write, close) the write actually needs. java.io hits the
-      // syscalls directly; non-local schemes keep the stock FileSystem
-      // so the sink stays HDFS/S3-swappable.
       val localBase: java.io.File =
         if (isRawLocal) new java.io.File(base.toUri.getPath) else null
       val fs: org.apache.hadoop.fs.FileSystem =
-        if (isRawLocal) {
-          val raw = new org.apache.hadoop.fs.RawLocalFileSystem() {
-            override def setPermission(p: org.apache.hadoop.fs.Path,
-                permission: org.apache.hadoop.fs.permission.FsPermission): Unit = ()
-          }
-          raw.initialize(java.net.URI.create("file:///"), conf)
-          raw
-        } else base.getFileSystem(conf)
+        if (isRawLocal) null else base.getFileSystem(graft.sources.WarcSplit.executorConf)
       // per-directory: did it exist BEFORE this task touched it? Only a
       // pre-existing directory can hold stale .crc sidecars from an
       // earlier checksummed write — fresh directories skip the per-file

@@ -150,18 +150,6 @@ object VerifyOp {
     out.result()
   }
 
-  private val checkFieldsUdf = udf { (fields: Seq[Row]) =>
-    checkFields(fields.map(r => Field(r.getString(0), r.getString(1))))
-      .map { case (k, d) => ProblemKD(k, d) }
-  }
-
-  /** All per-record checks over a records DF(position, fields, ...).
-    * Returns the input plus `problems: array<struct(kind, detail)>`.
-    * Check selection mirrors `Check::all()` (verify.rs:52-75).
-    */
-  def checkRecords(records: DataFrame): DataFrame =
-    records.withColumn("problems", checkFieldsUdf(col("fields")))
-
   /** record_id + problems in ONE fields traversal: the separate
     * `fieldGet(record_id)` Column was an interpreted higher-order
     * function whose evaluation re-inlined the caller's whole `fields`

@@ -64,19 +64,6 @@ object Ann {
       when(element_at(emb, band * bits + i + 1) >= 0f, lit(1L << i)).otherwise(lit(0L)))
       .reduce(_ + _)
 
-  /** Embedding near-duplicate pairs with cosine >= threshold (milli-scaled
-    * floor compare for cross-engine determinism). Exact all-pairs — used
-    * at test scale and as the confirm step after LSH bucketing.
-    */
-  def cosineNearDupPairs(df: DataFrame, cosMilliThreshold: Long): DataFrame = {
-    val a = df.select(col("vec_id").as("id_a"), col("embedding").as("e_a"))
-    val b = df.select(col("vec_id").as("id_b"), col("embedding").as("e_b"))
-    a.join(b, col("id_a") < col("id_b"))
-      .select(col("id_a"), col("id_b"),
-        floor(lit(1000.0) * cosine(col("e_a"), col("e_b"))).cast("long").as("cos_milli"))
-      .where(col("cos_milli") >= cosMilliThreshold)
-  }
-
   /** IVF (inverted-file) coarse-quantized ANN — the list-pruned scale
     * path beside the LSH one. Corpus vectors are assigned once to their
     * highest-cosine centroid's list; a query scores only the `nProbe`

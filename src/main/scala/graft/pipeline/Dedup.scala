@@ -56,19 +56,6 @@ object Dedup {
 
   private val HexDigits = "0123456789abcdef".toCharArray
 
-  private[pipeline] def md5Hex(md: java.security.MessageDigest, s: String): String = {
-    md.reset()
-    val d = md.digest(s.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    val out = new Array[Char](32)
-    var i = 0
-    while (i < 16) {
-      out(i * 2) = HexDigits((d(i) >> 4) & 0xf)
-      out(i * 2 + 1) = HexDigits(d(i) & 0xf)
-      i += 1
-    }
-    new String(out)
-  }
-
   /** Fixed-width signature row (salts beyond `n` stay null). */
   final case class MinhashSig4(mh0: String, mh1: String, mh2: String, mh3: String)
 

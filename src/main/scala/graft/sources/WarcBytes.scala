@@ -482,20 +482,31 @@ object WarcBytes {
     def end(): Unit = `def`.end()
   }
 
-  /** Inflate ALL concatenated gzip members, one [[inflateMember]] step
+  /** Inflate ALL concatenated gzip members, one [[decodeMember]] step
     * each over one reused Inflater (GZIPInputStream can desync at member
     * boundaries because its internal buffering overshoots).
     */
-  def gunzipConcatenated(bytes: Array[Byte]): Array[Byte] = {
+  def gunzipConcatenated(bytes: Array[Byte]): Array[Byte] =
+    decodeConcatenated(bytes, "gzip")
+
+  /** Decompress ALL zstd frames after the optional dictionary frame, one
+    * [[decodeMember]] step each over one reused context; skippable
+    * frames decode to nothing, and a truncated frame throws.
+    */
+  def unzstdConcatenated(bytes: Array[Byte]): Array[Byte] =
+    decodeConcatenated(bytes, "zstd")
+
+  private def decodeConcatenated(bytes: Array[Byte], format: String): Array[Byte] = {
     val out = new ByteArrayOutputStream( // clamp: * 3 overflows Int past ~715 MiB input
       math.min(bytes.length.toLong * 3, (Int.MaxValue - 8).toLong).toInt) with ByteSink {
       def append(chunk: Array[Byte], off: Int, n: Int): Unit = write(chunk, off, n)
     }
-    val scratch = new DecodeScratch(None)
+    val (dict, start) = if (format == "zstd") zstdDictFrame(bytes) else (None, 0)
+    val scratch = new DecodeScratch(dict)
     try {
-      var pos = 0
-      while (pos < bytes.length) pos = inflateMember(bytes, pos, out, scratch)
-    } finally scratch.inf.end()
+      var pos = start
+      while (pos < bytes.length) pos = decodeMember(bytes, pos, format, out, dict, scratch)
+    } finally if (format == "zstd") scratch.zstd.close() else scratch.inf.end()
     out.toByteArray
   }
 
@@ -605,23 +616,6 @@ object WarcBytes {
         } else payload
       (Some(dict), (8 + len).toInt)
     } else (None, 0)
-  }
-
-  def unzstdConcatenated(bytes: Array[Byte]): Array[Byte] = {
-    import com.github.luben.zstd.ZstdInputStreamNoFinalizer
-    val (dict, pos) = zstdDictFrame(bytes)
-    val in = new ZstdInputStreamNoFinalizer(
-      new java.io.ByteArrayInputStream(bytes, pos, bytes.length - pos))
-    try {
-      in.setContinuous(true)
-      dict.foreach(in.setDict)
-      val out = new ByteArrayOutputStream( // clamp: * 3 overflows Int past ~715 MiB input
-      math.min(bytes.length.toLong * 3, (Int.MaxValue - 8).toLong).toInt)
-      val buf = new Array[Byte](65536)
-      var n = in.read(buf)
-      while (n >= 0) { out.write(buf, 0, n); n = in.read(buf) }
-      out.toByteArray
-    } finally in.close()
   }
 
   /** Skip a gzip member header starting AFTER the 2 magic bytes; returns

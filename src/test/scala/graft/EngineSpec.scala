@@ -162,20 +162,6 @@ class PolitenessSpec extends AnyFunSuite {
     } finally spark.conf.set("spark.sql.adaptive.enabled", aqeBefore)
   }
 
-  test("hotHosts names the host over the spread threshold") {
-    // skewed input: one 800-row host + many small hosts; the threshold is
-    // pinned (the default floors at 1M raw rows)
-    val raw = Synth.frontierSeed(spark, 2000, nHosts = 20).toDF()
-      .select($"url", $"priority_band")
-      .unionByName((1 to 800).toDF("i").select(
-        concat(lit("https://hot.example.test/u/"), $"i").as("url"),
-        lit(0).as("priority_band")))
-    // a stored host column and a derived one name the same host
-    for (frontier <- Seq(raw, raw.withColumn("host", Canonical.hostOf($"url"))))
-      assert(Scheduler.hotHosts(frontier, maxPerHostPerRound = 500,
-        hotSpreadRows = 500).contains("hot.example.test"))
-  }
-
   test("frontierHostClustered stays a performance contract when it LIES") {
     // the flag's doc promises: if the input is NOT actually clustered,
     // the output is unchanged (the fused scan declares its clustering on
@@ -518,20 +504,17 @@ class PolitenessSpec extends AnyFunSuite {
     val (raw, seen) = parquetFrontierAndSeen("graft-hot-plan", hotRows = 600)
     val robots = Synth.robots(spark, 30).toDF()
     withoutAqe {
-      // naming the hot host changes nothing: knownHotHosts is ignored
-      for (known <- Seq(None, Some(Array("hot.example.test")))) {
-        val plan = Scheduler.runRound(raw, seen, robots, maxPerHostPerRound = 200,
-          knownHotHosts = known).queryExecution.executedPlan
-        val scans = plan.collect {
-          case s: org.apache.spark.sql.execution.FileSourceScanExec => s
-        }
-        assert(scans.size == 1, s"frontier scans: ${scans.size}")
-        assert(plan.collect { case u: org.apache.spark.sql.execution.UnionExec => u }.isEmpty,
-          "the round plans a Union")
-        val ex = frontierExchanges(plan)
-        assert(ex.map(partitionedOn) == Seq(Seq("host")),
-          s"frontier exchanges: ${ex.map(partitionedOn)}")
+      val plan = Scheduler.runRound(raw, seen, robots, maxPerHostPerRound = 200)
+        .queryExecution.executedPlan
+      val scans = plan.collect {
+        case s: org.apache.spark.sql.execution.FileSourceScanExec => s
       }
+      assert(scans.size == 1, s"frontier scans: ${scans.size}")
+      assert(plan.collect { case u: org.apache.spark.sql.execution.UnionExec => u }.isEmpty,
+        "the round plans a Union")
+      val ex = frontierExchanges(plan)
+      assert(ex.map(partitionedOn) == Seq(Seq("host")),
+        s"frontier exchanges: ${ex.map(partitionedOn)}")
     }
   }
 

@@ -65,8 +65,16 @@ class WarcCodecSpec extends AnyFunSuite {
         assert(d.fields == r.fields)
         assert(d.bytes.sameElements(r.bytes))
       }
-      assert(WarcBytes.unzstdConcatenated(z).sameElements(WarcBytes.encodeRecords(records)),
-        s"variant $i")
+      val plain = WarcBytes.encodeRecords(records)
+      assert(WarcBytes.unzstdConcatenated(z).sameElements(plain), s"variant $i")
+      // a trailing skippable frame (magic 0x184D2A50, 3-byte payload)
+      // carries no content
+      val skippable = Array[Byte](0x50, 0x2a, 0x4d, 0x18, 3, 0, 0, 0, 1, 2, 3)
+      assert(WarcBytes.unzstdConcatenated(z ++ skippable).sameElements(plain),
+        s"variant $i + skippable frame")
+      // a last frame cut short is an error, not a silently shorter stream
+      val et = intercept[java.io.EOFException](WarcBytes.unzstdConcatenated(z.dropRight(3)))
+      assert(et.getMessage.contains("truncated/invalid zstd frame"), et.getMessage)
     }
   }
 
