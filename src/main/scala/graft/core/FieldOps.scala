@@ -1,10 +1,16 @@
 package graft.core
 
+import graft.functions.GraftFunctions.kernel
 import org.apache.spark.sql.Column
+import org.apache.spark.sql.catalyst.util.{ArrayData, CollationFactory, CollationSupport, GenericArrayData}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.internal.SQLConf
+import org.apache.spark.sql.types.{ArrayType, BooleanType, DataType, LongType, StringType}
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Column-level operations over the ordered, case-insensitive header
-  * multimap (`array<struct<name:string, value:string>>`).
+  * multimap (`array<struct<name:string, value:string>>`, the shape of
+  * `Seq[Field]`).
   *
   * Semantics follow the reference exactly:
   *   - `get` = FIRST case-insensitive match (src/fields.rs:111-120)
@@ -12,20 +18,25 @@ import org.apache.spark.sql.functions._
   *   - `contains` = case-insensitive existence (src/fields.rs:101-109)
   *   - missing field in a projection → empty string (src/app/list.rs:38-41)
   *
-  * Everything here is built from Catalyst higher-order functions
-  * (`filter`/`exists`/`transform`) so the whole lookup stays inside
-  * whole-stage codegen — no Scala UDF on the hot path.
+  * Every lookup is one field-lookup kernel ([[indexOfName]]) called as a
+  * static method from the generated code (`GraftFunctions.kernel`), so
+  * the operator that uses it stays in whole-stage codegen. The
+  * higher-order form it replaces, `filter`/`exists` with a lambda, is
+  * CodegenFallback and takes its whole operator out of codegen. A name
+  * matches when `lower(name) = lower(target)`: ASCII names compare
+  * case-folded on their UTF-8 bytes, other names through Spark's own
+  * `lower`. A null array gives null; an entry with a null name never
+  * matches.
   */
 object FieldOps {
 
-  private def nameMatches(f: Column, name: String): Column =
-    lower(f.getField("name")) === lit(name.toLowerCase)
+  private def lookup(fields: Column, name: String, method: String,
+                     dataType: DataType): Column =
+    kernel(FieldOps, dataType, method, Seq(fields, lit(name.toLowerCase)))
 
-  /** First value for `name`, case-insensitive; null when absent.
-    * (`try_element_at`: ANSI-safe on no-match — returns null, never errors.)
-    */
+  /** First value for `name`, case-insensitive; null when absent. */
   def fieldGet(fields: Column, name: String): Column =
-    try_element_at(filter(fields, f => nameMatches(f, name)), lit(1)).getField("value")
+    lookup(fields, name, "firstValue", StringType)
 
   /** First value for `name`, or empty string (list-projection semantics,
     * src/app/list.rs:38-41).
@@ -35,15 +46,18 @@ object FieldOps {
 
   /** All values for `name`, insertion order preserved. */
   def fieldGetAll(fields: Column, name: String): Column =
-    transform(filter(fields, f => nameMatches(f, name)), f => f.getField("value"))
+    lookup(fields, name, "allValues", ArrayType(StringType, containsNull = true))
 
-  /** Case-insensitive existence. */
+  /** Case-insensitive existence, with `exists`' three-valued result:
+    * true on a match, else null when some entry or its name is null,
+    * else false.
+    */
   def fieldContains(fields: Column, name: String): Column =
-    exists(fields, f => nameMatches(f, name))
+    lookup(fields, name, "containsName", BooleanType)
 
   /** Count of entries for `name` (multimap cardinality). */
   def fieldCount(fields: Column, name: String): Column =
-    size(filter(fields, f => nameMatches(f, name)))
+    size(fieldGetAll(fields, name))
 
   // ---- typed getters (lazily-typed access, reference src/fields.rs:142-150,
   //      src/header/fields.rs:75-125) ----
@@ -51,13 +65,117 @@ object FieldOps {
   /** Strict u64 parse: digits only — rejects `+`, whitespace, hex
     * (src/parse.rs:56-62). Null when invalid/absent.
     */
-  def getU64Strict(fields: Column, name: String): Column = {
-    val v = fieldGet(fields, name)
-    // try_cast, not cast: an all-digit run above Long.MaxValue passes
-    // the regex, and under default ANSI mode a plain cast would throw
-    // instead of honoring the documented null-when-invalid contract
-    when(v.rlike("^[0-9]+$"), v.try_cast("long"))
+  def getU64Strict(fields: Column, name: String): Column =
+    kernel(FieldOps, LongType, "u64Strict", Seq(fieldGet(fields, name)))
+
+  // ---- kernels: static methods over Catalyst's internal values, public
+  //      because the generated code calls them ----
+
+  /** The header array as `Field`s, for the per-record rule engines
+    * (`VerifyOp`, `ExtractOp`); a null entry becomes `Field(null, null)`.
+    */
+  def toFields(fields: ArrayData): IndexedSeq[Field] =
+    scala.collection.immutable.ArraySeq.unsafeWrapArray(
+      Array.tabulate(fields.numElements()) { i =>
+        if (fields.isNullAt(i)) Field(null, null)
+        else {
+          val f = fields.getStruct(i, 2)
+          Field(if (f.isNullAt(0)) null else f.getUTF8String(0).toString,
+            if (f.isNullAt(1)) null else f.getUTF8String(1).toString)
+        }
+      })
+
+  /** `lower(n) = t` for a lowercased target `t`: byte compare with ASCII
+    * case folding, Spark's `lower` for a name with any non-ASCII byte
+    * (U+212A KELVIN SIGN lowers to `k`, so such a name can equal an
+    * ASCII target).
+    */
+  private def nameIs(n: UTF8String, t: UTF8String): Boolean = {
+    val len = n.numBytes
+    var eq = len == t.numBytes
+    var i = 0
+    while (i < len) {
+      val b = n.getByte(i)
+      if (b < 0) return sparkLower(n) == t
+      if (eq) {
+        val lb = if (b >= 'A' && b <= 'Z') (b + 32).toByte else b
+        eq = lb == t.getByte(i)
+      }
+      i += 1
+    }
+    eq
   }
+
+  private def sparkLower(n: UTF8String): UTF8String =
+    CollationSupport.Lower.exec(n, CollationFactory.UTF8_BINARY_COLLATION_ID,
+      SQLConf.get.getConf(SQLConf.ICU_CASE_MAPPINGS_ENABLED))
+
+  /** Index of the first entry at or after `from` whose name is `t`, or -1. */
+  private def indexOfName(fields: ArrayData, t: UTF8String, from: Int): Int = {
+    val n = fields.numElements()
+    var i = from
+    while (i < n) {
+      if (!fields.isNullAt(i)) {
+        val f = fields.getStruct(i, 2)
+        if (!f.isNullAt(0) && nameIs(f.getUTF8String(0), t)) return i
+      }
+      i += 1
+    }
+    -1
+  }
+
+  private def valueAt(fields: ArrayData, i: Int): UTF8String = {
+    val f = fields.getStruct(i, 2)
+    if (f.isNullAt(1)) null else f.getUTF8String(1)
+  }
+
+  def firstValue(fields: ArrayData, t: UTF8String): UTF8String = {
+    val i = indexOfName(fields, t, 0)
+    if (i < 0) null else valueAt(fields, i)
+  }
+
+  def allValues(fields: ArrayData, t: UTF8String): ArrayData = {
+    val out = Array.newBuilder[Any]
+    var i = indexOfName(fields, t, 0)
+    while (i >= 0) {
+      out += valueAt(fields, i)
+      i = indexOfName(fields, t, i + 1)
+    }
+    new GenericArrayData(out.result())
+  }
+
+  def containsName(fields: ArrayData, t: UTF8String): java.lang.Boolean = {
+    if (indexOfName(fields, t, 0) >= 0) return java.lang.Boolean.TRUE
+    var i = 0
+    while (i < fields.numElements()) {
+      if (fields.isNullAt(i) || fields.getStruct(i, 2).isNullAt(0)) return null
+      i += 1
+    }
+    java.lang.Boolean.FALSE
+  }
+
+  /** ASCII digits, as `rlike("^[0-9]+$")` accepts them (`$` also matches
+    * before one final line terminator), then `try_cast` to long: null
+    * when the text does not match, or the number is above Long.MaxValue.
+    */
+  def u64Strict(v: UTF8String): java.lang.Long = {
+    val len = v.numBytes
+    var i = 0
+    while (i < len && v.getByte(i) >= '0' && v.getByte(i) <= '9') i += 1
+    if (i == 0 || (i < len && !isFinalLineTerminator(v, i))) return null
+    val w = new UTF8String.LongWrapper
+    if (v.toLong(w)) java.lang.Long.valueOf(w.value) else null
+  }
+
+  private def isFinalLineTerminator(v: UTF8String, from: Int): Boolean =
+    v.numBytes - from match {
+      case 1 => val b = v.getByte(from); b == '\n' || b == '\r'
+      case 2 => v.getByte(from) == '\r' && v.getByte(from + 1) == '\n' ||
+        v.getByte(from) == 0xc2.toByte && v.getByte(from + 1) == 0x85.toByte // U+0085
+      case 3 => v.getByte(from) == 0xe2.toByte && v.getByte(from + 1) == 0x80.toByte &&
+        (v.getByte(from + 2) == 0xa8.toByte || v.getByte(from + 2) == 0xa9.toByte) // U+2028/9
+      case _ => false
+    }
 
   /** RFC-3339 date (WARC-Date, src/header/fields.rs:80-86). Null when invalid. */
   def getDate(fields: Column, name: String): Column =

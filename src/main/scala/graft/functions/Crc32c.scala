@@ -5,7 +5,9 @@ import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
 import org.apache.spark.sql.functions.call_function
+import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.types.{BinaryType, DataType, LongType, StringType}
 
 /** Native Catalyst `crc32c(binary) -> long` (reference digest #2,
@@ -142,14 +144,35 @@ object GraftFunctions {
   /** Column API (requires [[register]] or [[GraftExtensions]] first). */
   def crc32c(c: Column): Column = call_function("crc32c", c)
 
-  /** Column API for [[Xxh3_64]] (same registration requirement). */
-  def xxh3(c: Column): Column = call_function("xxh3_64", c)
+  /** Registration-free Column for [[Xxh3_64]], built from the Expression
+    * directly (the SQL name `xxh3_64` still needs [[register]]).
+    */
+  def xxh3(c: Column): Column =
+    ColumnBridge.column(Xxh3_64(ColumnBridge.expression(c)))
 
   /** Registration-free Column wrapper for [[CanonicalUrlExpr]] — the
     * frontier round must not depend on per-session function registry
     * state, so the Column is built from the Expression directly.
     */
   def canonicalUrlColumn(c: Column): Column =
-    org.apache.spark.sql.graftbridge.ColumnBridge.column(
-      CanonicalUrlExpr(org.apache.spark.sql.graftbridge.ColumnBridge.expression(c)))
+    ColumnBridge.column(CanonicalUrlExpr(ColumnBridge.expression(c)))
+
+  /** A per-row kernel as a Column: `owner.method(args)` becomes one
+    * static call in the generated code (Catalyst's `StaticInvoke`), over
+    * Catalyst's internal values — `UTF8String`, `ArrayData`,
+    * `InternalRow`, `Array[Byte]` and unboxed primitives — so no encoder
+    * or row converter runs and the operator stays in whole-stage codegen.
+    * `owner` is a Scala object; a kernel whose result type is primitive
+    * returns the boxed type, and null means null. A null argument gives
+    * null without a call, as a ScalaUDF does for a null primitive
+    * argument.
+    *
+    * `pinned` marks the call nondeterministic. The kernel is pure, but
+    * the optimizer then neither inlines it into each consumer of its
+    * alias nor derives a filter from it, so it runs once per row.
+    */
+  def kernel(owner: AnyRef, dataType: DataType, method: String, args: Seq[Column],
+             pinned: Boolean = false): Column =
+    ColumnBridge.column(StaticInvoke(owner.getClass, dataType, method,
+      args.map(ColumnBridge.expression), isDeterministic = !pinned))
 }

@@ -1,7 +1,13 @@
 package graft.ops
 
+import graft.core.FieldOps.toFields
+import graft.functions.GraftFunctions.{kernel, xxh3}
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
 
 /** `extract` — payload extraction with decoder routing
   * (reference src/extract.rs + src/app/extract.rs).
@@ -11,54 +17,66 @@ import org.apache.spark.sql.functions._
   * absent) and a target URI → HTTP decoder; `resource`/`conversion` with
   * a URI → identity. Everything else is skipped.
   *
-  * The routing rule is one scalar UDF over the header array
-  * (`decoder_kind` plus the headers `extract` consumes); the HTTP body
-  * decode is a second UDF (whole payload in one cell — SURVEY.md §2.9).
+  * The routing rule is one kernel over the header array (`decoder_kind`
+  * plus the headers `extract` consumes); the HTTP body decode is a
+  * second kernel (whole payload in one cell — SURVEY.md §2.9). Kernels
+  * are static calls from the generated code (`GraftFunctions.kernel`).
   */
 object ExtractOp {
+
+  private val RouteType = StructType(Seq(
+    StructField("decoder_kind", StringType), StructField("uri", StringType),
+    StructField("is_conversion", BooleanType, nullable = false),
+    StructField("is_truncated", BooleanType, nullable = false)))
+
+  /** Pinned: [[extract]] filters on the route and reads four of its
+    * fields, and the kernel runs once per row.
+    */
+  private def route(fields: Column): Column =
+    kernel(ExtractOp, RouteType, "routeRecord", Seq(fields), pinned = true)
 
   /** decoder_kind: 'http' | 'identity' | 'none' (extract.rs:66-113).
     * HTTP routing requires Content-Type application/http WITH parameter
     * msgtype=response — absent or different msgtype is NOT an HTTP
     * response (extract.rs:78-85: unwrap_or_default() == "response").
     */
-  def decoderKind(fields: Column): Column = routeUdf(fields).getField("_1")
+  def decoderKind(fields: Column): Column =
+    route(fields).getField("decoder_kind")
 
-  private val parseHttpUdf = udf { (payload: Array[Byte]) =>
-    if (payload == null) null
-    else {
-      val p = HttpOps.parseResponse(payload)
-      (p.ok, p.status, p.body, p.error)
-    }
-  }
+  private val HttpType = StructType(Seq(
+    StructField("ok", BooleanType, nullable = false),
+    StructField("status", IntegerType, nullable = false),
+    StructField("body", BinaryType), StructField("error", StringType)))
 
   /** Public column form: parse an HTTP/1.1 response payload cell →
     * struct(ok, status, body, error) — the H1–H3 pipeline of SURVEY.md §2.9.
     */
-  def parseHttp(payload: Column): Column = {
-    val p = parseHttpUdf(payload)
-    struct(p.getField("_1").as("ok"), p.getField("_2").as("status"),
-      p.getField("_3").as("body"), p.getField("_4").as("error"))
+  def parseHttp(payload: Column): Column =
+    kernel(ExtractOp, HttpType, "httpRecord", Seq(payload))
+
+  def httpRecord(payload: Array[Byte]): InternalRow = {
+    val p = HttpOps.parseResponse(payload)
+    InternalRow(p.ok, p.status, p.body, UTF8String.fromString(p.error))
   }
 
-  private val pathComponentsUdf = udf { (url: String) =>
-    if (url == null) null else UrlPath.urlToPathComponents(url)
-  }
+  private val PathType = ArrayType(StringType, containsNull = true)
+
+  private def utf8Array(xs: Seq[String]): ArrayData =
+    new GenericArrayData(xs.map(UTF8String.fromString).toArray[Any])
 
   /** Public column form of F8: URL → escaped path components. */
-  def pathComponents(url: Column): Column = pathComponentsUdf(url)
+  def pathComponents(url: Column): Column = kernel(ExtractOp, PathType, "pathOf", Seq(url))
+
+  def pathOf(url: UTF8String): ArrayData =
+    utf8Array(UrlPath.urlToPathComponents(url.toString))
 
   /** Path components with the conversion marker applied: conversion
     * records extract next to the original under `name⬧conversion`
     * (reference extract.rs:104-107).
     */
-  private val pathComponentsMarkedUdf = udf { (url: String, isConversion: Boolean) =>
-    if (url == null) null
-    else {
-      val pc = UrlPath.urlToPathComponents(url)
-      if (isConversion && pc.nonEmpty) pc.init :+ UrlPath.markConversion(pc.last)
-      else pc
-    }
+  def markedPathOf(url: UTF8String, isConversion: Boolean): ArrayData = {
+    val pc = UrlPath.urlToPathComponents(url.toString)
+    utf8Array(if (isConversion && pc.nonEmpty) pc.init :+ UrlPath.markConversion(pc.last) else pc)
   }
 
   private val MediaTypeRe = ("^([!#$%&'*+.^_`|~0-9A-Za-z-]+)/([!#$%&'*+.^_`|~0-9A-Za-z-]+)" +
@@ -68,23 +86,22 @@ object ExtractOp {
     * array traversal per row: (decoder_kind, WARC-Target-URI,
     * is-conversion, has WARC-Truncated). The one routing rule —
     * [[decoderKind]] is its first field. A Column formulation (a `when`
-    * chain over fieldGet/fieldContains lookups) planned as ~15
+    * chain over higher-order-function lookups) planned as ~15
     * interpreted higher-order-function subtrees per row after filter
     * pushdown — CollapseProject/PushDownPredicates re-inline the `fields`
     * construction into EVERY lookup, and HOF lambdas are CodegenFallback
     * — measured as the dominant cost of the crawl→table bridge (q59:
     * ~1.4 ms/row of a 43 KB inlined filter condition). Same rule-engine-
-    * as-one-UDF treatment as [[VerifyOp.checkFields]]: first
+    * as-one-kernel treatment as [[VerifyOp.checkFields]]: first
     * case-insensitive header match; the media-type grammar and the
     * case-sensitive msgtype compare mirror
     * [[graft.core.FieldOps.mediaType]]; oracle-gated end to end (q33,
     * q59, q64).
     */
-  private val routeUdf = udf { (fields: Seq[org.apache.spark.sql.Row]) =>
-    def get(n: String): Option[String] =
-      fields.find(r => r.getString(0).equalsIgnoreCase(n)).map(_.getString(1))
-    def has(n: String): Boolean =
-      fields.exists(r => r.getString(0).equalsIgnoreCase(n))
+  def routeRecord(fieldArray: ArrayData): InternalRow = {
+    val fields = toFields(fieldArray)
+    def get(n: String): Option[String] = fields.find(_.name.equalsIgnoreCase(n)).map(_.value)
+    def has(n: String): Boolean = fields.exists(_.name.equalsIgnoreCase(n))
     val recType = get("WARC-Type").map(_.toLowerCase).getOrElse("")
     val uri = get("WARC-Target-URI")
     val isHttpResponse = get("Content-Type").exists {
@@ -104,32 +121,39 @@ object ExtractOp {
       else if (recType == "response" && uri.isDefined && isHttpResponse) "http"
       else if ((recType == "resource" || recType == "conversion") && uri.isDefined) "identity"
       else "none"
-    (kind, uri.orNull, recType == "conversion", has("WARC-Truncated"))
+    InternalRow(UTF8String.fromString(kind), UTF8String.fromString(uri.orNull),
+      recType == "conversion", has("WARC-Truncated"))
   }
 
   /** Extract eligible records: adds decoder_kind, extracted bytes,
     * path_components, http status/ok, and the xxh3 conflict id
     * (app/extract.rs:104-167 — bit-matching the reference's conflict
     * naming via the from-spec [[graft.functions.Xxh3_64]]).
+    *
+    * Three selects: the route (pinned, so the routing filter is not
+    * pushed below it as a second evaluation), then the HTTP decode and
+    * the path, then the output columns. The last select reads the HTTP
+    * struct four times, so CollapseProject keeps the decode in its own
+    * projection and it runs once per row.
     */
   def extract(records: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.register(records.sparkSession)
-    val routed = records.withColumn("__route", routeUdf(col("fields")))
-      .where(col("__route._1") =!= "none")
-      .withColumn("decoder_kind", col("__route._1"))
-    routed
-      .withColumn("http", when(col("decoder_kind") === "http", parseHttpUdf(col("bytes"))))
-      .withColumn("extracted",
-        when(col("decoder_kind") === "http", col("http._3")).otherwise(col("bytes")))
-      .withColumn("http_ok", col("http._1"))
-      .withColumn("http_status", col("http._2"))
-      .withColumn("decode_error", col("http._4"))
-      .withColumn("path_components",
-        pathComponentsMarkedUdf(col("__route._2"), col("__route._3")))
-      .withColumn("is_truncated", col("__route._4"))
-      .withColumn("conflict_id",
-        graft.functions.GraftFunctions.xxh3(col("extracted").cast("binary")))
-      .drop("http").drop("__route")
+    val in = records.columns.toSeq.map(c => col(s"`$c`"))
+    val kind = col("decoder_kind")
+    val http = col("__http")
+    val extracted = when(kind === "http", http.getField("body")).otherwise(col("bytes"))
+    records
+      .select(in :+ route(col("fields")).as("__route"): _*)
+      .where(col("__route.decoder_kind") =!= "none")
+      .select(in ++ Seq(
+        col("__route.decoder_kind").as("decoder_kind"),
+        when(col("__route.decoder_kind") === "http", parseHttp(col("bytes"))).as("__http"),
+        kernel(ExtractOp, PathType, "markedPathOf",
+          Seq(col("__route.uri"), col("__route.is_conversion"))).as("path_components"),
+        col("__route.is_truncated").as("is_truncated")): _*)
+      .select(in ++ Seq(kind, extracted.as("extracted"),
+        http.getField("ok").as("http_ok"), http.getField("status").as("http_status"),
+        http.getField("error").as("decode_error"), col("path_components"),
+        col("is_truncated"), xxh3(extracted).as("conflict_id")): _*)
   }
 
   /** S8 filesystem sink: write the extracted table as a REAL file tree

@@ -1,8 +1,8 @@
 package graft.ops
 
-import java.io.ByteArrayInputStream
+import java.io.{ByteArrayInputStream, ByteArrayOutputStream, EOFException}
 import java.nio.charset.StandardCharsets
-import java.util.zip.{GZIPInputStream, InflaterInputStream, Inflater}
+import java.util.zip.{CRC32, DataFormatException, Inflater, ZipException}
 
 /** HTTP/1.1 payload decoder (reference src/http/h1/ — the "query execution
   * inside a cell"). The reference's sans-IO incremental state machine
@@ -20,7 +20,7 @@ import java.util.zip.{GZIPInputStream, InflaterInputStream, Inflater}
   * "identity" skipped, unsupported name → error. Supported: chunked
   * (TE only), gzip/x-gzip, deflate (zlib wrapper per RFC 9112).
   *
-  * Pure executor-side function — wrapped as a UDF by ExtractOp.
+  * Pure executor-side function — called as a kernel by ExtractOp.
   */
 object HttpOps {
 
@@ -182,7 +182,7 @@ object HttpOps {
     */
   def decompress(name: String, data: Array[Byte]): Either[String, Array[Byte]] = name match {
     case "gzip" | "x-gzip" | "gz" =>
-      try Right(readAll(new GZIPInputStream(new ByteArrayInputStream(data))))
+      try Right(gunzip(data))
       catch { case e: Exception => Left(s"gzip_error:${e.getClass.getSimpleName}") }
     case "zstd" | "zstandard" | "zst" =>
       try {
@@ -191,11 +191,11 @@ object HttpOps {
         try Right(readAll(in)) finally in.close()
       } catch { case e: Exception => Left(s"zstd_error:${e.getClass.getSimpleName}") }
     case "deflate" =>
-      try Right(readAll(new InflaterInputStream(new ByteArrayInputStream(data))))
+      val z = inflaters.get
+      try Right(inflateAll(z.zlib, data))
       catch {
         case _: Exception =>
-          try Right(readAll(new InflaterInputStream(
-            new ByteArrayInputStream(data), new Inflater(true))))
+          try Right(inflateAll(z.raw, data))
           catch { case e: Exception => Left(s"deflate_error:${e.getClass.getSimpleName}") }
       }
     case "br" | "brotli" =>
@@ -228,6 +228,117 @@ object HttpOps {
       if (total > max) throw new OutputTooLarge
       out.write(buf, 0, n)
       n = in.read(buf)
+    }
+    out.toByteArray
+  }
+
+  // ---- gzip and deflate bodies: reused inflaters ----
+  //
+  // A `GZIPInputStream` or `InflaterInputStream` per body allocates a
+  // native zlib stream that is never closed here, so it waits for GC.
+  // Each executor thread (one running task) instead keeps one raw and
+  // one zlib-wrapped Inflater and resets them per body. The decoders
+  // below accept and reject exactly what those streams do, with the
+  // same exception classes, because the classes name the error
+  // (`gzip_error:ZipException`, `deflate_error:EOFException`, ...).
+
+  private final class Inflaters {
+    val raw = new Inflater(true)
+    val zlib = new Inflater()
+    val buf = new Array[Byte](65536)
+  }
+
+  private val inflaters = ThreadLocal.withInitial[Inflaters](() => new Inflaters)
+
+  /** Inflate the inflater's input to the end of its stream into `out`,
+    * as `InflaterInputStream.read` does: stop at the stream end (or a
+    * preset-dictionary request), EOFException when the input runs out
+    * first, ZipException on corrupt data. Adds the output to `crc`
+    * unless it is null.
+    */
+  private def inflateTo(inf: Inflater, out: ByteArrayOutputStream, crc: CRC32): Unit = {
+    val buf = inflaters.get.buf
+    while (!inf.finished() && !inf.needsDictionary()) {
+      val n =
+        try inf.inflate(buf)
+        catch {
+          case e: DataFormatException =>
+            throw new ZipException(Option(e.getMessage).getOrElse("Invalid ZLIB data format"))
+        }
+      if (n > 0) {
+        if (out.size.toLong + n > MaxDecompressedBytes) throw new OutputTooLarge
+        out.write(buf, 0, n)
+        if (crc != null) crc.update(buf, 0, n)
+      } else if (inf.needsInput()) throw new EOFException("Unexpected end of ZLIB input stream")
+    }
+  }
+
+  /** One whole zlib or raw-deflate stream; bytes after its end are ignored. */
+  private def inflateAll(inf: Inflater, data: Array[Byte]): Array[Byte] = {
+    val out = new ByteArrayOutputStream()
+    inf.reset()
+    inf.setInput(data)
+    inflateTo(inf, out, null)
+    out.toByteArray
+  }
+
+  private def le16(d: Array[Byte], i: Int): Int = (d(i) & 0xff) | (d(i + 1) & 0xff) << 8
+
+  private def le32(d: Array[Byte], i: Int): Long = (le16(d, i) | le16(d, i + 2) << 16) & 0xffffffffL
+
+  /** `GZIPInputStream.readHeader` at `p0`: the offset just past the header.
+    * EOFException when it is cut short; ZipException on a bad magic,
+    * method or header CRC (FHCRC). FEXTRA, FNAME and FCOMMENT are skipped.
+    */
+  private def gzipHeaderEnd(d: Array[Byte], p0: Int): Int = {
+    var p = p0
+    def need(n: Int): Unit = if (d.length - p < n) throw new EOFException
+    need(2)
+    if (le16(d, p) != 0x8b1f) throw new ZipException("Not in GZIP format")
+    p += 2
+    need(1)
+    if (d(p) != 8) throw new ZipException("Unsupported compression method")
+    need(2)
+    val flg = d(p + 1)
+    p += 2
+    need(6)
+    p += 6 // MTIME, XFL, OS
+    if ((flg & 4) != 0) { need(2); val xlen = le16(d, p); p += 2; need(xlen); p += xlen }
+    def skipZeroTerminated(): Unit = { need(1); while (d(p) != 0) { p += 1; need(1) }; p += 1 }
+    if ((flg & 8) != 0) skipZeroTerminated()
+    if ((flg & 16) != 0) skipZeroTerminated()
+    if ((flg & 2) != 0) {
+      val crc = new CRC32
+      crc.update(d, p0, p - p0)
+      need(2)
+      if (le16(d, p) != (crc.getValue & 0xffff)) throw new ZipException("Corrupt GZIP header")
+      p += 2
+    }
+    p
+  }
+
+  /** `GZIPInputStream` read to the end, over a byte array: every
+    * member's CRC32 and ISIZE trailer is checked, and after each trailer
+    * another member is read when a header parses there; when none does,
+    * the stream ends cleanly and the bytes left are ignored.
+    */
+  private def gunzip(data: Array[Byte]): Array[Byte] = {
+    val inf = inflaters.get.raw
+    val out = new ByteArrayOutputStream()
+    val crc = new CRC32
+    var pos = gzipHeaderEnd(data, 0)
+    while (pos >= 0) {
+      inf.reset()
+      crc.reset()
+      inf.setInput(data, pos, data.length - pos)
+      inflateTo(inf, out, crc)
+      val end = pos + inf.getBytesRead.toInt
+      if (data.length - end < 4) throw new EOFException
+      if (le32(data, end) != crc.getValue) throw new ZipException("Corrupt GZIP trailer")
+      if (data.length - end < 8) throw new EOFException
+      if (le32(data, end + 4) != (inf.getBytesWritten & 0xffffffffL))
+        throw new ZipException("Corrupt GZIP trailer")
+      pos = try gzipHeaderEnd(data, end + 8) catch { case _: java.io.IOException => -1 }
     }
     out.toByteArray
   }

@@ -2,18 +2,20 @@ package graft.ops
 
 import graft.core.Field
 import graft.core.FieldOps._
-import org.apache.spark.sql.{Column, DataFrame, Row}
+import graft.functions.GraftFunctions.kernel
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, BooleanType, StringType, StructField, StructType}
+import org.apache.spark.unsafe.types.UTF8String
 
 import java.util.regex.Pattern
 
-/** One element of the per-record problems array. */
-final case class ProblemKD(kind: String, detail: String)
-
 /** The verify rule engine (reference src/verify.rs): per-record checks run
-  * as ONE single-pass scalar function over the header multimap (see the
-  * note on [[VerifyOp.checkFields]] for why not per-check Columns);
+  * as ONE single-pass kernel over the header multimap (see the note on
+  * [[VerifyOp.checkFields]] for why not per-check Columns);
   * cross-record checks are the two joins the reference hides in redb
   * cursor batches: reference integrity as one window over target ids
   * (J1, verify.rs:230-264) and segment reassembly aggregation (J2,
@@ -32,9 +34,11 @@ object VerifyOp {
   // all-Catalyst formulation (every check as a Column over higher-order
   // field lookups) measured ~175µs/row: HOF lambdas are CodegenFallback
   // (interpreted) and CollapseProject re-inlines each lookup per consumer
-  // (62 element_at(filter(...)) subtrees in the final plan). A narrow UDF
+  // (62 element_at(filter(...)) subtrees in the final plan). One kernel
+  // (a static call from the generated code, `GraftFunctions.kernel`)
   // keeps the identical rule semantics (oracle-checked in q31) at JVM
-  // speed; the surrounding plan (scan -> project -> explode) stays native.
+  // speed, and the whole plan (scan -> project -> explode) stays in
+  // whole-stage codegen.
 
   private val DatePattern = Pattern.compile(
     "^\\d{4}-\\d{2}-\\d{2}T\\d{2}:\\d{2}:\\d{2}(\\.\\d{1,9})?(Z|[+-]\\d{2}:\\d{2})$")
@@ -150,23 +154,33 @@ object VerifyOp {
     out.result()
   }
 
-  /** record_id + problems in ONE fields traversal: the separate
-    * `fieldGet(record_id)` Column was an interpreted higher-order
-    * function whose evaluation re-inlined the caller's whole `fields`
-    * construction a second time per row (the ExtractOp.routeUdf
-    * pathology) — the id lookup rides along in the same UDF instead.
+  private def pairsType(a: String, b: String) = ArrayType(StructType(Seq(
+    StructField(a, StringType), StructField(b, StringType))))
+
+  private val CheckedType = StructType(Seq(StructField("record_id", StringType),
+    StructField("problems", pairsType("kind", "detail"))))
+
+  private def utf8Pairs(pairs: Seq[(String, String)]): ArrayData =
+    new GenericArrayData(pairs.map { case (a, b) =>
+      InternalRow(UTF8String.fromString(a), UTF8String.fromString(b))
+    }.toArray[Any])
+
+  /** Kernel of [[problems]]: record_id and [[checkFields]]' problems in
+    * ONE fields traversal. A separate `fieldGet(record_id)` Column
+    * would re-inline the caller's whole `fields` construction a second
+    * time per row, so the id lookup rides along.
     */
-  private val checkWithIdUdf = udf { (fields: Seq[Row]) =>
-    val fs = fields.map(r => Field(r.getString(0), r.getString(1)))
+  def checkRecord(fields: ArrayData): InternalRow = {
+    val fs = toFields(fields)
     val rid = fs.find(_.name.equalsIgnoreCase("WARC-Record-ID"))
       .flatMap(f => Option(f.value)).getOrElse("") // null value → "" like coalesce did
-    (rid, checkFields(fs).map { case (k, d) => ProblemKD(k, d) })
+    InternalRow(UTF8String.fromString(rid), utf8Pairs(checkFields(fs)))
   }
 
   /** Explode to a Problem dataset (position, record_id, kind, detail).
-    * The UDF is marked nondeterministic (it is in fact pure — guide
-    * §4.4's pin-one-evaluation marking): InferFiltersFromGenerate
-    * otherwise derives a `size(rp._2)>0 AND isnotnull(rp._2)` filter,
+    * The kernel is pinned to one evaluation per row (it is in fact pure —
+    * guide §4.4's pin-one-evaluation marking): InferFiltersFromGenerate
+    * otherwise derives a `size(rp.problems)>0 AND isnotnull(...)` filter,
     * pushes it below the projection, and the whole rule engine runs
     * THREE times per row — measured as the dominant cost of the
     * records-verified/sec headline.
@@ -174,11 +188,30 @@ object VerifyOp {
   def problems(records: DataFrame): DataFrame =
     records
       .select(col("position"),
-        checkWithIdUdf.asNondeterministic()(col("fields")).as("rp"))
-      .select(col("position"), col("rp._1").as("record_id"),
-        explode(col("rp._2")).as("p"))
+        kernel(VerifyOp, CheckedType, "checkRecord", Seq(col("fields")), pinned = true).as("rp"))
+      .select(col("position"), col("rp.record_id").as("record_id"),
+        explode(col("rp.problems")).as("p"))
       .select(col("position"), col("record_id"),
         col("p.kind").as("kind"), col("p.detail").as("detail"))
+
+  private val IdRefsType = StructType(Seq(StructField("record_id", StringType),
+    StructField("refs", pairsType("via", "target_id"))))
+
+  /** Kernel of [[missingReferences]]: the record's id, and its
+    * references as (via, target) pairs in `refFields` order, insertion
+    * order within a field (like fieldGetAll), led by (null, id) when the
+    * record has an id.
+    */
+  def idRefs(fields: ArrayData, refFields: ArrayData): InternalRow = {
+    val fs = toFields(fields)
+    val rid = fs.find(_.name.equalsIgnoreCase("WARC-Record-ID")).map(_.value).orNull
+    val refs = (0 until refFields.numElements()).flatMap { i =>
+      val rf = refFields.getUTF8String(i).toString
+      fs.collect { case f if f.name.equalsIgnoreCase(rf) => (rf, f.value) }
+    }
+    InternalRow(UTF8String.fromString(rid),
+      utf8Pairs(if (rid == null) refs else (null: String, rid) +: refs))
+  }
 
   /** J1 — reference integrity (verify.rs:230-264): every
     * (record → target id) reference whose target is not a known record id
@@ -188,34 +221,24 @@ object VerifyOp {
   def missingReferences(records: DataFrame,
                         refFields: Seq[String] = Seq(
                           "WARC-Concurrent-To", "WARC-Refers-To", "WARC-Warcinfo-ID")): DataFrame = {
-    // ONE fields traversal per row for the id AND every reference field
-    // (insertion order preserved per field, like fieldGetAll). The
-    // union-of-three-scans form evaluated four interpreted HOF lookups,
-    // each re-inlining the caller's fields construction — 4 full scans
-    // of the record set for one anti-join probe side.
+    // ONE fields traversal per row for the id AND every reference field.
+    // The union-of-three-scans form evaluated four interpreted HOF
+    // lookups, each re-inlining the caller's fields construction — 4
+    // full scans of the record set for one anti-join probe side.
     //
     // Each row emits its references as (via, target) pairs and its own
     // id as one more pair with a null `via`, so one scan of `records`
     // feeds one window over target_id: a reference is missing when its
     // target has no id row. A null target has no id row either, so it
     // is reported, as a left-anti join on target_id reports it.
-    val rfList = refFields
-    val idRefsUdf = udf { (fields: Seq[Row]) =>
-      val rid = fields.find(_.getString(0).equalsIgnoreCase("WARC-Record-ID"))
-        .map(_.getString(1)).orNull
-      val refs = rfList.flatMap { rf =>
-        fields.collect { case r if r.getString(0).equalsIgnoreCase(rf) =>
-          (rf, r.getString(1))
-        }
-      }
-      (rid, if (rid == null) refs else (null: String, rid) +: refs)
-    }
-    // nondeterministic pins ONE evaluation per row (see [[problems]])
+    // The kernel is pinned to one evaluation per row (see [[problems]]).
     val pairs = records
-      .select(col("position"), idRefsUdf.asNondeterministic()(col("fields")).as("ir"))
-      .select(col("position"), col("ir._1").as("record_id"), explode(col("ir._2")).as("r"))
+      .select(col("position"), kernel(VerifyOp, IdRefsType, "idRefs",
+        Seq(col("fields"), typedLit(refFields)), pinned = true).as("ir"))
+      .select(col("position"), col("ir.record_id").as("record_id"),
+        explode(col("ir.refs")).as("r"))
       .select(col("position"), col("record_id"),
-        col("r._2").as("target_id"), col("r._1").as("via"))
+        col("r.target_id").as("target_id"), col("r.via").as("via"))
     pairs
       .withColumn("has_id", max(col("via").isNull).over(Window.partitionBy("target_id")))
       .where(col("via").isNotNull && !col("has_id"))
@@ -261,26 +284,25 @@ object VerifyOp {
     * payload hashing): decode the record's PAYLOAD — the HTTP body for
     * `application/http` records, the block itself otherwise — and
     * compare it against the declared `WARC-Payload-Digest`. Returns
-    * null when no digest is declared (check not applicable), false on
-    * an unparseable digest text (the reference's UnknownDigest problem)
-    * or a mismatch. Scalar single-pass like the rule engine.
+    * null when no digest is declared (check not applicable) or any
+    * argument is null, false on an unparseable digest text (the
+    * reference's UnknownDigest problem) or a mismatch. A kernel like
+    * the rule engine; the name is the one its callers have always used.
     */
-  val payloadDigestOkUdf = org.apache.spark.sql.functions.udf {
-    (declared: String, bytes: Array[Byte], isHttp: Boolean) =>
-      if (declared == null) null.asInstanceOf[java.lang.Boolean]
-      else {
-        val ok = graft.core.Digests.parseDigest(declared) match {
-          case None => false // UnknownDigest
-          case Some((algo, want)) =>
-            val payload =
-              if (isHttp) {
-                val p = graft.ops.HttpOps.parseResponse(bytes)
-                if (p.ok) p.body else null
-              } else bytes
-            payload != null &&
-              graft.core.Digests.compute(algo, payload).exists(_.sameElements(want))
-        }
-        java.lang.Boolean.valueOf(ok)
-      }
-  }
+  def payloadDigestOkUdf(declared: Column, bytes: Column, isHttp: Column): Column =
+    kernel(VerifyOp, BooleanType, "payloadDigestOk", Seq(declared, bytes, isHttp))
+
+  def payloadDigestOk(declared: UTF8String, bytes: Array[Byte],
+                      isHttp: Boolean): Boolean =
+    graft.core.Digests.parseDigest(declared.toString) match {
+      case None => false // UnknownDigest
+      case Some((algo, want)) =>
+        val payload =
+          if (isHttp) {
+            val p = graft.ops.HttpOps.parseResponse(bytes)
+            if (p.ok) p.body else null
+          } else bytes
+        payload != null &&
+          graft.core.Digests.compute(algo, payload).exists(_.sameElements(want))
+    }
 }

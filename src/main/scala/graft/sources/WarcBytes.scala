@@ -104,6 +104,7 @@ object WarcBytes {
       pos = 0
       len = 0
       base = 0L
+      head = null
       ready.clear()
     }
 
@@ -126,51 +127,67 @@ object WarcBytes {
       -1
     }
 
+    /** The parsed header of the record at `pos` and its block's offset
+      * and length relative to `pos`, kept while the block is still
+      * arriving so a later [[append]] does not parse the header again.
+      */
+    private final class Head(val version: String, val fields: Seq[Field],
+                             val blockStart: Int, val blockLen: Int)
+    private var head: Head = null
+
+    /** The header of the record at `pos`, or null while its terminator
+      * has not arrived.
+      */
+    private def parseHead(): Head = {
+      val at = indexOfTerminator(pos, len)
+      if (at < 0) {
+        require(len - pos <= MaxHeaderLen + 4, s"missing header terminator at offset $base")
+        null
+      } else {
+        val headerEnd = at - pos // header length before CRLF CRLF
+        // the cap applies even when a terminator IS eventually found —
+        // the reference treats any header block past 32 KiB as malformed
+        require(headerEnd <= MaxHeaderLen, s"header exceeds $MaxHeaderLen bytes at offset $base")
+        val (version, fields) = HeaderSerde.parse(buf, pos, headerEnd + 4)
+          .getOrElse(throw new IllegalArgumentException(s"bad header at offset $base"))
+        val lenStr = fields.find(_.name.equalsIgnoreCase("Content-Length")).map(_.value)
+          .getOrElse(throw new IllegalArgumentException(s"no Content-Length at offset $base"))
+        require(lenStr.nonEmpty && lenStr.length <= 18 && lenStr.forall(_.isDigit),
+          s"bad Content-Length '$lenStr' at offset $base")
+        val blockLenL = lenStr.toLong
+        // i32 guard (a declared length >= 2^31 must error, never wrap);
+        // headroom for blockStart (≤ MaxHeaderLen+4) + terminator so
+        // `blockStart + blockLen + 4` below cannot overflow Int either
+        require(blockLenL <= Int.MaxValue.toLong - MaxHeaderLen - 16,
+          s"Content-Length $blockLenL exceeds supported block size at offset $base")
+        new Head(version, fields, headerEnd + 4, blockLenL.toInt)
+      }
+    }
+
     private def drain(): Unit = {
       var progress = true
       while (progress) {
         progress = false
-        val avail = len - pos
-        val at = indexOfTerminator(pos, len)
-        if (at < 0) {
-          require(avail <= MaxHeaderLen + 4, s"missing header terminator at offset $base")
-        } else {
-          val headerEnd = at - pos // header length before CRLF CRLF
-          // the cap applies even when a terminator IS eventually found —
-          // the reference treats any header block past 32 KiB as malformed
-          require(headerEnd <= MaxHeaderLen, s"header exceeds $MaxHeaderLen bytes at offset $base")
-          val (version, fields) = HeaderSerde.parse(buf, pos, headerEnd + 4)
-            .getOrElse(throw new IllegalArgumentException(s"bad header at offset $base"))
-          val lenStr = fields.find(_.name.equalsIgnoreCase("Content-Length")).map(_.value)
-            .getOrElse(throw new IllegalArgumentException(s"no Content-Length at offset $base"))
-          require(lenStr.nonEmpty && lenStr.length <= 18 && lenStr.forall(_.isDigit),
-            s"bad Content-Length '$lenStr' at offset $base")
-          val blockLenL = lenStr.toLong
-          // i32 guard (a declared length >= 2^31 must error, never wrap);
-          // headroom for blockStart (≤ MaxHeaderLen+4) + terminator so
-          // `blockStart + blockLen + 4` below cannot overflow Int either
-          require(blockLenL <= Int.MaxValue.toLong - MaxHeaderLen - 16,
-            s"Content-Length $blockLenL exceeds supported block size at offset $base")
-          val blockLen = blockLenL.toInt
-          val blockStart = headerEnd + 4
-          if (blockStart + blockLen + 4 <= avail) {
-            val blockAt = pos + blockStart
-            val block = java.util.Arrays.copyOfRange(buf, blockAt, blockAt + blockLen)
-            var t = 0
-            while (t < 4) {
-              require(buf(blockAt + blockLen + t) == HeaderTerminator(t),
-                s"missing record terminator at offset ${base + blockStart + blockLen}")
-              t += 1
-            }
-            ready += WarcRecord(base, file, version, fields, block)
-            recordsParsed += 1
-            val consumed = blockStart + blockLen + 4
-            pos += consumed
-            base += consumed
-            progress = true
+        if (head == null) head = parseHead()
+        if (head != null && head.blockStart + head.blockLen + 4 <= len - pos) {
+          val blockAt = pos + head.blockStart
+          val blockLen = head.blockLen
+          val block = java.util.Arrays.copyOfRange(buf, blockAt, blockAt + blockLen)
+          var t = 0
+          while (t < 4) {
+            require(buf(blockAt + blockLen + t) == HeaderTerminator(t),
+              s"missing record terminator at offset ${base + head.blockStart + blockLen}")
+            t += 1
           }
-          // else: need more input for the block
+          ready += WarcRecord(base, file, head.version, head.fields, block)
+          recordsParsed += 1
+          val consumed = head.blockStart + blockLen + 4
+          pos += consumed
+          base += consumed
+          head = null
+          progress = true
         }
+        // else: need more input for the header or the block
       }
       if (pos == len) { pos = 0; len = 0 }
     }

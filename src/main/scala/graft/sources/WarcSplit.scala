@@ -322,10 +322,11 @@ object WarcSplit {
     // task payload — a multi-GB archive at 128 MB splitBytes has
     // thousands of splits per file, and a dict embedded in each Split
     // would serialize (dict bytes × splits) of duplicate task bytes
-    // from the driver
+    // from the driver. No split with a dictionary, no broadcast.
     val dictByFile = splits.iterator
       .flatMap(s => s.dict.map(d => s.file -> d)).toMap
-    val dictBc = spark.sparkContext.broadcast(dictByFile)
+    val dictBc =
+      if (dictByFile.isEmpty) None else Some(spark.sparkContext.broadcast(dictByFile))
     val bare = splits.map(_.copy(dict = None))
     val rdd = spark.sparkContext
       .parallelize(bare, math.max(1, bare.size))
@@ -333,7 +334,7 @@ object WarcSplit {
         val p = new org.apache.hadoop.fs.Path(s.file)
         val efs = p.getFileSystem(executorConf)
         decodeRange(rangeReader(efs, p), s.fileLen, s.start, s.end, s.file,
-          maxRecordBytes, s.format, dictBc.value.get(s.file), s.contentStart)
+          maxRecordBytes, s.format, dictBc.flatMap(_.value.get(s.file)), s.contentStart)
       }
     spark.createDataset(rdd)
   }

@@ -47,6 +47,59 @@ class FieldOpsSpec extends AnyFunSuite {
       .map(r => r.getInt(0) -> (if (r.isNullAt(1)) None else Some(r.getLong(1)))).toMap
     assert(rows(1).contains(123L) && rows(2).isEmpty && rows(3).isEmpty && rows(4).isEmpty)
   }
+
+  test("lookup kernels equal the higher-order-function formulation on generated headers") {
+    import org.apache.spark.sql.Column
+    import org.scalacheck.Gen
+    import org.scalacheck.rng.Seed
+    // the lambda formulation the kernels replace, kept as the reference
+    def matches(f: Column, name: String) = lower(f.getField("name")) === lit(name.toLowerCase)
+    def refGet(fs: Column, n: String) =
+      try_element_at(filter(fs, f => matches(f, n)), lit(1)).getField("value")
+    def refU64(fs: Column, n: String) = {
+      val v = refGet(fs, n)
+      when(v.rlike("^[0-9]+$"), v.try_cast("long"))
+    }
+    def reference(fs: Column, n: String): Seq[Column] = Seq(
+      refGet(fs, n), coalesce(refGet(fs, n), lit("")), refU64(fs, n),
+      exists(fs, f => matches(f, n)),
+      transform(filter(fs, f => matches(f, n)), f => f.getField("value")),
+      size(filter(fs, f => matches(f, n))))
+    def kernels(fs: Column, n: String): Seq[Column] = Seq(
+      FieldOps.fieldGet(fs, n), FieldOps.fieldGetOrEmpty(fs, n), FieldOps.getU64Strict(fs, n),
+      FieldOps.fieldContains(fs, n), FieldOps.fieldGetAll(fs, n), FieldOps.fieldCount(fs, n))
+
+    val names = Seq("WARC-Type", "warc-type", "WARC-TYPE", "Content-Length",
+      "content-length", "Key", "\u212Aey", "KEY", "Stra\u00dfe", "STRASSE", "\u0130d", "id",
+      "\u03a3\u03c3", "", null)
+    val values = Seq("response", "123", "0", "+1", " 12", "12 ", "0x1f", "12\n", "12\r\n",
+      "12\r", "12\u0085", "12\u2028", "12\n\n", "\u0661\u0662", "9223372036854775807",
+      "9223372036854775808", "99999999999999999999", "", null)
+    val field: Gen[Field] = for {
+      n <- Gen.oneOf(names); v <- Gen.oneOf(values)
+    } yield if (n == "id" && v == null) null else Field(n, v) // some null entries
+    val header: Gen[Seq[Field]] = Gen.chooseNum(0, 8).flatMap(Gen.listOfN(_, field))
+    val rows = (0 until 400).map { i =>
+      val h = header.pureApply(Gen.Parameters.default, Seed(i.toLong))
+      (i, if (i % 50 == 7) null else h) // and null arrays
+    }
+    // a local table runs the kernels interpreted (the optimizer folds
+    // the projection into the relation); an RDD-backed one runs them in
+    // generated code
+    val local = rows.toDF("i", "fields")
+    val generated = spark.createDataFrame(local.rdd, local.schema)
+    val targets = Seq("warc-type", "KEY", "Content-Length", "stra\u00dfe", "strasse",
+      "i\u0307d", "\u0130d", "ID", "\u03c3\u03c2", "")
+    for (d <- Seq(local, generated); t <- targets) {
+      val cols = reference($"fields", t) ++ kernels($"fields", t)
+      val got = d.select($"i" +: cols: _*).collect()
+      assert(got.length == rows.length)
+      got.foreach { r =>
+        val (ref, ker) = (0 until 6).map(k => (r.get(1 + k), r.get(7 + k))).unzip
+        assert(ker == ref, s"target=$t row=${r.getInt(0)} fields=${rows(r.getInt(0))._2}")
+      }
+    }
+  }
 }
 
 class FilterOpSpec extends AnyFunSuite {

@@ -681,6 +681,51 @@ class VerifyOpSpec extends AnyFunSuite {
     assert(segments == Set(("<o:x>", "missing_segment")))
     assert(spark.sharedState.cacheManager.isEmpty)
   }
+
+  test("verify and extract plans: no ScalaUDF or lambda; every Project, Filter " +
+    "and Generate runs in whole-stage codegen") {
+    import org.apache.spark.sql.catalyst.expressions.{LambdaFunction, ScalaUDF}
+    import org.apache.spark.sql.execution._
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    // RDD-backed, as the split read is: over a local table the optimizer
+    // folds projections into the relation and no operator is left to
+    // check. Two segments of a gap chain with a dangling reference, so no
+    // result is empty (AQE replaces an empty stage's plan)
+    val segments = Seq(1, 3).map(n => graft.core.WarcRecord(1000L + n, "f", "WARC/1.1",
+      Seq(Field("WARC-Record-ID", s"<urn:s:$n>"), Field("WARC-Type", "continuation"),
+        Field("Content-Length", "0"), Field("WARC-Segment-Number", n.toString),
+        Field("WARC-Segment-Origin-ID", "<o:gap>"), Field("WARC-Concurrent-To", "<urn:gone>")),
+      Array.emptyByteArray))
+    val records = spark.createDataset(spark.sparkContext.parallelize(
+      Synth.warcRecords(round = 0, n = 100) ++ segments, 2)).toDF()
+    // (operator, inside a codegen stage) for every operator of the
+    // final executed plan, through AQE query stages
+    def walk(p: SparkPlan, inStage: Boolean): Seq[(SparkPlan, Boolean)] = p match {
+      case a: AdaptiveSparkPlanExec => walk(a.executedPlan, inStage = false)
+      case q: QueryStageExec => walk(q.plan, inStage = false)
+      case w: WholeStageCodegenExec => walk(w.child, inStage = true)
+      case i: InputAdapter => walk(i.child, inStage = false)
+      case other => (other, inStage) +: other.children.flatMap(walk(_, inStage))
+    }
+    val plans = Seq(
+      "problems" -> VerifyOp.problems(records),
+      "missingReferences" -> VerifyOp.missingReferences(records),
+      "segmentProblems" -> VerifyOp.segmentProblems(records),
+      "extract" -> graft.ops.ExtractOp.extract(records))
+    for ((name, df) <- plans) {
+      assert(df.collect().nonEmpty, name)
+      val nodes = walk(df.queryExecution.executedPlan, inStage = false)
+      val udfs = nodes.flatMap(_._1.expressions).flatMap(_.collect {
+        case e @ (_: ScalaUDF | _: LambdaFunction) => e.prettyName
+      })
+      assert(udfs.isEmpty, s"$name runs $udfs")
+      val outside = nodes.collect {
+        case (n @ (_: ProjectExec | _: FilterExec | _: GenerateExec), false) => n.nodeName
+      }
+      assert(outside.isEmpty, s"$name: $outside outside whole-stage codegen")
+      assert(nodes.exists(_._1.isInstanceOf[ProjectExec]), s"$name has no Project")
+    }
+  }
 }
 
 class SynthAndMultimodalSpec extends AnyFunSuite {

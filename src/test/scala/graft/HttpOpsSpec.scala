@@ -152,4 +152,130 @@ class HttpOpsSpec extends AnyFunSuite {
     // sanity: the same stream under the real cap decodes fine
     assert(HttpOps.decompress("gzip", bomb).exists(_.length == 65536))
   }
+
+  /** One gzip member around `body` with header flags `flg` (FTEXT 1,
+    * FHCRC 2, FEXTRA 4, FNAME 8, FCOMMENT 16; reserved bits pass through).
+    */
+  private def gzipMember(body: Array[Byte], flg: Int, level: Int = 6): Array[Byte] = {
+    val out = new java.io.ByteArrayOutputStream()
+    out.write(Array[Byte](0x1f, 0x8b.toByte, 8, flg.toByte, 1, 2, 3, 4, 0, 3))
+    if ((flg & 4) != 0) { out.write(5); out.write(0); out.write("extra".getBytes(ISO_8859_1)) }
+    if ((flg & 8) != 0) { out.write("name.txt".getBytes(ISO_8859_1)); out.write(0) }
+    if ((flg & 16) != 0) { out.write("a comment".getBytes(ISO_8859_1)); out.write(0) }
+    if ((flg & 2) != 0) {
+      val c = new java.util.zip.CRC32
+      c.update(out.toByteArray)
+      out.write(c.getValue.toInt & 0xff); out.write((c.getValue.toInt >> 8) & 0xff)
+    }
+    out.write(deflateBytes(body, level, raw = true))
+    val c = new java.util.zip.CRC32
+    c.update(body)
+    for (v <- Seq(c.getValue.toInt, body.length); k <- 0 until 4) out.write(v >>> (8 * k))
+    out.toByteArray
+  }
+
+  private def deflateBytes(body: Array[Byte], level: Int, raw: Boolean): Array[Byte] = {
+    val d = new java.util.zip.Deflater(level, raw)
+    d.setInput(body); d.finish()
+    val out = new java.io.ByteArrayOutputStream()
+    val buf = new Array[Byte](4096)
+    while (!d.finished()) out.write(buf, 0, d.deflate(buf))
+    d.end()
+    out.toByteArray
+  }
+
+  /** What the stream-per-body decoder returned: the JDK streams themselves. */
+  private def viaStreams(codec: String, data: Array[Byte]): Either[String, Seq[Byte]] = {
+    import java.io.ByteArrayInputStream
+    import java.util.zip.{GZIPInputStream, Inflater, InflaterInputStream}
+    def all(in: java.io.InputStream) = HttpOps.readAll(in, HttpOps.MaxDecompressedBytes).toSeq
+    if (codec == "gzip")
+      try Right(all(new GZIPInputStream(new ByteArrayInputStream(data))))
+      catch { case e: Exception => Left(s"gzip_error:${e.getClass.getSimpleName}") }
+    else
+      try Right(all(new InflaterInputStream(new ByteArrayInputStream(data))))
+      catch {
+        case _: Exception =>
+          try Right(all(new InflaterInputStream(new ByteArrayInputStream(data), new Inflater(true))))
+          catch { case e: Exception => Left(s"deflate_error:${e.getClass.getSimpleName}") }
+      }
+  }
+
+  private def assertParity(codec: String, data: Array[Byte], what: String): Unit = {
+    val (got, want) = (HttpOps.decompress(codec, data).map(_.toSeq), viaStreams(codec, data))
+    def show(r: Either[String, Seq[Byte]]) = r.map(b => s"${b.length} bytes, hash ${b.hashCode}")
+    assert(got == want, s"$what: ${show(got)} != ${show(want)}")
+  }
+
+  test("gzip and deflate decode as GZIPInputStream / InflaterInputStream do: " +
+    "same body or same error") {
+    val rnd = new scala.util.Random(7)
+    val text = ("the quick brown fox " * 300).getBytes(ISO_8859_1)
+    val noise = Array.fill(5000)(rnd.nextInt(256).toByte)
+    val bodies = Seq(Array.emptyByteArray, "x".getBytes(ISO_8859_1), text, noise)
+    val ok = bodies.map(gzipMember(_, 0))
+    // every header flag and combination, reserved bits included
+    for (flg <- (0 until 32) :+ 0xe0 :+ 0xff; b <- bodies)
+      assertParity("gzip", gzipMember(b, flg), s"flags $flg")
+    // concatenated members
+    assertParity("gzip", ok(2) ++ ok(0) ++ gzipMember(noise, 30), "three members")
+    assertParity("gzip", ok(3) ++ ok(3), "two noise members")
+    val one = ok(2)
+    val n = one.length
+    def flip(at: Int) = { val c = one.clone(); c(at) = (c(at) ^ 1).toByte; c }
+    assertParity("gzip", flip(n - 8), "bad CRC")
+    assertParity("gzip", flip(n - 1), "bad ISIZE")
+    assertParity("gzip", flip(12), "corrupt deflate data")
+    val hcrc = gzipMember(text, 2)
+    assertParity("gzip", { val c = hcrc.clone(); c(10) = (c(10) ^ 1).toByte; c }, "bad header CRC")
+    for (k <- 1 to 12) assertParity("gzip", one.dropRight(k), s"truncated by $k")
+    for (k <- 0 to 12) assertParity("gzip", one.take(k), s"first $k bytes")
+    assertParity("gzip", { val c = one.clone(); c(2) = 9; c }, "method 9")
+    // bytes after the last member: ignored unless a member header parses
+    val headerOnly = one.take(10)
+    for (m <- Seq(one, ok(3)); k <- 0 to 40; junk <- Seq(
+      Array.fill(k)(0.toByte), Array.fill(k)(rnd.nextInt(256).toByte),
+      (headerOnly ++ Array.fill(k)(0.toByte)), (headerOnly ++ noise.take(k))))
+      assertParity("gzip", m ++ junk, s"trailing ${junk.length} bytes")
+
+    val zlib = deflateBytes(text, 6, raw = false)
+    val raw = deflateBytes(noise, 6, raw = true)
+    val withDict = {
+      val d = new java.util.zip.Deflater()
+      d.setDictionary("the quick".getBytes(ISO_8859_1))
+      d.setInput(text); d.finish()
+      val buf = new Array[Byte](65536)
+      buf.take(d.deflate(buf))
+    }
+    for ((data, what) <- Seq(zlib -> "zlib", raw -> "raw deflate fallback",
+      (zlib ++ noise.take(30)) -> "zlib + trailing bytes", zlib.dropRight(1) -> "bad adler",
+      zlib.dropRight(5) -> "truncated zlib", raw.dropRight(3) -> "truncated raw",
+      Array.emptyByteArray -> "empty", noise.take(64) -> "noise", withDict -> "preset dictionary",
+      { val c = zlib.clone(); c(c.length - 1) = (c(c.length - 1) ^ 1).toByte; c } -> "adler flip"))
+      assertParity("deflate", data, what)
+  }
+
+  test("gzip parity on generated member chains, tails and cuts") {
+    val rnd = new scala.util.Random(11)
+    for (i <- 0 until 300) {
+      val members = Seq.fill(1 + rnd.nextInt(3)) {
+        val body = rnd.nextInt(4) match {
+          case 0 => Array.emptyByteArray
+          case 1 => Array.fill(1 + rnd.nextInt(100))(rnd.nextInt(256).toByte)
+          case 2 => Array.fill(500 + rnd.nextInt(3000))(rnd.nextInt(256).toByte)
+          case _ => Array.fill(2000 + rnd.nextInt(20000))((97 + rnd.nextInt(3)).toByte)
+        }
+        gzipMember(body, rnd.nextInt(32), level = rnd.nextInt(10))
+      }
+      var data = members.reduce(_ ++ _) ++ Array.fill(rnd.nextInt(3) * rnd.nextInt(30))(
+        (if (rnd.nextBoolean()) 0 else rnd.nextInt(256)).toByte)
+      if (rnd.nextInt(4) == 0) data = data.dropRight(rnd.nextInt(12))
+      if (rnd.nextInt(4) == 0 && data.nonEmpty) {
+        val at = rnd.nextInt(data.length)
+        data(at) = (data(at) ^ (1 << rnd.nextInt(8))).toByte
+      }
+      assertParity("gzip", data, s"case $i")
+    }
+  }
 }
+

@@ -27,6 +27,37 @@ class WarcCodecSpec extends AnyFunSuite {
     }
   }
 
+  test("a multi-MiB block framed from 1-byte, 7-byte and 64 KiB appends " +
+    "== one append") {
+    val big = Array.tabulate(3 << 20)(i => (i * 31 + (i >> 9)).toByte)
+    val recs = Synth.warcRecords(round = 1, n = 3).zipWithIndex.map { case (r, i) =>
+      val block = if (i == 1) big else r.bytes
+      r.copy(fields = r.fields.map(f =>
+        if (f.name == "Content-Length") f.copy(value = block.length.toString) else f),
+        bytes = block)
+    }
+    val bytes = WarcBytes.encodeRecords(recs)
+    def frame(step: Int): Seq[graft.core.WarcRecord] = {
+      val p = new WarcBytes.RecordParser("big.warc")
+      var off = 0
+      while (off < bytes.length) {
+        val n = math.min(step, bytes.length - off)
+        p.append(bytes, off, n)
+        off += n
+      }
+      p.finish()
+      Iterator.continually(p.next()).takeWhile(_.isDefined).flatten.toVector
+    }
+    val whole = frame(bytes.length)
+    assert(whole.size == 3 && whole(1).bytes.length == big.length)
+    for (step <- Seq(1, 7, 65536)) {
+      val got = frame(step)
+      assert(got.map(r => (r.position, r.version, r.fields)) ==
+        whole.map(r => (r.position, r.version, r.fields)), s"step $step")
+      got.zip(whole).foreach { case (g, w) => assert(g.bytes.sameElements(w.bytes), s"step $step") }
+    }
+  }
+
   test("record-at-time gzip members round-trip (concatenated-member decode)") {
     val records = Synth.warcRecords(round = 2, n = 50)
     val gz = WarcBytes.encodeGzip(records)
