@@ -547,13 +547,14 @@ object SparkEntry {
     // seen set is the canonicals of the even-orderkey half (the q66
     // parity trick - DuckDB has no xxhash64, so membership is defined
     // by canonical equality, which the oracle CAN recompute). Emitted
-    // with both difference directions vs the bloom-probe path, so the
-    // gate simultaneously checks fused == probe == oracle.
+    // with both difference directions vs the unclustered path (seen
+    // count, then the broadcast anti-join under the budget), so the
+    // gate simultaneously checks fused == unclustered == oracle.
     "q69_fused_seen_round" -> ((s, dir) => {
       val robots = derivedRobots(s, dir).persist() // both rounds' broadcast builds
-      // withHost feeds the bucketed write AND the probe round; seenDf
-      // feeds the clustered save AND the probe path's isEmpty + bloom
-      // build + exact confirm — persist both so each canonicalize +
+      // withHost feeds the bucketed write AND the unclustered round;
+      // seenDf feeds the clustered save AND that round's seen count +
+      // broadcast anti-join — persist both so each canonicalize +
       // distinct runs once instead of 3-4 times (guide §5)
       val withHost = derivedFrontier(s, dir)
         .withColumn("host", Canonical.hostOf(col("url"))).persist()
@@ -593,15 +594,15 @@ object SparkEntry {
     // clustered table, round 2's delta is APPENDED in place
     // (appendSeenClustered — O(delta) write, the Iceberg
     // snapshot-append analogue), and the fused zero-exchange round
-    // over the appended table must equal both the probe path over the
-    // plain union and the oracle's NOT EXISTS over the same membership.
+    // over the appended table must equal both the unclustered round
+    // over the plain union and the oracle's NOT EXISTS over the same membership.
     // Seen halves are canonical-equality-defined (the q66 parity trick)
     // so DuckDB can recompute them: %4==0 saved, %4==1 appended.
     "q70_seen_append_round" -> ((s, dir) => {
       val robots = derivedRobots(s, dir).persist() // both rounds' broadcast builds
-      // withHost feeds the bucketed write AND the probe round; each
-      // quarter feeds its clustered write AND the probe path's isEmpty +
-      // bloom build + exact confirm — persist (and memoize the quarters:
+      // withHost feeds the bucketed write AND the unclustered round;
+      // each quarter feeds its clustered write AND that round's seen
+      // count + broadcast anti-join — persist (and memoize the quarters:
       // `def quarter` built a FRESH plan per call, so the same
       // canonicalize + distinct executed 4-5 times per quarter)
       val withHost = derivedFrontier(s, dir)
@@ -727,8 +728,9 @@ object SparkEntry {
     // Iceberg snapshot checkpoint"; parquet round dirs stand in): round
     // 1 schedules HALF the frontier and checkpoints (batch parquet +
     // seen keys); a FRESH loadSeen reads the seen set back from disk
-    // and round 2 runs the FULL frontier against it — so the bloom
-    // probe + exact confirm must drop exactly round 1's survivors. The
+    // and round 2 runs the FULL frontier against it — so the seen
+    // filter (the broadcast anti-join under the broadcast budget) must
+    // drop exactly round 1's survivors. The
     // oracle recomputes round 2 as schedule(dedupe(full) ANTI-JOIN
     // robots-surviving half-1 keys). CheckpointSpec covers kill-resume
     // equivalence; this gates the parquet round-trip under the driver.

@@ -110,7 +110,7 @@ object CuckooSeenSet {
     */
   def probeAndConfirm(candidates: DataFrame, seenKeys: DataFrame, keyCol: String,
                       buckets: DataFrame, numBuckets: Int,
-                      maxBroadcastBytes: Long = 256L << 20): DataFrame =
+                      maxBroadcastBytes: Long = SeenSet.BroadcastBudgetBytes): DataFrame =
     SeenSet.antiFilter(buckets, seenKeys, keyCol, numBuckets, maxBroadcastBytes,
       buildBytesHint = -1L, seenBytesPerFilterByte = 4, cuckooTest)(candidates)
 }

@@ -15,8 +15,9 @@ import org.apache.spark.sql.types.LongType
   *      stored host-clustered);
   *   2. derive canonical_url and url_key after the exchange and
   *      seen-filter: identity (empty seen set), the co-located
-  *      (host, url_key) anti-join (both tables host-clustered), or a
-  *      bloom probe + exact confirm;
+  *      (host, url_key) anti-join (both tables host-clustered), one
+  *      broadcast anti-join on url_key while the seen keys fit the
+  *      broadcast budget, or past it a bloom probe + exact confirm;
   *   3. robots, then one per-host scan over rows sorted in politeness
   *      order does dedupe, schedule and cap ([[Scheduler.fusedScheduleCap]],
   *      the same scan for every frontier schema);
@@ -34,8 +35,9 @@ import org.apache.spark.sql.types.LongType
   *     partition-local (a range write layout is applied at the sink);
   *   - a degenerate host sorts on one reducer; the sort spills and the
   *     per-host scan keeps O(cap) state (measured cost: [[runRound]]);
-  *   - robots and the bloom table are broadcast (host- and
-  *     filter-cardinality).
+  *   - robots are broadcast (host cardinality), and so is the seen
+  *     filter's build side: the seen keys under the broadcast budget,
+  *     the bloom table past it (filter cardinality).
   */
 object Scheduler {
 
@@ -141,6 +143,11 @@ object Scheduler {
     * The flag is a performance contract only: if the input is NOT
     * actually clustered, Catalyst inserts the exchanges the plan needs
     * and the output is unchanged (see EngineSpec).
+    *
+    * An unclustered round over a non-empty seen set counts it while the
+    * round is built and picks its seen filter by regime ([[seenFilter]]):
+    * under the broadcast budget one broadcast anti-join on url_key, past
+    * it the bloom probe + exact confirm ([[SeenSet.sizedBloomFilter]]).
     */
   def runRound(rawFrontier: DataFrame, seenKeys: DataFrame, robots: DataFrame,
                perHostBudget: Int = 100, numBloomBuckets: Int = 64,
@@ -273,10 +280,21 @@ object Scheduler {
     * `seenKeys`, columns unchanged: the (host, url_key) anti-join when
     * both tables are stored host-clustered, which is co-located
     * (hash(host) on both sides is a subset of the join keys, so neither
-    * side exchanges, and an empty seen table keeps every row); otherwise
-    * identity for an empty seen set, else a bloom filter sized from the
-    * seen count ([[SeenSet.sizedBloomFilter]]). Only the bloom path's
-    * sizing runs a job (the count) while the round is built.
+    * side exchanges, and an empty seen table keeps every row). Otherwise
+    * the seen count picks the filter, and that count is the only job
+    * the filter runs while the round is built:
+    *   - identity for an empty seen set;
+    *   - while the exact keys fit the broadcast budget
+    *     ([[SeenSet.bloomFitsBroadcast]], about 25.6M keys), one
+    *     broadcast left-anti join on url_key. The bloom's confirm would
+    *     probe the same hash table with every candidate, and a bloom has
+    *     no false negatives, so a bloom in front changes no row. The seen
+    *     side is not deduplicated: the count that bounds the broadcast
+    *     includes duplicate rows, and the hash relation tolerates them,
+    *     so the seen side plans no exchange;
+    *   - past the budget, the bloom filter sized from the count
+    *     ([[SeenSet.sizedBloomFilter]]), whose confirm shuffles only
+    *     bloom positives: the 10^10-key regime.
     */
   private def seenFilter(keyed: DataFrame, seenKeys: DataFrame, numBloomBuckets: Int,
                          coLocated: Boolean): DataFrame =
@@ -296,7 +314,10 @@ object Scheduler {
         require(!coLocated,
           "seenHostClustered requires a (host, url_key) seen table — " +
             "write it with saveSeenClustered / checkpointRound")
-        SeenSet.sizedBloomFilter(seenKeys, nSeen, "url_key", numBloomBuckets)(keyed)
+        if (SeenSet.bloomFitsBroadcast(nSeen, numBloomBuckets))
+          keyed.join(broadcast(seenKeys.select(col("url_key").as("__seen_key"))),
+            col("url_key") === col("__seen_key"), "left_anti")
+        else SeenSet.sizedBloomFilter(seenKeys, nSeen, "url_key", numBloomBuckets)(keyed)
       }
     }
 

@@ -31,6 +31,14 @@ import scala.collection.mutable
   * reference-integrity anti-join shape, src/verify.rs:230-264), so false
   * positives never drop a URL and the result equals the exact anti-join
   * at any scale / any fpp.
+  *
+  * The bloom is for the regime past the broadcast budget. While the exact
+  * seen keys fit it ([[exactFitsBroadcast]], about 25.6M keys), the
+  * confirm is a broadcast hash anti-join that every candidate probes
+  * anyway, and a bloom without false negatives never changes its rows —
+  * so a frontier round ([[Scheduler.runRound]]) then runs that plain
+  * broadcast anti-join alone and builds no bloom. The gates that call
+  * this object directly (q41, q52, q53, q75) still exercise the filters.
   */
 object SeenSet {
 
@@ -41,6 +49,38 @@ object SeenSet {
     BloomFilter.readFrom(new ByteArrayInputStream(b))
 
   def bucketOf(key: Column, numBuckets: Int): Column = pmod(key, lit(numBuckets.toLong))
+
+  /** The broadcast budget: the most bytes a probe table or an exact
+    * confirm side may broadcast.
+    */
+  val BroadcastBudgetBytes: Long = 256L << 20
+
+  /** Bytes of 8-byte seen keys per byte of a bloom filter sized for them
+    * (~9.6 bits per key at fpp 0.01).
+    */
+  private val BloomKeyBytesPerFilterByte = 7
+
+  /** Whether the exact seen keys fit the broadcast budget, their bytes
+    * bounded by `keyBytesPerFilterByte` × the filter's `filterBytes`:
+    * [[antiFilter]]'s confirm choice and, through [[bloomFitsBroadcast]],
+    * the frontier round's seen-filter regime.
+    */
+  def exactFitsBroadcast(filterBytes: Long, keyBytesPerFilterByte: Int,
+                         budget: Long = BroadcastBudgetBytes): Boolean =
+    filterBytes * keyBytesPerFilterByte <= budget
+
+  /** [[exactFitsBroadcast]] for `nSeen` keys under the bloom
+    * [[sizedBloomFilter]] builds over `numBuckets`.
+    */
+  def bloomFitsBroadcast(nSeen: Long, numBuckets: Int): Boolean =
+    exactFitsBroadcast(estimatedBloomBytes(sizedPerBucket(nSeen, numBuckets), numBuckets),
+      BloomKeyBytesPerFilterByte)
+
+  /** Per-bucket capacity of a bloom sized for `nSeen` keys: nSeen/numBuckets
+    * plus 25%, so the fpp stays at or below the design point.
+    */
+  private def sizedPerBucket(nSeen: Long, numBuckets: Int): Long =
+    math.max(1024L, nSeen * 5L / (4L * numBuckets) + 1L)
 
   /** Upper bound on the serialized bytes of a [[buildBuckets]] table
     * whose filters were created with `expectedPerBucket` capacity: the
@@ -108,23 +148,22 @@ object SeenSet {
     */
   def probeAndConfirm(candidates: DataFrame, seenKeys: DataFrame, keyCol: String,
                       buckets: DataFrame, numBuckets: Int,
-                      maxBroadcastBytes: Long = 256L << 20,
+                      maxBroadcastBytes: Long = BroadcastBudgetBytes,
                       buildBytesHint: Long = -1L): DataFrame =
     antiFilter(buckets, seenKeys, keyCol, numBuckets, maxBroadcastBytes,
-      buildBytesHint, seenBytesPerFilterByte = 7, bloomTest)(candidates)
+      buildBytesHint, BloomKeyBytesPerFilterByte, bloomTest)(candidates)
 
   /** The bloom [[antiFilter]] over `seenKeys`, sized from its known
-    * cardinality `nSeen`: per-bucket capacity = nSeen/numBuckets plus
-    * 25%, so the fpp stays at or below the design point and the table's
-    * bytes are known without a size-probe job. An undersized bucket
-    * would only raise fpp, never change rows.
+    * cardinality `nSeen` ([[sizedPerBucket]]), so the table's bytes are
+    * known without a size-probe job. An undersized bucket would only
+    * raise fpp, never change rows.
     */
   def sizedBloomFilter(seenKeys: DataFrame, nSeen: Long, keyCol: String,
                        numBuckets: Int): DataFrame => DataFrame = {
-    val perBucket = math.max(1024L, nSeen * 5L / (4L * numBuckets) + 1L)
+    val perBucket = sizedPerBucket(nSeen, numBuckets)
     antiFilter(buildBuckets(seenKeys, keyCol, numBuckets, expectedPerBucket = perBucket),
-      seenKeys, keyCol, numBuckets, 256L << 20,
-      estimatedBloomBytes(perBucket, numBuckets), seenBytesPerFilterByte = 7, bloomTest)
+      seenKeys, keyCol, numBuckets, BroadcastBudgetBytes,
+      estimatedBloomBytes(perBucket, numBuckets), BloomKeyBytesPerFilterByte, bloomTest)
   }
 
   /** The filter both seen-set kinds share, built ONCE and applied to any
@@ -140,10 +179,10 @@ object SeenSet {
     * Confirm: the seen keys' bytes are bounded by
     * `seenBytesPerFilterByte` × the filter bytes (8-byte keys against
     * ~9.6 bits per bloom slot, 2 bytes per cuckoo slot). When that bound
-    * fits the broadcast budget, the confirm is ONE broadcast left-anti
-    * join conditioned on `maybe_seen`, which keeps the candidates'
-    * partitioning. Past it, bloom positives alone take the shuffled
-    * anti-join and union back with the negatives.
+    * fits the broadcast budget ([[exactFitsBroadcast]]), the confirm is
+    * ONE broadcast left-anti join conditioned on `maybe_seen`, which keeps
+    * the candidates' partitioning. Past it, bloom positives alone take the
+    * shuffled anti-join and union back with the negatives.
     */
   private[frontier] def antiFilter(buckets: DataFrame, seenKeys: DataFrame, keyCol: String,
                                    numBuckets: Int, maxBroadcastBytes: Long,
@@ -152,7 +191,7 @@ object SeenSet {
     val (bytes, probe) = prober(buckets, numBuckets, maxBroadcastBytes, buildBytesHint, test)
     val seenSide = seenKeys.select(col(keyCol).as("__seen_key")).distinct()
     val key = col(keyCol) === col("__seen_key")
-    if (bytes * seenBytesPerFilterByte <= maxBroadcastBytes) { candidates =>
+    if (exactFitsBroadcast(bytes, seenBytesPerFilterByte, maxBroadcastBytes)) { candidates =>
       probe(candidates, keyCol)
         .join(broadcast(seenSide), col("maybe_seen") && key, "left_anti")
         .drop("maybe_seen")

@@ -8,7 +8,8 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{ArrayType, BooleanType, StringType, StructField, StructType}
+import org.apache.spark.sql.types.{ArrayType, BooleanType, LongType, StringType, StructField,
+  StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
 import java.util.regex.Pattern
@@ -247,20 +248,49 @@ object VerifyOp {
         concat(col("via"), lit(" -> "), col("target_id")).as("detail"))
   }
 
+  private val SegmentType = StructType(Seq(StructField("origin_id", StringType),
+    StructField("n", LongType), StructField("len", LongType),
+    StructField("total_len", LongType)))
+
+  private def lowerName(n: String) = UTF8String.fromString(n.toLowerCase)
+  private val SegmentOriginId = lowerName("WARC-Segment-Origin-ID")
+  private val SegmentNumber = lowerName("WARC-Segment-Number")
+  private val RecordId = lowerName("WARC-Record-ID")
+  private val ContentLength = lowerName("Content-Length")
+  private val SegmentTotalLength = lowerName("WARC-Segment-Total-Length")
+  private val One = UTF8String.fromString("1")
+
+  private def u64OrNull(v: UTF8String): java.lang.Long =
+    if (v == null) null else u64Strict(v)
+
+  /** Kernel of [[segmentProblems]], each header looked up once: the
+    * chain's origin id (the record's own id on segment 1 without an
+    * origin), and the strict-u64 segment number, Content-Length and
+    * declared total length.
+    */
+  def segmentFields(fields: ArrayData): InternalRow = {
+    val number = firstValue(fields, SegmentNumber)
+    val origin = firstValue(fields, SegmentOriginId) match {
+      case null if One == number => firstValue(fields, RecordId)
+      case o => o
+    }
+    InternalRow(origin, u64OrNull(number), u64OrNull(firstValue(fields, ContentLength)),
+      u64OrNull(firstValue(fields, SegmentTotalLength)))
+  }
+
   /** J2 — segment reassembly check (verify.rs:266-319): group continuation
     * chains by origin id; numbers must be contiguous 1..n
     * (`missing_segment`) and sum(len) must equal the declared total on the
     * last segment (`mismatched_segment_length`).
     */
   def segmentProblems(records: DataFrame): DataFrame = {
-    val f = col("fields")
-    val segs = records.select(
-      coalesce(fieldGet(f, "WARC-Segment-Origin-ID"),
-        when(fieldGet(f, "WARC-Segment-Number") === "1", fieldGet(f, "WARC-Record-ID")))
-        .as("origin_id"),
-      getU64Strict(f, "WARC-Segment-Number").as("n"),
-      getU64Strict(f, "Content-Length").as("len"),
-      getU64Strict(f, "WARC-Segment-Total-Length").as("total_len"))
+    // pinned (see [[problems]]): otherwise the filter below is pushed
+    // under the projection with copies of the origin_id and n lookups,
+    // and each header is looked up twice per row
+    val segs = records
+      .select(kernel(VerifyOp, SegmentType, "segmentFields", Seq(col("fields")),
+        pinned = true).as("s"))
+      .select("s.*")
       .where(col("origin_id").isNotNull && col("n").isNotNull)
     // one row per chain, then both optional problems from that row
     def problem(kind: String, detail: Column) =

@@ -55,6 +55,37 @@ class SeenSetSpec extends AnyFunSuite {
         s"bucket table left cached: maxBytes=$maxBytes hint=$hint")
     }
   }
+
+  test("one broadcast budget rule: the confirm choice and the round's regime, at the boundary") {
+    // the largest seen counts whose sized bloom keeps the exact keys
+    // within 256 MiB (filter bytes × 7), from the estimatedBloomBytes formula
+    for ((buckets, last) <- Seq(16 -> 25604851L, 64 -> 25603993L)) {
+      assert(SeenSet.bloomFitsBroadcast(last, buckets), s"$last keys, $buckets buckets")
+      assert(!SeenSet.bloomFitsBroadcast(last + 1, buckets),
+        s"${last + 1} keys, $buckets buckets")
+    }
+    assert(SeenSet.BroadcastBudgetBytes == (256L << 20))
+    assert(SeenSet.exactFitsBroadcast(1000L, 7, budget = 7000L))
+    assert(!SeenSet.exactFitsBroadcast(1000L, 7, budget = 6999L))
+    // antiFilter's confirm makes the same call: a 1000-byte table is
+    // probed through the broadcast either way, and its exact confirm is
+    // the one broadcast anti-join exactly while 1000 × 7 fits the budget;
+    // past it, positives take the shuffled anti-join and union back
+    val candidates = (0L until 300L).map(k => (k, s"url-$k")).toDF("url_key", "url")
+    val seen = (0L until 300L by 3).toDF("url_key")
+    val expected = SeenSet.dedupeExact(candidates, seen, "url_key")
+      .select("url_key").as[Long].collect().sorted
+    for ((budget, shuffled) <- Seq(7000L -> false, 6999L -> true)) {
+      val out = SeenSet.probeAndConfirm(candidates, seen, "url_key",
+        SeenSet.buildBuckets(seen, "url_key", 4, 1000), 4,
+        maxBroadcastBytes = budget, buildBytesHint = 1000L)
+      val unions = out.queryExecution.analyzed.collect {
+        case u: org.apache.spark.sql.catalyst.plans.logical.Union => u
+      }
+      assert(unions.nonEmpty == shuffled, s"budget $budget")
+      assert(out.select("url_key").as[Long].collect().sorted.sameElements(expected))
+    }
+  }
 }
 
 class PolitenessSpec extends AnyFunSuite {
@@ -534,6 +565,14 @@ class PolitenessSpec extends AnyFunSuite {
     val table = spark.table("graft_test_no_jobs")
     val seenTable = Scheduler.loadSeenClustered(spark, s"$dir/seen", buckets = 4)
     val bc = Politeness.robotsBroadcast(Synth.robots(spark, 20).toDF())
+    val (round, jobs) = jobsStarted(Scheduler.runRoundCached(table, seenTable, bc,
+      frontierHostClustered = true, seenHostClustered = true))
+    assert(jobs == 0, s"$jobs jobs ran while the round was built")
+    assert(round.count() > 0)
+  }
+
+  /** `body`'s result and the number of Spark jobs it started. */
+  private def jobsStarted[T](body: => T): (T, Int) = {
     val sc = spark.sparkContext
     val jobs = new java.util.concurrent.atomic.AtomicInteger()
     val listener = new org.apache.spark.scheduler.SparkListener {
@@ -543,12 +582,87 @@ class PolitenessSpec extends AnyFunSuite {
     org.apache.spark.graft.ListenerBus.drain(sc)
     sc.addSparkListener(listener)
     try {
-      val round = Scheduler.runRoundCached(table, seenTable, bc,
-        frontierHostClustered = true, seenHostClustered = true)
+      val out = body
       org.apache.spark.graft.ListenerBus.drain(sc)
-      assert(jobs.get == 0, s"${jobs.get} jobs ran while the round was built")
-      assert(round.count() > 0)
+      (out, jobs.get)
     } finally sc.removeSparkListener(listener)
+  }
+
+  test("under-budget seen round: one broadcast anti-join on url_key, no bloom probe") {
+    import org.apache.spark.sql.catalyst.expressions.ScalaUDF
+    import org.apache.spark.sql.catalyst.plans.LeftAnti
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.exchange.{Exchange, ShuffleExchangeExec}
+    import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
+    val (raw, seen) = parquetFrontierAndSeen("graft-regime-plan", hotRows = 0)
+    val robots = Synth.robots(spark, 30).toDF()
+    withoutAqe {
+      val plan = Scheduler.runRound(raw, seen, robots).queryExecution.executedPlan
+      val antis = plan.collect {
+        case j: BroadcastHashJoinExec if j.joinType == LeftAnti => j
+      }
+      assert(antis.size == 1, s"left-anti broadcast joins: ${antis.size}")
+      val join = antis.head
+      def names(keys: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =
+        keys.flatMap(_.references.map(_.name))
+      assert(names(join.leftKeys) == Seq("url_key") &&
+        names(join.rightKeys) == Seq("__seen_key") && join.condition.isEmpty,
+        s"join on ${names(join.leftKeys)} = ${names(join.rightKeys)}, ${join.condition}")
+      assert(!plan.exists(_.output.exists(_.name == "maybe_seen")), "plans maybe_seen")
+      // the join's own stage: the operators down to the exchanges below it
+      def stage(p: SparkPlan): Seq[SparkPlan] =
+        p +: p.children.filterNot(_.isInstanceOf[Exchange]).flatMap(stage)
+      val udfs = stage(join).flatMap(_.expressions).flatMap(_.collect {
+        case u: ScalaUDF => u.prettyName
+      })
+      assert(udfs.isEmpty, s"the anti-join's stage runs $udfs")
+      assert(join.right.collect { case e: ShuffleExchangeExec => e }.isEmpty,
+        "the seen side exchanges under the broadcast")
+      val ex = frontierExchanges(plan)
+      assert(ex.map(partitionedOn) == Seq(Seq("host")),
+        s"frontier exchanges: ${ex.map(partitionedOn)}")
+    }
+  }
+
+  test("under-budget seen round starts one job while it is built: the seen count") {
+    val (raw, seen) = parquetFrontierAndSeen("graft-regime-jobs", hotRows = 0)
+    val bc = Politeness.robotsBroadcast(Synth.robots(spark, 30).toDF())
+    withoutAqe {
+      val (round, jobs) = jobsStarted(Scheduler.runRoundCached(raw, seen, bc))
+      assert(jobs == 1, s"$jobs jobs ran while the round was built")
+      assert(round.count() > 0)
+    }
+  }
+
+  test("under-budget seen round == dedupeExact composition: duplicated seen keys, " +
+    "null urls, keys seen across two checkpointed rounds") {
+    val base = Synth.frontierSeed(spark, 2400, nHosts = 30).toDF()
+      .select($"url", $"priority_band")
+    val nulls = Seq((null.asInstanceOf[String], 1), (null.asInstanceOf[String], 3))
+      .toDF("url", "priority_band")
+    val robots = Synth.robots(spark, 30).toDF()
+    val dir = java.nio.file.Files.createTempDirectory("graft-regime-rows").toString
+    // round 1 schedules a third of the frontier and the null urls, round
+    // 2 another third against round 1's keys; both checkpoint their keys
+    val part = pmod(xxhash64($"url"), lit(3))
+    Scheduler.checkpointRound(Scheduler.runRound(base.where(part === 0).unionByName(nulls),
+      Scheduler.loadSeen(spark, s"$dir/none"), robots), dir, 1)
+    Scheduler.checkpointRound(Scheduler.runRound(base.where(part =!= 2),
+      Scheduler.loadSeen(spark, dir), robots), dir, 2)
+    val loaded = Scheduler.loadSeen(spark, dir)
+    val seen = loaded.unionByName(loaded.where($"round" === 1))
+    assert(seen.count() > seen.select("url_key").distinct().count())
+    val raw = base.unionByName(nulls).unionByName(
+      Seq(("https://fresh.example.test/a", 0)).toDF("url", "priority_band"))
+      .unionByName(Seq((null.asInstanceOf[String], 0)).toDF("url", "priority_band"))
+    val cols = Seq("url", "canonical_url", "host", "host_seq", "scheduled_ms", "batch_id")
+    val got = Scheduler.runRound(raw, seen, robots).select(cols.map(col): _*)
+    val want = Politeness.fetchBatches(Politeness.schedule(Politeness.applyRobots(
+        Scheduler.dedupeWithinBatch(SeenSet.dedupeExact(Scheduler.canonicalize(raw), seen,
+          "url_key")), robots)), 100)
+      .select(cols.map(col): _*)
+    assert(got.count() > 0)
+    assert(got.exceptAll(want).isEmpty && want.exceptAll(got).isEmpty)
   }
 
   test("maxPerHostPerRound = 0 on a seen round keeps every unseen row") {
@@ -639,6 +753,35 @@ class VerifyOpSpec extends AnyFunSuite {
       !graft.core.Digests.computeText("sha1", r.bytes).contains(declared)
     }
     assert(mismatches == 1)
+  }
+
+  test("segmentProblems looks each header up once per row") {
+    import org.apache.spark.sql.catalyst.expressions.Literal
+    import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
+    // RDD-backed (see the whole-stage codegen test below), with a gap chain
+    val segments = Seq(1, 3).map(n => graft.core.WarcRecord(2000L + n, "f", "WARC/1.1",
+      Seq(Field("WARC-Record-ID", s"<urn:s:$n>"), Field("WARC-Type", "continuation"),
+        Field("Content-Length", "0"), Field("WARC-Segment-Number", n.toString),
+        Field("WARC-Segment-Origin-ID", "<o:gap>")),
+      Array.emptyByteArray))
+    val records = spark.createDataset(spark.sparkContext.parallelize(
+      Synth.warcRecords(round = 0, n = 50) ++ segments, 2)).toDF()
+    val aqeBefore = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try {
+      val df = VerifyOp.segmentProblems(records)
+      assert(df.collect().map(_.getString(1)).toSeq == Seq("missing_segment"))
+      // every graft kernel call with its literal arguments (a lookup's name)
+      val calls = df.queryExecution.executedPlan.flatMap(_.expressions)
+        .flatMap(_.collect {
+          case i: StaticInvoke if i.staticObject.getName.startsWith("graft.") =>
+            (i.functionName +: i.arguments.collect { case l: Literal => l.toString })
+              .mkString(" ")
+        })
+      assert(calls.nonEmpty, "no lookup kernel in the plan")
+      val repeated = calls.groupBy(identity).collect { case (c, n) if n.size > 1 => c }
+      assert(repeated.isEmpty, s"looked up more than once per row: $repeated")
+    } finally spark.conf.set("spark.sql.adaptive.enabled", aqeBefore)
   }
 
   test("segment gap and total-length checks (verify.rs:266-319)") {
