@@ -744,9 +744,7 @@ object SparkEntry {
         Scheduler.loadSeen(s, ck + "-none"), robots)
       Scheduler.checkpointRound(r1, ck, 1)
       val seen = Scheduler.loadSeen(s, ck) // parquet, from disk
-      // round 2's frontier feeds the hot-host count AND the main
-      // pipeline — persist the one derivation (guide §5)
-      val r2 = Scheduler.runRound(derivedFrontier(s, dir).persist(), seen, robots)
+      val r2 = Scheduler.runRound(derivedFrontier(s, dir), seen, robots)
       r2.select(col("canonical_url"), col("host"), col("host_seq"),
         col("scheduled_ms").cast("long").as("scheduled_ms"))
     }),
@@ -1398,9 +1396,6 @@ object SparkEntry {
       graft.sources.WarcSource.write(s.createDataset(written).coalesce(1), dir, "gzip")
       val posB = s.sparkContext.broadcast(expectedPos)
       val offsetOk = udf { (idx: Long, pos: Long) => posB.value.get(idx).contains(pos) }
-      val digestOk = udf { (declared: String, bytes: Array[Byte]) =>
-        Digests.computeText("sha1", bytes).contains(declared)
-      }
       val idxCol = regexp_extract(
         FieldOps.fieldGet(col("fields"), "WARC-Record-ID"), "-([0-9]{8})>$", 1).cast("long")
       val ratOk = graft.sources.WarcSource.fileStats(s, dir)
@@ -1408,7 +1403,7 @@ object SparkEntry {
       graft.sources.WarcSource.read(s, dir).toDF()
         .select(idxCol.as("record_idx"),
           offsetOk(idxCol, col("position")).as("offset_ok"),
-          digestOk(FieldOps.fieldGet(col("fields"), "WARC-Block-Digest"),
+          VerifyOp.blockDigestOk(FieldOps.fieldGet(col("fields"), "WARC-Block-Digest"),
             col("bytes")).as("digest_ok"))
         .crossJoin(broadcast(ratOk))
     }),
@@ -1433,12 +1428,9 @@ object SparkEntry {
       val recId = regexp_extract(
         FieldOps.fieldGet(col("fields"), "WARC-Record-ID"), "<urn:split:([0-9]+)>", 1)
         .cast("long")
-      val digestOk = udf { (declared: String, bytes: Array[Byte]) =>
-        Digests.computeText("sha1", bytes).contains(declared)
-      }
       val base = ds.select(recId.as("rec_id"),
         (length(col("bytes")) === (lit(1600) + pmod(recId, lit(7)) * 137)).as("len_ok"),
-        digestOk(FieldOps.fieldGet(col("fields"), "WARC-Block-Digest"),
+        VerifyOp.blockDigestOk(FieldOps.fieldGet(col("fields"), "WARC-Block-Digest"),
           col("bytes")).as("digest_ok"),
         col("position"), spark_partition_id().as("pid"))
         .persist()
@@ -1563,12 +1555,9 @@ object SparkEntry {
       val recId = regexp_extract(
         FieldOps.fieldGet(col("fields"), "WARC-Record-ID"), "<urn:zsplit:([0-9]+)>", 1)
         .cast("long")
-      val digestOk = udf { (declared: String, bytes: Array[Byte]) =>
-        Digests.computeText("sha1", bytes).contains(declared)
-      }
       val base = ds.select(recId.as("rec_id"),
         (length(col("bytes")) === (lit(600) + pmod(recId, lit(7)) * 53)).as("len_ok"),
-        digestOk(FieldOps.fieldGet(col("fields"), "WARC-Block-Digest"),
+        VerifyOp.blockDigestOk(FieldOps.fieldGet(col("fields"), "WARC-Block-Digest"),
           col("bytes")).as("digest_ok"),
         col("position"), spark_partition_id().as("pid"))
         .persist()
@@ -1594,9 +1583,6 @@ object SparkEntry {
       val recId = regexp_extract(
         FieldOps.fieldGet(col("fields"), "WARC-Record-ID"), "<urn:fleet:([0-9]+)>", 1)
         .cast("long")
-      val digestOk = udf { (declared: String, bytes: Array[Byte]) =>
-        Digests.computeText("sha1", bytes).contains(declared)
-      }
       val wantLen = when(pmod(recId, lit(5)) === 0,
           lit(700) + pmod(recId, lit(7)) * 31)
         .otherwise(lit(500) + pmod(recId, lit(7)) * 29)
@@ -1604,7 +1590,7 @@ object SparkEntry {
         .otherwise(lit("b.warc.zst"))
       val base = ds.select(recId.as("rec_id"),
         (length(col("bytes")) === wantLen).as("len_ok"),
-        digestOk(FieldOps.fieldGet(col("fields"), "WARC-Block-Digest"),
+        VerifyOp.blockDigestOk(FieldOps.fieldGet(col("fields"), "WARC-Block-Digest"),
           col("bytes")).as("digest_ok"),
         col("file").endsWith(fromFile).as("file_ok"),
         spark_partition_id().as("pid"))
@@ -1666,14 +1652,11 @@ object SparkEntry {
       val recId = regexp_extract(
         FieldOps.fieldGet(col("fields"), "WARC-Record-ID"), "<urn:(zz|br):([0-9]+)>", 2)
         .cast("long")
-      val digestOk = udf { (declared: String, bytes: Array[Byte]) =>
-        Digests.computeText("sha1", bytes).contains(declared)
-      }
       val wantLen = when(urn === "zz", lit(900) + pmod(recId, lit(7)) * 41)
         .otherwise(lit(800) + pmod(recId, lit(7)) * 37)
       ds.select(recId.as("rec_id"), urn.as("wrapper"),
         (length(col("bytes")) === wantLen).as("len_ok"),
-        digestOk(FieldOps.fieldGet(col("fields"), "WARC-Block-Digest"),
+        VerifyOp.blockDigestOk(FieldOps.fieldGet(col("fields"), "WARC-Block-Digest"),
           col("bytes")).as("digest_ok"),
         (col("file").endsWith(lit(".warc.zz")) === (urn === "zz")).as("file_ok"))
     }),

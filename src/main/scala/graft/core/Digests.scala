@@ -2,6 +2,7 @@ package graft.core
 
 import java.nio.charset.StandardCharsets
 import java.security.MessageDigest
+import java.util.Locale
 import java.util.zip.{CRC32, CRC32C}
 import org.apache.commons.codec.digest.Blake3
 
@@ -34,7 +35,7 @@ object Digests {
     "blake2s", "blake2b", "blake3", "xxh3")
 
   /** Compatibility labels (digest.rs:149-157). */
-  def normalizeLabel(label: String): String = label.toLowerCase match {
+  def normalizeLabel(label: String): String = label.toLowerCase(Locale.ROOT) match {
     case "sha-1"   => "sha1"
     case "sha-224" => "sha224"
     case "sha-256" => "sha256"
@@ -116,10 +117,10 @@ object Digests {
       val hexLen = if (nopad.length % 2 == 0) Some(nopad.length / 2) else None
       val decoded =
         if (b32Len.contains(expected) && hexLen.contains(expected)) {
-          if (encoded.endsWith("=")) base32Decode(nopad.toUpperCase)
-          else hexDecode(encoded.toLowerCase)
-        } else if (b32Len.contains(expected)) base32Decode(nopad.toUpperCase)
-        else hexDecode(encoded.toLowerCase)
+          if (encoded.endsWith("=")) base32Decode(nopad.toUpperCase(Locale.ROOT))
+          else hexDecode(encoded.toLowerCase(Locale.ROOT))
+        } else if (b32Len.contains(expected)) base32Decode(nopad.toUpperCase(Locale.ROOT))
+        else hexDecode(encoded.toLowerCase(Locale.ROOT))
       decoded.filter(_.length == expected).map(v => (algo, v))
     }
   }

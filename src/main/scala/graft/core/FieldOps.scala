@@ -8,6 +8,8 @@ import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.{ArrayType, BooleanType, DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
+import java.util.Locale
+
 /** Column-level operations over the ordered, case-insensitive header
   * multimap (`array<struct<name:string, value:string>>`, the shape of
   * `Seq[Field]`).
@@ -32,7 +34,7 @@ object FieldOps {
 
   private def lookup(fields: Column, name: String, method: String,
                      dataType: DataType): Column =
-    kernel(FieldOps, dataType, method, Seq(fields, lit(name.toLowerCase)))
+    kernel(FieldOps, dataType, method, Seq(fields, lit(name.toLowerCase(Locale.ROOT))))
 
   /** First value for `name`, case-insensitive; null when absent. */
   def fieldGet(fields: Column, name: String): Column =
@@ -69,21 +71,21 @@ object FieldOps {
     kernel(FieldOps, LongType, "u64Strict", Seq(fieldGet(fields, name)))
 
   // ---- kernels: static methods over Catalyst's internal values, public
-  //      because the generated code calls them ----
+  //      because the generated code calls them; the per-record rule
+  //      engines (`VerifyOp`, `ExtractOp`, `Multimodal`) look names up
+  //      through them too ----
 
-  /** The header array as `Field`s, for the per-record rule engines
-    * (`VerifyOp`, `ExtractOp`); a null entry becomes `Field(null, null)`.
+  private val targets = new java.util.concurrent.ConcurrentHashMap[String, UTF8String]
+
+  /** `name` as a lookup target of the kernels below: lowercased, built
+    * once per name. `get` first: `computeIfAbsent` locks the bin of a key
+    * that is not first in it, on every call.
     */
-  def toFields(fields: ArrayData): IndexedSeq[Field] =
-    scala.collection.immutable.ArraySeq.unsafeWrapArray(
-      Array.tabulate(fields.numElements()) { i =>
-        if (fields.isNullAt(i)) Field(null, null)
-        else {
-          val f = fields.getStruct(i, 2)
-          Field(if (f.isNullAt(0)) null else f.getUTF8String(0).toString,
-            if (f.isNullAt(1)) null else f.getUTF8String(1).toString)
-        }
-      })
+  def target(name: String): UTF8String = {
+    val t = targets.get(name)
+    if (t != null) t
+    else targets.computeIfAbsent(name, n => UTF8String.fromString(n.toLowerCase(Locale.ROOT)))
+  }
 
   /** `lower(n) = t` for a lowercased target `t`: byte compare with ASCII
     * case folding, Spark's `lower` for a name with any non-ASCII byte
@@ -144,8 +146,11 @@ object FieldOps {
     new GenericArrayData(out.result())
   }
 
+  /** True when some entry's name is `t`: [[containsName]] without the null. */
+  def hasName(fields: ArrayData, t: UTF8String): Boolean = indexOfName(fields, t, 0) >= 0
+
   def containsName(fields: ArrayData, t: UTF8String): java.lang.Boolean = {
-    if (indexOfName(fields, t, 0) >= 0) return java.lang.Boolean.TRUE
+    if (hasName(fields, t)) return java.lang.Boolean.TRUE
     var i = 0
     while (i < fields.numElements()) {
       if (fields.isNullAt(i) || fields.getStruct(i, 2).isNullAt(0)) return null
@@ -289,6 +294,13 @@ object FieldOps {
         .as("parameters")
     )
   }
+
+  /** The [[mediaType]] grammar as one regex over a whole value: type,
+    * subtype, then the `;name=value` parameter list (group 3).
+    */
+  private[graft] val MediaTypeRe =
+    ("^([!#$%&'*+.^_`|~0-9A-Za-z-]+)/([!#$%&'*+.^_`|~0-9A-Za-z-]+)" +
+      "((\\s*;\\s*[!#$%&'*+.^_`|~0-9A-Za-z-]+=[!#$%&'*+.^_`|~0-9A-Za-z-]+)*)$").r
 
   /** First media-type parameter value by (case-sensitive) name; null when
     * absent or the media type is invalid.

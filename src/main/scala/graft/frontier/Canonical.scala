@@ -3,6 +3,8 @@ package graft.frontier
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
+import java.util.Locale
+
 /** URL canonicalization + frontier key derivation (north rule F16).
   *
   * Canonical form, applied as pure Catalyst column expressions so the whole
@@ -31,7 +33,7 @@ object Canonical {
     val noFrag = if (hashIdx >= 0) url.substring(0, hashIdx) else url
     val schemeEnd = noFrag.indexOf(':')
     if (schemeEnd < 0) return noFrag // no scheme: pass through sans fragment
-    val scheme = noFrag.substring(0, schemeEnd).toLowerCase
+    val scheme = noFrag.substring(0, schemeEnd).toLowerCase(Locale.ROOT)
     if (!noFrag.regionMatches(schemeEnd, "://", 0, 3))
       return scheme + noFrag.substring(schemeEnd)
     val authStart = schemeEnd + 3
@@ -49,7 +51,7 @@ object Canonical {
       else if (portDigits) (hostPort.substring(0, colon), "") // bare trailing ':'
       else (hostPort, "")
     val host = {
-      val h = rawHost.toLowerCase
+      val h = rawHost.toLowerCase(Locale.ROOT)
       if (h.endsWith(".")) h.substring(0, h.length - 1) else h
     }
     val keepPort =
@@ -100,7 +102,7 @@ object Canonical {
       if (digits) hostEnd = lastColon // ":" + digits (or bare ":") = port
     }
     if (hostEnd > hpStart && url.charAt(hostEnd - 1) == '.') hostEnd -= 1
-    url.substring(hpStart, hostEnd).toLowerCase
+    url.substring(hpStart, hostEnd).toLowerCase(Locale.ROOT)
   }
 
   private val hostUdf = udf((u: String) => hostOfString(u))

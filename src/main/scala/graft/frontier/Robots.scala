@@ -3,6 +3,8 @@ package graft.frontier
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import java.util.Locale
+
 /** robots.txt parser + matcher (RFC 9309 Robots Exclusion Protocol, with
   * the widely-deployed `Crawl-delay` extension) — feeds the politeness
   * stage's broadcast robots cache (north rule: "robots.txt cache
@@ -55,12 +57,12 @@ object Robots {
       }
       val colon = line.indexOf(':')
       if (colon > 0) {
-        val key = line.substring(0, colon).trim.toLowerCase
+        val key = line.substring(0, colon).trim.toLowerCase(Locale.ROOT)
         val value = line.substring(colon + 1).trim
         key match {
           case "user-agent" =>
             if (sawRules) flush() // a new group starts after rules
-            agents :+= value.toLowerCase
+            agents :+= value.toLowerCase(Locale.ROOT)
           case "allow" => sawRules = true; if (value.nonEmpty) allow :+= value
           case "disallow" => sawRules = true; if (value.nonEmpty) disallow :+= value
           case "crawl-delay" =>
@@ -82,7 +84,7 @@ object Robots {
     * Allow/Disallow lines. Crawl-delay: first defined wins.
     */
   def select(groups: Seq[Group], userAgent: String): Option[Group] = {
-    val ua = userAgent.toLowerCase
+    val ua = userAgent.toLowerCase(Locale.ROOT)
     val scored = for {
       g <- groups
       a <- g.agents

@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.core.FieldOps.toFields
+import graft.core.FieldOps.{MediaTypeRe, firstValue, hasName, target}
 import graft.functions.GraftFunctions.{kernel, xxh3}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.catalyst.InternalRow
@@ -8,6 +8,8 @@ import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
+
+import java.util.Locale
 
 /** `extract` — payload extraction with decoder routing
   * (reference src/extract.rs + src/app/extract.rs).
@@ -79,11 +81,8 @@ object ExtractOp {
     utf8Array(if (isConversion && pc.nonEmpty) pc.init :+ UrlPath.markConversion(pc.last) else pc)
   }
 
-  private val MediaTypeRe = ("^([!#$%&'*+.^_`|~0-9A-Za-z-]+)/([!#$%&'*+.^_`|~0-9A-Za-z-]+)" +
-    "((\\s*;\\s*[!#$%&'*+.^_`|~0-9A-Za-z-]+=[!#$%&'*+.^_`|~0-9A-Za-z-]+)*)$").r
-
   /** The routing decision + every header `extract` consumes, in ONE
-    * array traversal per row: (decoder_kind, WARC-Target-URI,
+    * kernel call per row: (decoder_kind, WARC-Target-URI,
     * is-conversion, has WARC-Truncated). The one routing rule —
     * [[decoderKind]] is its first field. A Column formulation (a `when`
     * chain over higher-order-function lookups) planned as ~15
@@ -92,18 +91,17 @@ object ExtractOp {
     * construction into EVERY lookup, and HOF lambdas are CodegenFallback
     * — measured as the dominant cost of the crawl→table bridge (q59:
     * ~1.4 ms/row of a 43 KB inlined filter condition). Same rule-engine-
-    * as-one-kernel treatment as [[VerifyOp.checkFields]]: first
-    * case-insensitive header match; the media-type grammar and the
+    * as-one-kernel treatment as [[VerifyOp.checkRecord]]: names looked
+    * up through the `FieldOps` kernels; the media-type grammar and the
     * case-sensitive msgtype compare mirror
     * [[graft.core.FieldOps.mediaType]]; oracle-gated end to end (q33,
     * q59, q64).
     */
-  def routeRecord(fieldArray: ArrayData): InternalRow = {
-    val fields = toFields(fieldArray)
-    def get(n: String): Option[String] = fields.find(_.name.equalsIgnoreCase(n)).map(_.value)
-    def has(n: String): Boolean = fields.exists(_.name.equalsIgnoreCase(n))
-    val recType = get("WARC-Type").map(_.toLowerCase).getOrElse("")
-    val uri = get("WARC-Target-URI")
+  def routeRecord(fields: ArrayData): InternalRow = {
+    def get(n: String): Option[String] = Option(firstValue(fields, target(n))).map(_.toString)
+    def has(n: String): Boolean = hasName(fields, target(n))
+    val recType = get("WARC-Type").map(_.toLowerCase(Locale.ROOT)).getOrElse("")
+    val uri = firstValue(fields, target("WARC-Target-URI"))
     val isHttpResponse = get("Content-Type").exists {
       case MediaTypeRe(t, s, params, _) =>
         t.equalsIgnoreCase("application") && s.equalsIgnoreCase("http") && {
@@ -118,11 +116,10 @@ object ExtractOp {
     }
     val kind =
       if (has("WARC-Segment-Number")) "none"
-      else if (recType == "response" && uri.isDefined && isHttpResponse) "http"
-      else if ((recType == "resource" || recType == "conversion") && uri.isDefined) "identity"
+      else if (recType == "response" && uri != null && isHttpResponse) "http"
+      else if ((recType == "resource" || recType == "conversion") && uri != null) "identity"
       else "none"
-    InternalRow(UTF8String.fromString(kind), UTF8String.fromString(uri.orNull),
-      recType == "conversion", has("WARC-Truncated"))
+    InternalRow(UTF8String.fromString(kind), uri, recType == "conversion", has("WARC-Truncated"))
   }
 
   /** Extract eligible records: adds decoder_kind, extracted bytes,

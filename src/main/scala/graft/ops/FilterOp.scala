@@ -4,6 +4,8 @@ import graft.core.FieldOps
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
+import java.util.Locale
+
 /** FieldFilter → Catalyst Column compiler (reference src/app/filter.rs).
   *
   * Rule forms (filter.rs:23-57, split on the FIRST ':'):
@@ -34,13 +36,13 @@ object FilterOp {
   final case class ValueRule(name: String, value: String) extends Rule {
     def matches(fields: Column): Column =
       exists(fields, f =>
-        lower(f.getField("name")) === lit(name.toLowerCase) &&
+        lower(f.getField("name")) === lit(name.toLowerCase(Locale.ROOT)) &&
           f.getField("value") === lit(value))
   }
   final case class RegexRule(name: String, regex: String) extends Rule {
     def matches(fields: Column): Column =
       exists(fields, f =>
-        lower(f.getField("name")) === lit(name.toLowerCase) &&
+        lower(f.getField("name")) === lit(name.toLowerCase(Locale.ROOT)) &&
           f.getField("value").rlike(regex))
   }
 

@@ -1,8 +1,11 @@
 package graft.ops
 
-import java.io.{ByteArrayInputStream, ByteArrayOutputStream, EOFException}
+import graft.core.{ByteSink, Gzip}
+
+import java.io.{ByteArrayInputStream, ByteArrayOutputStream, IOException}
 import java.nio.charset.StandardCharsets
-import java.util.zip.{CRC32, DataFormatException, Inflater, ZipException}
+import java.util.Locale
+import java.util.zip.Inflater
 
 /** HTTP/1.1 payload decoder (reference src/http/h1/ — the "query execution
   * inside a cell"). The reference's sans-IO incremental state machine
@@ -53,7 +56,7 @@ object HttpOps {
     * (http/h1/header/fields.rs:15-31).
     */
   def commaList(v: String): Seq[String] =
-    v.split(',').map(_.trim.toLowerCase).filter(_.nonEmpty).toSeq
+    v.split(',').map(_.trim.toLowerCase(Locale.ROOT)).filter(_.nonEmpty).toSeq
 
   def parseResponse(payload: Array[Byte]): HttpParsed = {
     val headerEnd = indexOfSeq(payload, Crlf2)
@@ -250,96 +253,33 @@ object HttpOps {
 
   private val inflaters = ThreadLocal.withInitial[Inflaters](() => new Inflaters)
 
-  /** Inflate the inflater's input to the end of its stream into `out`,
-    * as `InflaterInputStream.read` does: stop at the stream end (or a
-    * preset-dictionary request), EOFException when the input runs out
-    * first, ZipException on corrupt data. Adds the output to `crc`
-    * unless it is null.
-    */
-  private def inflateTo(inf: Inflater, out: ByteArrayOutputStream, crc: CRC32): Unit = {
-    val buf = inflaters.get.buf
-    while (!inf.finished() && !inf.needsDictionary()) {
-      val n =
-        try inf.inflate(buf)
-        catch {
-          case e: DataFormatException =>
-            throw new ZipException(Option(e.getMessage).getOrElse("Invalid ZLIB data format"))
-        }
-      if (n > 0) {
-        if (out.size.toLong + n > MaxDecompressedBytes) throw new OutputTooLarge
-        out.write(buf, 0, n)
-        if (crc != null) crc.update(buf, 0, n)
-      } else if (inf.needsInput()) throw new EOFException("Unexpected end of ZLIB input stream")
+  /** A decoded body, held to the decompression-bomb guard. */
+  private final class Body extends ByteArrayOutputStream with ByteSink {
+    def append(chunk: Array[Byte], off: Int, n: Int): Unit = {
+      if (size.toLong + n > MaxDecompressedBytes) throw new OutputTooLarge
+      write(chunk, off, n)
     }
   }
 
   /** One whole zlib or raw-deflate stream; bytes after its end are ignored. */
   private def inflateAll(inf: Inflater, data: Array[Byte]): Array[Byte] = {
-    val out = new ByteArrayOutputStream()
+    val out = new Body
     inf.reset()
     inf.setInput(data)
-    inflateTo(inf, out, null)
+    Gzip.inflate(inf, inflaters.get.buf, out, null)
     out.toByteArray
   }
 
-  private def le16(d: Array[Byte], i: Int): Int = (d(i) & 0xff) | (d(i + 1) & 0xff) << 8
-
-  private def le32(d: Array[Byte], i: Int): Long = (le16(d, i) | le16(d, i + 2) << 16) & 0xffffffffL
-
-  /** `GZIPInputStream.readHeader` at `p0`: the offset just past the header.
-    * EOFException when it is cut short; ZipException on a bad magic,
-    * method or header CRC (FHCRC). FEXTRA, FNAME and FCOMMENT are skipped.
-    */
-  private def gzipHeaderEnd(d: Array[Byte], p0: Int): Int = {
-    var p = p0
-    def need(n: Int): Unit = if (d.length - p < n) throw new EOFException
-    need(2)
-    if (le16(d, p) != 0x8b1f) throw new ZipException("Not in GZIP format")
-    p += 2
-    need(1)
-    if (d(p) != 8) throw new ZipException("Unsupported compression method")
-    need(2)
-    val flg = d(p + 1)
-    p += 2
-    need(6)
-    p += 6 // MTIME, XFL, OS
-    if ((flg & 4) != 0) { need(2); val xlen = le16(d, p); p += 2; need(xlen); p += xlen }
-    def skipZeroTerminated(): Unit = { need(1); while (d(p) != 0) { p += 1; need(1) }; p += 1 }
-    if ((flg & 8) != 0) skipZeroTerminated()
-    if ((flg & 16) != 0) skipZeroTerminated()
-    if ((flg & 2) != 0) {
-      val crc = new CRC32
-      crc.update(d, p0, p - p0)
-      need(2)
-      if (le16(d, p) != (crc.getValue & 0xffff)) throw new ZipException("Corrupt GZIP header")
-      p += 2
-    }
-    p
-  }
-
-  /** `GZIPInputStream` read to the end, over a byte array: every
-    * member's CRC32 and ISIZE trailer is checked, and after each trailer
-    * another member is read when a header parses there; when none does,
-    * the stream ends cleanly and the bytes left are ignored.
+  /** `GZIPInputStream` read to the end, over a byte array: after each
+    * member another member is read when a header parses there; when none
+    * does, the stream ends cleanly and the bytes left are ignored.
     */
   private def gunzip(data: Array[Byte]): Array[Byte] = {
-    val inf = inflaters.get.raw
-    val out = new ByteArrayOutputStream()
-    val crc = new CRC32
-    var pos = gzipHeaderEnd(data, 0)
-    while (pos >= 0) {
-      inf.reset()
-      crc.reset()
-      inf.setInput(data, pos, data.length - pos)
-      inflateTo(inf, out, crc)
-      val end = pos + inf.getBytesRead.toInt
-      if (data.length - end < 4) throw new EOFException
-      if (le32(data, end) != crc.getValue) throw new ZipException("Corrupt GZIP trailer")
-      if (data.length - end < 8) throw new EOFException
-      if (le32(data, end + 4) != (inf.getBytesWritten & 0xffffffffL))
-        throw new ZipException("Corrupt GZIP trailer")
-      pos = try gzipHeaderEnd(data, end + 8) catch { case _: java.io.IOException => -1 }
-    }
+    val z = inflaters.get
+    val out = new Body
+    var pos = Gzip.inflateMember(data, 0, z.raw, z.buf, out)
+    while (try { Gzip.headerEnd(data, pos); true } catch { case _: IOException => false })
+      pos = Gzip.inflateMember(data, pos, z.raw, z.buf, out)
     out.toByteArray
   }
 

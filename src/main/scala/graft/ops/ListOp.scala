@@ -4,6 +4,8 @@ import graft.core.FieldOps
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import java.util.Locale
+
 /** `list` projection (reference src/app/list.rs:28-43): per record emit the
   * chosen header fields plus the pseudo-columns `:position` and `:file`;
   * a missing field projects as the empty string (list.rs:38-41).
@@ -31,5 +33,5 @@ object ListOp {
     */
   def list(records: DataFrame, names: Seq[String] = DefaultFields): DataFrame =
     records.select(names.map(n =>
-      projectField(n).as(n.stripPrefix(":").toLowerCase.replace("-", "_"))): _*)
+      projectField(n).as(n.stripPrefix(":").toLowerCase(Locale.ROOT).replace("-", "_"))): _*)
 }

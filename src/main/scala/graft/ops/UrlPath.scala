@@ -1,6 +1,7 @@
 package graft.ops
 
 import java.nio.charset.StandardCharsets
+import java.util.Locale
 
 /** URL → filesystem path components (reference src/extract.rs:166-289).
   *
@@ -117,7 +118,7 @@ object UrlPath {
     val m = SchemeRest
     url match {
       case m(scheme, rest) =>
-        val out = scala.collection.mutable.ArrayBuffer(scheme.toLowerCase)
+        val out = scala.collection.mutable.ArrayBuffer(scheme.toLowerCase(Locale.ROOT))
         if (rest.startsWith("//")) {
           val afterAuth = rest.drop(2)
           val authEnd = afterAuth.indexWhere(ch => ch == '/' || ch == '?' || ch == '#') match {

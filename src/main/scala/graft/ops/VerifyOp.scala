@@ -12,11 +12,12 @@ import org.apache.spark.sql.types.{ArrayType, BooleanType, LongType, StringType,
   StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
+import java.util.Locale
 import java.util.regex.Pattern
 
 /** The verify rule engine (reference src/verify.rs): per-record checks run
-  * as ONE single-pass kernel over the header multimap (see the note on
-  * [[VerifyOp.checkFields]] for why not per-check Columns);
+  * as ONE kernel over the header multimap (see the note on the rule
+  * engine below for why not per-check Columns);
   * cross-record checks are the two joins the reference hides in redb
   * cursor batches: reference integrity as one window over target ids
   * (J1, verify.rs:230-264) and segment reassembly aggregation (J2,
@@ -30,8 +31,8 @@ object VerifyOp {
     "warcinfo", "response", "resource", "request", "metadata",
     "revisit", "conversion", "continuation")
 
-  // ---- single-pass scalar rule engine ----------------------------------
-  // One traversal of the fields array per row, in plain JVM code. The
+  // ---- scalar rule engine ----------------------------------------------
+  // One kernel call per row, in plain JVM code over the header array. The
   // all-Catalyst formulation (every check as a Column over higher-order
   // field lookups) measured ~175µs/row: HOF lambdas are CodegenFallback
   // (interpreted) and CollapseProject re-inlines each lookup per consumer
@@ -57,15 +58,25 @@ object VerifyOp {
     } catch { case _: java.time.format.DateTimeParseException => false })
 
   /** The reference's per-record check set (verify.rs:358-412 dispatch over
-    * Check::all(), verify.rs:52-75) as a pure function over the ordered
-    * case-insensitive multimap. Returns (kind, detail) problems.
+    * Check::all(), verify.rs:52-75) over a `Seq[Field]` header; see
+    * [[checkHeader]].
     */
-  def checkFields(fields: Seq[Field]): Seq[(String, String)] = {
-    def get(n: String): Option[String] =
-      fields.find(_.name.equalsIgnoreCase(n)).map(_.value)
-    def has(n: String): Boolean = fields.exists(_.name.equalsIgnoreCase(n))
+  def checkFields(fields: Seq[Field]): Seq[(String, String)] =
+    checkHeader(new GenericArrayData(fields.map(f =>
+      if (f == null) null
+      else InternalRow(UTF8String.fromString(f.name), UTF8String.fromString(f.value))
+    ).toArray[Any]))
 
-    val recTypeOpt = get("WARC-Type").map(_.toLowerCase)
+  /** The per-record rules as a pure function over the header array,
+    * names looked up as every `FieldOps` lookup does them: first match of
+    * `lower(name) = lower(target)`, a null entry or name never matches.
+    * Returns (kind, detail) problems.
+    */
+  private def checkHeader(fields: ArrayData): Seq[(String, String)] = {
+    def get(n: String): Option[String] = Option(firstValue(fields, target(n))).map(_.toString)
+    def has(n: String): Boolean = hasName(fields, target(n))
+
+    val recTypeOpt = get("WARC-Type").map(_.toLowerCase(Locale.ROOT))
     val recType = recTypeOpt.getOrElse("")
     def isType(ts: String*): Boolean = ts.contains(recType)
     val clen = get("Content-Length")
@@ -139,7 +150,7 @@ object VerifyOp {
     }
     // Truncated reason whitelist (583-591)
     truncated.foreach(v =>
-      if (!Seq("length", "time", "disconnect", "unspecified").contains(v.toLowerCase))
+      if (!Seq("length", "time", "disconnect", "unspecified").contains(v.toLowerCase(Locale.ROOT)))
         out += (("invalid_truncated_reason", v)))
     // Filename only on warcinfo (612-618)
     if (filename.isDefined && !isType("warcinfo"))
@@ -166,16 +177,15 @@ object VerifyOp {
       InternalRow(UTF8String.fromString(a), UTF8String.fromString(b))
     }.toArray[Any])
 
-  /** Kernel of [[problems]]: record_id and [[checkFields]]' problems in
-    * ONE fields traversal. A separate `fieldGet(record_id)` Column
-    * would re-inline the caller's whole `fields` construction a second
-    * time per row, so the id lookup rides along.
+  /** Kernel of [[problems]]: record_id and [[checkHeader]]'s problems
+    * in one call per row. A separate `fieldGet(record_id)` Column would
+    * re-inline the caller's whole `fields` construction a second time per
+    * row, so the id lookup rides along.
     */
   def checkRecord(fields: ArrayData): InternalRow = {
-    val fs = toFields(fields)
-    val rid = fs.find(_.name.equalsIgnoreCase("WARC-Record-ID"))
-      .flatMap(f => Option(f.value)).getOrElse("") // null value → "" like coalesce did
-    InternalRow(UTF8String.fromString(rid), utf8Pairs(checkFields(fs)))
+    val rid = firstValue(fields, target("WARC-Record-ID"))
+    InternalRow(if (rid == null) UTF8String.EMPTY_UTF8 else rid, // like coalesce(id, "")
+      utf8Pairs(checkHeader(fields)))
   }
 
   /** Explode to a Problem dataset (position, record_id, kind, detail).
@@ -204,14 +214,15 @@ object VerifyOp {
     * record has an id.
     */
   def idRefs(fields: ArrayData, refFields: ArrayData): InternalRow = {
-    val fs = toFields(fields)
-    val rid = fs.find(_.name.equalsIgnoreCase("WARC-Record-ID")).map(_.value).orNull
-    val refs = (0 until refFields.numElements()).flatMap { i =>
-      val rf = refFields.getUTF8String(i).toString
-      fs.collect { case f if f.name.equalsIgnoreCase(rf) => (rf, f.value) }
+    val rid = firstValue(fields, target("WARC-Record-ID"))
+    val pairs = Array.newBuilder[Any]
+    if (rid != null) pairs += InternalRow(null, rid)
+    for (i <- 0 until refFields.numElements()) {
+      val via = refFields.getUTF8String(i)
+      val ids = allValues(fields, target(via.toString))
+      for (j <- 0 until ids.numElements()) pairs += InternalRow(via, ids.getUTF8String(j))
     }
-    InternalRow(UTF8String.fromString(rid),
-      utf8Pairs(if (rid == null) refs else (null: String, rid) +: refs))
+    InternalRow(rid, new GenericArrayData(pairs.result()))
   }
 
   /** J1 — reference integrity (verify.rs:230-264): every
@@ -252,12 +263,6 @@ object VerifyOp {
     StructField("n", LongType), StructField("len", LongType),
     StructField("total_len", LongType)))
 
-  private def lowerName(n: String) = UTF8String.fromString(n.toLowerCase)
-  private val SegmentOriginId = lowerName("WARC-Segment-Origin-ID")
-  private val SegmentNumber = lowerName("WARC-Segment-Number")
-  private val RecordId = lowerName("WARC-Record-ID")
-  private val ContentLength = lowerName("Content-Length")
-  private val SegmentTotalLength = lowerName("WARC-Segment-Total-Length")
   private val One = UTF8String.fromString("1")
 
   private def u64OrNull(v: UTF8String): java.lang.Long =
@@ -269,13 +274,14 @@ object VerifyOp {
     * declared total length.
     */
   def segmentFields(fields: ArrayData): InternalRow = {
-    val number = firstValue(fields, SegmentNumber)
-    val origin = firstValue(fields, SegmentOriginId) match {
-      case null if One == number => firstValue(fields, RecordId)
+    val number = firstValue(fields, target("WARC-Segment-Number"))
+    val origin = firstValue(fields, target("WARC-Segment-Origin-ID")) match {
+      case null if One == number => firstValue(fields, target("WARC-Record-ID"))
       case o => o
     }
-    InternalRow(origin, u64OrNull(number), u64OrNull(firstValue(fields, ContentLength)),
-      u64OrNull(firstValue(fields, SegmentTotalLength)))
+    InternalRow(origin, u64OrNull(number),
+      u64OrNull(firstValue(fields, target("Content-Length"))),
+      u64OrNull(firstValue(fields, target("WARC-Segment-Total-Length"))))
   }
 
   /** J2 — segment reassembly check (verify.rs:266-319): group continuation
@@ -309,6 +315,20 @@ object VerifyOp {
       .where(col("p").isNotNull)
       .select(col("origin_id"), col("p.kind").as("kind"), col("p.detail").as("detail"))
   }
+
+  /** BlockDigest check (reference verify.rs:747-785): the declared
+    * `WARC-Block-Digest` against the record's block. Null when no digest
+    * is declared (check not applicable), false on an unparseable digest
+    * text (UnknownDigest) or a mismatch. A kernel, like
+    * [[payloadDigestOkUdf]].
+    */
+  def blockDigestOk(declared: Column, bytes: Column): Column =
+    kernel(VerifyOp, BooleanType, "blockDigestOk", Seq(declared, bytes))
+
+  def blockDigestOk(declared: UTF8String, bytes: Array[Byte]): Boolean =
+    graft.core.Digests.parseDigest(declared.toString).exists { case (algo, want) =>
+      graft.core.Digests.compute(algo, bytes).exists(_.sameElements(want))
+    }
 
   /** PayloadDigest check (reference verify.rs:747-785 + block_data
     * payload hashing): decode the record's PAYLOAD — the HTTP body for

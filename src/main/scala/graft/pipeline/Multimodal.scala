@@ -2,10 +2,17 @@ package graft.pipeline
 
 import java.awt.image.BufferedImage
 import java.io.{ByteArrayInputStream, ByteArrayOutputStream}
+import java.util.Locale
 import javax.imageio.ImageIO
 
+import graft.core.FieldOps.{MediaTypeRe, firstValue, target}
+import graft.functions.GraftFunctions.kernel
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Multimodal (image) column operators over opaque `binary` cells with
   * typed metadata — the BASELINE.json image/caption payload axis.
@@ -270,13 +277,29 @@ object Multimodal {
 
   val corruptPixelsUdf = udf { (bytes: Array[Byte], fmt: String) => corruptPixels(bytes, fmt) }
 
-  /** Banded-LSH near-duplicate pairs on the 64-bit phash: 8 bands × 8 bits;
-    * any pair at hamming ≤ 7 collides on ≥1 exact band (pigeonhole), so the
-    * band join finds every such pair without an n² cross join — the band
-    * join is an equi-join Catalyst shuffles on (band, band_value), which
-    * scales to 10^10 rows where brute force cannot. Pairs are then
-    * confirmed by exact hamming ≤ maxHamming (cheap, bit_count).
+  private val ImageHeadersType = StructType(Seq(StructField("fmt", StringType),
+    StructField("image_id", StringType), StructField("caption", StringType)))
+
+  /** One kernel call per row for the three header lookups + the
+    * media-type parse. The Column form (mediaType + two fieldGets)
+    * re-inlined the `fields` construction into every interpreted HOF
+    * lookup after filter pushdown — the same pathology
+    * [[graft.ops.ExtractOp]]'s route kernel documents; names are looked
+    * up through the `FieldOps` kernels and the media type parses with
+    * the [[graft.core.FieldOps.mediaType]] grammar; oracle-gated (q59).
+    * Returns null when Content-Type is absent/invalid or its type is not
+    * `image` — the `where` below drops those rows exactly like the old
+    * `mt.ok && mt.type === "image"`.
     */
+  def imageHeaders(fields: ArrayData): InternalRow =
+    Option(firstValue(fields, target("Content-Type"))).map(_.toString) match {
+      case Some(MediaTypeRe(t, s, _, _)) if t.equalsIgnoreCase("image") =>
+        InternalRow(UTF8String.fromString(s.toLowerCase(Locale.ROOT)),
+          firstValue(fields, target("WARC-Record-ID")),
+          firstValue(fields, target("WARC-Target-URI")))
+      case _ => null
+    }
+
   /** Crawl→training-table bridge: turn an extracted-records table
     * ([[graft.ops.ExtractOp.extract]] output) into the BASELINE.json
     * input_hint row shape (image_id, bytes, w, h, fmt, caption, phash).
@@ -287,32 +310,11 @@ object Multimodal {
     * alt-text/metadata sibling records into the same column; the table
     * shape is identical either way. All narrow (no shuffle).
     */
-  /** One array traversal per row for the three header lookups + the
-    * media-type parse. The Column form (mediaType + two fieldGets)
-    * re-inlined the `fields` construction into every interpreted HOF
-    * lookup after filter pushdown — the same pathology
-    * [[graft.ops.ExtractOp]]'s route UDF documents; semantics identical
-    * (first case-insensitive match; [[graft.core.FieldOps.mediaType]]
-    * grammar) and oracle-gated (q59). Returns null when Content-Type is
-    * absent/invalid or its type is not `image` — the `where` below drops
-    * those rows exactly like the old `mt.ok && mt.type === "image"`.
-    */
-  private val MediaTypeRe = ("^([!#$%&'*+.^_`|~0-9A-Za-z-]+)/([!#$%&'*+.^_`|~0-9A-Za-z-]+)" +
-    "((\\s*;\\s*[!#$%&'*+.^_`|~0-9A-Za-z-]+=[!#$%&'*+.^_`|~0-9A-Za-z-]+)*)$").r
-
-  private val imageHeadersUdf = udf { (fields: Seq[org.apache.spark.sql.Row]) =>
-    def get(n: String): Option[String] =
-      fields.find(r => r.getString(0).equalsIgnoreCase(n)).map(_.getString(1))
-    get("Content-Type").getOrElse("") match {
-      case MediaTypeRe(t, s, _, _) if t.equalsIgnoreCase("image") =>
-        (s.toLowerCase, get("WARC-Record-ID").orNull, get("WARC-Target-URI").orNull)
-      case _ => null
-    }
-  }
-
   def imagesFromExtracted(extracted: DataFrame): DataFrame = {
     extracted
-      .withColumn("hdr", imageHeadersUdf(col("fields")))
+      // pinned like the decode below: one header kernel call per row
+      .withColumn("hdr", kernel(Multimodal, ImageHeadersType, "imageHeaders", Seq(col("fields")),
+        pinned = true))
       .where(col("hdr").isNotNull)
       // nondeterministic marking (guide §4.4): the pushed-down
       // `meta IS NOT NULL` filter otherwise duplicates the decode UDF —
@@ -321,15 +323,22 @@ object Multimodal {
       .withColumn("meta", imageMetaPhashUdf.asNondeterministic()(col("extracted")))
       .where(col("meta").isNotNull)
       .select(
-        col("hdr._2").as("image_id"),
+        col("hdr.image_id").as("image_id"),
         col("extracted").as("bytes"),
         col("meta._1").as("w"),
         col("meta._2").as("h"),
-        col("hdr._1").as("fmt"),
-        col("hdr._3").as("caption"),
+        col("hdr.fmt").as("fmt"),
+        col("hdr.caption").as("caption"),
         col("meta._3").as("phash"))
   }
 
+  /** Banded-LSH near-duplicate pairs on the 64-bit phash: 8 bands × 8 bits;
+    * any pair at hamming ≤ 7 collides on ≥1 exact band (pigeonhole), so the
+    * band join finds every such pair without an n² cross join — the band
+    * join is an equi-join Catalyst shuffles on (band, band_value), which
+    * scales to 10^10 rows where brute force cannot. Pairs are then
+    * confirmed by exact hamming ≤ maxHamming (cheap, bit_count).
+    */
   def phashNearDupPairs(images: DataFrame, maxHamming: Int = 7): DataFrame = {
     require(maxHamming <= 7, "8x8 banding only guarantees recall up to hamming 7")
     val bands = (0 until 8).map(b =>

@@ -1,6 +1,6 @@
 package graft.sources
 
-import graft.core.{Field, HeaderSerde, WarcRecord}
+import graft.core.{ByteSink, Field, Gzip, HeaderSerde, WarcRecord}
 
 import java.io.{ByteArrayOutputStream, EOFException}
 import java.nio.charset.StandardCharsets
@@ -51,13 +51,6 @@ object WarcBytes {
     * (decode.rs:15); beyond it the input is malformed, not "need more".
     */
   val MaxHeaderLen = 32768
-
-  /** Where decoded member bytes go: a [[RecordParser]], or a plain byte
-    * buffer for [[gunzipConcatenated]].
-    */
-  trait ByteSink {
-    def append(chunk: Array[Byte], off: Int, n: Int): Unit
-  }
 
   /** Incremental record framer: append decompressed chunks, pull complete
     * records. Memory is bounded by one record + one appended chunk — the
@@ -349,8 +342,9 @@ object WarcBytes {
     * `format` "gzip" inflates one gzip member; "zstd" skips any skippable
     * frames, sizes the next frame and decompresses it, returning
     * `buf.length` when only skippable frames remain. A member the buffer
-    * ends inside throws EOFException, so a byte-range caller can re-read a
-    * larger window.
+    * ends inside throws EOFException (IllegalArgumentException when only
+    * a gzip trailer is cut), so a byte-range caller can re-read a larger
+    * window.
     */
   private[sources] def decodeMember(buf: Array[Byte], rel: Int, format: String,
                                     sink: ByteSink, dict: Option[Array[Byte]],
@@ -380,29 +374,20 @@ object WarcBytes {
       }
     }
 
-  /** Inflate exactly one gzip member starting at `pos0`, streaming 64 KiB
-    * chunks into `sink`; returns the offset just past the member's
-    * trailer (the reference's start_next_segment bookkeeping,
-    * compress.rs:174-196, decode.rs:733-753).
+  /** Inflate exactly one gzip member starting at `pos0` through
+    * [[Gzip.inflateMember]], streaming 64 KiB chunks into `sink`; returns
+    * the offset just past the member's trailer (the reference's
+    * start_next_segment bookkeeping, compress.rs:174-196,
+    * decode.rs:733-753). A trailer the buffer cuts short is an
+    * IllegalArgumentException, like every other malformed-framing error.
     */
   private[sources] def inflateMember(bytes: Array[Byte], pos0: Int, sink: ByteSink,
-                                     scratch: DecodeScratch): Int = {
-    require(pos0 + 2 <= bytes.length &&
-      bytes(pos0) == GzipMagic(0) && bytes(pos0 + 1) == GzipMagic(1),
-      s"bad gzip magic at offset $pos0")
-    var pos = skipGzipHeader(bytes, pos0 + 2)
-    val inf = scratch.inf
-    inf.reset() // clean stream state even after a prior member threw
-    inf.setInput(bytes, pos, bytes.length - pos)
-    while (!inf.finished()) {
-      val n = inf.inflate(scratch.buf)
-      if (n > 0) sink.append(scratch.buf, 0, n)
-      else if (inf.needsInput()) throw new EOFException(s"truncated deflate data at $pos")
+                                     scratch: DecodeScratch): Int =
+    try Gzip.inflateMember(bytes, pos0, scratch.inf, scratch.buf, sink)
+    catch {
+      case e: EOFException if scratch.inf.finished() =>
+        throw new IllegalArgumentException(e.getMessage, e)
     }
-    pos += inf.getBytesRead.toInt
-    require(pos + 8 <= bytes.length, s"truncated gzip trailer at offset $pos")
-    pos + 8 // CRC32 + ISIZE
-  }
 
   /** Decode a plain (uncompressed) WARC byte stream into records with
     * exact byte-offset positions. Malformed input throws
@@ -633,27 +618,5 @@ object WarcBytes {
         } else payload
       (Some(dict), (8 + len).toInt)
     } else (None, 0)
-  }
-
-  /** Skip a gzip member header starting AFTER the 2 magic bytes; returns
-    * the offset of the deflate data.
-    */
-  private[sources] def skipGzipHeader(bytes: Array[Byte], start: Int): Int = {
-    def u8(i: Int): Int = {
-      if (i >= bytes.length) throw new EOFException("truncated gzip header")
-      bytes(i) & 0xff
-    }
-    var pos = start
-    val cm = u8(pos); require(cm == 8, "unsupported gzip compression method")
-    val flg = u8(pos + 1)
-    pos += 8 // CM FLG MTIME(4) XFL OS
-    if ((flg & 0x04) != 0) { // FEXTRA
-      val xlen = u8(pos) | (u8(pos + 1) << 8)
-      pos += 2 + xlen
-    }
-    if ((flg & 0x08) != 0) { while (u8(pos) != 0) pos += 1; pos += 1 } // FNAME
-    if ((flg & 0x10) != 0) { while (u8(pos) != 0) pos += 1; pos += 1 } // FCOMMENT
-    if ((flg & 0x02) != 0) pos += 2 // FHCRC
-    pos
   }
 }

@@ -4,6 +4,7 @@ import graft.core.WarcRecord
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
+import java.util.Locale
 import java.util.zip.Deflater
 
 /** WARC file source/sink (SURVEY.md §2.1 S1/S2/S5): real `.warc` /
@@ -46,7 +47,7 @@ object WarcSource {
     * → deflate. Everything else defers to magic detection.
     */
   private[sources] def extFormat(path: String): Option[String] = {
-    val f = path.toLowerCase
+    val f = path.toLowerCase(Locale.ROOT)
     if (f.endsWith(".warc.br")) Some("brotli")
     else if (f.endsWith(".warc.zz") || f.endsWith(".warc.deflate")) Some("deflate")
     else None

@@ -1,6 +1,6 @@
 package graft.sources
 
-import graft.core.WarcRecord
+import graft.core.{ByteSink, Gzip, WarcRecord}
 import org.apache.spark.sql.{Dataset, SparkSession}
 
 import java.io.EOFException
@@ -66,30 +66,28 @@ object WarcSplit {
   private def tailFor(format: String): Int =
     if (format == "zstd") ZstdValidationTail else ValidationTail
 
-  /** True when `buf(i)` starts a genuine record-at-time member: gzip
-    * magic + deflate method, and the member's first plaintext bytes are
-    * `WARC/`. Insufficient bytes to prove it → false (caller re-reads
-    * with more tail if it matters).
+  /** True when `buf(i)` starts a genuine record-at-time member: a gzip
+    * header parses there, and the member's first plaintext bytes,
+    * inflated by [[Gzip.inflateMember]] five at a time, are `WARC/`.
+    * Insufficient bytes to prove it → false (caller re-reads with more
+    * tail if it matters).
     */
-  private[graft] def isMemberStart(buf: Array[Byte], i: Int): Boolean =
-    i + 10 <= buf.length &&
-      buf(i) == WarcBytes.GzipMagic(0) && buf(i + 1) == WarcBytes.GzipMagic(1) &&
-      buf(i + 2) == 8 && {
-        val inf = new Inflater(true)
-        try {
-          val dataStart = WarcBytes.skipGzipHeader(buf, i + 2)
-          inf.setInput(buf, dataStart, math.min(buf.length - dataStart, ValidationTail))
-          val out = new Array[Byte](5)
-          var got = 0
-          var stuck = false
-          while (got < 5 && !inf.finished() && !stuck) {
-            val n = inf.inflate(out, got, 5 - got)
-            if (n == 0) stuck = true else got += n
-          }
-          got == 5 && new String(out, "US-ASCII") == "WARC/"
-        } catch { case _: Exception => false }
-        finally inf.end()
-      }
+  private[graft] def isMemberStart(buf: Array[Byte], i: Int): Boolean = {
+    val inf = new Inflater(true)
+    val head = new java.io.ByteArrayOutputStream()
+    val prefix: ByteSink = (chunk, off, n) => {
+      head.write(chunk, off, n)
+      if (head.size >= 5) throw PrefixRead
+    }
+    try { Gzip.inflateMember(buf, i, inf, new Array[Byte](5), prefix); false }
+    catch {
+      case PrefixRead => head.toString("US-ASCII").startsWith("WARC/")
+      case _: Exception => false
+    } finally inf.end()
+  }
+
+  /** Ends a member inflate once [[isMemberStart]] holds its prefix. */
+  private object PrefixRead extends scala.util.control.ControlThrowable
 
   /** [[isMemberStart]] twin for record-at-time zstd: content-frame magic
     * + the frame's first plaintext bytes prove `WARC/` (a magic inside

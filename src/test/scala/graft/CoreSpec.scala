@@ -51,7 +51,6 @@ class FieldOpsSpec extends AnyFunSuite {
   test("lookup kernels equal the higher-order-function formulation on generated headers") {
     import org.apache.spark.sql.Column
     import org.scalacheck.Gen
-    import org.scalacheck.rng.Seed
     // the lambda formulation the kernels replace, kept as the reference
     def matches(f: Column, name: String) = lower(f.getField("name")) === lit(name.toLowerCase)
     def refGet(fs: Column, n: String) =
@@ -78,9 +77,7 @@ class FieldOpsSpec extends AnyFunSuite {
     val field: Gen[Field] = for {
       n <- Gen.oneOf(names); v <- Gen.oneOf(values)
     } yield if (n == "id" && v == null) null else Field(n, v) // some null entries
-    val header: Gen[Seq[Field]] = Gen.chooseNum(0, 8).flatMap(Gen.listOfN(_, field))
-    val rows = (0 until 400).map { i =>
-      val h = header.pureApply(Gen.Parameters.default, Seed(i.toLong))
+    val rows = FieldOpsSpec.headers(field, 400).zipWithIndex.map { case (h, i) =>
       (i, if (i % 50 == 7) null else h) // and null arrays
     }
     // a local table runs the kernels interpreted (the optimizer folds
@@ -99,6 +96,105 @@ class FieldOpsSpec extends AnyFunSuite {
         assert(ker == ref, s"target=$t row=${r.getInt(0)} fields=${rows(r.getInt(0))._2}")
       }
     }
+  }
+
+  test("null entries and null names change no verify, reference, extract or image row; " +
+    "a name is present iff fieldContains says so") {
+    import graft.ops.{ExtractOp, VerifyOp}
+    import graft.pipeline.Multimodal
+    import org.apache.spark.sql.DataFrame
+    import org.scalacheck.Gen
+    // names the per-record kernels look up, with case variants and the
+    // letters whose case mappings differ between String.equalsIgnoreCase
+    // and lower(): U+0130 İ, U+0131 ı, U+017F ſ, U+212A KELVIN SIGN
+    val typeValues = Seq("resource", "RESOURCE", "conversion", "response", "continuation",
+      "warcinfo")
+    val idValues = Seq("<urn:id:1>", "<urn:id:2>")
+    val uriValues = Seq("http://example.com/a.png", "urn:example:x")
+    val ctypeValues = Seq("image/png", "IMAGE/PNG; q=1", "application/http; msgtype=response",
+      "text/plain")
+    val truncValues = Seq("length", "bogus")
+    val segValues = Seq("1", "2")
+    val refValues = Seq("<urn:ref:1>", "<urn:ref:2>")
+    // the names extract and the image bridge route on are drawn 4x as often
+    val namesWithValues = Seq(
+      "WARC-Type" -> typeValues, "warc-TYPE" -> typeValues,
+      "WARC-Record-ID" -> idValues, "WARC-RECORD-id" -> idValues,
+      "WARC-Record-\u0130D" -> idValues, "WARC-Record-\u0131D" -> idValues,
+      "WARC-Target-URI" -> uriValues, "WARC-Target-UR\u0130" -> uriValues,
+      "Content-Type" -> ctypeValues, "CONTENT-TYPE" -> ctypeValues,
+      "Content-Length" -> Seq("12", "+1"), "WARC-Date" -> Seq("2025-01-01T00:00:00Z"),
+      "WARC-Truncated" -> truncValues, "warc-truncated" -> truncValues,
+      "WARC-Segment-Number" -> segValues, "WARC-\u017Fegment-Number" -> segValues,
+      "WARC-Refers-To" -> refValues, "WARC-Refer\u017F-To" -> refValues,
+      "X-Link" -> refValues, "X-Lin\u212A" -> refValues, "X-L\u0131nk" -> refValues,
+      "X-L\u0130NK" -> refValues)
+    val routed = Set("WARC-Type", "WARC-Target-URI", "Content-Type")
+    val field: Gen[Field] = Gen.frequency(namesWithValues.map { case (n, vs) =>
+      (if (routed(n)) 4 else 1, Gen.oneOf(vs).map(Field(n, _)))
+    }: _*)
+    val clean = FieldOpsSpec.headers(field, 600)
+    val rnd = new scala.util.Random(5)
+    val noisy = clean.map { h =>
+      (0 until 1 + rnd.nextInt(3)).foldLeft(h) { (acc, _) =>
+        val at = rnd.nextInt(acc.length + 1)
+        acc.patch(at, Seq(if (rnd.nextBoolean()) null else Field(null, "x")), 0)
+      }
+    }
+    val png = Multimodal.encode(
+      new java.awt.image.BufferedImage(8, 8, java.awt.image.BufferedImage.TYPE_INT_RGB), "png")
+    // RDD-backed, so the kernels run in generated code
+    def table(headers: Seq[Seq[Field]]): DataFrame = {
+      val local = headers.zipWithIndex.map { case (h, i) => (i.toLong, h, png) }
+        .toDF("position", "fields", "bytes")
+      spark.createDataFrame(local.rdd, local.schema)
+    }
+    val refFields = Seq("WARC-Refers-To", "X-Link")
+    def outputs(d: DataFrame): Seq[Seq[String]] = {
+      val extracted = ExtractOp.extract(d)
+      Seq(VerifyOp.problems(d), VerifyOp.missingReferences(d, refFields),
+        extracted.drop("fields", "bytes"), Multimodal.imagesFromExtracted(extracted))
+        .map(_.collect().toSeq.map(_.toSeq.map {
+          case b: Array[Byte] => b.toSeq.hashCode.toString
+          case x => String.valueOf(x)
+        }.mkString("|")).sorted)
+    }
+    val got = outputs(table(clean))
+    assert(got.forall(_.nonEmpty), got.map(_.size))
+    assert(outputs(table(noisy)) == got)
+
+    val t = table(noisy)
+    def contains(n: String) = coalesce(FieldOps.fieldContains($"fields", n), lit(false))
+    val present = t.select($"position", contains("WARC-Record-ID"),
+      FieldOps.fieldCount($"fields", "WARC-Refers-To"), FieldOps.fieldCount($"fields", "X-Link"),
+      contains("WARC-Truncated"), contains("WARC-Segment-Number"))
+      .collect().map(r => r.getLong(0) -> r).toMap
+    val noId = VerifyOp.problems(t)
+      .where($"kind" === "missing_mandatory_field" && $"detail" === "WARC-Record-ID")
+      .select($"position").as[Long].collect().toSet
+    assert(noId == present.collect { case (p, r) if !r.getBoolean(1) => p }.toSet)
+    val refs = VerifyOp.missingReferences(t, refFields).select($"position", $"detail")
+      .as[(Long, String)].collect()
+    for ((p, r) <- present; (via, k) <- refFields.zip(Seq(2, 3)))
+      assert(refs.count { case (q, d) => q == p && d.startsWith(s"$via -> ") } == r.getInt(k),
+        s"$via at $p: ${noisy(p.toInt)}")
+    val ex = ExtractOp.extract(t).select($"position", $"is_truncated").as[(Long, Boolean)]
+      .collect()
+    assert(ex.nonEmpty)
+    ex.foreach { case (p, truncated) =>
+      assert(truncated == present(p).getBoolean(4) && !present(p).getBoolean(5), noisy(p.toInt))
+    }
+  }
+}
+
+object FieldOpsSpec {
+  import org.scalacheck.Gen
+  import org.scalacheck.rng.Seed
+
+  /** `n` generated headers of 0–8 `field`s each; header i comes from seed i. */
+  def headers(field: Gen[Field], n: Int): IndexedSeq[Seq[Field]] = {
+    val header = Gen.chooseNum(0, 8).flatMap(Gen.listOfN(_, field))
+    (0 until n).map(i => header.pureApply(Gen.Parameters.default, Seed(i.toLong)))
   }
 }
 

@@ -277,5 +277,49 @@ class HttpOpsSpec extends AnyFunSuite {
       assertParity("gzip", data, s"case $i")
     }
   }
-}
 
+  test("WARC gzip members decode as GZIPInputStream does on generated member chains: " +
+    "same bytes or the same failure") {
+    // a cut trailer is the one malformed-framing error the WARC reader
+    // reports as IllegalArgumentException; everything else keeps its class
+    def viaWarc(data: Array[Byte]): Either[String, Seq[Byte]] =
+      try Right(graft.sources.WarcBytes.gunzipConcatenated(data).toSeq)
+      catch {
+        case e: IllegalArgumentException if e.getMessage.contains("truncated gzip trailer") =>
+          Left("gzip_error:EOFException")
+        case e: Exception => Left(s"gzip_error:${e.getClass.getSimpleName}")
+      }
+    val rnd = new scala.util.Random(17)
+    for (i <- 0 until 300) {
+      val members = Seq.fill(1 + rnd.nextInt(3)) {
+        val body = rnd.nextInt(3) match {
+          case 0 => Array.emptyByteArray
+          case 1 => Array.fill(1 + rnd.nextInt(3000))(rnd.nextInt(256).toByte)
+          case _ => Array.fill(2000 + rnd.nextInt(20000))((97 + rnd.nextInt(3)).toByte)
+        }
+        gzipMember(body, rnd.nextInt(32), level = rnd.nextInt(10))
+      }
+      // only the last member is damaged: a member GZIPInputStream decodes
+      // alone is the reference for every member
+      val last = members.last.clone()
+      val n = last.length
+      def flip(at: Int): Unit = last(at) = (last(at) ^ (1 << rnd.nextInt(8))).toByte
+      val (damaged, what) = rnd.nextInt(7) match {
+        case 0 => (last, "intact")
+        case 1 => flip(n - 1 - rnd.nextInt(4)); (last, "ISIZE")
+        case 2 => flip(n - 5 - rnd.nextInt(4)); (last, "CRC32")
+        case 3 if (last(3) & 2) != 0 =>
+          // the header's length: an empty member adds 2 deflate + 8 trailer bytes
+          val headerLen = gzipMember(Array.emptyByteArray, last(3)).length - 10
+          flip(headerLen - 1 - rnd.nextInt(2)); (last, "FHCRC")
+        case 4 => (last.dropRight(1 + rnd.nextInt(8)), "cut trailer")
+        case 5 => (last.take(1 + rnd.nextInt(n - 9)), "cut member")
+        case _ => flip(rnd.nextInt(n)); (last, "any bit")
+      }
+      val alone = (members.init :+ damaged).map(viaStreams("gzip", _))
+      val want = alone.collectFirst { case l @ Left(_) => l }
+        .getOrElse(Right(alone.flatMap(_.toOption.get)))
+      assert(viaWarc((members.init :+ damaged).reduce(_ ++ _)) == want, s"case $i ($what)")
+    }
+  }
+}

@@ -78,6 +78,41 @@ class WarcCodecSpec extends AnyFunSuite {
     assert(et.getMessage.contains("truncated gzip trailer"), et.getMessage)
   }
 
+  test("a stored gzip member with one flipped payload byte is rejected by decode, " +
+    "readSplit and gunzipConcatenated") {
+    // level 0 stores the record bytes verbatim, so a flipped block byte
+    // still inflates and frames: only the CRC32 trailer can catch it
+    val records = Synth.warcRecords(n = 6)
+    val members = records.map { r =>
+      val out = new java.io.ByteArrayOutputStream()
+      val gz = new java.util.zip.GZIPOutputStream(out) {
+        `def`.setLevel(java.util.zip.Deflater.NO_COMPRESSION)
+      }
+      gz.write(WarcBytes.encodeRecords(Seq(r)))
+      gz.close()
+      out.toByteArray
+    }
+    val block = records(3).bytes
+    val at = members(3).indexOfSlice(block.toSeq)
+    assert(at > 0, "the block is stored verbatim")
+    val bad = members(3).clone()
+    bad(at + block.length / 2) = (bad(at + block.length / 2) ^ 1).toByte
+    val file = members.updated(3, bad).reduce(_ ++ _)
+    assert(WarcBytes.decode(members.reduce(_ ++ _), "ok.warc.gz").size == 6)
+    def corrupt(e: Throwable): Boolean =
+      Iterator.iterate(e)(_.getCause).takeWhile(_ != null).exists(t =>
+        t.isInstanceOf[java.util.zip.ZipException] &&
+          String.valueOf(t.getMessage).contains("Corrupt GZIP trailer"))
+    assert(corrupt(intercept[Exception](WarcBytes.decode(file, "bad.warc.gz"))))
+    assert(corrupt(intercept[Exception](WarcBytes.gunzipConcatenated(file))))
+    val path = java.nio.file.Files.createTempFile("graft-flipped", ".warc.gz")
+    try {
+      java.nio.file.Files.write(path, file)
+      assert(corrupt(intercept[Exception](
+        graft.sources.WarcSplit.readSplit(spark, path.toString, splitBytes = 4096L).collect())))
+    } finally java.nio.file.Files.delete(path)
+  }
+
   test("zstd members round-trip: plain, dict, and compressed dict " +
     "(reference test matrix, test_decode.rs:13-52)") {
     val records = Synth.warcRecords(round = 1, n = 40)
