@@ -132,14 +132,21 @@ object Digests {
     if (algo == "sha1") s"sha1:${base32Encode(value)}"
     else s"$algo:${hexEncode(value)}"
 
+  /** CRC32C of a whole payload as an unsigned 32-bit value: the one
+    * CRC32C in the engine, behind [[compute]] and the `crc32c` kernel
+    * (JDK-intrinsified SSE4.2/ARMv8 CRC instructions).
+    */
+  def crc32c(data: Array[Byte]): Long = {
+    val c = new CRC32C(); c.update(data); c.getValue
+  }
+
   /** Compute a digest over a whole payload (A1 per-cell form). */
   def compute(algo: String, data: Array[Byte]): Option[Array[Byte]] = algo match {
     case "crc32" =>
       val c = new CRC32(); c.update(data)
       Some(java.nio.ByteBuffer.allocate(4).putInt(c.getValue.toInt).array())
     case "crc32c" =>
-      val c = new CRC32C(); c.update(data)
-      Some(java.nio.ByteBuffer.allocate(4).putInt(c.getValue.toInt).array())
+      Some(java.nio.ByteBuffer.allocate(4).putInt(crc32c(data).toInt).array())
     case "md5"      => Some(MessageDigest.getInstance("MD5").digest(data))
     case "sha1"     => Some(MessageDigest.getInstance("SHA-1").digest(data))
     case "sha256"   => Some(MessageDigest.getInstance("SHA-256").digest(data))

@@ -108,6 +108,12 @@ object FieldOps {
     eq
   }
 
+  /** [[nameIs]] for a decoded [[Field]] name: the same rule where the
+    * record parser, the writer and `get` look a header up.
+    */
+  def isName(name: String, targetName: String): Boolean =
+    name != null && nameIs(UTF8String.fromString(name), target(targetName))
+
   private def sparkLower(n: UTF8String): UTF8String =
     CollationSupport.Lower.exec(n, CollationFactory.UTF8_BINARY_COLLATION_ID,
       SQLConf.get.getConf(SQLConf.ICU_CASE_MAPPINGS_ENABLED))

@@ -2,6 +2,7 @@ package graft.frontier
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StringType
 
 import java.util.Locale
 
@@ -108,10 +109,10 @@ object Canonical {
   private val hostUdf = udf((u: String) => hostOfString(u))
 
   /** The one fast path: a zero-copy canonicalizer over Spark's native
-    * string representation (the [[graft.functions.CanonicalUrlExpr]]
-    * codegen target). One allocation-free byte scan proves the URL is
-    * ALREADY canonical and returns the INPUT `UTF8String` object itself
-    * — no UTF8→String→UTF8 round trip, no allocation. Most real crawl
+    * string representation (the kernel behind [[canonicalUrl]]). One
+    * allocation-free byte scan proves the URL is ALREADY canonical and
+    * returns the INPUT `UTF8String` object itself — no
+    * UTF8→String→UTF8 round trip, no allocation. Most real crawl
     * URLs (and all synthetic bench URLs) are already canonical, and the
     * slow path allocates ~8 intermediate substrings per row — at 8
     * threads over 10^7 rows that allocation rate was a measured
@@ -230,16 +231,15 @@ object Canonical {
   /** Extract the host (lowercased, trailing dot + default port stripped). */
   def hostOf(url: Column): Column = hostUdf(url)
 
-  /** Canonicalize a URL column per the contract above — a native codegen
-    * `Expression` ([[graft.functions.CanonicalUrlExpr]]): stays inside
-    * whole-stage codegen (the udf form broke the round's hottest
-    * pipeline into two codegen stages) and the already-canonical fast
-    * path is ZERO-COPY (returns the scan's UTF8String as-is — the udf
-    * form paid a UTF8→String→UTF8 round trip per row even when the
-    * value was unchanged).
+  /** Canonicalize a URL column per the contract above — a kernel call
+    * to [[canonicalizeUtf8]]: stays inside whole-stage codegen (the udf
+    * form broke the round's hottest pipeline into two codegen stages)
+    * and the already-canonical fast path is ZERO-COPY (returns the
+    * scan's UTF8String as-is — the udf form paid a UTF8→String→UTF8
+    * round trip per row even when the value was unchanged).
     */
   def canonicalUrl(url: Column): Column =
-    graft.functions.GraftFunctions.canonicalUrlColumn(url)
+    graft.functions.GraftFunctions.kernel(Canonical, StringType, "canonicalizeUtf8", Seq(url))
 
   /** Bloom-probe / dedupe key. */
   def urlKey(canonical: Column): Column = xxhash64(canonical)

@@ -400,23 +400,10 @@ object Scheduler {
     * with ZERO exchanges. Bucket count must match the frontier table's.
     */
   def saveSeenClustered(seen: DataFrame, path: String, buckets: Int = 64): Unit = {
-    val spark = seen.sparkSession
     // the write registers the table under its per-path catalog name, so
     // saves to different paths never share a table identity
-    val tbl = seenTableName(path)
-    spark.sql(s"DROP TABLE IF EXISTS $tbl")
-    // ONE exchange, not two: `.distinct().repartition(host)` shuffled
-    // every row twice (once on (host, url_key), once on host). The
-    // repartition-then-dedupe order needs only the host exchange —
-    // hashpartitioning(host) already clusters equal (host, url_key)
-    // rows, so the aggregate runs in place (and its map-side partial
-    // collapse still shrinks duplicates before the shuffle). Same rows,
-    // same bucket-aligned file layout.
-    seen.select(col("host"), col("url_key"))
-      .repartition(buckets, col("host"))
-      .dropDuplicates("host", "url_key")
-      .write.mode("overwrite").bucketBy(buckets, "host")
-      .option("path", path).saveAsTable(tbl)
+    seen.sparkSession.sql(s"DROP TABLE IF EXISTS ${seenTableName(path)}")
+    writeSeenClustered(seen, path, buckets, "overwrite")
   }
 
   /** Append a round's newly-seen `(host, url_key)` keys to an existing
@@ -438,41 +425,32 @@ object Scheduler {
     // which would silently OVERWRITE the accumulated seen table with
     // just this round's delta every round
     val p = new org.apache.hadoop.fs.Path(path)
-    val exists = p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
-    if (!exists)
+    if (!p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p))
       saveSeenClustered(seen, path, buckets)
     else {
-      // write through the registered table identity so saveAsTable
-      // validates the bucket spec instead of clobbering it
-      val tbl = seenTableName(path)
-      // a stale registration (same name, different location — possible
-      // only if the name scheme ever changes, but cheap to defend) would
-      // silently append this delta into the WRONG path's directory;
-      // verify the catalog entry actually points at `path`
-      val ok = spark.catalog.tableExists(tbl) && {
-        val loc = spark.sql(s"DESCRIBE TABLE EXTENDED $tbl")
-          .where(col("col_name") === "Location")
-          .select("data_type").collect().headOption.map(_.getString(0))
-        // compare fully-QUALIFIED URIs, not bare paths: hdfs://nn/x and
-        // file:/x share a path string but are different tables, and
-        // appending across that confusion is exactly the silent
-        // cross-binding this check exists to stop
-        val conf = spark.sparkContext.hadoopConfiguration
-        def qualified(s: String): java.net.URI = {
-          val q = new org.apache.hadoop.fs.Path(s)
-          q.getFileSystem(conf).makeQualified(q).toUri
-        }
-        loc.exists(l => qualified(l) == qualified(path))
-      }
-      if (!ok) loadSeenClustered(spark, path, buckets)
-      // one exchange instead of two — see saveSeenClustered
-      seen.select(col("host"), col("url_key"))
-        .repartition(buckets, col("host"))
-        .dropDuplicates("host", "url_key")
-        .write.mode("append").bucketBy(buckets, "host")
-        .option("path", path).saveAsTable(tbl)
+      // bind the table name to `path` before writing through it, so
+      // saveAsTable validates the bucket spec instead of clobbering it,
+      // and a stale registration elsewhere never receives this delta
+      registerSeenClustered(spark, path, buckets)
+      writeSeenClustered(seen, path, buckets, "append")
     }
   }
+
+  /** The one seen-table write chain. ONE exchange, not two:
+    * `.distinct().repartition(host)` shuffled every row twice (once on
+    * (host, url_key), once on host). The repartition-then-dedupe order
+    * needs only the host exchange — hashpartitioning(host) already
+    * clusters equal (host, url_key) rows, so the aggregate runs in place
+    * (and its map-side partial collapse still shrinks duplicates before
+    * the shuffle). Same rows, same bucket-aligned file layout.
+    */
+  private def writeSeenClustered(seen: DataFrame, path: String, buckets: Int,
+                                 mode: String): Unit =
+    seen.select(col("host"), col("url_key"))
+      .repartition(buckets, col("host"))
+      .dropDuplicates("host", "url_key")
+      .write.mode(mode).bucketBy(buckets, "host")
+      .option("path", path).saveAsTable(seenTableName(path))
 
   /** Catalog identity for a [[saveSeenClustered]] table at `path`: a
     * 64-bit content hash of the full path (not `String.hashCode` — a
@@ -491,12 +469,19 @@ object Scheduler {
     */
   def loadSeenClustered(spark: SparkSession, path: String,
                         buckets: Int = 64): DataFrame = {
+    registerSeenClustered(spark, path, buckets)
+    spark.table(seenTableName(path))
+  }
+
+  /** (Re-)register the table name of `path` at `path`, whatever it was
+    * bound to before.
+    */
+  private def registerSeenClustered(spark: SparkSession, path: String, buckets: Int): Unit = {
     val tbl = seenTableName(path)
     spark.sql(s"DROP TABLE IF EXISTS $tbl")
     spark.sql(s"CREATE TABLE $tbl (host STRING, url_key BIGINT) " +
       s"USING parquet CLUSTERED BY (host) INTO $buckets BUCKETS " +
       s"LOCATION '$path'")
-    spark.table(tbl)
   }
 
   /** Resume: union all checkpointed seen keys (empty DataFrame when no

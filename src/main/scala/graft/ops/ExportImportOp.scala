@@ -10,7 +10,7 @@ import org.apache.spark.sql.functions._
   * Export explodes each record into `Header` + `BlockChunk*` + `BlockEnd`
   * message rows (chunked at [[ChunkSize]]); `BlockEnd` carries the block
   * checksums — the reference's exact crc32/crc32c/xxh3 triple
-  * (src/app/model.rs:37-41; xxh3 via [[graft.functions.Xxh3_64]]).
+  * (src/app/model.rs:37-41; xxh3 via [[graft.functions.GraftFunctions.xxh3]]).
   *
   * Import reassembles: chunks grouped per record, ordered by chunk index,
   * concatenated, and the recomputed checksum must equal the declared one
@@ -40,11 +40,10 @@ object ExportImportOp {
 
   /** BlockEnd rows: per-id checksums of the whole payload — the
     * reference's exact crc32/crc32c/xxh3 triple (src/app/model.rs:37-41),
-    * crc32c and xxh3 as native graft expressions so the export stays in
-    * whole-stage codegen.
+    * crc32c and xxh3 as graft kernels so the export stays in whole-stage
+    * codegen.
     */
   def exportBlockEnd(df: DataFrame, idCol: String, payloadCol: String): DataFrame = {
-    graft.functions.GraftFunctions.register(df.sparkSession)
     df.select(col(idCol).as("id"),
       crc32(col(payloadCol).cast("binary")).as("crc32"),
       graft.functions.GraftFunctions.crc32c(col(payloadCol).cast("binary")).as("crc32c"),

@@ -125,7 +125,7 @@ object ExtractOp {
   /** Extract eligible records: adds decoder_kind, extracted bytes,
     * path_components, http status/ok, and the xxh3 conflict id
     * (app/extract.rs:104-167 — bit-matching the reference's conflict
-    * naming via the from-spec [[graft.functions.Xxh3_64]]).
+    * naming via the from-spec [[graft.functions.GraftFunctions.xxh3]]).
     *
     * Three selects: the route (pinned, so the routing filter is not
     * pushed below it as a second evaluation), then the HTTP decode and

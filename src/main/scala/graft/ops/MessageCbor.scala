@@ -67,7 +67,6 @@ object MessageCbor {
     */
   def exportCborMessages(df: DataFrame, idCol: String, payloadCol: String,
                          file: String = "graft.seq"): DataFrame = {
-    graft.functions.GraftFunctions.register(df.sparkSession)
     val base = df.select(col(idCol).as("id"), col(payloadCol).as("payload"))
     val nChunks = greatest(
       ceil(length(col("payload")) / lit(ExportImportOp.ChunkSize.toDouble)).cast("long"),
@@ -157,7 +156,6 @@ object MessageCbor {
     * Returns (id, n_messages, payload, roundtrip_ok).
     */
   def importValidate(parsed: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.register(parsed.sparkSession)
     val chunkRow = when(col("m.variant") === "BlockChunk",
       struct(col("msg_seq"), col("m.data").as("data")))
     val agg = parsed.groupBy("id").agg(

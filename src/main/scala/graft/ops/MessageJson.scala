@@ -14,7 +14,7 @@ import org.apache.spark.sql.types._
   * Vec<(String,String)>); chunk data is base64 (model.rs:31-34); EndOfFile
   * is the empty object. BlockEnd carries the reference's exact crc32 +
   * crc32c + xxh3 checksum triple (digest.rs:195), xxh3 via the from-spec
-  * native expression [[graft.functions.Xxh3_64]].
+  * kernel [[graft.functions.GraftFunctions.xxh3]].
   *
   * Scale: export is a narrow generate (no shuffle); framing/unframing is
   * one hash aggregation per record id; parsing is `from_json` — all
@@ -53,7 +53,6 @@ object MessageJson {
     */
   def exportJsonMessages(df: DataFrame, idCol: String, payloadCol: String,
                          file: String = "graft.seq"): DataFrame = {
-    graft.functions.GraftFunctions.register(df.sparkSession)
     val base = df.select(col(idCol).as("id"), col(payloadCol).as("payload"))
     val nChunks = greatest(
       ceil(length(col("payload")) / lit(ExportImportOp.ChunkSize.toDouble)).cast("long"),
@@ -96,7 +95,6 @@ object MessageJson {
     * BYTES (binary substr), base64 in the chunk JSON.
     */
   def exportExtractMessages(extracted: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.register(extracted.sparkSession)
     val base = extracted.select(col("position").as("id"),
       col("extracted").as("payload"), col("path_components"), col("is_truncated"))
     val nChunks = greatest(
@@ -145,7 +143,6 @@ object MessageJson {
     * Returns (id, n_messages, payload, roundtrip_ok).
     */
   def importValidate(parsed: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.register(parsed.sparkSession)
     val chunkRow = when(col("m.BlockChunk").isNotNull,
       struct(col("msg_seq"), col("m.BlockChunk.data").as("data")))
     val agg = parsed.groupBy("id").agg(

@@ -1,6 +1,6 @@
 package graft.sources
 
-import graft.core.{ByteSink, Field, Gzip, HeaderSerde, WarcRecord}
+import graft.core.{ByteSink, Field, FieldOps, Gzip, HeaderSerde, WarcRecord}
 
 import java.io.{ByteArrayOutputStream, EOFException}
 import java.nio.charset.StandardCharsets
@@ -143,10 +143,12 @@ object WarcBytes {
         require(headerEnd <= MaxHeaderLen, s"header exceeds $MaxHeaderLen bytes at offset $base")
         val (version, fields) = HeaderSerde.parse(buf, pos, headerEnd + 4)
           .getOrElse(throw new IllegalArgumentException(s"bad header at offset $base"))
-        val lenStr = fields.find(_.name.equalsIgnoreCase("Content-Length")).map(_.value)
+        val lenStr = fields.find(f => FieldOps.isName(f.name, "Content-Length")).map(_.value)
           .getOrElse(throw new IllegalArgumentException(s"no Content-Length at offset $base"))
-        require(lenStr.nonEmpty && lenStr.length <= 18 && lenStr.forall(_.isDigit),
-          s"bad Content-Length '$lenStr' at offset $base")
+        // ASCII digits only: `isDigit` and `toLong` also take other
+        // scripts' decimal digits (fullwidth "１２" parses as 12)
+        require(lenStr.nonEmpty && lenStr.length <= 18 &&
+          lenStr.forall(c => c >= '0' && c <= '9'), s"bad Content-Length '$lenStr' at offset $base")
         val blockLenL = lenStr.toLong
         // i32 guard (a declared length >= 2^31 must error, never wrap);
         // headroom for blockStart (≤ MaxHeaderLen+4) + terminator so
@@ -417,7 +419,7 @@ object WarcBytes {
   def encodeRecords(records: Seq[WarcRecord]): Array[Byte] = {
     val out = new ByteArrayOutputStream()
     records.foreach { r =>
-      val declared = r.fields.find(_.name.equalsIgnoreCase("Content-Length")).map(_.value)
+      val declared = r.fields.find(f => FieldOps.isName(f.name, "Content-Length")).map(_.value)
       require(declared.contains(r.bytes.length.toString),
         s"Content-Length mismatch at position ${r.position}: " +
           s"declared ${declared.orNull}, block ${r.bytes.length}")

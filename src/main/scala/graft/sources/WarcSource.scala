@@ -1,6 +1,6 @@
 package graft.sources
 
-import graft.core.WarcRecord
+import graft.core.{FieldOps, WarcRecord}
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -118,7 +118,7 @@ object WarcSource {
     }
     record.flatMap { r =>
       val recId = r.fields.collectFirst {
-        case f if f.name.equalsIgnoreCase("WARC-Record-ID") => f.value
+        case f if FieldOps.isName(f.name, "WARC-Record-ID") => f.value
       }
       id match {
         case Some(want) if !recId.contains(want) => None

@@ -5,10 +5,10 @@ import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.classic.ExpressionUtils
 
 /** Bridge into the `private[sql]` Column ⇄ Expression converters of the
-  * Spark 4 classic API, so graft's native expressions (crc32c, xxh3_64,
-  * canonical_url) can build Columns without per-session function-registry
-  * registration. Lives under `org.apache.spark.sql` solely for the
-  * qualified-private access — no Spark internals are modified.
+  * Spark 4 classic API, so graft's kernels (`GraftFunctions.kernel`) can
+  * build Columns without per-session function-registry registration.
+  * Lives under `org.apache.spark.sql` solely for the qualified-private
+  * access — no Spark internals are modified.
   */
 object ColumnBridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)

@@ -289,6 +289,28 @@ class WarcCodecSpec extends AnyFunSuite {
     assert(WarcSource.get(spark, gzPath.toString, 1L << 40).isEmpty) // past EOF
   }
 
+  test("get's id guard matches the header name by lower(name) = lower(target)") {
+    // "WARC-Record-\u0131D" (dotless i) equalsIgnoreCase "WARC-Record-ID",
+    // but fieldGet and verify see no id in such a record
+    val r = Synth.warcRecords(round = 3, n = 1).head
+    val id = r.fields.collectFirst { case f if f.name == "WARC-Record-ID" => f.value }.get
+    val dotless = r.copy(fields = r.fields.map(f =>
+      if (f.name == "WARC-Record-ID") f.copy(name = "WARC-Record-\u0131D") else f))
+    val path = java.nio.file.Files.createTempFile("graft-get-name", ".warc")
+    java.nio.file.Files.write(path, WarcBytes.encodeRecords(Seq(dotless)))
+    assert(WarcSource.get(spark, path.toString, 0L).isDefined)
+    assert(WarcSource.get(spark, path.toString, 0L, Some(id)).map(_.position).isEmpty)
+  }
+
+  test("a Content-Length of non-ASCII decimal digits does not frame a block") {
+    // fullwidth "\uff11\uff12" parses as 12 through isDigit and toLong
+    val fullwidth = ("WARC/1.1\r\nWARC-Record-ID: <urn:a>\r\n" +
+      "Content-Length: \uff11\uff12\r\n\r\n0123456789ab\r\n\r\n")
+      .getBytes(java.nio.charset.StandardCharsets.UTF_8)
+    val e = intercept[IllegalArgumentException](WarcBytes.decodeRecords(fullwidth, "x"))
+    assert(e.getMessage.contains("bad Content-Length"), e.getMessage)
+  }
+
   test("fuzz: random single-byte corruption never mis-frames silently " +
     "(decode terminates; positions stay strictly increasing)") {
     val records = Synth.warcRecords(round = 9, n = 8)
