@@ -324,6 +324,15 @@ object SparkEntry {
         when(pmod(col("hn"), lit(7)) === 0, array(lit("/p/1")))
           .otherwise(array().cast("array<string>")).as("disallow_prefixes"))
 
+  /** The derived frontier canonicalized, deduped and robots-filtered
+    * through the crawl-lifetime robots cache: the input of the gates
+    * that schedule outside a round (q26, q27, q42, q63).
+    */
+  private def robottedFrontier(s: SparkSession, dir: String): DataFrame =
+    Politeness.applyRobotsMap(
+      Scheduler.dedupeWithinBatch(Scheduler.canonicalize(derivedFrontier(s, dir))),
+      Politeness.robotsBroadcast(derivedRobots(s, dir)))
+
   // ======================================================================
   // Flagship: one full frontier scheduling round (north rule pipeline) —
   // canonicalize → in-batch dedupe → robots → token-bucket schedule →
@@ -508,27 +517,12 @@ object SparkEntry {
       Scheduler.dedupeWithinBatch(Scheduler.canonicalize(derivedFrontier(s, dir)))
         .select(col("canonical_url"), col("priority_band"), col("url"))),
 
-    // Frontier: robots + deterministic token-bucket schedule. Gates BOTH
-    // robots forms — the per-round broadcast join and the crawl-lifetime
-    // map broadcast ([[Politeness.robotsBroadcast]], the form the bench
-    // and a long-running crawl loop use): any row where they disagree
-    // survives an exceptAll and breaks the oracle hash.
-    "q26_politeness_schedule" -> ((s, dir) => {
-      // deduped feeds BOTH robots paths, and each path's rows feed the
-      // exceptAll fold 2-3 times — persist all three (each ≤ dedupe
-      // output cardinality) so the canonicalize + dedupe window runs
-      // once, not five times (guide §5)
-      val deduped = Scheduler.dedupeWithinBatch(
-        Scheduler.canonicalize(derivedFrontier(s, dir))).persist()
-      val robots = derivedRobots(s, dir).persist() // 2 broadcast builds + map collect
-      def run(robotted: DataFrame) = Politeness.schedule(robotted)
+    // Frontier: robots (the crawl-lifetime map broadcast,
+    // [[Politeness.robotsBroadcast]]) + deterministic token-bucket schedule
+    "q26_politeness_schedule" -> ((s, dir) =>
+      Politeness.schedule(robottedFrontier(s, dir))
         .select(col("canonical_url"), col("host"), col("host_seq"),
-          col("scheduled_ms").cast("long").as("scheduled_ms"))
-      val joined = run(Politeness.applyRobots(deduped, robots))
-      val mapped = run(Politeness.applyRobotsMap(deduped,
-        Politeness.robotsBroadcast(robots)))
-      agreeFold(joined, mapped)
-    }),
+          col("scheduled_ms").cast("long").as("scheduled_ms"))),
 
     // Full round under a cap of 40 URLs per host: every derived host
     // (~405 raw rows each) is over the cap, so the round keeps exactly
@@ -551,7 +545,7 @@ object SparkEntry {
     // count, then the broadcast anti-join under the budget), so the
     // gate simultaneously checks fused == unclustered == oracle.
     "q69_fused_seen_round" -> ((s, dir) => {
-      val robots = derivedRobots(s, dir).persist() // both rounds' broadcast builds
+      val robots = Politeness.robotsBroadcast(derivedRobots(s, dir)) // both rounds
       // withHost feeds the bucketed write AND the unclustered round;
       // seenDf feeds the clustered save AND that round's seen count +
       // broadcast anti-join — persist both so each canonicalize +
@@ -581,11 +575,11 @@ object SparkEntry {
       }
       def sel(df: DataFrame) = df.select(col("canonical_url"), col("host"),
         col("host_seq"), col("scheduled_ms").cast("long").as("scheduled_ms"))
-      val fused = sel(Scheduler.runRound(s.table("graft_q69_frontier"),
+      val fused = sel(Scheduler.runRoundCached(s.table("graft_q69_frontier"),
         Scheduler.loadSeenClustered(s, s"$base/seen", buckets = 8), robots,
         maxPerHostPerRound = 40,
         frontierHostClustered = true, seenHostClustered = true))
-      val probe = sel(Scheduler.runRound(withHost, seenDf, robots,
+      val probe = sel(Scheduler.runRoundCached(withHost, seenDf, robots,
         maxPerHostPerRound = 40))
       agreeFold(fused, probe)
     }),
@@ -599,7 +593,7 @@ object SparkEntry {
     // Seen halves are canonical-equality-defined (the q66 parity trick)
     // so DuckDB can recompute them: %4==0 saved, %4==1 appended.
     "q70_seen_append_round" -> ((s, dir) => {
-      val robots = derivedRobots(s, dir).persist() // both rounds' broadcast builds
+      val robots = Politeness.robotsBroadcast(derivedRobots(s, dir)) // both rounds
       // withHost feeds the bucketed write AND the unclustered round;
       // each quarter feeds its clustered write AND that round's seen
       // count + broadcast anti-join — persist (and memoize the quarters:
@@ -639,11 +633,11 @@ object SparkEntry {
       }
       def sel(df: DataFrame) = df.select(col("canonical_url"), col("host"),
         col("host_seq"), col("scheduled_ms").cast("long").as("scheduled_ms"))
-      val fused = sel(Scheduler.runRound(s.table("graft_q70_frontier"),
+      val fused = sel(Scheduler.runRoundCached(s.table("graft_q70_frontier"),
         Scheduler.loadSeenClustered(s, s"$base/seen", buckets = 8), robots,
         maxPerHostPerRound = 40,
         frontierHostClustered = true, seenHostClustered = true))
-      val probe = sel(Scheduler.runRound(withHost,
+      val probe = sel(Scheduler.runRoundCached(withHost,
         quarter(0).unionByName(quarter(1)), robots, maxPerHostPerRound = 40))
       agreeFold(fused, probe)
     }),
@@ -675,18 +669,17 @@ object SparkEntry {
       Scheduler.saveSeenClustered(emptySeen, s"$base/seenc", buckets = 8)
       val sliceCol = pmod(floor(col("o_orderkey") / 7), lit(K))
       // crawl-lifetime robots cache (the production loop's shape): one
-      // orders scan + distinct serves every round's broadcast build
-      // instead of one per round. Re-derived after the simulated kill —
-      // a cache surviving the boundary would be exactly the in-session
-      // state the kill must wipe.
-      var robots = derivedRobots(s, dir).persist()
+      // broadcast serves every round. Re-derived after the simulated
+      // kill — a cache surviving the boundary would be exactly the
+      // in-session state the kill must wipe.
+      var robots = Politeness.robotsBroadcast(derivedRobots(s, dir))
       (0 until K).foreach { r =>
         if (r == 3) {
           // simulated kill: no in-session state survives the boundary —
           // every input below re-derives from storage or source tables
           s.catalog.clearCache()
           s.sql("DROP TABLE IF EXISTS graft_q72_frontier")
-          robots = derivedRobots(s, dir).persist()
+          robots = Politeness.robotsBroadcast(derivedRobots(s, dir))
         }
         val slice = ft(s, dir, "orders").where(sliceCol === r)
           .select(frontierUrl.as("url"),
@@ -696,7 +689,7 @@ object SparkEntry {
         slice.repartition(8, col("host"))
           .write.mode("overwrite").bucketBy(8, "host")
           .option("path", s"$base/frontier-$r").saveAsTable("graft_q72_frontier")
-        val sched = Scheduler.runRound(s.table("graft_q72_frontier"),
+        val sched = Scheduler.runRoundCached(s.table("graft_q72_frontier"),
           Scheduler.loadSeenClustered(s, s"$base/seenc", buckets = 8),
           robots, maxPerHostPerRound = 40,
           frontierHostClustered = true, seenHostClustered = true)
@@ -735,28 +728,26 @@ object SparkEntry {
     // robots-surviving half-1 keys). CheckpointSpec covers kill-resume
     // equivalence; this gates the parquet round-trip under the driver.
     "q66_checkpoint_resume" -> ((s, dir) => {
-      val robots = derivedRobots(s, dir).persist() // both rounds' broadcast builds
+      val robots = Politeness.robotsBroadcast(derivedRobots(s, dir)) // both rounds
       val half1 = ft(s, dir, "orders").where(pmod(col("o_orderkey"), lit(2)) === 0)
         .select(frontierUrl.as("url"),
           pmod(floor(col("o_orderkey") / 3000), lit(4)).cast("int").as("priority_band"))
       val ck = s"/tmp/graft-ck-gate/${new java.io.File(dir).getName}"
-      val r1 = Scheduler.runRound(half1,
+      val r1 = Scheduler.runRoundCached(half1,
         Scheduler.loadSeen(s, ck + "-none"), robots)
       Scheduler.checkpointRound(r1, ck, 1)
       val seen = Scheduler.loadSeen(s, ck) // parquet, from disk
-      val r2 = Scheduler.runRound(derivedFrontier(s, dir), seen, robots)
+      val r2 = Scheduler.runRoundCached(derivedFrontier(s, dir), seen, robots)
       r2.select(col("canonical_url"), col("host"), col("host_seq"),
         col("scheduled_ms").cast("long").as("scheduled_ms"))
     }),
 
     // Frontier: fetch-batch emission (per-host budget)
-    "q27_fetch_batches" -> ((s, dir) => {
-      val deduped = Scheduler.dedupeWithinBatch(Scheduler.canonicalize(derivedFrontier(s, dir)))
-      val sched = Politeness.schedule(Politeness.applyRobots(deduped, derivedRobots(s, dir)))
-      Politeness.fetchBatches(sched, 10)
+    "q27_fetch_batches" -> ((s, dir) =>
+      Politeness.fetchBatches(Politeness.schedule(robottedFrontier(s, dir)), 10)
         .groupBy(col("host"), col("batch_id"))
         .agg(count(lit(1)).as("n_urls"))
-    }),
+    ),
 
     // J2 direct gate: derived continuation chains (8 segments per chain
     // over row_number(orders)); injections = drop segment 3 of full
@@ -823,9 +814,7 @@ object SparkEntry {
     // MemoryStream feed is a driver-side test harness, not a data path.
     "q63_stream_schedule" -> ((s, dir) => {
       import s.implicits._
-      val deduped = Scheduler.dedupeWithinBatch(Scheduler.canonicalize(derivedFrontier(s, dir)))
-      val robotted = Politeness.applyRobots(deduped, derivedRobots(s, dir))
-      val rows = robotted.select(col("canonical_url"), col("host"),
+      val rows = robottedFrontier(s, dir).select(col("canonical_url"), col("host"),
           col("priority_band").cast("int"), col("crawl_delay_ms").cast("long"))
         .as[(String, String, Int, Long)].collect()
         .map { case (u, h, b, d) => graft.streaming.FrontierStream.StreamUrl(
@@ -1062,15 +1051,13 @@ object SparkEntry {
     }),
 
     // North-rule lineage/metrics: per-host fetch metrics over the schedule
-    "q42_host_lineage" -> ((s, dir) => {
-      val deduped = Scheduler.dedupeWithinBatch(Scheduler.canonicalize(derivedFrontier(s, dir)))
-      val sched = Politeness.schedule(Politeness.applyRobots(deduped, derivedRobots(s, dir)))
-      Politeness.fetchBatches(sched, 10)
+    "q42_host_lineage" -> ((s, dir) =>
+      Politeness.fetchBatches(Politeness.schedule(robottedFrontier(s, dir)), 10)
         .groupBy(col("host"))
         .agg(count(lit(1)).as("n_urls"),
           max(col("scheduled_ms")).cast("long").as("span_ms"),
           countDistinct(col("batch_id")).as("n_batches"))
-    }),
+    ),
 
     // A3 failure path: import checksum mismatch on corrupted chunks
     "q43_import_reject" -> ((s, dir) => {

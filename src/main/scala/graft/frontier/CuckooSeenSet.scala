@@ -2,7 +2,6 @@ package graft.frontier
 
 import org.apache.spark.sql.{DataFrame, Encoders}
 import org.apache.spark.sql.functions._
-import scala.collection.mutable
 
 /** Partitioned CUCKOO-filter URL-seen set — the deletable variant of
   * [[SeenSet]] (north rule: "cuckoo-filter fallback for deletions").
@@ -25,36 +24,17 @@ import scala.collection.mutable
   */
 object CuckooSeenSet {
 
-  def bucketOf(key: org.apache.spark.sql.Column, numBuckets: Int) =
-    pmod(key, lit(numBuckets.toLong))
-
-  /** Build the per-bucket cuckoo table: (bucket: long, cuckoo: binary). */
+  /** Build the per-bucket cuckoo table: (bucket: long, cuckoo: binary).
+    * Keys are deduplicated per partition ([[SeenSet.foldBuckets]]): the
+    * filter stores MULTISET copies (deletion soundness), so each key must
+    * be inserted exactly once.
+    */
   def buildBuckets(seen: DataFrame, keyCol: String, numBuckets: Int,
-                   expectedPerBucket: Long = 1 << 20): DataFrame = {
-    val spark = seen.sparkSession
-    import spark.implicits._
-    seen
-      .select(bucketOf(col(keyCol), numBuckets).as("bucket"),
-        col(keyCol).cast("long").as("k"))
-      .repartition(numBuckets, col("bucket"))
-      .as[(Long, Long)]
-      .mapPartitions { it =>
-        val perBucket = mutable.LongMap.empty[CuckooFilter]
-        // per-partition key dedupe: the filter stores MULTISET copies
-        // (deletion soundness), so each key must be inserted exactly
-        // once; a key's every occurrence lands in this partition
-        // (partitioned by pmod(key)), so a local set is exact
-        val seenKeys = new java.util.HashSet[Long]()
-        it.foreach { case (b, k) =>
-          if (seenKeys.add(k)) {
-            val cf = perBucket.getOrElseUpdate(b, CuckooFilter.create(expectedPerBucket))
-            require(cf.insert(k), s"cuckoo bucket $b over capacity (size for expectedPerBucket)")
-          }
-        }
-        perBucket.iterator.map { case (b, cf) => (b, cf.serialize()) }
-      }
-      .toDF("bucket", "cuckoo")
-  }
+                   expectedPerBucket: Long = 1 << 20): DataFrame =
+    SeenSet.foldBuckets(seen, keyCol, numBuckets, "cuckoo", distinctKeys = true)(
+      () => CuckooFilter.create(expectedPerBucket))((b, cf, k) =>
+      require(cf.insert(k), s"cuckoo bucket $b over capacity (size for expectedPerBucket)"))(
+      _.serialize())
 
   /** Delete keys from the bucket table (returns the updated table).
     * `deletions` rows whose key is not in `seenKeys` are ignored (exact
@@ -70,7 +50,7 @@ object CuckooSeenSet {
     val dels = deletions.select(col(keyCol).cast("long").as("k")).distinct()
       .join(seenKeys.select(col(keyCol).cast("long").as("k")).distinct(), Seq("k"),
         "left_semi")
-      .select(bucketOf(col("k"), numBuckets).as("bucket"), col("k"))
+      .select(SeenSet.bucketOf(col("k"), numBuckets).as("bucket"), col("k"))
     val delG = dels.as[(Long, Long)](Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong))
       .groupByKey(_._1)(Encoders.scalaLong)
     val bucketG = buckets.select(col("bucket").cast("long"), col("cuckoo"))

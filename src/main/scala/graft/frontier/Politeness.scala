@@ -1,6 +1,6 @@
 package graft.frontier
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -18,9 +18,9 @@ object Politeness {
   val DefaultDelayMs = 1000L
 
   /** Path component of a canonical URL (empty for null/host-only/
-    * unparseable) — the ONE implementation both robots filters share:
-    * their spec-tested output equality rides on this scan being
-    * bit-identical in the join and map forms.
+    * unparseable): everything from the first '/' after the authority up
+    * to '?' or '#' — the truth table of the regex path capture
+    * `^[a-z][a-z0-9+.-]*://[^/?#]*([^?#]*)`, in one scan.
     */
   private def pathOf(url: String): String = {
     val schemeEnd = if (url == null) -1 else url.indexOf("://")
@@ -37,76 +37,47 @@ object Politeness {
     }
   }
 
-  /** Single-pass disallow check: extract the URL path (everything from
-    * the first '/' after the authority up to '?' or '#') and test the
-    * prefix list. One scalar UDF replaces a per-row `regexp_extract` plus
-    * an `exists()` higher-order function — HOF lambdas are
-    * CodegenFallback (interpreted per row) and were measured as the
-    * frontier round's worst-scaling stage (robots stage 2.6× from 2→8
-    * cores before, vs ~4× for the narrow stages). Same truth table as
-    * `exists(prefixes, p -> path.startsWith(p))` with regex path capture
-    * `^[a-z][a-z0-9+.-]*://[^/?#]*([^?#]*)`.
-    */
-  private val disallowedUdf = udf { (url: String, prefixes: Seq[String]) =>
-    if (url == null || prefixes == null || prefixes.isEmpty) false
-    else {
-      val path = pathOf(url)
-      prefixes.exists(path.startsWith)
-    }
-  }
-
-  /** Robots filter: drop URLs whose path starts with a disallowed prefix.
-    * `robots(host, crawl_delay_ms, disallow_prefixes)` is broadcast — it is
-    * host-cardinality (small) while the frontier is URL-cardinality (huge).
-    * Rows with no robots entry keep the default delay.
-    */
-  def applyRobots(frontier: DataFrame, robots: DataFrame): DataFrame =
-    frontier
-      .join(broadcast(robots), Seq("host"), "left")
-      // clamped at 0: a negative delay in the robots table (a plausible
-      // 'unknown' encoding) must not conflate with the map form's -1
-      // dropped sentinel — both forms clamp, keeping their spec-tested
-      // output equality
-      .withColumn("crawl_delay_ms",
-        greatest(lit(0L), coalesce(col("crawl_delay_ms").cast("long"),
-          lit(DefaultDelayMs))))
-      .where(!disallowedUdf(col("canonical_url"), col("disallow_prefixes")))
-      .drop("disallow_prefixes")
-
-  /** A robots cache built ONCE per crawl and reused across rounds — the
-    * north rule's "robots.txt cache broadcast as a map-side lookup"
-    * taken literally. [[applyRobots]] rebuilds its broadcast-join hash
-    * relation on the driver for EVERY round's plan (~1 s of fixed
-    * per-round cost measured at 10k hosts); a long-running crawl loop
-    * instead collects the host-cardinality table once, ships one
-    * Broadcast, and every subsequent round is a narrow projection.
-    * Size guard: refuse tables past `maxHosts` (at 10^8-host scale keep
-    * the per-round join — or shard the crawl loop by host range).
+  /** The robots cache, built ONCE per crawl and reused across rounds —
+    * the north rule's "robots.txt cache broadcast as a map-side lookup"
+    * taken literally: the host-cardinality table
+    * `robots(host, crawl_delay_ms, disallow_prefixes)` is collected once
+    * and shipped as one Broadcast, and every round's robots stage is a
+    * narrow projection ([[applyRobotsMap]]). A null delay means the
+    * default delay; a negative one is clamped to 0, so it never reads as
+    * the filter's -1 drop sentinel; a null prefix list disallows nothing.
+    *
+    * The table must hold one row per host: a null or repeated `host` is
+    * rejected, naming the host, rather than resolved by whichever row
+    * the collect returns last. Size guard: the driver holds the whole
+    * table, so a table past `maxHosts` is rejected; a crawl past it
+    * shards its loop by host range.
     */
   def robotsBroadcast(robots: DataFrame,
                       maxHosts: Long = 20000000L): org.apache.spark.broadcast.Broadcast[
       Map[String, (Long, Array[String])]] = {
     val n = robots.count()
-    require(n <= maxHosts,
-      s"robots table has $n hosts > $maxHosts: use the per-round broadcast join")
+    require(n <= maxHosts, s"robots table has $n hosts, over the limit of $maxHosts")
     val spark = robots.sparkSession
-    val m = robots
+    val rules = robots
       .select(col("host"), col("crawl_delay_ms").cast("long"),
         col("disallow_prefixes"))
       .collect()
       .map(r => r.getString(0) -> (
-        // clamped at 0 like applyRobots — see the comment there
         (if (r.isNullAt(1)) DefaultDelayMs else math.max(0L, r.getLong(1))),
         (if (r.isNullAt(2)) Array.empty[String]
          else r.getSeq[String](2).toArray)))
-      .toMap
-    spark.sparkContext.broadcast(m)
+    val hosts = rules.map(_._1)
+    require(!hosts.contains(null), "robots table has a null host")
+    val repeated = hosts.diff(hosts.distinct)
+    require(repeated.isEmpty, s"robots table has more than one row for host ${repeated.head}")
+    spark.sparkContext.broadcast(rules.toMap)
   }
 
-  /** [[applyRobots]] semantics over a pre-built [[robotsBroadcast]] —
-    * one scalar UDF (map lookup + prefix test), zero joins, zero
-    * per-round broadcast builds. Returns the same rows and
-    * crawl_delay_ms as the join form (equality spec-tested).
+  /** The robots filter over a [[robotsBroadcast]] cache: drop URLs whose
+    * path starts with a disallowed prefix and attach each row's
+    * `crawl_delay_ms`; hosts with no entry keep the default delay. One
+    * scalar UDF (map lookup + prefix test), zero joins, zero per-round
+    * broadcast builds; the input's columns keep their order.
     */
   def applyRobotsMap(frontier: DataFrame,
                      bc: org.apache.spark.broadcast.Broadcast[

@@ -153,76 +153,65 @@ object Robots {
     * hosts absent from the cache are allowed at the default delay (no
     * robots.txt = no restrictions).
     *
-    * SIZE-AWARE path selection (the [[SeenSet.probeAndConfirm]] pattern):
-    * a small body table broadcasts and the frontier stays un-shuffled
-    * ([[applyRawRobotsBroadcast]]); past `maxBroadcastBytes` the bodies
+    * SIZE-AWARE path selection ([[rawRobotsPath]], the one choice both
+    * this and [[rawRobotsStage]] make): a small body table broadcasts and
+    * the frontier stays un-shuffled; past `maxBroadcastBytes` the bodies
     * parse per-host IN EXECUTORS and the compiled rule table shuffle-joins
     * the frontier on `host` ([[applyRawRobotsDistributed]]) — a 10^8-host
     * crawl's 0.1–1 TB of robots bodies must never funnel through driver
     * memory. The politeness window downstream shuffles on `host` anyway,
     * so the distributed join introduces no extra frontier exchange beyond
     * the one that stage already needs. Both paths produce identical rows.
+    * A caller that already knows the body-table size (a crawl loop over
+    * a static robots cache) passes `knownBytes` and skips the count job.
     */
   def applyRawRobots(frontier: DataFrame, robotsBodies: DataFrame,
                      userAgent: String, defaultDelayMs: Long = 1000L,
                      maxBroadcastBytes: Long = 256L << 20,
-                     knownBytes: Option[Long] = None): DataFrame = {
-    // a caller that already knows the body-table size (a crawl loop over
-    // a static robots cache) passes it and skips the count job entirely
-    val totalBytes = knownBytes.getOrElse(robotsBodies
-      .agg(coalesce(sum(octet_length(col("body"))), lit(0L))).head.getLong(0))
-    if (totalBytes <= maxBroadcastBytes)
-      applyRawRobotsBroadcast(frontier, robotsBodies, userAgent, defaultDelayMs)
-    else applyRawRobotsDistributed(frontier, robotsBodies, userAgent, defaultDelayMs)
-  }
+                     knownBytes: Option[Long] = None): DataFrame =
+    rawRobotsPath(robotsBodies, userAgent, defaultDelayMs, maxBroadcastBytes,
+      knownBytes.getOrElse(bodyBytes(robotsBodies)))(frontier)
 
-  /** [[applyRawRobots]] as a crawl-lifetime stage: runs the byte-count job ONCE
-    * at construction and binds the chosen path, so a K-round crawl loop
-    * pays one size probe for the whole crawl instead of one count job
-    * per round over a table whose size never changes mid-crawl.
+  /** [[applyRawRobots]] as a crawl-lifetime stage: runs the byte-count job
+    * and, on the broadcast path, the collect + broadcast ONCE at
+    * construction, so a K-round crawl loop pays them once for the whole
+    * crawl instead of once per round over a table whose size never
+    * changes mid-crawl.
     */
   def rawRobotsStage(robotsBodies: DataFrame, userAgent: String,
                      defaultDelayMs: Long = 1000L,
                      maxBroadcastBytes: Long = 256L << 20)
-      : DataFrame => DataFrame = {
-    val totalBytes = robotsBodies
-      .agg(coalesce(sum(octet_length(col("body"))), lit(0L))).head.getLong(0)
-    if (totalBytes <= maxBroadcastBytes)
-      // hoist the collect+broadcast too — one crawl-lifetime broadcast,
-      // zero per-round jobs on the robots side
-      broadcastVerdictStage(robotsBodies, userAgent, defaultDelayMs)
-    else applyRawRobotsDistributed(_, robotsBodies, userAgent, defaultDelayMs)
-  }
+      : DataFrame => DataFrame =
+    rawRobotsPath(robotsBodies, userAgent, defaultDelayMs, maxBroadcastBytes,
+      bodyBytes(robotsBodies))
 
-  /** The one definition of the broadcast-path filter chain, shared by
-    * [[applyRawRobotsBroadcast]] and [[rawRobotsStage]]: collect the
-    * (host, body) cache, broadcast it, and filter through the executor-
-    * cached resolver. The spec-tested equality between the per-call and
-    * stage forms rides on this chain being literally identical — keep
-    * it in one place.
-    */
-  private def broadcastVerdictStage(robotsBodies: DataFrame, userAgent: String,
-                                    defaultDelayMs: Long): DataFrame => DataFrame = {
-    val spark = robotsBodies.sparkSession
-    val bodies = robotsBodies.select(col("host"), col("body")).collect()
-      .map(r => r.getString(0) -> r.getString(1)).toMap
-    val bc = spark.sparkContext.broadcast(bodies)
-    val resolver = new RobotsResolver(bc, userAgent, defaultDelayMs)
-    val verdictUdf = udf((host: String, path: String) => resolver.resolve(host, path))
-    frontier => frontier
-      .withColumn("robots", verdictUdf(col("host"), col("path")))
-      .where(col("robots._1"))
-      .withColumn("crawl_delay_ms", col("robots._2"))
-      .drop("robots")
-  }
+  /** Total body bytes of the (host, body) table: one aggregate job. */
+  private def bodyBytes(robotsBodies: DataFrame): Long =
+    robotsBodies.agg(coalesce(sum(octet_length(col("body"))), lit(0L))).head.getLong(0)
 
-  /** Broadcast path: collect the (host, body) cache, parse ONCE PER HOST
-    * on the executor (lazy per-JVM map); the frontier stays narrow.
+  /** The one path choice for `totalBytes` of robots bodies. Up to
+    * `maxBroadcastBytes`: collect the (host, body) cache, broadcast it,
+    * and filter through the executor-cached resolver, which parses each
+    * host's body once per JVM; the frontier stays narrow. Past it:
+    * [[applyRawRobotsDistributed]].
     */
-  private[frontier] def applyRawRobotsBroadcast(
-      frontier: DataFrame, robotsBodies: DataFrame,
-      userAgent: String, defaultDelayMs: Long): DataFrame =
-    broadcastVerdictStage(robotsBodies, userAgent, defaultDelayMs)(frontier)
+  private def rawRobotsPath(robotsBodies: DataFrame, userAgent: String,
+                            defaultDelayMs: Long, maxBroadcastBytes: Long,
+                            totalBytes: Long): DataFrame => DataFrame =
+    if (totalBytes > maxBroadcastBytes)
+      applyRawRobotsDistributed(_, robotsBodies, userAgent, defaultDelayMs)
+    else {
+      val bodies = robotsBodies.select(col("host"), col("body")).collect()
+        .map(r => r.getString(0) -> r.getString(1)).toMap
+      val bc = robotsBodies.sparkSession.sparkContext.broadcast(bodies)
+      val resolver = new RobotsResolver(bc, userAgent, defaultDelayMs)
+      val verdictUdf = udf((host: String, path: String) => resolver.resolve(host, path))
+      frontier => frontier
+        .withColumn("robots", verdictUdf(col("host"), col("path")))
+        .where(col("robots._1"))
+        .withColumn("crawl_delay_ms", col("robots._2"))
+        .drop("robots")
+    }
 
   /** Distributed path: parse + group-select each body WHERE IT LIVES (one
     * scalar UDF over the host-cardinality body table — never through the

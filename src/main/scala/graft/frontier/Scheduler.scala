@@ -10,7 +10,8 @@ import org.apache.spark.sql.types.LongType
   * snapshots stand in as partitioned parquet round directories
   * in-sandbox — same append-only contract).
   *
-  * A round is one pipeline ([[Scheduler.runRound]]):
+  * A round is one pipeline, one body ([[Scheduler.runRoundCached]];
+  * [[Scheduler.runRound]] builds its robots cache and calls it):
   *   1. derive `host`; one hash(host) exchange (none when the frontier is
   *      stored host-clustered);
   *   2. derive canonical_url and url_key after the exchange and
@@ -18,9 +19,11 @@ import org.apache.spark.sql.types.LongType
   *      (host, url_key) anti-join (both tables host-clustered), one
   *      broadcast anti-join on url_key while the seen keys fit the
   *      broadcast budget, or past it a bloom probe + exact confirm;
-  *   3. robots, then one per-host scan over rows sorted in politeness
-  *      order does dedupe, schedule and cap ([[Scheduler.fusedScheduleCap]],
-  *      the same scan for every frontier schema);
+  *   3. robots, a map-side lookup in the crawl-lifetime robots cache
+  *      ([[Politeness.applyRobotsMap]]), then one per-host scan over rows
+  *      sorted in politeness order does dedupe, schedule and cap
+  *      ([[Scheduler.fusedScheduleCap]], the same scan for every
+  *      frontier schema);
   *   4. one fetch-batch emit closes the round.
   *
   * Seen-filtering before dedupe is exact: every duplicate of a canonical
@@ -35,9 +38,10 @@ import org.apache.spark.sql.types.LongType
   *     partition-local (a range write layout is applied at the sink);
   *   - a degenerate host sorts on one reducer; the sort spills and the
   *     per-host scan keeps O(cap) state (measured cost: [[runRound]]);
-  *   - robots are broadcast (host cardinality), and so is the seen
-  *     filter's build side: the seen keys under the broadcast budget,
-  *     the bloom table past it (filter cardinality).
+  *   - robots are one crawl-lifetime broadcast map (host cardinality),
+  *     and the seen filter's build side is broadcast: the seen keys
+  *     under the broadcast budget, the bloom table past it (filter
+  *     cardinality).
   */
 object Scheduler {
 
@@ -148,20 +152,27 @@ object Scheduler {
     * round is built and picks its seen filter by regime ([[seenFilter]]):
     * under the broadcast budget one broadcast anti-join on url_key, past
     * it the bloom probe + exact confirm ([[SeenSet.sizedBloomFilter]]).
+    *
+    * `robots(host, crawl_delay_ms, disallow_prefixes)` becomes a
+    * [[Politeness.robotsBroadcast]] cache for this one round (a count and
+    * a collect while the round is built), and the round is
+    * [[runRoundCached]] over it: same rows, same columns. A crawl loop
+    * builds the cache once and calls [[runRoundCached]] every round.
     */
   def runRound(rawFrontier: DataFrame, seenKeys: DataFrame, robots: DataFrame,
                perHostBudget: Int = 100, numBloomBuckets: Int = 64,
                maxPerHostPerRound: Int = -1,
                frontierHostClustered: Boolean = false,
                seenHostClustered: Boolean = false): DataFrame =
-    runRoundImpl(rawFrontier, seenKeys, Politeness.applyRobots(_, robots),
+    runRoundCached(rawFrontier, seenKeys, Politeness.robotsBroadcast(robots),
       perHostBudget, numBloomBuckets, maxPerHostPerRound, frontierHostClustered,
       seenHostClustered)
 
-  /** [[runRound]] over a crawl-lifetime robots cache
-    * ([[Politeness.robotsBroadcast]]): identical output, but the robots
-    * stage is a narrow map-side lookup with no per-round broadcast
-    * build — the form a long-running crawl loop (and the bench) uses.
+  /** The round ([[runRound]]) over a crawl-lifetime robots cache
+    * ([[Politeness.robotsBroadcast]]): the robots stage is the narrow
+    * map-side lookup [[Politeness.applyRobotsMap]], with no per-round
+    * broadcast build — the form a long-running crawl loop (and the
+    * bench) uses, and the round's one body.
     */
   def runRoundCached(rawFrontier: DataFrame, seenKeys: DataFrame,
                      robotsBc: org.apache.spark.broadcast.Broadcast[
@@ -170,10 +181,24 @@ object Scheduler {
                      maxPerHostPerRound: Int = -1,
                      frontierHostClustered: Boolean = false,
                      seenHostClustered: Boolean = false,
-                     hotSpreadRows: Long = -1): DataFrame =
-    runRoundImpl(rawFrontier, seenKeys, Politeness.applyRobotsMap(_, robotsBc),
-      perHostBudget, numBloomBuckets, maxPerHostPerRound, frontierHostClustered,
-      seenHostClustered)
+                     hotSpreadRows: Long = -1): DataFrame = {
+    val hosted = withHost(rawFrontier)
+    // the shuffle carries only the input columns: canonical_url and
+    // url_key derive from url after the exchange, in the stage that
+    // filters and sorts
+    val keyed =
+      (if (frontierHostClustered) hosted else hosted.repartition(col("host")))
+        .withColumn("canonical_url", Canonical.canonicalUrl(col("url")))
+        .withColumn("url_key", Canonical.urlKey(col("canonical_url")))
+    val fresh = seenFilter(keyed, seenKeys, numBloomBuckets,
+      coLocated = frontierHostClustered && seenHostClustered).drop("url_key")
+    val cap = roundCap(perHostBudget, maxPerHostPerRound)
+    val scheduled = fusedScheduleCap(Politeness.applyRobotsMap(fresh, robotsBc), cap)
+      .withColumn("url_key", Canonical.urlKey(col("canonical_url")))
+      .withColumn("host_hash", Canonical.hostHash(col("host")))
+    Politeness.fetchBatches(scheduled, perHostBudget)
+      .sortWithinPartitions("priority_band", "scheduled_ms", "host_hash", "canonical_url")
+  }
 
   /** Dedupe + politeness schedule + per-host cap in ONE sort and ONE
     * per-host scan, for a robotted frontier of any schema.
@@ -236,16 +261,6 @@ object Scheduler {
       }(Encoders.row(out))
   }
 
-  /** Dedupe + schedule + cap over seen-filtered rows ([[fusedScheduleCap]]),
-    * then the round's url_key and host_hash.
-    */
-  private def scheduleAndCap(fresh: DataFrame,
-                             robotsStage: DataFrame => DataFrame,
-                             cap: Int): DataFrame =
-    fusedScheduleCap(robotsStage(fresh), cap)
-      .withColumn("url_key", Canonical.urlKey(col("canonical_url")))
-      .withColumn("host_hash", Canonical.hostHash(col("host")))
-
   /** Round cap: -1 = perHostBudget × [[DefaultMaxBatchesPerHost]],
     * 0 = uncapped, >0 = exact. The cap is the round's only guard against
     * a degenerate host: it bounds the host's scheduled rows and the fused
@@ -255,26 +270,6 @@ object Scheduler {
     if (maxPerHostPerRound < 0) perHostBudget * DefaultMaxBatchesPerHost
     else if (maxPerHostPerRound == 0) Int.MaxValue
     else maxPerHostPerRound
-
-  private def runRoundImpl(rawFrontier: DataFrame, seenKeys: DataFrame,
-                           robotsStage: DataFrame => DataFrame,
-                           perHostBudget: Int, numBloomBuckets: Int,
-                           maxPerHostPerRound: Int, frontierHostClustered: Boolean,
-                           seenHostClustered: Boolean): DataFrame = {
-    val hosted = withHost(rawFrontier)
-    // the shuffle carries only the input columns: canonical_url and
-    // url_key derive from url after the exchange, in the stage that
-    // filters and sorts
-    val keyed =
-      (if (frontierHostClustered) hosted else hosted.repartition(col("host")))
-        .withColumn("canonical_url", Canonical.canonicalUrl(col("url")))
-        .withColumn("url_key", Canonical.urlKey(col("canonical_url")))
-    val fresh = seenFilter(keyed, seenKeys, numBloomBuckets,
-      coLocated = frontierHostClustered && seenHostClustered).drop("url_key")
-    val cap = roundCap(perHostBudget, maxPerHostPerRound)
-    Politeness.fetchBatches(scheduleAndCap(fresh, robotsStage, cap), perHostBudget)
-      .sortWithinPartitions("priority_band", "scheduled_ms", "host_hash", "canonical_url")
-  }
 
   /** The round's seen filter — rows of `keyed` whose url_key is not in
     * `seenKeys`, columns unchanged: the (host, url_key) anti-join when

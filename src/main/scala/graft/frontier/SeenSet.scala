@@ -100,11 +100,24 @@ object SeenSet {
 
   /** Build the per-bucket bloom table: (bucket: long, bloom: binary).
     * `seen` must carry a long column `keyCol` (xxhash64 of canonical URL).
-    * One hash shuffle of raw keys; each reduce partition folds its
-    * bucket(s) mutably.
     */
   def buildBuckets(seen: DataFrame, keyCol: String, numBuckets: Int,
-                   expectedPerBucket: Long = 1 << 20, fpp: Double = 0.01): DataFrame = {
+                   expectedPerBucket: Long = 1 << 20, fpp: Double = 0.01): DataFrame =
+    foldBuckets(seen, keyCol, numBuckets, "bloom", distinctKeys = false)(
+      () => BloomFilter.create(expectedPerBucket, fpp))((_, bf, k) => bf.putLong(k))(ser)
+
+  /** The build both seen-set kinds share: one hash shuffle of raw
+    * `(bucket, key)` rows, then each reduce partition folds its bucket(s)
+    * mutably — one `newFilter()` per bucket, `add(bucket, filter, key)`
+    * per key — and emits `(bucket, serialize(filter))` as (bucket,
+    * `blobCol`). With `distinctKeys` each key is added once: a key's
+    * every occurrence lands in one partition (partitioned by its
+    * bucket), so a per-partition set is exact.
+    */
+  private[frontier] def foldBuckets[F](seen: DataFrame, keyCol: String, numBuckets: Int,
+                                       blobCol: String, distinctKeys: Boolean)(
+      newFilter: () => F)(add: (Long, F, Long) => Unit)(
+      serialize: F => Array[Byte]): DataFrame = {
     val spark = seen.sparkSession
     import spark.implicits._
     seen
@@ -113,14 +126,15 @@ object SeenSet {
       .repartition(numBuckets, col("bucket"))
       .as[(Long, Long)]
       .mapPartitions { it =>
-        val perBucket = mutable.LongMap.empty[BloomFilter]
+        val perBucket = mutable.LongMap.empty[F]
+        val keys = new java.util.HashSet[Long]()
         it.foreach { case (b, k) =>
-          perBucket.getOrElseUpdate(b, BloomFilter.create(expectedPerBucket, fpp))
-            .putLong(k)
+          if (!distinctKeys || keys.add(k))
+            add(b, perBucket.getOrElseUpdate(b, newFilter()), k)
         }
-        perBucket.iterator.map { case (b, bf) => (b, ser(bf)) }
+        perBucket.iterator.map { case (b, f) => (b, serialize(f)) }
       }
-      .toDF("bucket", "bloom")
+      .toDF("bucket", blobCol)
   }
 
   /** One bucket's serialized filter → its membership test. Decoded once

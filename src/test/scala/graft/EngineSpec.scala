@@ -96,9 +96,9 @@ class PolitenessSpec extends AnyFunSuite {
     val frontier = Scheduler.canonicalize(
       Synth.frontierSeed(spark, 3000, nHosts = 50).toDF()
         .select($"url", $"priority_band"))
-    val robots = Synth.robots(spark, 50).toDF()
+    val bc = Politeness.robotsBroadcast(Synth.robots(spark, 50).toDF())
     def run(parts: Int) =
-      Politeness.schedule(Politeness.applyRobots(frontier.repartition(parts), robots))
+      Politeness.schedule(Politeness.applyRobotsMap(frontier.repartition(parts), bc))
         .select("canonical_url", "host_seq", "scheduled_ms")
         .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2))).sortBy(_._1)
     assert(run(1).sameElements(run(16)))
@@ -111,7 +111,7 @@ class PolitenessSpec extends AnyFunSuite {
       ("https://unknown.example.test/ok", 0)).toDF("url", "priority_band"))
     val robots = Seq(("h1.example.test", 100, Seq("/private0")))
       .toDF("host", "crawl_delay_ms", "disallow_prefixes")
-    val out = Politeness.applyRobots(f, robots)
+    val out = Politeness.applyRobotsMap(f, Politeness.robotsBroadcast(robots))
       .select("canonical_url", "crawl_delay_ms").collect()
       .map(r => r.getString(0) -> r.getLong(1)).toMap
     assert(out.size == 2)
@@ -119,23 +119,61 @@ class PolitenessSpec extends AnyFunSuite {
     assert(out("https://unknown.example.test/ok") == Politeness.DefaultDelayMs)
   }
 
-  test("applyRobotsMap (crawl-lifetime broadcast) == applyRobots (join), runRoundCached == runRound") {
+  test("runRound == runRoundCached: same schema, same rows") {
+    // hosts h00037..h00039 take the edge rules: a null delay (default),
+    // a negative delay (clamped to 0) with a null prefix list, no entry
     val raw = Synth.frontierSeed(spark, 3000, nHosts = 40).toDF()
       .select($"url", $"priority_band")
-    val robots = Synth.robots(spark, 40).toDF()
-    val bc = Politeness.robotsBroadcast(robots)
-    val f = Scheduler.canonicalize(raw)
-    val a = Politeness.applyRobots(f, robots)
-      .select("canonical_url", "crawl_delay_ms")
-    val b = Politeness.applyRobotsMap(f, bc)
-      .select("canonical_url", "crawl_delay_ms")
-    assert(a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty)
-    val seen = Scheduler.loadSeen(spark, "/tmp/none")
-    val r1 = Scheduler.runRound(raw, seen, robots)
-      .select("canonical_url", "host_seq", "scheduled_ms", "batch_id")
-    val r2 = Scheduler.runRoundCached(raw, seen, bc)
-      .select("canonical_url", "host_seq", "scheduled_ms", "batch_id")
-    assert(r1.exceptAll(r2).isEmpty && r2.exceptAll(r1).isEmpty)
+    val robots = Synth.robots(spark, 37).toDF().unionByName(
+      Seq[(String, Option[Int], Option[Seq[String]])](
+        ("h00037.example.test", None, Some(Seq("/private0"))),
+        ("h00038.example.test", Some(-5), None))
+      .toDF("host", "crawl_delay_ms", "disallow_prefixes"))
+    val seen = Scheduler.canonicalize(raw).where(xxhash64($"url") % 3 === 0)
+      .select("url_key")
+    for (seenKeys <- Seq(Scheduler.loadSeen(spark, "/tmp/none"), seen)) {
+      val r1 = Scheduler.runRound(raw, seenKeys, robots)
+      val r2 = Scheduler.runRoundCached(raw, seenKeys, Politeness.robotsBroadcast(robots))
+      assert(r1.schema == r2.schema, s"${r1.schema.treeString} vs ${r2.schema.treeString}")
+      assert(r1.count() > 0)
+      assert(r1.exceptAll(r2).isEmpty && r2.exceptAll(r1).isEmpty)
+      val delays = r1.where($"host".isin("h00037.example.test", "h00038.example.test",
+          "h00039.example.test"))
+        .select("host", "crawl_delay_ms").distinct().as[(String, Long)].collect().toMap
+      assert(delays == Map("h00037.example.test" -> Politeness.DefaultDelayMs,
+        "h00038.example.test" -> 0L, "h00039.example.test" -> Politeness.DefaultDelayMs))
+    }
+  }
+
+  test("runRound over a robots table plans no join keyed on host") {
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
+    val raw = Synth.frontierSeed(spark, 1000, nHosts = 20).toDF()
+      .select($"url", $"priority_band")
+    val robots = Synth.robots(spark, 20).toDF()
+    val aqeBefore = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try {
+      val plan = Scheduler.runRound(raw, Scheduler.loadSeen(spark, "/tmp/none"), robots)
+        .queryExecution.executedPlan
+      val hostJoins = plan.collect {
+        case j: BaseJoinExec
+            if (j.leftKeys ++ j.rightKeys).exists(_.references.exists(_.name == "host")) => j
+      }
+      assert(hostJoins.isEmpty, s"joins on host: ${hostJoins.map(_.nodeName)}")
+    } finally spark.conf.set("spark.sql.adaptive.enabled", aqeBefore)
+  }
+
+  test("robotsBroadcast rejects a duplicated or null host, naming it") {
+    val dup = Synth.robots(spark, 5).toDF().unionByName(
+      Seq(("h00003.example.test", 100, Seq.empty[String]))
+        .toDF("host", "crawl_delay_ms", "disallow_prefixes"))
+    val e1 = intercept[IllegalArgumentException](Politeness.robotsBroadcast(dup))
+    assert(e1.getMessage.contains("more than one row for host h00003.example.test"))
+    val nul = Synth.robots(spark, 5).toDF().unionByName(
+      Seq((null.asInstanceOf[String], 100, Seq.empty[String]))
+        .toDF("host", "crawl_delay_ms", "disallow_prefixes"))
+    val e2 = intercept[IllegalArgumentException](Politeness.robotsBroadcast(nul))
+    assert(e2.getMessage.contains("null host"))
   }
 
   test("fused probe-free round == agg-dedupe composition, incl. a hot host") {
@@ -152,8 +190,9 @@ class PolitenessSpec extends AnyFunSuite {
         robots, maxPerHostPerRound = 500)
       .select(cols.map(col): _*)
     val want = Politeness.fetchBatches(Politeness.schedule(Politeness.capPerHost(
-        Politeness.applyRobots(
-          Scheduler.dedupeWithinBatch(Scheduler.canonicalize(raw)), robots), 500)), 100)
+        Politeness.applyRobotsMap(
+          Scheduler.dedupeWithinBatch(Scheduler.canonicalize(raw)),
+          Politeness.robotsBroadcast(robots)), 500)), 100)
       .select(cols.map(col): _*)
     assert(got.exceptAll(want).isEmpty && want.exceptAll(got).isEmpty)
   }
@@ -404,7 +443,7 @@ class PolitenessSpec extends AnyFunSuite {
     val e = intercept[IllegalArgumentException] {
       Politeness.robotsBroadcast(robots, maxHosts = 10L)
     }
-    assert(e.getMessage.contains("per-round broadcast join"))
+    assert(e.getMessage.contains("50 hosts, over the limit of 10"))
   }
 
   test("fusedScheduleCap keeps dedupeWithinBatch's winner: ties, bands, nulls, extra columns") {
@@ -657,9 +696,9 @@ class PolitenessSpec extends AnyFunSuite {
       .unionByName(Seq((null.asInstanceOf[String], 0)).toDF("url", "priority_band"))
     val cols = Seq("url", "canonical_url", "host", "host_seq", "scheduled_ms", "batch_id")
     val got = Scheduler.runRound(raw, seen, robots).select(cols.map(col): _*)
-    val want = Politeness.fetchBatches(Politeness.schedule(Politeness.applyRobots(
+    val want = Politeness.fetchBatches(Politeness.schedule(Politeness.applyRobotsMap(
         Scheduler.dedupeWithinBatch(SeenSet.dedupeExact(Scheduler.canonicalize(raw), seen,
-          "url_key")), robots)), 100)
+          "url_key")), Politeness.robotsBroadcast(robots))), 100)
       .select(cols.map(col): _*)
     assert(got.count() > 0)
     assert(got.exceptAll(want).isEmpty && want.exceptAll(got).isEmpty)
